@@ -94,16 +94,19 @@ object Strings {
     * map-side-sorting its full joined input for two string mins. A long
     * buffer keeps the whole chain in whole-stage-codegen HashAggregate;
     * [[lexCarrierDecode]] recovers the exact string from the aggregated
-    * carrier. Inputs longer than 15 chars raise at runtime — silent
-    * truncation would break the order contract (15 digit chars cover
-    * TPC-H orderkeys past the exabyte decade).
+    * carrier. A null input gives a null carrier (a null is ignored by
+    * min/max, as the string would be). Inputs longer than 15 chars, or
+    * holding a char outside `[0-9_]`, raise at runtime — silent
+    * truncation or a char that `translate` leaves unmapped would break
+    * the order contract (15 digit chars cover TPC-H orderkeys past the
+    * exabyte decade).
     */
   def lexCarrier(c: Column): Column =
-    when(length(c) <= 15,
+    when(length(c) <= 15 && c.rlike("^[0-9_]*$"),
       conv(rpad(translate(c, "0123456789_", "123456789ab"), 15, "0"), 16, 10)
         .cast("long"))
-      .otherwise(raise_error(
-        concat(lit("lexCarrier: input exceeds 15 chars: "), c)))
+      .when(c.isNotNull, raise_error(concat(
+        lit("lexCarrier: input is not at most 15 chars of [0-9_]: "), c)))
 
   /** Inverse of [[lexCarrier]]: recovers the exact source string from an
     * aggregated carrier. Trailing '0' nibbles are end-of-string padding

@@ -1,8 +1,10 @@
 package graft.jobs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 import graft.functions.{Hashing, TextAnalysis}
 import graft.operators.Dedup
 
@@ -80,38 +82,47 @@ object CorpusPrep {
 
   /** Quality + language (+ optional low-entropy) gate. */
   def gate(annotated: DataFrame, cfg: Config): DataFrame = {
-    val q = annotated.filter(col("quality") >= cfg.minQuality)
-    val c = if (cfg.minCompressionRatio > 0.0) {
-      // fail with intent, not UNRESOLVED_COLUMN: annotate only adds the
-      // column when ITS config enables the gate — a mismatched pair of
-      // configs is a caller bug worth naming
-      require(annotated.columns.contains("compression"),
-        "low-entropy gate enabled but input has no 'compression' column: " +
-          "pass the same Config to annotate(docs, text, cfg)")
-      q.filter(col("compression") >= cfg.minCompressionRatio)
-    } else q
-    if (cfg.dropUnknownLang) c.filter(col("lang") =!= "und") else c
+    // fail with intent, not UNRESOLVED_COLUMN: annotate only adds the
+    // column when ITS config enables the gate — a mismatched pair of
+    // configs is a caller bug worth naming
+    require(cfg.minCompressionRatio <= 0.0 ||
+      annotated.columns.contains("compression"),
+      "low-entropy gate enabled but input has no 'compression' column: " +
+        "pass the same Config to annotate(docs, text, cfg)")
+    annotated.filter(gatePredicate(cfg))
+  }
+
+  /** The gate as one predicate over [[annotate]]'s columns: the single
+    * definition [[gate]] filters on and [[run]] keeps as a flag. A row
+    * whose annotation is null (null text) does not pass.
+    */
+  private def gatePredicate(cfg: Config): Column = {
+    val q = col("quality") >= cfg.minQuality
+    val c =
+      if (cfg.minCompressionRatio > 0.0) q && col("compression") >= cfg.minCompressionRatio
+      else q
+    if (cfg.dropUnknownLang) c && col("lang") =!= "und" else c
   }
 
   /** The exact-dedup content key (q41's): leading `exactKeyWords`
     * normalized words — ONE definition shared by the batch stage and
-    * the stream (round-14 found the two drifting; round-15 review
-    * single-sourced it).
+    * the stream, so the two cannot drift.
     */
   private def exactKey(text: String, cfg: Config) =
     array_join(slice(Hashing.words(col(text)), 1, cfg.exactKeyWords), " ")
+
+  /** min(`ids`) over the rows of the same content key. */
+  private def exactKeeper(ids: Column, text: String, cfg: Config): Column =
+    min(ids).over(Window.partitionBy(exactKey(text, cfg)))
 
   /** Exact dedup: canonical row = min id per leading-words content key
     * (the q41 key), all rows kept for singleton keys.
     */
   def exactCanonical(
-      df: DataFrame, id: String, text: String, cfg: Config): DataFrame = {
-    val key = exactKey(text, cfg)
-    val w = Window.partitionBy(key)
-    df.withColumn("__keeper", min(col(id)).over(w))
+      df: DataFrame, id: String, text: String, cfg: Config): DataFrame =
+    df.withColumn("__keeper", exactKeeper(col(id), text, cfg))
       .filter(col(id) === col("__keeper"))
       .drop("__keeper")
-  }
 
   /** Near-dup canonical selection: LSH pairs → connected components →
     * drop every member that is not its cluster's minimum id.
@@ -122,22 +133,6 @@ object CorpusPrep {
       df, id, text, shingleK = cfg.shingleK, minJaccard = cfg.minJaccard,
       maxBucket = cfg.maxLshBucket)
     dropNonCanonical(df, id, pairs)
-  }
-
-  /** [[nearDupCanonical]] that also returns the hot-bucket profile of
-    * the SAME banding the candidate join read (round-18, r17 verdict
-    * task 3 / r17 ADVICE): [[run]]'s ledger wants both, and computing
-    * the profile standalone re-paid the whole shingle+minhash pass on
-    * every invocation — a diagnostic roughly doubling the near-dup
-    * stage's sketch work.
-    */
-  private[graft] def nearDupCanonicalProfiled(
-      df: DataFrame, id: String, text: String,
-      cfg: Config): (DataFrame, Dedup.LshBucketProfile) = {
-    val (pairs, profile) = Dedup.minhashLshPairsProfiled(
-      df, id, text, shingleK = cfg.shingleK, minJaccard = cfg.minJaccard,
-      maxBucket = cfg.maxLshBucket)
-    (dropNonCanonical(df, id, pairs), profile)
   }
 
   private def dropNonCanonical(
@@ -673,26 +668,40 @@ object CorpusPrep {
           "Dedup.capBuckets) before the next data decade")
     else None
 
-  /** The attrition counts would otherwise re-execute the whole
-    * annotate → gate → dedup → LSH lineage once per stage (4× the
-    * deflate/annotation work, 2× the shuffles): the intermediate frames
-    * persist across the counts (MEMORY_AND_DISK — spill beats
-    * recompute), upstream stages unpersist once counted, and `kept`
-    * STAYS cached for the caller's consumption — call
-    * [[Frames.release]] when done.
+  /** Runs the whole pipeline and its attrition ledger with the driver
+    * work kept to one cached frame per stage and one action per
+    * question:
     *
-    * The ledger also records the near-dup stage's measured hot-bucket
-    * mass (round-17, r16 verdict task 4) as two diagnostic rows over
+    *  - ONE flagged frame carries annotate → gate → exact: `__gate` is
+    *    [[gatePredicate]], and `__exact` marks the row that is its
+    *    content key's minimum id among the GATED rows (`min(when(gate,
+    *    id))` over the [[exactKeeper]] window — a key whose smallest id
+    *    is gated out keeps its smallest gated id, as [[exactCanonical]]
+    *    over [[gate]] does). `exact` is a filter over it.
+    *  - ONE cached LSH sketch of `exact` ([[Dedup.lshSketch]]) feeds
+    *    both the hot-bucket profile and the candidate join.
+    *  - ONE action answers the input, gate and exact counts and the
+    *    profile: it collects the flagged frame's one-row count
+    *    aggregate together with the profile frame, and fills both
+    *    caches on the way.
+    *  - `kept.count()` is the near-dup count; it is also what leaves
+    *    `kept` materialized for the caller. (nExact minus the
+    *    non-canonical labels would be wrong when ids repeat.)
+    *
+    * Each `persist()` re-optimizes its plan on the driver, so the job
+    * persists exactly three frames: the flagged frame, the sketch and
+    * `kept`. The first two are released before returning; `kept` STAYS
+    * cached for the caller — call [[Frames.release]] when done.
+    *
+    * The ledger also records the near-dup stage's hot-bucket mass over
     * the exact-deduped set the LSH stage actually processes —
     * `lsh_max_bucket` (largest (band, key) bucket) and
     * `lsh_candidate_pairs` (Σ m·(m−1)/2, the exact uncapped
     * candidate-join volume, quadratic in hot-bucket mass): the numbers
     * a deployment needs to size [[Config.maxLshBucket]] BEFORE the
-    * next data decade, surfaced on every run instead of discovered
-    * from a blown-up candidate join. When they cross the measured
-    * quadratic threshold ([[AdviseCandidatesPerDoc]]) and no cap is
-    * configured, an slf4j warning names the knob. The default stays
-    * exact-recall — the advice is informational.
+    * next data decade. When they cross [[AdviseCandidatesPerDoc]] and
+    * no cap is configured, an slf4j warning names the knob. The
+    * default stays exact-recall — the advice is informational.
     *
     * The id column must be integral (the near-dup clustering labels in
     * long — [[graft.operators.Dedup.dupClusters]] rejects other types
@@ -703,25 +712,44 @@ object CorpusPrep {
     val spark = docs.sparkSession
     import spark.implicits._
     val ann = annotate(docs, text, cfg)
-    val gated = gate(ann, cfg).persist()
-    val exact = exactCanonical(gated, id, text, cfg).persist()
-    // profile and pairs from ONE shingle+minhash pass (round-18, r17
-    // verdict task 3): the ledger's hot-bucket rows previously re-paid
-    // the whole sketch via the standalone lshBucketProfile diagnostic
-    val (keptRaw, profile) = nearDupCanonicalProfiled(exact, id, text, cfg)
-    val kept = keptRaw.persist()
-    val nExact = exact.count()
-    capAdvice(profile, nExact, cfg).foreach(log.warn)
-    val stats = Seq(
-      ("input", docs.count()),
-      ("quality_lang_gate", gated.count()),
-      ("exact_dedup", nExact),
-      ("near_dup", kept.count()),
-      ("lsh_max_bucket", profile.maxBucket),
-      ("lsh_candidate_pairs", profile.candidatePairs)
-    ).toDF("stage", "docs")
-    gated.unpersist()
-    exact.unpersist()
-    Frames(ann, kept, stats)
+    val flagged = ann
+      .withColumn("__gate", coalesce(gatePredicate(cfg), lit(false)))
+      .withColumn("__exact", col("__gate") &&
+        col(id) === exactKeeper(when(col("__gate"), col(id)), text, cfg))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exact = flagged.filter(col("__exact")).drop("__gate", "__exact")
+    val sketch = Dedup.lshSketch(exact, id, text, cfg.shingleK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // the profile row and the count row, as a union: a cross join of
+      // the two would cost one more job, for its broadcast
+      val Array(profileRow, counts) = Dedup.lshProfileFrame(sketch)
+        .unionByName(flagged.agg(count(lit(1)).as("input"),
+          count_if(col("__gate")).as("gated"),
+          count_if(col("__exact")).as("exact")), allowMissingColumns = true)
+        .collect().sortBy(_.isNullAt(0))
+      val profile = Dedup.lshProfile(profileRow)
+      val nExact = counts.getAs[Long]("exact")
+      capAdvice(profile, nExact, cfg).foreach(log.warn)
+      val pairs = Dedup.lshPairsFromSketch(sketch, cfg.minJaccard, cfg.maxLshBucket)
+        .localCheckpoint(true)
+      val kept = dropNonCanonical(exact, id, pairs).persist()
+      val nKept =
+        try kept.count()
+        catch { case NonFatal(e) => kept.unpersist(); throw e }
+      val stats = Seq(
+        ("input", counts.getAs[Long]("input")),
+        ("quality_lang_gate", counts.getAs[Long]("gated")),
+        ("exact_dedup", nExact),
+        ("near_dup", nKept),
+        ("lsh_max_bucket", profile.maxBucket),
+        ("lsh_candidate_pairs", profile.candidatePairs)
+      ).toDF("stage", "docs")
+      Frames(ann, kept, stats)
+    } finally {
+      sketch.unpersist()
+      flagged.unpersist()
+      ()
+    }
   }
 }

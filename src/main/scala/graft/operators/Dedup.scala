@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.Hashing
@@ -82,67 +82,74 @@ object Dedup {
       banded.join(hot, keys, "left_anti")
     }
 
-  /** The Broder banded-MinHash key frame over a sketched base
-    * (`__id`, `__th`): one (id, band, key) row per band — the SINGLE
-    * source of the band-key packing, shared by the candidate join
-    * ([[minhashLshPairs]]) and the bucket-mass diagnostic
-    * ([[lshBucketProfile]]) so the two can never measure different
-    * bandings.
+  /** The banded-MinHash sketch of `docs` (the Broder construction: 8
+    * MinHashes in 4 bands of 2): one row per doc with a non-empty
+    * shingle set, holding `__id`, `__sh` (the k-shingle set the verify
+    * step scores) and `__bk` (one band key per band, indexed by band).
+    * The SINGLE source of the band-key packing, shared by the candidate
+    * join and the bucket-mass profile so the two can never measure
+    * different bandings. Callers that read it more than once persist
+    * it: every LSH plan reads it from 3-4 branches (both join sides and
+    * both verify join-backs).
     */
-  private def bandedKeys(base: DataFrame): DataFrame = {
+  private[graft] def lshSketch(
+      docs: DataFrame, id: String, text: String, k: Int): DataFrame = {
     val nBands = Hashing.MinHashSeeds.size / 2
-    base
-      .withColumn("__mh", Hashing.minhashAll(col("__th")))
-      .select(
-        col("__id"),
-        explode(array((0 until nBands).map { b =>
-          struct(lit(b).as("band"),
-            (element_at(col("__mh"), 2 * b + 1) * Hashing.MinP +
-              element_at(col("__mh"), 2 * b + 2)).as("key"))
-        }: _*)).as("bk"))
-      .select(col("__id"), col("bk.band"), col("bk.key"))
+    docs
+      .select(col(id).as("__id"),
+        Hashing.shingles(Hashing.words(col(text)), k).as("__sh"))
+      .filter(size(col("__sh")) > 0)
+      .withColumn("__mh", Hashing.minhashAll(Hashing.tokHashes(col("__sh"))))
+      .select(col("__id"), col("__sh"), array((0 until nBands).map { b =>
+        element_at(col("__mh"), 2 * b + 1) * Hashing.MinP +
+          element_at(col("__mh"), 2 * b + 2)
+      }: _*).as("__bk"))
   }
 
-  /** Bucket-mass profile of the banded-LSH key space over `docs` —
-    * what a deployment reads to decide whether it needs a `maxBucket`
-    * cap BEFORE the uncapped candidate join teaches it the hard way
-    * (round-17, r16 verdict task 4: candidate volume is QUADRATIC in
-    * hot-bucket mass — measured 121k→11.1M candidates for 10× data on
-    * the scaling corpora, max bucket 35→265).
+  /** (`__id`, band, key): one row per band of each sketched doc. */
+  private def bandedKeys(sketch: DataFrame): DataFrame =
+    sketch.select(col("__id"), posexplode(col("__bk")).as(Seq("band", "key")))
+
+  /** Bucket-mass profile of the banded-LSH key space — what a
+    * deployment reads to decide whether it needs a `maxBucket` cap
+    * BEFORE the uncapped candidate join teaches it the hard way:
+    * candidate volume is QUADRATIC in hot-bucket mass (121k → 11.1M
+    * candidates for 10× data on the scaling corpora, max bucket
+    * 35 → 265).
     *
     * `candidatePairs` is Σ m·(m−1)/2 over (band, key) buckets — the
     * EXACT candidate-join output size the uncapped pipeline will pay,
     * integer-exact via DIV. One narrow aggregation (n·bands rows of
-    * (band, key)) — linear, one shuffle; the shingle/minhash work is
-    * recomputed rather than shared with a pair run's internal cache,
-    * the price of a standalone diagnostic.
+    * (band, key)) — linear, one shuffle.
     */
   final case class LshBucketProfile(
       buckets: Long, maxBucket: Long, candidatePairs: Long)
 
+  /** Standalone profile: pays its own shingle/minhash pass. */
   def lshBucketProfile(docs: DataFrame, id: String, text: String,
       shingleK: Int = 5): LshBucketProfile =
-    profileBanded(bandedKeys(
-      withShingleHashes(docs, text, shingleK, cache = false)
-        .select(col(id).as("__id"), col("__th"))))
+    lshProfile(lshProfileFrame(lshSketch(docs, id, text, shingleK)).collect()(0))
 
-  /** The profile aggregation over an existing banded frame — shared by
-    * the standalone diagnostic above and the pair-run-integrated
-    * profile ([[minhashLshPairsProfiled]]), so the two can never
-    * measure a different banding (the [[bandedKeys]] single-source
-    * rule, one level up).
+  /** The profile as a lazy one-row frame (`buckets`, `max_bucket`,
+    * `candidate_pairs`) over a sketch, so a caller can fold it into an
+    * action it runs anyway. Always the UNCAPPED banding: its consumer
+    * sizes `maxBucket` from it.
     */
-  private def profileBanded(banded: DataFrame): LshBucketProfile = {
-    val row = banded
+  private[graft] def lshProfileFrame(sketch: DataFrame): DataFrame =
+    bandedKeys(sketch)
       .groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("m"))
       .agg(count(lit(1)).as("buckets"),
         coalesce(max(col("m")), lit(0L)).as("max_bucket"),
         coalesce(sum(expr("m * (m - 1) DIV 2")), lit(0L))
           .as("candidate_pairs"))
-      .collect()(0)
-    LshBucketProfile(row.getLong(0), row.getLong(1), row.getLong(2))
-  }
+
+  /** Reads a collected row of [[lshProfileFrame]] (by name, so the row
+    * may carry other columns).
+    */
+  private[graft] def lshProfile(row: Row): LshBucketProfile =
+    LshBucketProfile(row.getAs[Long]("buckets"), row.getAs[Long]("max_bucket"),
+      row.getAs[Long]("candidate_pairs"))
 
   /** Exact Jaccard between two string-array columns. */
   def jaccard(a: Column, b: Column): Column = {
@@ -175,9 +182,9 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
-  /** MinHash + banded LSH near-duplicate pairs (the Broder construction):
-    * 8 MinHashes in 4 bands of 2; a shared band is the join key; survivors
-    * are verified with exact shingle-set Jaccard ≥ `minJaccard`.
+  /** MinHash + banded LSH near-duplicate pairs over [[lshSketch]]: a
+    * shared band is the join key; survivors are verified with exact
+    * shingle-set Jaccard ≥ `minJaccard`.
     *
     * At scale: the band join's fan-out is bounded by bucket size; cap
     * pathological hot buckets (boilerplate shingles) with `maxBucket`
@@ -191,55 +198,46 @@ object Dedup {
       docs: DataFrame, id: String, text: String,
       shingleK: Int = 5, minJaccard: Double = 0.5,
       maxBucket: Option[Int] = None, materialize: Boolean = true): DataFrame = {
-    val sketch = withShingleHashes(docs, text, shingleK, cache = materialize)
-    val base = sketch.select(col(id).as("__id"), col("__sh"), col("__th"))
-    val banded = capBuckets(bandedKeys(base), Seq("band", "key"), maxBucket)
+    val sketch = lshSketch(docs, id, text, shingleK)
+    if (!materialize) lshPairsFromSketch(sketch, minJaccard, maxBucket)
+    else {
+      val cached = sketch.persist(StorageLevel.MEMORY_AND_DISK)
+      materializePairs(cached, lshPairsFromSketch(cached, minJaccard, maxBucket))
+    }
+  }
+
+  /** The lazy candidate join + verify over a sketch: (id_a, id_b,
+    * jaccard) with id_a < id_b.
+    */
+  private[graft] def lshPairsFromSketch(
+      sketch: DataFrame, minJaccard: Double, maxBucket: Option[Int]): DataFrame = {
+    val banded = capBuckets(bandedKeys(sketch), Seq("band", "key"), maxBucket)
     val cand = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.__id") < col("y.__id"))
       .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"))
       .distinct()
-    val pairs = verifyJaccard(cand, base, minJaccard)
-    if (materialize) materializePairs(sketch, pairs) else pairs
+    verifyJaccard(cand, sketch, minJaccard)
   }
 
   /** [[minhashLshPairs]] that ALSO returns the uncapped bucket-mass
-    * profile, computed from the SAME sketched + banded lineage the
-    * candidate join reads (round-18, r17 verdict task 3): a run that
-    * wants both the pairs and the diagnostic previously paid the
-    * shingle+minhash pass twice ([[lshBucketProfile]] is a standalone
-    * recompute by design). Here the banded frame persists for the
-    * call's duration, the profile aggregation doubles as the cache
-    * warmer, and the capped candidate join reads the warm banding —
-    * one shingle/minhash pass total (asserted by DedupSpec's
-    * counted-scan test). Always materializes (the profile is an action
-    * anyway). The profile is of the UNCAPPED banding — identical to
-    * [[lshBucketProfile]] over the same docs — because its consumer
-    * sizes `maxBucket` FROM it.
+    * profile of the SAME sketch, for one shingle/minhash pass in total
+    * (DedupSpec's counted-scan test): the sketch persists for the
+    * call, the profile is the action that fills it, and the checkpointed
+    * pairs read it warm. No cache entry outlives the call.
     */
   def minhashLshPairsProfiled(
       docs: DataFrame, id: String, text: String,
       shingleK: Int = 5, minJaccard: Double = 0.5,
       maxBucket: Option[Int] = None): (DataFrame, LshBucketProfile) = {
-    val sketch = withShingleHashes(docs, text, shingleK, cache = true)
-    val base = sketch.select(col(id).as("__id"), col("__sh"), col("__th"))
-    val bandedAll = bandedKeys(base).persist(StorageLevel.MEMORY_AND_DISK)
+    val sketch = lshSketch(docs, id, text, shingleK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // first action: materializes bandedAll AND (through its lineage)
-      // the sketch cache — the single pass over the corpus
-      val profile = profileBanded(bandedAll)
-      val banded = capBuckets(bandedAll, Seq("band", "key"), maxBucket)
-      val cand = banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-            col("x.__id") < col("y.__id"))
-        .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"))
-        .distinct()
-      val pairs = verifyJaccard(cand, base, minJaccard)
-      // same lifecycle as materializePairs, with the banding released too
-      (try pairs.localCheckpoint(true) finally sketch.unpersist(),
+      val profile = lshProfile(lshProfileFrame(sketch).collect()(0))
+      (lshPairsFromSketch(sketch, minJaccard, maxBucket).localCheckpoint(true),
         profile)
     } finally {
-      bandedAll.unpersist()
+      sketch.unpersist()
       ()
     }
   }
@@ -321,37 +319,33 @@ object Dedup {
     * DROP decisions per connected group).
     *
     * Adaptive: near-dup edge lists are tiny relative to the corpus (only
-    * dup docs appear), so below `driverMaxEdges` the component labeling
-    * runs as driver-side union-find on the collected edges — one job, no
-    * iteration. Above it, a distributed min-label + pointer-jumping loop
+    * dup docs appear), so when at most `driverMaxEdges` edges arrive the
+    * labeling is driver-side union-find over ONE bounded collect
+    * (`driverMaxEdges + 1` rows: getting more proves the edge list is
+    * over the bound without counting it). The collected edges are not
+    * deduplicated; union-find is insensitive to repeated and reversed
+    * edges, so a pair list carrying duplicates may take the distributed
+    * branch earlier but never labels differently.
+    *
+    * Above the bound, a distributed min-label + pointer-jumping loop
     * (each round: neighbor-min then label(label(id)) — O(log diameter)
     * rounds, the standard Spark CC pattern). The first `freeRounds`
     * rounds run without convergence checks; after that each round pays
     * one cheap change-count job on the (tiny, checkpointed) label frame
     * and the loop exits at fixpoint. `maxRounds` is a hard stop —
-    * hitting it throws rather than silently under-merging.
+    * hitting it throws rather than silently under-merging. The default
+    * `freeRounds = 2` fits near-dup graphs, whose components are mostly
+    * a handful of re-uploads: fixpoint lands by round 2-3, and each
+    * blind round costs two joins, a shuffle and an eager
+    * localCheckpoint, against one small join for a check (`graft.tools.
+    * Probe cc` at sf0.1: 1.44-1.84 s per invocation versus 2.88-6.16 s
+    * with six blind rounds, identical labels).
     *
-    * freeRounds default 6 → 2 (optimization round 19): near-dup graphs
-    * overwhelmingly have tiny components (a handful of re-uploads per
-    * cluster), so fixpoint lands by round 2-3 and the four blind rounds
-    * the old default ran were pure waste — each one is two joins, a
-    * shuffle and an eager localCheckpoint over the full label set,
-    * versus a convergence check that is one small join on the already-
-    * checkpointed labels. Measured (`graft.tools.Probe cc` — ProbeCc
-    * through round 19 — sf0.1, alternated in one
-    * JVM so host steal hits both variants): freeRounds=6 2.88-6.16 s
-    * per invocation, freeRounds=2 1.44-1.84 s, identical labels. For a
-    * genuinely deep graph the extra checks cost O(rounds) tiny jobs —
-    * noise next to the rounds themselves.
-    *
-    * Bench note (round-7 verdict #2): the distributed branch's wall time
-    * is high-variance even on an idle host (per-round eager
-    * localCheckpoints make it disk- and scheduler-sensitive; judge
-    * measured a 4.6 s spread across exclusive passes at sf0.1). The
-    * rounds are deliberately NOT bounded at bench SF — q75 exists to
-    * exercise the full convergence loop the 100 TB path runs, so
-    * BASELINE.md instead annotates q75 as high-variance (±2.5 s) and its
-    * baseline delta is read with that floor.
+    * The distributed branch's wall time is high-variance even on an idle
+    * host (per-round eager localCheckpoints make it disk- and
+    * scheduler-sensitive). Its rounds are deliberately NOT bounded at
+    * bench SF — q75 exercises the full convergence loop the 100 TB path
+    * runs, so BASELINE.md annotates q75 as high-variance (±2.5 s).
     *
     * @param pairs (id_a, id_b) edges
     * @return (id, cluster) — cluster = min reachable id; singletons absent
@@ -361,7 +355,7 @@ object Dedup {
       freeRounds: Int = 2, maxRounds: Int = 24): DataFrame = {
     // a freeRounds past maxRounds would skip EVERY convergence check
     // and throw "not converged" on a graph that reached fixpoint in
-    // round 1 (round-12 review)
+    // round 1
     require(freeRounds <= maxRounds,
       s"freeRounds ($freeRounds) must be <= maxRounds ($maxRounds): " +
         "no convergence check would ever run")
@@ -370,18 +364,15 @@ object Dedup {
     // the label machinery works in long: a string id (URL, UUID) would
     // cast to null under non-ANSI and every edge silently collapses to
     // (null, null) — the consumer's anti-join then drops NOTHING and
-    // near-dups survive with no warning (round-11 review). Require
-    // integral ids up front via the one shared whitelist (round-12:
-    // a second hand-rolled copy here could drift from Similarity's).
+    // near-dups survive with no warning. Require integral ids up front
+    // via the one shared whitelist.
     Seq("id_a", "id_b").foreach(Similarity.integralIdType(pairs, _))
-    val edges = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = edges.count()
-    // try/finally around both branches (round-13 review): a failed
-    // collect or pointer-jumping round must not leak the edge/und
-    // cache entries for the session's life
-    try if (nEdges <= driverMaxEdges) {
+    val longEdges = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+    // Dataset.limit takes an Int; a bound at or past Int.MaxValue edges
+    // would not fit a driver collect anyway
+    val probe = math.min(math.max(driverMaxEdges, 0L), Int.MaxValue - 1L).toInt + 1
+    val collected = longEdges.limit(probe).as[(Long, Long)].collect()
+    if (collected.length <= driverMaxEdges) {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -390,7 +381,7 @@ object Dedup {
         while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      edges.as[(Long, Long)].collect().foreach { case (a, b) =>
+      collected.foreach { case (a, b) =>
         parent.getOrElseUpdate(a, a)
         parent.getOrElseUpdate(b, b)
         val (ra, rb) = (find(a), find(b))
@@ -399,51 +390,62 @@ object Dedup {
       val rows = parent.keys.toSeq.map(id => (id, find(id)))
       rows.toDF("id", "cluster")
     } else {
-      val und = edges
-        .union(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val edges = longEdges.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      // try/finally: a failed pointer-jumping round must not leak the
+      // edge/und cache entries for the session's life
       try {
-      // localCheckpoint truncates lineage each round: a persist chain
-      // nests each round's plan inside the next (InMemoryRelation keeps
-      // its child plan) and Spark's per-action plan rendering then costs
-      // exponential time in round count
-      var labels = und.select(col("id_a").as("id")).distinct()
-        .withColumn("cluster", col("id"))
+        val und = edges
+          .union(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
+          .distinct()
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try pointerJump(und, freeRounds, maxRounds)
+        finally und.unpersist()
+      } finally edges.unpersist()
+    }
+  }
+
+  /** The distributed branch of [[dupClusters]] over the undirected,
+    * deduplicated edge frame `und`.
+    */
+  private def pointerJump(und: DataFrame, freeRounds: Int, maxRounds: Int): DataFrame = {
+    // localCheckpoint truncates lineage each round: a persist chain
+    // nests each round's plan inside the next (InMemoryRelation keeps
+    // its child plan) and Spark's per-action plan rendering then costs
+    // exponential time in round count
+    var labels = und.select(col("id_a").as("id")).distinct()
+      .withColumn("cluster", col("id"))
+      .localCheckpoint(true)
+    var round = 0
+    var converged = false
+    while (round < maxRounds && !converged) {
+      val nb = und
+        .join(labels.select(col("id").as("__bid"), col("cluster").as("__bc")),
+          col("id_b") === col("__bid"))
+        .groupBy(col("id_a").as("id"))
+        .agg(min(col("__bc")).as("__nbmin"))
+      val stepped = labels.join(nb, Seq("id"), "left")
+        .select(col("id"),
+          least(col("cluster"), coalesce(col("__nbmin"), col("cluster"))).as("cluster"))
+      val jumped = stepped.as("a")
+        .join(stepped.select(col("id").as("__pid"), col("cluster").as("__pc")).as("b"),
+          col("a.cluster") === col("__pid"), "left")
+        .select(col("a.id").as("id"),
+          least(col("a.cluster"), coalesce(col("__pc"), col("a.cluster"))).as("cluster"))
         .localCheckpoint(true)
-      var round = 0
-      var converged = false
-      while (round < maxRounds && !converged) {
-        val nb = und
-          .join(labels.select(col("id").as("__bid"), col("cluster").as("__bc")),
-            col("id_b") === col("__bid"))
-          .groupBy(col("id_a").as("id"))
-          .agg(min(col("__bc")).as("__nbmin"))
-        val stepped = labels.join(nb, Seq("id"), "left")
-          .select(col("id"),
-            least(col("cluster"), coalesce(col("__nbmin"), col("cluster"))).as("cluster"))
-        val jumped = stepped.as("a")
-          .join(stepped.select(col("id").as("__pid"), col("cluster").as("__pc")).as("b"),
-            col("a.cluster") === col("__pid"), "left")
-          .select(col("a.id").as("id"),
-            least(col("a.cluster"), coalesce(col("__pc"), col("a.cluster"))).as("cluster"))
-          .localCheckpoint(true)
-        round += 1
-        if (round >= freeRounds) {
-          // fixpoint ⟺ a full neighbor-min + pointer round changed nothing
-          converged = jumped.as("n")
-            .join(labels.select(col("id"), col("cluster").as("__oc")), "id")
-            .filter(col("cluster") =!= col("__oc"))
-            .isEmpty
-        }
-        labels = jumped
+      round += 1
+      if (round >= freeRounds) {
+        // fixpoint ⟺ a full neighbor-min + pointer round changed nothing
+        converged = jumped.as("n")
+          .join(labels.select(col("id"), col("cluster").as("__oc")), "id")
+          .filter(col("cluster") =!= col("__oc"))
+          .isEmpty
       }
-      if (!converged) throw new IllegalStateException(
-        s"dupClusters: not converged after $maxRounds pointer-jumping rounds " +
-          "(component diameter beyond budget) — raise maxRounds")
-      labels
-      } finally und.unpersist()
-    } finally edges.unpersist()
+      labels = jumped
+    }
+    if (!converged) throw new IllegalStateException(
+      s"dupClusters: not converged after $maxRounds pointer-jumping rounds " +
+        "(component diameter beyond budget) — raise maxRounds")
+    labels
   }
 
   /** Embedding-cosine near-duplicate pairs within blocks (`blockCol` is

@@ -75,7 +75,7 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     val question = args.headOption.getOrElse(throw new IllegalArgumentException(
-      "usage: Probe <cc|q90min|recall112> [sfDir] [question args...]"))
+      "usage: Probe <cc|q90min|semdedup|recall112> [sfDir] [question args...]"))
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -250,59 +250,63 @@ object Probe {
       s"unknown colocation tier(s): ${unknownTiers.mkString(", ")}")
     def fmt(v: Double) = String.format(Locale.ROOT, "%.4f", v: java.lang.Double)
 
-    val samp = e.filter(
-        Corpus.bucket16($"vec_id", "semdedup-deep-r19") < hexBound)
-      .select($"vec_id", $"embedding").persist()
-    val ns = samp.count()
+    // every frame and codebook this sweep persists is released in a
+    // finally, so a failed tier or tau does not pin them for the session
+    val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    def hold[A](a: A)(release: A => Unit): A = { held += (() => release(a)); a }
+    try {
+      val samp = hold(e.filter(
+          Corpus.bucket16($"vec_id", "semdedup-deep-r19") < hexBound)
+        .select($"vec_id", $"embedding").persist())(_.unpersist())
+      val ns = samp.count()
 
-    // tier assignments over the sample (pure per-row functions); a
-    // skipped tier carries NULL cells, so its co-location count reads 0
-    val cells0 =
-      if (tiers("flat")) {
-        val flatCents = Similarity.trainKmeansCentroids(
-          e, "embedding", k, idCol = Some("vec_id"))
-        samp.withColumn("flat", Similarity.cellAssign($"embedding", flatCents))
-      } else samp.withColumn("flat", lit(null).cast("int"))
-    val cb2 = if (tiers("two"))
-      Some(Ivf.train(e, "embedding", "vec_id", k,
-        itersCoarse = 3, itersFine = 2)) else None
-    val cb3 = if (tiers("three"))
-      Some(Ivf.train3(e, "embedding", "vec_id", k,
-        itersCoarse = 3, itersLevel = 2)) else None
-    val cells2 = cb2.fold(cells0.withColumn("two", lit(null).cast("int")))(
-      b => Ivf.assign(cells0, "embedding", b, "two"))
-    val cells3 = cb3.fold(cells2.withColumn("three", lit(null).cast("int")))(
-        b => Ivf.assign3(cells2, "embedding", b, "three"))
-      .select($"vec_id", $"flat", $"two", $"three").persist()
-    cells3.count()
+      // tier assignments over the sample (pure per-row functions); a
+      // skipped tier carries NULL cells, so its co-location count reads 0
+      val cells0 =
+        if (tiers("flat")) {
+          val flatCents = Similarity.trainKmeansCentroids(
+            e, "embedding", k, idCol = Some("vec_id"))
+          samp.withColumn("flat", Similarity.cellAssign($"embedding", flatCents))
+        } else samp.withColumn("flat", lit(null).cast("int"))
+      val cb2 = if (tiers("two"))
+        Some(hold(Ivf.train(e, "embedding", "vec_id", k,
+          itersCoarse = 3, itersFine = 2))(_.release())) else None
+      val cb3 = if (tiers("three"))
+        Some(hold(Ivf.train3(e, "embedding", "vec_id", k,
+          itersCoarse = 3, itersLevel = 2))(_.release())) else None
+      val cells2 = cb2.fold(cells0.withColumn("two", lit(null).cast("int")))(
+        b => Ivf.assign(cells0, "embedding", b, "two"))
+      val cells3 = hold(cb3.fold(cells2.withColumn("three", lit(null).cast("int")))(
+          b => Ivf.assign3(cells2, "embedding", b, "three"))
+        .select($"vec_id", $"flat", $"two", $"three").persist())(_.unpersist())
+      cells3.count()
 
-    for (tau <- taus) {
-      val tp = Dedup.embeddingNearDupPairs(
-          samp, "vec_id", "embedding", tau, blockCol = None)
-        .select($"id_a", $"id_b").persist()
-      val nPairs = tp.count()
-      val joined = tp
-        .join(cells3.select($"vec_id".as("id_a"), $"flat".as("fa"),
-          $"two".as("ta"), $"three".as("ha")), "id_a")
-        .join(cells3.select($"vec_id".as("id_b"), $"flat".as("fb"),
-          $"two".as("tb"), $"three".as("hb")), "id_b")
-        .select(
-          count(when($"fa" === $"fb", 1)).as("flat"),
-          count(when($"ta".isNotNull && $"ta" === $"tb", 1)).as("two"),
-          count(when($"ha".isNotNull && $"ha" === $"hb", 1)).as("three"))
-        .collect()(0)
-      def r(c: Long) = if (nPairs > 0) c.toDouble / nPairs else 0.0
-      println(s"""{"probe":"tau","k":$k,"tau":$tau,"sample_rows":$ns,""" +
-        s""""n_pairs":$nPairs,"flat":${joined.getLong(0)},""" +
-        s""""two":${joined.getLong(1)},"three":${joined.getLong(2)},""" +
-        s""""r_flat":${fmt(r(joined.getLong(0)))},""" +
-        s""""r_two":${fmt(r(joined.getLong(1)))},""" +
-        s""""r_three":${fmt(r(joined.getLong(2)))}}""")
-      tp.unpersist()
-    }
-    cb2.foreach(_.release()); cb3.foreach(_.release())
-    cells3.unpersist(); samp.unpersist()
-    ()
+      for (tau <- taus) {
+        val tp = Dedup.embeddingNearDupPairs(
+            samp, "vec_id", "embedding", tau, blockCol = None)
+          .select($"id_a", $"id_b").persist()
+        try {
+          val nPairs = tp.count()
+          val joined = tp
+            .join(cells3.select($"vec_id".as("id_a"), $"flat".as("fa"),
+              $"two".as("ta"), $"three".as("ha")), "id_a")
+            .join(cells3.select($"vec_id".as("id_b"), $"flat".as("fb"),
+              $"two".as("tb"), $"three".as("hb")), "id_b")
+            .select(
+              count(when($"fa" === $"fb", 1)).as("flat"),
+              count(when($"ta".isNotNull && $"ta" === $"tb", 1)).as("two"),
+              count(when($"ha".isNotNull && $"ha" === $"hb", 1)).as("three"))
+            .collect()(0)
+          def r(c: Long) = if (nPairs > 0) c.toDouble / nPairs else 0.0
+          println(s"""{"probe":"tau","k":$k,"tau":$tau,"sample_rows":$ns,""" +
+            s""""n_pairs":$nPairs,"flat":${joined.getLong(0)},""" +
+            s""""two":${joined.getLong(1)},"three":${joined.getLong(2)},""" +
+            s""""r_flat":${fmt(r(joined.getLong(0)))},""" +
+            s""""r_two":${fmt(r(joined.getLong(1)))},""" +
+            s""""r_three":${fmt(r(joined.getLong(2)))}}""")
+        } finally { tp.unpersist(); () }
+      }
+    } finally held.reverseIterator.foreach(_())
   }
 
   private def recall112(spark: SparkSession, sfDir: String,

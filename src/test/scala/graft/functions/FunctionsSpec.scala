@@ -282,16 +282,36 @@ class FunctionsSpec extends SparkSpec {
     val byCarrier = rows.sortBy(_._2).map(_._1)
     assert(byCarrier.toSeq == byString.toSeq,
       "carrier order must equal lexicographic string order")
+    // null in → null out, in a frame whose other rows are valid
+    val withNull = (pool.map(Option(_)) :+ None).toDF("s")
+      .select($"s", Strings.lexCarrier($"s").as("k"))
+      .filter($"s".isNull).select($"k").as[Option[Long]].collect()
+    assert(withNull.toSeq == Seq(None), "a null input must give a null carrier")
+    // a char outside [0-9_] anywhere in an otherwise valid input raises
+    // a named error instead of ordering wrong (':' sorts just above '9',
+    // '-' and '.' below '0', letters above '_')
+    val foreign = for {
+      s <- Gen.oneOf(pool.filter(_.nonEmpty))
+      at <- Gen.chooseNum(0, 14)
+      ch <- Gen.oneOf(':', '-', '.', ' ', 'a', 'Z', '`', '\u00e5')
+    } yield s.updated(math.min(at, s.length - 1), ch)
+    samples(foreign, 8).foreach { bad =>
+      val e = intercept[Exception] {
+        Seq(bad).toDF("s").select(Strings.lexCarrier($"s")).collect()
+      }
+      assert(messages(e).exists(_.contains("lexCarrier")), s"$bad: $e")
+    }
   }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x =>
+      Option(x.getMessage).toSeq ++ messages(x.getCause))
 
   test("lexCarrier: >15 chars raises instead of silently truncating") {
     val e = intercept[Exception] {
       Seq("1234567890123456").toDF("s")
         .select(Strings.lexCarrier($"s")).collect()
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x =>
-        Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("lexCarrier")), e.toString)
   }
 }

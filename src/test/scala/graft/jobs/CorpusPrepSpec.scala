@@ -150,6 +150,120 @@ class CorpusPrepSpec extends SparkSpec {
     assert(e.getMessage.contains("compression"))
   }
 
+  /** English-lexicon prose: pseudo-words of 4-8 letters (no lexicon
+    * word of any language) with "the"/"a" every seventh word, so it
+    * clears the quality and language gates.
+    */
+  private def prose(r: scala.util.Random, words: Int): String = {
+    def word() = (0 until 2 + r.nextInt(3))
+      .map(_ => s"${"bcdfghjkmprstvz"(r.nextInt(15))}${"aeiou"(r.nextInt(5))}").mkString
+    (0 until words).map(k =>
+      if (k % 7 == 3) (if (r.nextBoolean()) "the" else "a") else word()).mkString(" ")
+  }
+
+  /** Ledger fixture covering every way a row leaves a stage (ids below
+    * 100 are the planted cases; 100+ are plain prose filler).
+    */
+  private lazy val ledgerFixture = {
+    val r = new scala.util.Random(17)
+    val key = "the quick vabo tiku a sefo ramu lodi"  // 8 leading words
+    val dup = prose(r, 70)
+    val near = prose(r, 70)
+    val planted = Seq[(Long, String)](
+      (1L, null),                                      // null text
+      (2L, (0 until 60).map(i => s"qwertyzx$i").mkString(" ")), // und, quality ok
+      (3L, "the xq"),                                  // quality below the gate
+      (4L, ("the a fast slow value " * 48).trim),      // low entropy
+      // content key whose smallest id fails the low-entropy gate: the
+      // exact stage must keep 6, the smallest GATED id of the key
+      (5L, key + " " + ("the a fast slow value " * 48).trim),
+      (6L, key + " " + prose(r, 70)),
+      (7L, key + " " + prose(r, 70)),
+      (20L, dup), (21L, dup),                          // exact duplicates
+      (30L, near), (31L, "zebra " + near))             // near duplicates
+    val filler = (100L until 140L).map(i => (i, prose(r, 60 + r.nextInt(40))))
+    // three input partitions and no shuffle, like a parquet scan
+    spark.sparkContext.parallelize(planted ++ filler, 3).toDF("doc_id", "text")
+  }
+
+  test("run's ledger equals the stage-by-stage reference (null text, und, quality, low entropy, gated key minimum)") {
+    val docs = ledgerFixture
+    for (cfg <- Seq(CorpusPrep.Config(minCompressionRatio = 0.1), CorpusPrep.Config())) {
+      val ann = CorpusPrep.annotate(docs, "text", cfg)
+      val gated = CorpusPrep.gate(ann, cfg)
+      val exact = CorpusPrep.exactCanonical(gated, "doc_id", "text", cfg)
+      val near = CorpusPrep.nearDupCanonical(exact, "doc_id", "text", cfg)
+      val profile = graft.operators.Dedup.lshBucketProfile(exact, "doc_id", "text", cfg.shingleK)
+      val want = Map(
+        "input" -> docs.count(),
+        "quality_lang_gate" -> gated.count(),
+        "exact_dedup" -> exact.count(),
+        "near_dup" -> near.count(),
+        "lsh_max_bucket" -> profile.maxBucket,
+        "lsh_candidate_pairs" -> profile.candidatePairs)
+      val out = CorpusPrep.run(docs, "doc_id", "text", cfg)
+      try {
+        val got = out.stats.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(got == want, s"$cfg")
+        assert(out.kept.select($"doc_id").as[Long].collect().toSet ==
+          near.select($"doc_id").as[Long].collect().toSet, s"$cfg")
+      } finally out.release()
+
+      // the fixture really covers each case under this config
+      val a = ann.select($"doc_id", $"lang", $"quality").as[(Long, String, Option[Double])]
+        .collect().map(t => t._1 -> t).toMap
+      val g = gated.select($"doc_id").as[Long].collect().toSet
+      val e = exact.select($"doc_id").as[Long].collect().toSet
+      val n = near.select($"doc_id").as[Long].collect().toSet
+      assert(!g(1L), "null text is gated out")
+      assert(a(2L)._2 == "und" && a(2L)._3.exists(_ >= cfg.minQuality) && !g(2L))
+      assert(a(3L)._2 == "en" && a(3L)._3.exists(_ < cfg.minQuality) && !g(3L))
+      assert(e(20L) && !e(21L) && e(30L) && e(31L) && n(30L) && !n(31L))
+      if (cfg.minCompressionRatio > 0) {
+        assert(!g(4L) && !g(5L), "low-entropy docs are gated out")
+        assert(e(6L) && !e(7L), "the key's smallest GATED id is its keeper")
+      } else assert(e(4L) && e(5L) && !e(6L) && !e(7L))
+    }
+  }
+
+  test("run: at most 18 Spark jobs, and release() leaves no cache entry") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = ledgerFixture
+    CorpusPrep.run(docs, "doc_id", "text").release() // warm the code paths
+    spark.catalog.clearCache()
+    // the listener bus delivers events in posting order: the jobs of the
+    // run are exactly those between the two marker jobs
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(tag: String): Unit = {
+      spark.sparkContext.setJobDescription(tag)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      marker("jobs-begin")
+      val out = CorpusPrep.run(docs, "doc_id", "text")
+      out.stats.collect()
+      out.release()
+      marker("jobs-end")
+      while (!events.lastOption.contains("jobs-end")) {
+        val ev = started.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(ev != null, s"listener saw no end marker; got $events")
+        events += ev
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = events.dropWhile(_ != "jobs-begin").size - 2
+    assert(jobs <= 18, s"CorpusPrep.run started $jobs Spark jobs")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "run must leave only kept cached, and release() must drop it")
+  }
+
   // --- incremental semantic compaction (round-15, verdict task 4) -----------
 
   /** 3 nonzero-centered clusters (within-cluster cosine ≈ 1, across ≈

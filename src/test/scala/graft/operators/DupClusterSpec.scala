@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import graft.SparkSpec
 
 /** Connected-component clustering over near-dup pairs. */
@@ -70,5 +72,38 @@ class DupClusterSpec extends SparkSpec {
     val driver = Dedup.dupClusters(pairs).as[(Long, Long)].collect().toMap
     val dist = Dedup.dupClusters(pairs, driverMaxEdges = 0L).as[(Long, Long)].collect().toMap
     assert(dist == driver)
+  }
+
+  /** The driver branch returns a local frame; the distributed one a
+    * checkpointed RDD.
+    */
+  private def labeledOnDriver(labels: DataFrame): Boolean =
+    labels.queryExecution.logical.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+
+  test("driverMaxEdges is the exact boundary between the driver and distributed branches") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("id_a", "id_b")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+      20L -> 20L, 21L -> 20L)
+    val atBound = Dedup.dupClusters(pairs, driverMaxEdges = 4L)
+    val pastBound = Dedup.dupClusters(pairs, driverMaxEdges = 3L)
+    assert(labeledOnDriver(atBound), "exactly driverMaxEdges edges stay on the driver")
+    assert(!labeledOnDriver(pastBound), "driverMaxEdges + 1 edges go distributed")
+    assert(atBound.as[(Long, Long)].collect().toMap == want)
+    assert(pastBound.as[(Long, Long)].collect().toMap == want)
+  }
+
+  test("duplicate and reversed edges label identically on both branches") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+    val noisy = (edges ++ edges ++ edges.map(_.swap) ++ Seq((4L, 1L), (11L, 10L)))
+      .toDF("id_a", "id_b")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L)
+    val driver = Dedup.dupClusters(noisy)
+    val dist = Dedup.dupClusters(noisy, driverMaxEdges = 0L)
+    assert(labeledOnDriver(driver) && !labeledOnDriver(dist))
+    assert(driver.as[(Long, Long)].collect().toMap == want)
+    assert(dist.as[(Long, Long)].collect().toMap == want)
+    assert(Dedup.dupClusters(edges.toDF("id_a", "id_b")).as[(Long, Long)]
+      .collect().toMap == want)
   }
 }
