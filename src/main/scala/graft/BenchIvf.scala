@@ -7,19 +7,20 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Ivf, Similarity}
 
-/** Trainer-scaling measurement for the round-15 two-level IVF codebook
-  * (BENCH_SCALING evidence): for each k, times the FLAT full trainer
+/** Trainer-scaling measurement for the IVF codebook (BENCH_SCALING
+  * evidence): for each k, times the FLAT full trainer
   * ([[Similarity.trainKmeansCentroidsFull]] — O(pool·k·d) driver
   * seeding, O(k·d) plan bytes at assignment) against the HIERARCHICAL
-  * [[Ivf.train]] (O(pool·√k·d) seeding, O(√k·d) plan bytes, fine
-  * codebook as data), plus the corpus assignment pass for each, and
-  * reports the serialized size of what each variant ships INSIDE the
-  * plan (the flat kernel's full centroid matrix vs the hierarchical
-  * path's coarse matrix — the fine codebook rides the join as ordinary
-  * rows, not plan state).
+  * [[Ivf.train]] at depth 2 (`hier`: O(pool·√k·d) seeding, O(√k·d)
+  * plan bytes, deeper levels as data) and depth 3 (`hier3`: k^⅓), plus
+  * the corpus assignment pass for each, and reports the serialized
+  * size of what each variant ships INSIDE the plan (the flat kernel's
+  * full centroid matrix vs the hierarchical path's coarse matrix — the
+  * deeper levels ride the joins as ordinary rows, not plan state).
+  * `recall` prints the q112 co-location canary per k instead.
   *
   * One JSON line per (k, variant):
-  * `{"k":N,"variant":"flat|hier","train_sec":…,"assign_sec":…,
+  * `{"k":N,"variant":"flat|hier|hier3","train_sec":…,"assign_sec":…,
   *   "plan_bytes":…,"cells":…}`
   *
   * Run exclusively (the Bench rule): `sbt "runMain graft.BenchIvf
@@ -39,21 +40,19 @@ object BenchIvf {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1"))
     val ks = (if (args.length > 1) args(1) else "80,320,1280")
       .split(",").map(_.trim.toInt)
-    // optional variant filter (round-18): the deep-k crossover runs
-    // hier vs hier3 only — the flat trainer's O(pool·k·d) driver
-    // seeding is exactly the term the hierarchical paths remove, and
-    // paying it at k=32000 would waste most of the exclusive window
-    // re-measuring the r16 flat-vs-hier verdict.
-    // `recall` (round-20, r19 verdict task 8): the q112 sampled
-    // co-location floor as a BenchIvf row — re-measures the deep tier's
-    // recall price (two vs three co-location at SemDeDup's tau = 0.4
-    // over the deterministic 1/8 sample) whenever the codebook path
-    // changes, instead of only in closing audits
+    // optional variant filter: the deep-k crossover runs hier vs hier3
+    // only — the flat trainer's O(pool·k·d) driver seeding is exactly
+    // the term the hierarchical paths remove, and paying it at
+    // k=32000 would waste most of the exclusive window.
+    // `recall`: the q112 sampled co-location floor as a BenchIvf row —
+    // re-measures the deep tier's recall price (two vs three
+    // co-location at SemDeDup's tau = 0.4 over the deterministic 1/8
+    // sample) whenever the codebook path changes
     val variants = (if (args.length > 2) args(2) else "flat,hier,hier3")
       .split(",").map(_.trim).toSet
     // fail loudly on a typo'd variant BEFORE the session starts: an
     // unknown name would run zero benches for it and silently waste
-    // the exclusive window (r18 ADVICE — the same failure mode the
+    // the exclusive window (the same failure mode the
     // SPARK_GRAFT_BENCH_PASSES validation in Bench exists to prevent)
     val knownVariants = Set("flat", "hier", "hier3", "recall")
     val unknown = variants -- knownVariants
@@ -103,51 +102,30 @@ object BenchIvf {
         s""""cells":${flatCents.length}}""")
       }
 
-      if (variants("hier")) {
-      hygiene()
-      val (cb, hierTrain) = timed {
-        Ivf.train(e, "embedding", "vec_id", k,
-          itersCoarse = 4, itersFine = 3)
-      }
-      val (_, hierAssign) = timed {
-        Ivf.assign(e, "embedding", cb)
-          .write.mode("overwrite").format("noop").save()
-      }
-      val cells = cb.fine.count()
-      println(s"""{"k":$k,"variant":"hier","train_sec":${fmt(hierTrain)},""" +
-        s""""assign_sec":${fmt(hierAssign)},""" +
-        s""""plan_bytes":${serializedBytes(cb.coarse)},""" +
-        s""""cells":$cells}""")
-      cb.release()
-      }
-
-      if (variants("hier3")) {
-      // three-level (round-18, r17 verdict task 2): the mitigation for
-      // the two-level assign's Θ(√k·d)-per-row term — this is the
-      // crossover instrument showing per-row assign cost k^⅓-bounded
-      // as k grows past the corpus-scaled 8000 mark
-      hygiene()
-      val (cb3, hier3Train) = timed {
-        Ivf.train3(e, "embedding", "vec_id", k,
-          itersCoarse = 4, itersLevel = 3)
-      }
-      val (_, hier3Assign) = timed {
-        Ivf.assign3(e, "embedding", cb3)
-          .write.mode("overwrite").format("noop").save()
-      }
-      val cells3 = cb3.fine.count()
-      println(s"""{"k":$k,"variant":"hier3","train_sec":${fmt(hier3Train)},""" +
-        s""""assign_sec":${fmt(hier3Assign)},""" +
-        s""""plan_bytes":${serializedBytes(cb3.coarse)},""" +
-        s""""cells":$cells3}""")
-      cb3.release()
+      // hier = two levels, hier3 = three: the depth crossover instrument
+      // (per-row assign cost k^(1/depth)-bounded as k grows)
+      for ((variant, depth) <- Seq("hier" -> 2, "hier3" -> 3)
+          if variants(variant)) {
+        hygiene()
+        val (cb, train) = timed {
+          Ivf.train(e, "embedding", "vec_id", k, depth,
+            itersCoarse = 4, itersLevel = 3)
+        }
+        val (_, assign) = timed {
+          Ivf.assign(e, "embedding", cb)
+            .write.mode("overwrite").format("noop").save()
+        }
+        println(s"""{"k":$k,"variant":"$variant","train_sec":${fmt(train)},""" +
+          s""""assign_sec":${fmt(assign)},""" +
+          s""""plan_bytes":${serializedBytes(cb.coarse)},""" +
+          s""""cells":${cb.fine.count()}}""")
+        cb.release()
       }
 
       if (variants("recall")) {
-      // deep-tier recall canary (round-20, r19 verdict task 8): the
-      // q112 floor's tau = 0.4 co-location ratio for the two- and
-      // three-level tiers at this k, over the same deterministic 1/8
-      // sample q112 uses — one {"probe":"tau",...} line per k. The
+      // deep-tier recall canary: the q112 floor's tau = 0.4
+      // co-location ratio for the two- and three-level tiers at this k,
+      // over the same deterministic 1/8 sample q112 uses — one {"probe":"tau",...} line per k. The
       // acceptance bar is q112's DeepRecallBound: r_three/r_two ≥ 0.8
       hygiene()
       graft.tools.Probe.colocationSweep(spark, e, k,

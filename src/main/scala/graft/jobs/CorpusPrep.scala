@@ -184,7 +184,7 @@ object CorpusPrep {
     * drift-triggered retrains.
     */
   final case class Compaction(
-      codebook: graft.operators.Ivf.AnyCodebook,
+      codebook: graft.operators.Ivf.Codebook,
       ledger: DataFrame, // (id: long, cell: int|null, dropped: boolean)
       retrained: Boolean,
       version: Int) {
@@ -197,10 +197,9 @@ object CorpusPrep {
   }
 
   /** Incremental SEMANTIC near-dup compaction over the stream's
-    * accumulated output (round-15, the round-14 verdict's task 4): the
-    * periodic batch pass [[stream]]'s scaladoc defers to, maintained
-    * against a DURABLE tiered IVF index under `indexDir` instead of
-    * retraining per pass.
+    * accumulated output: the periodic batch pass [[stream]]'s scaladoc
+    * defers to, maintained against a DURABLE tiered IVF index under
+    * `indexDir` instead of retraining per pass.
     *
     * Each invocation: load the latest index state (codebook + per-cell
     * typical distance + the (id, cell, dropped) ledger); the DELTA is
@@ -226,17 +225,18 @@ object CorpusPrep {
     * ledger+delta rows exceed `growthFactor` × the rows at training,
     * the pass retrains regardless of drift.
     *
-    * Codebook DEPTH follows [[graft.operators.Ivf.trainTiered]]'s
-    * measured switch (round-19, r18 verdict task 1): a (re)train at
-    * `k(n) >= deepMinK` builds the THREE-level codebook — at SemDeDup's
-    * corpus-scaled k the two-level assign's Θ(√k·d)-per-row term makes
-    * total work n^1.5 (BENCH_SCALING r17: 3.20 s → 36.9 s per 10× of
-    * data at k = 800 → 8000), exactly the asymptote the batch path
-    * ([[graft.operators.Dedup.semDedupScaled]]) already dodges at the
-    * same threshold. The depth is a property of each SAVED state
-    * (`loadAny` sniffs it), so incremental passes keep the frozen
-    * codebook's depth and the switch engages at the next growth/drift
-    * retrain — the moment k is re-derived from the grown corpus.
+    * Codebook DEPTH follows [[graft.operators.Dedup.cellDepth]] with
+    * no flat tier: a (re)train at `k(n) >= deepMinK` builds the
+    * THREE-level codebook — at SemDeDup's corpus-scaled k the
+    * two-level assign's Θ(√k·d)-per-row term makes total work n^1.5
+    * (3.20 s → 36.9 s per 10× of data at k = 800 → 8000), exactly the
+    * asymptote the batch path
+    * ([[graft.operators.Dedup.semDedupScaled]]) dodges at the same
+    * threshold. The depth is a property of each SAVED state
+    * ([[graft.operators.Ivf.load]] sniffs it), so incremental passes
+    * keep the frozen codebook's depth and the switch engages at the
+    * next growth/drift retrain — the moment k is re-derived from the
+    * grown corpus.
     *
     * State writes are versioned (`indexDir/v<N>-<attempt>/…`, each
     * attempt a unique directory) with an atomically renamed `LATEST`
@@ -270,7 +270,7 @@ object CorpusPrep {
       driftTolerance: Double = 4.0,
       maxDriftFraction: Double = 0.1,
       growthFactor: Double = 2.0,
-      deepMinK: Int = 8000,
+      deepMinK: Int = graft.operators.Ivf.DeepMinK,
       lockStaleMs: Long = 60L * 60 * 1000): Compaction =
     compactNearDupsImpl(accumulated, id, vec, indexDir, tau, k,
       driftTolerance, maxDriftFraction, growthFactor, deepMinK,
@@ -446,12 +446,11 @@ object CorpusPrep {
 
     def fullBuild(version: Int, observedRaw: Option[String]): Compaction = {
       val n = accumulated.count()
-      // the measured depth switch (r18 verdict task 1): k >= deepMinK
-      // trains the three-level codebook — the durable path previously
-      // stayed two-level at any k, one decade from the n^1.5 cliff
-      val cb = Ivf.trainTiered(accumulated, vec, id, k(n), deepMinK)
+      val kn = k(n)
+      val cb = Ivf.train(accumulated, vec, id, kn,
+        Dedup.cellDepth(kn, flatMaxK = 0, deepMinK))
       try {
-        val ledger = dropLedger(Ivf.assignAny(accumulated, vec, cb, "cell"), id)
+        val ledger = dropLedger(Ivf.assign(accumulated, vec, cb, "cell"), id)
         // the drift baseline freezes HERE, at training time —
         // incremental passes carry it forward unchanged (recomputing it
         // over drifted data ratchets the baseline and the trigger never
@@ -476,13 +475,13 @@ object CorpusPrep {
           col("__did").isNotNull.as("dropped"))
     }
 
-    def write(version: Int, cb: Ivf.AnyCodebook, ledger: DataFrame,
+    def write(version: Int, cb: Ivf.Codebook, ledger: DataFrame,
         retrained: Boolean, typical: Map[Int, Double],
         rowsAtTraining: Long, observedRaw: Option[String]): Compaction = {
       val name =
         s"v$version-${java.util.UUID.randomUUID().toString.take(8)}"
       val d = s"$indexDir/$name"
-      Ivf.saveAny(cb, s"$d/codebook")
+      Ivf.save(cb, s"$d/codebook")
       typical.toSeq.toDF("cell", "d2")
         .repartition(1).write.mode("overwrite").parquet(s"$d/typical")
       Seq((rowsAtTraining, retrained)).toDF("rows_at_training", "retrained")
@@ -574,7 +573,7 @@ object CorpusPrep {
       case Some(prevName) =>
         val prev = versionOf(prevName)
         val d = s"$indexDir/$prevName"
-        val cb = Ivf.loadAny(spark, s"$d/codebook")
+        val cb = Ivf.load(spark, s"$d/codebook")
         val typical = spark.read.parquet(s"$d/typical")
           .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
         val rowsAtTraining = spark.read.parquet(s"$d/trainmeta")
@@ -599,7 +598,7 @@ object CorpusPrep {
             cb.release()
             fullBuild(prev + 1, observedRaw)
           } else {
-            val newRows = Ivf.assignAny(delta, vec, cb, "cell")
+            val newRows = Ivf.assign(delta, vec, cb, "cell")
               .select(col(id).cast("long").as("id"), col("cell"))
               .persist()
             val affected = newRows.select("cell").filter(col("cell").isNotNull)

@@ -516,19 +516,18 @@ object Dedup {
     *
     * Lifecycle: persist the assigned frame while the PAIR stage
     * materializes — the self-join's x and y sides otherwise each
-    * re-run the assignment kernel, the operator's dominant cost
-    * (round-14 review). The small dropped-id dim localCheckpoints
-    * (pair work never re-runs), and the narrow (id, cell) assignment
-    * is eagerly pinned FROM THE SAME CACHE before the cache releases
-    * in finally (a bare persist leaked one cached frame per invocation
-    * for the session's life). The round-19 form returned the LIVE
-    * assigned plan instead, which re-ran the assignment kernel (flat
-    * [[Similarity.cellAssign]] projection or the [[Ivf.assign]]/
-    * [[Ivf.assign3]] codebook-join chain) once more at every caller's
-    * action — one redundant corpus pass per rollup consumer
-    * (q91/q104/q111; r19 verdict task 2). The returned frame now joins
-    * two checkpointed narrow frames and never re-touches the kernel or
-    * the codebook; the q91/q104 plan pins assert exactly that shape.
+    * re-run the assignment kernel, the operator's dominant cost. The
+    * small dropped-id dim localCheckpoints (pair work never re-runs),
+    * and the narrow (id, cell) assignment is eagerly pinned FROM THE
+    * SAME CACHE before the cache releases in finally (a bare persist
+    * leaks one cached frame per invocation for the session's life).
+    * The returned frame joins those two checkpointed narrow frames and
+    * never re-touches the kernel or the codebook — returning the live
+    * assigned plan instead re-runs the assignment (flat
+    * [[Similarity.cellAssign]] projection or the [[Ivf.assign]]
+    * codebook-join chain) once more at every caller's action, one
+    * redundant corpus pass per rollup consumer. The q91/q104 plan pins
+    * assert this shape.
     */
   def semDedupAssigned(assigned: DataFrame, id: String, vec: String,
       tau: Double, cellCol: String = "cell"): DataFrame = {
@@ -548,87 +547,59 @@ object Dedup {
     }
   }
 
-  /** [[semDedup]] with the k-threshold codebook switch (round-16
-    * verdict task 3, the [[dupClusters]] driver→distributed precedent):
-    * at or below `flatMaxK` the flat sampled trainer runs
-    * ([[Similarity.trainKmeansCentroids]] — centroids become plan
-    * literals, assignment is map-side with zero joins, the right shape
-    * while k is small); above it the two-level codebook
-    * ([[Ivf.train]]/[[Ivf.assign]]) takes over, because the flat
-    * trainer's O(pool·k·d) driver seeding and its k·d-byte plan literal
-    * both grow linearly in k — at SemDeDup's corpus-scaled k = n/250 a
-    * 1e9-doc corpus makes them a multi-GB driver/plan term, the exact
-    * residual the hierarchical module exists to remove. The default
-    * threshold sits at the MEASURED end-to-end crossover
-    * ([[graft.BenchSemDedup]] at sf1, BENCH_SCALING.md round-16: flat
-    * wins 2.5× at k=80 and 1.5× at k=320; hierarchical wins 1.7× by
-    * k=1280 — 512 lies between, below the point where the flat plan
-    * literal even reaches a megabyte), so small-k corpora keep the
-    * faster flat shape and corpus-scaled deployments get the
-    * bounded-driver path exactly when it starts paying for itself.
-    * Round-18 adds the THIRD tier: at `deepMinK` (default 8000, the
-    * measured point where the two-level assign's n^1.5 term becomes
-    * the dominant asymptote AND the three-level path's 2.2× assign win
-    * is measured — BENCH_SCALING r17/r18) the switch goes one level
-    * deeper ([[Ivf.train3]]/[[Ivf.assign3]], per-row Θ(k^⅓·d)).
-    *
-    * Hierarchical-branch lifecycle: [[semDedupAssigned]] materializes
-    * everything that touches the codebook (the dropped-id dim and the
-    * narrow (id, cell) assignment both localCheckpoint inside it), so
-    * the trained codebook's cache releases safely right after it
-    * returns — no re-join of vectors by id is needed (round-20: the
-    * r19 form pre-checkpointed (id, cell) itself and paid one extra
-    * corpus-sized hash join per invocation to rejoin vectors).
-    * `id` must be integral and row-unique ([[Ivf.train]]'s enforced
-    * contract). For
-    * a DURABLE repeatedly-maintained index at deployment scale, prefer
-    * [[graft.jobs.CorpusPrep.compactNearDups]] — this is the one-shot
-    * form.
+  /** The SemDeDup flat→two-level threshold on k: the measured
+    * end-to-end crossover ([[graft.BenchSemDedup]] at sf1,
+    * BENCH_SCALING.md: flat wins 2.5× at k=80 and 1.5× at k=320;
+    * hierarchical wins 1.7× by k=1280 — 512 lies between, below the
+    * point where the flat plan literal even reaches a megabyte).
     */
-  def semDedupScaled(
-      embs: DataFrame, id: String, vec: String,
-      k: Int, tau: Double, flatMaxK: Int = 512,
-      deepMinK: Int = 8000): DataFrame = {
+  val FlatMaxK = 512
+
+  /** The one cell-model tier switch: 1 (flat plan-literal centroids)
+    * at k ≤ `flatMaxK`, else the [[Ivf.Codebook]] depth — 2 below
+    * `deepMinK`, 3 from it on. Small-k corpora keep the faster flat
+    * shape (zero joins, map-side assignment); above it the flat
+    * trainer's O(pool·k·d) driver seeding and k·d-byte plan literal
+    * both grow linearly in k, and the hierarchical codebook removes
+    * them; at [[Ivf.DeepMinK]] the two-level assign's Θ(√k·d)-per-row
+    * term becomes the dominant asymptote and the three-level codebook
+    * bounds it at Θ(3·k^⅓·d). Callers that always need a codebook pass
+    * `flatMaxK = 0`.
+    */
+  def cellDepth(k: Int, flatMaxK: Int = FlatMaxK,
+      deepMinK: Int = Ivf.DeepMinK): Int = {
     require(flatMaxK >= 0, s"flatMaxK must be >= 0: $flatMaxK")
     require(deepMinK > flatMaxK,
       s"deepMinK ($deepMinK) must exceed flatMaxK ($flatMaxK)")
-    if (k <= flatMaxK)
-      semDedup(embs, id, vec,
-        Similarity.trainKmeansCentroids(embs, vec, k, idCol = Some(id)), tau)
-    else if (k < deepMinK) {
-      val cb = Ivf.train(embs, vec, id, k)
-      try semDedupHier(id, vec, tau,
-        Ivf.assign(embs.select(col(id), col(vec)), vec, cb, "__sdh_cell"))
-      finally cb.release()
-    } else {
-      // THIRD tier (round-18): at corpus-scaled k past the measured
-      // n^1.5 point the two-level assign's Θ(√k·d)-per-row term is the
-      // dominant asymptote (BENCH_SCALING r17: 3.2 s → 36.9 s per 10×
-      // of data at k = 800 → 8000); the three-level codebook bounds it
-      // at Θ(3·k^⅓·d) — measured 2.20× faster at k = 8000 and 2.48×
-      // at 32000 over the 2M-row corpus (BenchIvf crossover, r18).
-      // 8000 = the first measured point where the deep win and the
-      // asymptotic term coincide.
-      val cb = Ivf.train3(embs, vec, id, k)
-      try semDedupHier(id, vec, tau,
-        Ivf.assign3(embs.select(col(id), col(vec)), vec, cb, "__sdh_cell"))
-      finally cb.release()
-    }
+    if (k <= flatMaxK) 1 else if (k < deepMinK) 2 else 3
   }
 
-  /** The shared hierarchical-branch lifecycle of [[semDedupScaled]]:
-    * hand the assign output straight to [[semDedupAssigned]], which
-    * persists it for the pair stage and checkpoints both the dropped-id
-    * dim and the narrow (id, cell) assignment before returning — so the
-    * trained codebook's cache can release immediately after. (The r19
-    * form checkpointed (id, cell) here and re-joined vectors by id — a
-    * corpus-sized hash join per invocation that the checkpoint now
-    * inside semDedupAssigned makes redundant; round-20, guide §2.4.)
-    * `assigned` must carry (id, vec, __sdh_cell) — the reserved out
-    * name (assigning straight into "cell" would silently REPLACE an
-    * id/vec column of that name).
+  /** [[semDedup]] over the [[cellDepth]] tier for `k`: flat sampled
+    * centroids ([[Similarity.trainKmeansCentroids]]) or a two/three
+    * level [[Ivf]] codebook. [[semDedupAssigned]] materializes
+    * everything that touches the codebook (the dropped-id dim and the
+    * narrow (id, cell) assignment both localCheckpoint inside it), so
+    * the trained codebook's cache releases safely right after it
+    * returns. `id` must be integral and row-unique ([[Ivf.train]]'s
+    * enforced contract). For a DURABLE repeatedly-maintained index at
+    * deployment scale, prefer [[graft.jobs.CorpusPrep.compactNearDups]]
+    * — this is the one-shot form.
     */
-  private def semDedupHier(id: String, vec: String,
-      tau: Double, assigned: DataFrame): DataFrame =
-    semDedupAssigned(assigned, id, vec, tau, cellCol = "__sdh_cell")
+  def semDedupScaled(
+      embs: DataFrame, id: String, vec: String,
+      k: Int, tau: Double, flatMaxK: Int = FlatMaxK,
+      deepMinK: Int = Ivf.DeepMinK): DataFrame =
+    cellDepth(k, flatMaxK, deepMinK) match {
+      case 1 =>
+        semDedup(embs, id, vec,
+          Similarity.trainKmeansCentroids(embs, vec, k, idCol = Some(id)), tau)
+      case depth =>
+        val cb = Ivf.train(embs, vec, id, k, depth)
+        // assign into a reserved name: "cell" would silently REPLACE an
+        // id/vec column of that name
+        try semDedupAssigned(
+          Ivf.assign(embs.select(col(id), col(vec)), vec, cb, "__sdh_cell"),
+          id, vec, tau, cellCol = "__sdh_cell")
+        finally cb.release()
+    }
 }

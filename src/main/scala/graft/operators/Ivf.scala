@@ -1,98 +1,96 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Two-level (hierarchical) IVF codebook — the round-15 scale fix for
-  * the flat trainers' two O(k·d) driver/plan terms (round-14 verdict's
-  * named residual): at SemDeDup's corpus-scaled k = n/250, a FLAT
-  * codebook costs O(pool·k·d) driver work to seed
-  * ([[Similarity.trainKmeansCentroidsFull]]) and ships every fine
-  * centroid into the plan (a multi-GB literal at ~1e9 docs).
+/** Hierarchical IVF codebook, two or three levels deep — the scale fix
+  * for the flat trainers' two O(k·d) driver/plan terms: at SemDeDup's
+  * corpus-scaled k = n/250, a FLAT codebook costs O(pool·k·d) driver
+  * work to seed ([[Similarity.trainKmeansCentroidsFull]]) and ships
+  * every centroid into the plan (a multi-GB literal at ~1e9 docs).
   *
-  * Structure: √k coarse centroids trained DISTRIBUTED
+  * Structure: ⌈k^(1/depth)⌉ coarse centroids trained DISTRIBUTED
   * ([[KMeans.lloyd]] via [[Similarity.trainKmeansCentroidsFull]] —
-  * driver seeding cost O(pool·√k·d)), then ~√k fine centroids per
-  * coarse cell trained distributed over per-cell bounded samples. The
-  * fine codebook lives as a DataFrame keyed by coarse cell — it never
-  * reaches the driver and never enters a plan literal:
+  * driver seeding cost O(pool·k^(1/depth)·d)), then one or two deeper
+  * levels, each trained distributed over per-parent bounded samples.
+  * Every deeper level lives as a (coarse, cell, c) DataFrame keyed by
+  * its parent cell — it never reaches the driver and never enters a
+  * plan literal:
   *
-  *   - TRAIN: one corpus pass assigns coarse cells (√k plan literals,
-  *     the [[graft.plans.NearestCentroid]] kernel), one window pass
-  *     takes a deterministic hash-ordered sample per coarse cell, and
-  *     each fine Lloyd round is a bounded-sample join + ONE
-  *     (coarse, fine, dim) partial-aggregated shuffle. Driver state per
-  *     round: zero rows (the codebook stays distributed).
+  *   - TRAIN: one corpus pass assigns coarse cells (the coarse plan
+  *     literals, the [[graft.plans.NearestCentroid]] kernel), one
+  *     window pass takes a deterministic hash-ordered sample per
+  *     parent cell, and each Lloyd round of a level is a bounded-sample
+  *     join + ONE (parent, cell, dim) partial-aggregated shuffle. Driver
+  *     state per round: zero rows (the codebook stays distributed).
   *   - ASSIGN: corpus rows get their coarse cell map-side, then join
-  *     the (coarse → fine candidates) codebook — AQE broadcasts it
-  *     while it fits, and falls back to an equi-shuffle keyed by coarse
-  *     cell at extreme k — and the per-row fine argmin is the codegen'd
-  *     [[graft.plans.NearestCandidate]] kernel over the joined
-  *     candidate array: O(√k·d) work per row, O(√k·d) plan bytes.
+  *     each level's (parent → candidates) frame in turn — AQE
+  *     broadcasts it while it fits, and falls back to an equi-shuffle
+  *     keyed by parent cell at extreme k — and the per-row argmin is
+  *     the codegen'd [[graft.plans.NearestCandidate]] kernel over the
+  *     joined candidate array.
   *
-  * Everything downstream of the coarse training runs in
-  * [[KMeans.quantize]]'s integer domain, so cells are bit-reproducible
-  * across engines/partitionings/retries and a DuckDB oracle can
-  * hash-match the assignment exactly (q101/q102; the codebook renders
-  * as literal BIGINT rows at oracle time — collecting it is an
-  * oracle-/test-scale affordance, [[collectFine]], never part of the
-  * operator's own data path).
+  * Depth is the per-row cost knob. At depth 2 a row costs Θ(√k·d): √k
+  * coarse literals plus ~√k joined fine candidates, so with k ∝ n total
+  * assignment work is n^1.5 — measured 3.20 s → 36.9 s for 10× data at
+  * k = 800 → 8000. Depth 3 bounds the per-row term at Θ(3·k^⅓·d): at
+  * k = 8000 that is 20+20+20 centroid distances per row instead of
+  * ~90+90, measured 2.2× faster at k = 8000 and 2.5× at k = 32000 over
+  * a 2M-row corpus (BENCH_SCALING.md), and the gap widens as k^(1/6).
+  * [[DeepMinK]] is that crossover.
   *
-  * Incremental maintenance (round-14 verdict task 4): because
-  * assignment is a pure per-row function of (vector, codebook), a
-  * frozen codebook assigns a NEW delta of embeddings independently of
-  * the already-indexed corpus — `assign(delta) ∪ storedIndex` is
-  * row-identical to `assign(corpus ∪ delta)` (pinned by q102's oracle
-  * and IvfSpec). [[driftFraction]] is the retrain trigger: the share of
+  * Everything below the coarse level runs in [[KMeans.quantize]]'s
+  * integer domain, so cells are bit-reproducible across
+  * engines/partitionings/retries and a DuckDB oracle can hash-match the
+  * assignment exactly (the codebook renders as literal BIGINT rows at
+  * oracle time — collecting it is an oracle-/test-scale affordance,
+  * [[collectLevel]], never part of the operator's own data path).
+  *
+  * Incremental maintenance: because assignment is a pure per-row
+  * function of (vector, codebook), a frozen codebook assigns a NEW
+  * delta of embeddings independently of the already-indexed corpus —
+  * `assign(delta) ∪ storedIndex` is row-identical to
+  * `assign(corpus ∪ delta)` at every depth (pinned by q102's oracle and
+  * IvfSpec). [[driftFraction]] is the retrain trigger: the share of
   * delta rows whose nearest-coarse distance exceeds a tolerance times
   * the training-time typical distance.
-  *
-  * THREE-level extension (round-18): at SemDeDup's corpus-scaled
-  * k ∝ n even the two-level per-row Θ(√k·d) assign term makes total
-  * work n^1.5 (measured — see [[Codebook3]]); [[train3]]/[[assign3]]/
-  * [[probeCells3]] bound per-row work at Θ(k^⅓·d) per hop, the
-  * complete deeper index (build q109 / search q110; BenchIvf crossover
-  * in BENCH_SCALING.md round-18: assign 2.2× faster at k=8000, 2.5×
-  * at k=32000 over the 2M-row corpus).
   */
 object Ivf {
 
-  /** Common surface of the two- and three-level codebooks — what a
-    * TIER-AGNOSTIC consumer (the durable compaction path,
-    * [[graft.jobs.CorpusPrep.compactNearDups]]) needs: the coarse/top
-    * centroids every drift probe scores against, the dims contract,
-    * and the cache-release lifecycle. Dispatch to the depth-specific
-    * machinery goes through [[assignAny]]/[[saveAny]]/[[loadAny]]/
-    * [[trainTiered]] so the tier choice lives in ONE switch instead of
-    * leaking a `match` into every caller.
+  /** The two→three-level threshold on k: the measured point where the
+    * two-level assign's n^1.5 term dominates AND the three-level
+    * assign wins 2.2× (BENCH_SCALING.md). [[Dedup.cellDepth]] applies
+    * it.
     */
-  sealed trait AnyCodebook {
-    def coarse: Array[Array[Double]]
-    def dims: Int = coarse(0).length
-    def release(): Unit
-  }
+  val DeepMinK = 8000
 
-  /** A trained two-level codebook.
+  /** A trained codebook of depth `levels.size + 1`.
     *
     * @param coarse coarse centroids (float domain — the
-    *               [[Similarity.cellAssign]] literals), √k of them
-    * @param fine   DISTRIBUTED fine codebook: (coarse: int, cell: int,
-    *               c: array<long> in the quantized domain). `cell` is
-    *               the global id `coarse * fineK + fineRank` — sparse
-    *               but bounded by coarse.length * fineK.
-    * @param fineK  fine cells per coarse cell (the id stride)
+    *               [[Similarity.cellAssign]] literals)
+    * @param levels the DISTRIBUTED deeper levels, coarse-most first:
+    *               each a (coarse: int, cell: int, c: array<long> in the
+    *               quantized domain) frame whose `coarse` is a cell id of
+    *               the level above and whose `cell` is a global id
+    *               `parent · per + rank` — sparse but bounded
     */
-  final case class Codebook(coarse: Array[Array[Double]], fine: DataFrame,
-      fineK: Int) extends AnyCodebook {
-    /** Releases the persisted fine codebook — the owner calls this when
-      * the index is retired (e.g. replaced after a drift retrain).
-      * Safe even if blocks were already evicted: lineage is intact.
+  final case class Codebook(coarse: Array[Array[Double]],
+      levels: Seq[DataFrame]) {
+    require(levels.size == 1 || levels.size == 2,
+      s"an IVF codebook has 2 or 3 levels, got ${levels.size + 1}")
+    def dims: Int = coarse(0).length
+    def depth: Int = levels.size + 1
+    /** The leaf level — the cells [[assign]] and [[probeCells]] emit. */
+    def fine: DataFrame = levels.last
+    /** Releases the persisted levels — the owner calls this when the
+      * index is retired (e.g. replaced after a drift retrain). Safe
+      * even if blocks were already evicted: lineage is intact.
       */
-    def release(): Unit = { fine.unpersist(); () }
+    def release(): Unit = levels.foreach(_.unpersist())
   }
 
-  /** The codegen'd fine argmin over a joined candidate column (exact
+  /** The codegen'd argmin over a joined candidate column (exact
     * integer distances, ties to the smaller cell id; NULL on empty or
     * corrupt candidates — see [[graft.plans.NearestCandidateExpr]]).
     */
@@ -102,9 +100,8 @@ object Ivf {
 
   /** Exact integer squared distance between two `array<long>` columns
     * (NULL when lengths differ — zip_with's null-pad propagates). ONE
-    * Column-side implementation, mirrored exactly by [[sqDistSql]]
-    * (round-15 review: the repo's finiteNorm history shows hand-copies
-    * of exactness-critical snippets drift).
+    * Column-side implementation, mirrored exactly by [[sqDistSql]]:
+    * hand-copies of exactness-critical snippets drift.
     */
   private def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
@@ -122,9 +119,7 @@ object Ivf {
   /** The (parent → sorted candidates) aggregation every level join
     * reads — single-sourced so the struct shape feeding
     * [[graft.plans.NearestCandidate]] and the probe scorer cannot
-    * drift apart. `level` is any (coarse, cell, c) codebook frame
-    * (the two-level fine codebook, or either deep level of a
-    * [[Codebook3]] — both use the same layout).
+    * drift apart.
     */
   private def candsOf(level: DataFrame, candsCol: String,
       parentCol: String): DataFrame =
@@ -133,90 +128,109 @@ object Ivf {
         .as(candsCol))
       .withColumnRenamed("coarse", parentCol)
 
-  private def fineCands(cb: Codebook, candsCol: String,
-      coarseCol: String): DataFrame =
-    candsOf(cb.fine, candsCol, coarseCol)
+  /** `x^(1/n)` for the branching factors: sqrt/cbrt rather than `pow`,
+    * whose `27^(1/3)` lands above 3 and would ceil to 4.
+    */
+  private def root(x: Double, n: Int): Double = n match {
+    case 1 => x
+    case 2 => math.sqrt(x)
+    case 3 => math.cbrt(x)
+  }
 
-  /** Trains the two-level codebook. Deterministic end-to-end: the
-    * coarse half inherits [[Similarity.trainKmeansCentroidsFull]]'s
-    * seeded determinism; the fine half samples by (xxhash64(id), id)
-    * rank — a data-only total order — seeds each coarse cell with its
-    * first `fineK` sample rows, and iterates integer-exact Lloyd
-    * (Long sums, floored division) with (distance, cell) tie-breaks.
+  /** Trains a codebook of `depth` 2 or 3 with ≈ k leaf cells:
+    * kc = ⌈k^(1/depth)⌉ coarse centroids, then `per` =
+    * ⌈(k/kc)^(1/(depth−1))⌉ cells per parent at every deeper level
+    * (kc the coarse count the trainer actually returned). Each level
+    * trains on a bounded sample per parent cell; below the first
+    * level the sample re-keys by its assigned parent and re-ranks, so
+    * each parent gets its own deterministic seed order.
     *
-    * Rows whose vector length differs from the coarse dims do not
-    * influence fine training (their kernel result is NULL); empty fine
-    * cells drop and survivors re-rank densely per coarse cell, exactly
-    * like [[KMeans.lloyd]].
+    * Deterministic end-to-end: the coarse level inherits
+    * [[Similarity.trainKmeansCentroidsFull]]'s seeded determinism; the
+    * deeper levels sample by (xxhash64(id), id) rank — a data-only
+    * total order — and run integer-exact Lloyd ([[lloydPerParent]]).
+    * Rows whose vector length differs from the coarse dims influence
+    * no deeper level.
     *
     * @param idCol row-unique integral id (sampling diversity under
     *              duplicate-heavy corpora — the flat trainers' rule).
-    *              Integrality is ENFORCED (round-16 verdict: the
-    *              documented contract was never checked) — every
-    *              consumer of a trained codebook keys its ledger by
-    *              long, and a string id would cast to all-NULL there
-    *              silently; pre-assign a dense long id for other types.
+    *              Integrality is ENFORCED: every consumer of a trained
+    *              codebook keys its ledger by long, and a string id
+    *              would cast to all-NULL there silently; pre-assign a
+    *              dense long id for other types.
     */
   def train(corpus: DataFrame, vec: String, idCol: String, k: Int,
-      itersCoarse: Int = 4, itersFine: Int = 3,
+      depth: Int = 2, itersCoarse: Int = 4, itersLevel: Int = 3,
       perCellSampleMax: Int = 2000): Codebook = {
     Similarity.integralIdType(corpus, idCol)
     require(k >= 1, s"ivf train requires k >= 1, got $k")
-    // perCellSampleMax bounds per-(coarse,fine) Long sums well inside
+    require(depth == 2 || depth == 3, s"ivf depth must be 2 or 3, got $depth")
+    // perCellSampleMax bounds per-(parent,cell) Long sums well inside
     // double-exact floored division (s <= m·2^24 < 2^53)
     require(perCellSampleMax >= 1 && perCellSampleMax <= (1 << 26),
       s"perCellSampleMax out of range: $perCellSampleMax")
-    val kc = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
+    val kc = math.max(1, math.ceil(root(k.toDouble, depth)).toInt)
     val coarse = Similarity.trainKmeansCentroidsFull(
       corpus, vec, kc, itersCoarse, idCol = Some(idCol))
-    val kf = math.max(1, math.ceil(k.toDouble / coarse.length).toInt)
+    val per = math.max(1,
+      math.ceil(root(k.toDouble / coarse.length, depth - 1)).toInt)
 
-    val sampled = corpus
-      // a vector whose length differs from the coarse dims must not
-      // become a fine SEED: one ragged candidate in a cell's list nulls
-      // the kernel for every row of that cell (the corrupt-to-NULL
-      // contract), killing the whole cell's training
-      .filter(size(col(vec)) === coarse(0).length)
-      .select(col(idCol).as("__id"),
-        Similarity.cellAssign(col(vec), coarse).as("__coarse"),
-        KMeans.quantize(col(vec)).as("__xq"))
-      .withColumn("__rank", row_number().over(
-        Window.partitionBy("__coarse")
+    def ranked(keyed: DataFrame): DataFrame =
+      keyed.withColumn("__rank", row_number().over(
+        Window.partitionBy("__parent")
           .orderBy(xxhash64(col("__id")), col("__id"))))
-      .filter(col("__rank") <= perCellSampleMax)
-      .persist()
+        .filter(col("__rank") <= perCellSampleMax)
+
+    val samples = scala.collection.mutable.ArrayBuffer(ranked(
+      corpus
+        // a vector whose length differs from the coarse dims must not
+        // become a SEED: one ragged candidate in a cell's list nulls
+        // the kernel for every row of that cell (the corrupt-to-NULL
+        // contract), killing the whole cell's training
+        .filter(size(col(vec)) === coarse(0).length)
+        .select(col(idCol).as("__id"),
+          Similarity.cellAssign(col(vec), coarse).as("__parent"),
+          KMeans.quantize(col(vec)).as("__xq"))).persist())
     try {
-      // materialize the (k-row) codebook ONCE while the sample cache is
-      // live, as a PERSIST with intact lineage — not localCheckpoint:
-      // a truncated-lineage block evicted between a build and a later
-      // oracle render dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
-      // while a persisted frame recomputes (every stage here is
-      // deterministic, so the recompute is bit-identical)
-      val withGlobal = lloydPerParent(
-          sampled.select(col("__coarse").as("__parent"), col("__rank"),
-            col("__xq")), kf, itersFine)
-        .select(
-          col("__parent").cast("int").as("coarse"),
-          (col("__parent") * kf + col("__sub")).cast("int").as("cell"),
-          col("c"))
-        .persist()
-      withGlobal.count()
-      Codebook(coarse, withGlobal, kf)
+      val levels = (1 until depth).map { i =>
+        val sampled = samples.last
+        // materialize each (≤ k-row) level ONCE while its sample cache
+        // is live, as a PERSIST with intact lineage — not
+        // localCheckpoint: a truncated-lineage block evicted between a
+        // build and a later oracle render dies with
+        // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, while a persisted frame
+        // recomputes (every stage here is deterministic, so the
+        // recompute is bit-identical)
+        val level = lloydPerParent(
+            sampled.select(col("__parent"), col("__rank"), col("__xq")),
+            per, itersLevel)
+          .select(col("__parent").cast("int").as("coarse"),
+            (col("__parent") * per + col("__sub")).cast("int").as("cell"),
+            col("c"))
+          .persist()
+        level.count()
+        if (i < depth - 1) samples += ranked(
+          sampled.join(candsOf(level, "__cands", "__cb_parent"),
+              col("__parent") === col("__cb_parent"))
+            .select(col("__id"),
+              nearestCandidate(col("__xq"), col("__cands")).as("__parent"),
+              col("__xq"))
+            .filter(col("__parent").isNotNull)).persist()
+        level
+      }
+      Codebook(coarse, levels)
     } finally {
-      sampled.unpersist()
-      ()
+      samples.foreach(_.unpersist())
     }
   }
 
-  /** The bounded-sample integer Lloyd loop every distributed level of a
-    * codebook trains with — extracted from [[train]] (round-18, so
-    * [[train3]]'s two deep levels run the IDENTICAL update). Input:
-    * (__parent, __rank, __xq) rows, `__rank` the per-parent
-    * deterministic hash order. Output: (__parent, __sub: int, c) —
-    * up to `kPer` centroids per parent, densely re-ranked; empty cells
-    * absent. Deterministic end-to-end (seeds = each parent's first
-    * `kPer` sample rows, integer-exact Lloyd with (distance, cell)
-    * tie-breaks, floored-division updates).
+  /** The bounded-sample integer Lloyd loop every distributed level
+    * trains with. Input: (__parent, __rank, __xq) rows, `__rank` the
+    * per-parent deterministic hash order. Output: (__parent, __sub:
+    * int, c) — up to `kPer` centroids per parent, densely re-ranked;
+    * empty cells absent. Deterministic end-to-end (seeds = each
+    * parent's first `kPer` sample rows, integer-exact Lloyd with
+    * (distance, cell) tie-breaks, floored-division updates).
     */
   private def lloydPerParent(
       sampled: DataFrame, kPer: Int, iters: Int): DataFrame = {
@@ -261,208 +275,36 @@ object Ivf {
     cents
   }
 
-  /** Assigns every row its global fine cell: map-side coarse assignment
-    * (√k literals), a coarse-keyed codebook join, and the codegen'd
-    * candidate argmin. Rows that cannot assign (vector length differs
-    * from the codebook's, or a coarse cell with no fine entries — only
-    * possible for data outside the training distribution) get a NULL
-    * cell, visible to the caller rather than silently binned.
+  /** Assigns every row its global leaf cell: map-side coarse assignment
+    * (the coarse literals), then one parent-keyed candidate join and
+    * codegen'd argmin per level — O(k^(1/depth)·d) work and plan bytes
+    * per row at every hop. Rows that cannot assign (vector length
+    * differs from the codebook's, or a cell with no deeper entries —
+    * only possible for data outside the training distribution) carry
+    * a NULL cell through every hop, visible to the caller rather than
+    * silently binned.
     */
   def assign(df: DataFrame, vec: String, cb: Codebook,
       outCol: String = "cell"): DataFrame = {
-    Seq("__ivf_coarse", "__ivf_xq", "__ivf_cands", "__ivf_cb_coarse")
-      .foreach { c =>
-        require(!df.columns.contains(c), s"input already carries $c")
-      }
-    val cands = fineCands(cb, "__ivf_cands", "__ivf_cb_coarse")
-    df.withColumn("__ivf_coarse", Similarity.cellAssign(col(vec), cb.coarse))
-      .withColumn("__ivf_xq", KMeans.quantize(col(vec)))
-      .join(cands, col("__ivf_coarse") === col("__ivf_cb_coarse"), "left")
-      .withColumn(outCol, nearestCandidate(col("__ivf_xq"), col("__ivf_cands")))
-      .drop("__ivf_coarse", "__ivf_xq", "__ivf_cands", "__ivf_cb_coarse")
-  }
-
-  // --- three-level codebook (round-18, r17 verdict task 2) -------------------
-
-  /** A trained THREE-level codebook — the corpus-scaled-k mitigation
-    * the two-level module's own long-run note names (BENCH_SCALING
-    * round-17): with SemDeDup's k ∝ n, [[assign]]'s per-row cost is
-    * Θ(√k·d) (√k coarse plan literals + ~√k joined fine candidates),
-    * so TOTAL assignment work is n^1.5 — measured 3.20 s → 36.9 s for
-    * 10× data at k = 800 → 8000 (sf10 → sf100), the next decade's
-    * super-linear row. Adding a level bounds the per-row term at
-    * Θ(3·k^⅓·d): k^⅓ top-level plan literals, then two candidate
-    * joins of ~k^⅓ entries each — at k = 8000 that is 20+20+20
-    * centroid distances per row instead of ~90+90, and the gap widens
-    * as √k/k^⅓ = k^(1/6) with every further decade. Plan bytes and
-    * trainer driver state shrink the same way (O(k^⅓·d)).
-    *
-    * Layout mirrors [[Codebook]] one level deeper: `mid` and `fine`
-    * are both (coarse, cell, c) frames in [[KMeans.quantize]]'s
-    * integer domain — `mid.coarse` is the top cell, `mid.cell` the
-    * global mid id (top·midK + rank); `fine.coarse` is that global mid
-    * id, `fine.cell` the global fine id (mid·fineK + rank). Both
-    * levels train with the SAME integer Lloyd ([[lloydPerParent]]) the
-    * two-level fine half uses, so assignment is bit-reproducible and a
-    * DuckDB oracle hash-matches it end-to-end (q109: two chained
-    * [[assignCteSql]] steps over two rendered codebook CTEs).
-    */
-  final case class Codebook3(coarse: Array[Array[Double]], mid: DataFrame,
-      fine: DataFrame, midK: Int, fineK: Int) extends AnyCodebook {
-    def release(): Unit = { mid.unpersist(); fine.unpersist(); () }
-  }
-
-  /** Trains the three-level codebook: k^⅓ top centroids distributed
-    * ([[Similarity.trainKmeansCentroidsFull]]), then a bounded
-    * hash-ordered sample per top cell trains ~√(k/k^⅓) mid centroids
-    * per top cell, the sample re-keys by its assigned mid cell
-    * (re-ranked per mid cell), and the same loop trains the fine level
-    * — total fine cells ≈ k. Deterministic end-to-end like [[train]];
-    * rows whose vector length differs from the top dims influence
-    * neither deep level.
-    */
-  def train3(corpus: DataFrame, vec: String, idCol: String, k: Int,
-      itersCoarse: Int = 4, itersLevel: Int = 3,
-      perCellSampleMax: Int = 2000): Codebook3 = {
-    Similarity.integralIdType(corpus, idCol)
-    require(k >= 1, s"ivf train3 requires k >= 1, got $k")
-    require(perCellSampleMax >= 1 && perCellSampleMax <= (1 << 26),
-      s"perCellSampleMax out of range: $perCellSampleMax")
-    val kc = math.max(1, math.ceil(math.cbrt(k.toDouble)).toInt)
-    val coarse = Similarity.trainKmeansCentroidsFull(
-      corpus, vec, kc, itersCoarse, idCol = Some(idCol))
-    // per-level branching so kc · per · per ≈ k
-    val per = math.max(1,
-      math.ceil(math.sqrt(k.toDouble / coarse.length)).toInt)
-
-    def ranked(keyed: DataFrame, key: String): DataFrame =
-      keyed.withColumn("__rank", row_number().over(
-        Window.partitionBy(key).orderBy(xxhash64(col("__id")), col("__id"))))
-        .filter(col("__rank") <= perCellSampleMax)
-
-    val sampled = ranked(
-      corpus
-        .filter(size(col(vec)) === coarse(0).length)
-        .select(col(idCol).as("__id"),
-          Similarity.cellAssign(col(vec), coarse).as("__top"),
-          KMeans.quantize(col(vec)).as("__xq")),
-      "__top").persist()
-    try {
-      val mid = lloydPerParent(
-          sampled.select(col("__top").as("__parent"), col("__rank"),
-            col("__xq")), per, itersLevel)
-        .select(col("__parent").cast("int").as("coarse"),
-          (col("__parent") * per + col("__sub")).cast("int").as("cell"),
-          col("c"))
-        .persist()
-      mid.count()
-      // re-key the sample by its assigned mid cell; the re-rank gives
-      // each mid cell its own deterministic seed order (a top-cell rank
-      // would seed every mid child from the same leading rows)
-      val midCands = candsOf(mid, "__cands3", "__parent")
-      val sampledMid = ranked(
-        sampled.join(midCands, col("__top") === col("__parent"))
-          .select(col("__id"),
-            nearestCandidate(col("__xq"), col("__cands3")).as("__mid"),
-            col("__xq"))
-          .filter(col("__mid").isNotNull),
-        "__mid").persist()
-      try {
-        val fine = lloydPerParent(
-            sampledMid.select(col("__mid").as("__parent"), col("__rank"),
-              col("__xq")), per, itersLevel)
-          .select(col("__parent").cast("int").as("coarse"),
-            (col("__parent") * per + col("__sub")).cast("int").as("cell"),
-            col("c"))
-          .persist()
-        fine.count()
-        Codebook3(coarse, mid, fine, per, per)
-      } finally {
-        sampledMid.unpersist()
-        ()
-      }
-    } finally {
-      sampled.unpersist()
-      ()
+    val tmp = "__ivf_xq" +: cb.levels.indices.flatMap(i =>
+      Seq(s"__ivf_p$i", s"__ivf_c$i", s"__ivf_k$i"))
+    tmp.foreach { c =>
+      require(!df.columns.contains(c), s"input already carries $c")
     }
-  }
-
-  /** Assigns every row its global fine cell through the three-level
-    * codebook: map-side top assignment (k^⅓ literals), then TWO
-    * candidate joins (top → mid entries, mid → fine entries) each
-    * resolved by the codegen'd [[graft.plans.NearestCandidate]] argmin
-    * — O(k^⅓·d) work and plan bytes per row at every step. AQE
-    * broadcasts both codebook sides while they fit (each is ≤ k rows
-    * of narrow integers). Rows that cannot assign (ragged vector, or a
-    * cell with no deeper entries) carry a NULL through both joins —
-    * visible, never silently binned, exactly [[assign]]'s contract.
-    */
-  def assign3(df: DataFrame, vec: String, cb: Codebook3,
-      outCol: String = "cell"): DataFrame = {
-    Seq("__ivf3_top", "__ivf3_xq", "__ivf3_mid",
-      "__ivf3_mc", "__ivf3_mc_top", "__ivf3_fc", "__ivf3_fc_mid")
-      .foreach { c =>
-        require(!df.columns.contains(c), s"input already carries $c")
-      }
-    val midCands = candsOf(cb.mid, "__ivf3_mc", "__ivf3_mc_top")
-    val fineCands3 = candsOf(cb.fine, "__ivf3_fc", "__ivf3_fc_mid")
-    df.withColumn("__ivf3_top", Similarity.cellAssign(col(vec), cb.coarse))
-      .withColumn("__ivf3_xq", KMeans.quantize(col(vec)))
-      .join(midCands, col("__ivf3_top") === col("__ivf3_mc_top"), "left")
-      .withColumn("__ivf3_mid",
-        nearestCandidate(col("__ivf3_xq"), col("__ivf3_mc")))
-      .join(fineCands3, col("__ivf3_mid") === col("__ivf3_fc_mid"), "left")
-      .withColumn(outCol, nearestCandidate(col("__ivf3_xq"), col("__ivf3_fc")))
-      .drop("__ivf3_top", "__ivf3_xq", "__ivf3_mid",
-        "__ivf3_mc", "__ivf3_mc_top", "__ivf3_fc", "__ivf3_fc_mid")
-  }
-
-  // --- tier-agnostic dispatch (round-19, r18 verdict task 1) -----------------
-
-  /** Trains the right codebook depth for `k` — the [[Dedup.semDedupScaled]]
-    * threshold applied at the TRAIN call so durable consumers
-    * ([[graft.jobs.CorpusPrep.compactNearDups]]) pick up the deep tier
-    * at exactly the measured crossover instead of riding the two-level
-    * n^1.5 assign term past it (BENCH_SCALING r17: 3.20 s → 36.9 s per
-    * 10× of data at k = 800 → 8000; r18: three-level assign 2.2× faster
-    * at k = 8000). `deepMinK` defaults to that measured point.
-    */
-  def trainTiered(corpus: DataFrame, vec: String, idCol: String, k: Int,
-      deepMinK: Int = 8000): AnyCodebook =
-    if (k >= deepMinK) train3(corpus, vec, idCol, k)
-    else train(corpus, vec, idCol, k)
-
-  /** [[assign]]/[[assign3]] behind the depth switch. */
-  def assignAny(df: DataFrame, vec: String, cb: AnyCodebook,
-      outCol: String = "cell"): DataFrame = cb match {
-    case c: Codebook => assign(df, vec, c, outCol)
-    case c: Codebook3 => assign3(df, vec, c, outCol)
-  }
-
-  /** [[save]]/[[save3]] behind the depth switch — both layouts share
-    * `coarse`/`fine`/`meta`; the three-level state adds `mid`, which is
-    * also how [[loadAny]] tells them apart.
-    */
-  def saveAny(cb: AnyCodebook, dir: String): Unit = cb match {
-    case c: Codebook => save(c, dir)
-    case c: Codebook3 => save3(c, dir)
-  }
-
-  /** Loads whichever depth was saved under `dir`: the presence of the
-    * `mid` level is the (backward-compatible) discriminator — every
-    * pre-round-19 durable state is two-level and loads unchanged.
-    */
-  def loadAny(spark: org.apache.spark.sql.SparkSession,
-      dir: String): AnyCodebook = {
-    val mid = new org.apache.hadoop.fs.Path(s"$dir/mid")
-    val fs = mid.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(mid)) load3(spark, dir) else load(spark, dir)
+    val start = df
+      .withColumn("__ivf_p0", Similarity.cellAssign(col(vec), cb.coarse))
+      .withColumn("__ivf_xq", KMeans.quantize(col(vec)))
+    cb.levels.zipWithIndex.foldLeft(start) { case (acc, (level, i)) =>
+      val next = if (i == cb.levels.size - 1) outCol else s"__ivf_p${i + 1}"
+      acc.join(candsOf(level, s"__ivf_c$i", s"__ivf_k$i"),
+          col(s"__ivf_p$i") === col(s"__ivf_k$i"), "left")
+        .withColumn(next, nearestCandidate(col("__ivf_xq"), col(s"__ivf_c$i")))
+    }.drop(tmp: _*)
   }
 
   /** The coarse centroids re-quantized into [[KMeans.quantize]]'s
-    * integer domain — ONE implementation of the clamp-before-floor rule
-    * (the round-12 divergence class), shared by [[driftFraction]] and
-    * [[typicalCoarseD2]] (round-15 review: two hand-rolled copies).
+    * integer domain — ONE implementation of the clamp-before-floor
+    * rule, shared by [[driftFraction]] and [[typicalCoarseD2]].
     */
   private def coarseQuantized(
       coarse: Array[Array[Double]]): Seq[(Int, Seq[Long])] =
@@ -476,68 +318,79 @@ object Ivf {
     * `__c`-indexed coarse centroid. NULL when the vector's length
     * differs from the centroid's (zip_with null-pads).
     */
-  private def coarseD2(cb: AnyCodebook): Column =
+  private def coarseD2(cb: Codebook): Column =
     sqDist(col("__xq"),
       element_at(map_from_entries(typedLit(coarseQuantized(cb.coarse))),
         col("__c")))
 
-  /** Query-side probe over the two-level codebook — the SEARCH half of
-    * the hierarchical index (assignment alone only builds it): each
-    * query row gets the `nProbeFine` nearest FINE cells drawn from its
-    * `nProbeCoarse` nearest COARSE cells' codebook entries, as an
-    * `array<int>` ready for [[Similarity.ivfTopKProbed]]. Per-query
-    * work is O(nProbeCoarse·√k·d) against joined codebook rows — the
-    * flat probe ([[Similarity.probeCells]]) scans all k centroid
-    * literals, which is exactly the O(k·d) plan/driver term this module
-    * removes. Integer-exact scoring with (distance, cell) tie-breaks,
-    * so a DuckDB oracle reproduces the probe lists bit-for-bit
-    * ([[probeSelectSql]]). Queries whose vector cannot score (ragged
-    * length) get an EMPTY probe list. `idCol` must be a row-unique
-    * INTEGRAL id — integrality is enforced (round-16 verdict; the
-    * downstream search keys by long, where a string id casts to
+  /** Query-side probe — the SEARCH half of the index (assignment alone
+    * only builds it): each query row probes its `nProbe(0)` nearest
+    * COARSE cells (float-domain, the coarse literals), then at every
+    * deeper level scores the probed parents' entries and keeps the
+    * `nProbe(i)` nearest, ending in an `array<int>` of leaf cells ready
+    * for [[Similarity.ivfTopKProbed]]. `nProbe` holds one count per
+    * level, coarse first. Per-query work is O(nProbe·k^(1/depth)·d) per
+    * hop against joined codebook rows — the flat probe
+    * ([[Similarity.probeCells]]) scans all k centroid literals, exactly
+    * the O(k·d) plan/driver term this module removes. Integer-exact
+    * scoring with (distance, cell) tie-breaks, so a DuckDB oracle
+    * reproduces the probe lists bit-for-bit ([[probeSelectSql]] per
+    * hop). Queries whose vector cannot score (ragged length) get an
+    * EMPTY probe list.
+    *
+    * `idCol` must be a row-unique INTEGRAL id — integrality is enforced
+    * (the downstream search keys by long, where a string id casts to
     * all-NULL silently). Row-uniqueness stays the caller's contract:
     * the per-query regroup keys on `idCol` alone (grouping on every
-    * input column broke on unorderable incidental columns and merged
-    * rows differing only in float normalization, round-15 review), so
-    * rows SHARING an id get one probe list computed over the UNION of
-    * their scored candidates — each duplicate row receives that merged
-    * list through the id-keyed join back (pinned by IvfSpec; a
-    * distributed uniqueness assert would cost an extra full aggregation
-    * per call, so the defined-merge behavior is documented instead).
+    * input column breaks on unorderable incidental columns and merges
+    * rows differing only in float normalization), so rows SHARING an id
+    * get one probe list computed over the UNION of their scored
+    * candidates — each duplicate row receives that merged list through
+    * the id-keyed join back (pinned by IvfSpec; a distributed
+    * uniqueness assert would cost an extra full aggregation per call,
+    * so the defined-merge behavior is documented instead).
     */
   def probeCells(queries: DataFrame, idCol: String, vec: String,
-      cb: Codebook, nProbeCoarse: Int, nProbeFine: Int,
+      cb: Codebook, nProbe: Seq[Int],
       outCol: String = "probes"): DataFrame = {
     Similarity.integralIdType(queries, idCol)
-    require(nProbeCoarse >= 1 && nProbeCoarse <= cb.coarse.length,
-      s"nProbeCoarse must be in [1, ${cb.coarse.length}], got $nProbeCoarse")
-    require(nProbeFine >= 1, s"nProbeFine must be >= 1, got $nProbeFine")
-    Seq("__ivf_q_parent", "__ivf_q_xq", "__ivf_q_cands", "__ivf_q_scored",
-      "__ivf_q_cb_parent", "__ivf_q_all", outCol)
+    require(nProbe.size == cb.depth,
+      s"nProbe needs one count per level (${cb.depth}), got ${nProbe.size}")
+    require(nProbe.head >= 1 && nProbe.head <= cb.coarse.length,
+      s"coarse nProbe must be in [1, ${cb.coarse.length}], got ${nProbe.head}")
+    require(nProbe.forall(_ >= 1), s"every nProbe must be >= 1: $nProbe")
+    Seq("__ivf_q_xq", "__ivf_q_parent", "__ivf_q_cands", "__ivf_q_scored",
+      "__ivf_q_cb_parent", "__ivf_q_all", "__ivf_q_hop", outCol)
       .foreach { c =>
         require(!queries.columns.contains(c), s"input already carries $c")
       }
-    // coarse probes are the float-domain struct sort over the √k
-    // literals (the Similarity machinery, oracle twin probeCellsSql);
     // quantization in a SEPARATE projection below the explode (the
     // ExtractGenerator hoist trap)
-    val probed = queries.select(col(idCol), col(vec))
+    val base = queries.select(col(idCol), col(vec))
       .withColumn("__ivf_q_xq", KMeans.quantize(col(vec)))
-      .withColumn("__ivf_q_parent",
-        explode(Similarity.probeCells(col(vec), cb.coarse, nProbeCoarse)))
-    val probes = probeHop(probed, idCol, cb.fine, nProbeFine, outCol)
+    val hops = cb.levels.zip(nProbe.tail)
+    val leafParents = hops.init.foldLeft(
+      base.withColumn("__ivf_q_parent",
+        explode(Similarity.probeCells(col(vec), cb.coarse, nProbe.head)))) {
+      case (probed, (level, n)) =>
+        // explode drops queries whose list is empty (ragged vectors) —
+        // the final left join + coalesce restores their empty probe list
+        base.join(probeHop(probed, idCol, level, n, "__ivf_q_hop"), Seq(idCol))
+          .withColumn("__ivf_q_parent", explode(col("__ivf_q_hop")))
+          .drop("__ivf_q_hop")
+    }
+    val probes = probeHop(leafParents, idCol, hops.last._1, hops.last._2, outCol)
     queries.join(probes, Seq(idCol), "left")
       .withColumn(outCol,
         coalesce(col(outCol), array().cast("array<int>")))
   }
 
-  /** One probe hop — the exactness-critical scoring shared by
-    * [[probeCells]] and both stages of [[probeCells3]] (single-sourced
-    * so the integer scoring, NULL exclusion, and (d, cell) total order
-    * cannot drift between the two-level and three-level paths; the
-    * DuckDB twin is [[probeSelectSql]], reused per hop the same way).
-    * Input rows carry (idCol, __ivf_q_xq, __ivf_q_parent) — one row
-    * per (query, probed parent cell); output is one (idCol, outCol)
+  /** One probe hop — the exactness-critical scoring every level of
+    * [[probeCells]] shares (single-sourced so the integer scoring, NULL
+    * exclusion, and (d, cell) total order cannot drift between levels;
+    * the DuckDB twin is [[probeSelectSql]], reused per hop the same
+    * way). Input rows carry (idCol, __ivf_q_xq, __ivf_q_parent) — one
+    * row per (query, probed parent cell); output is one (idCol, outCol)
     * row per query whose probes scored, outCol = the `nProbe` nearest
     * `level` cells drawn from the probed parents' union. The probe
     * list is GLOBAL over that union — flatten, one total-order sort,
@@ -565,68 +418,25 @@ object Ivf {
           s => s.getField("cell")).as(outCol))
   }
 
-  /** Query-side probe over the THREE-level codebook — [[probeCells]]
-    * one level deeper, completing [[Codebook3]] as a full index
-    * (build [[train3]], maintain [[assign3]], search here): each query
-    * row probes its `nProbeTop` nearest top cells (k^⅓ plan literals),
-    * scores those cells' mid entries for the `nProbeMid` nearest mid
-    * cells, then scores THOSE cells' fine entries for the `nProbeFine`
-    * nearest fine cells — O(nProbe·k^⅓·d) work per query per hop
-    * against the two-level probe's O(nProbe·√k·d). Same integer-exact
-    * scoring and (distance, cell) tie-breaks per hop ([[probeHop]]),
-    * so the DuckDB twin is two chained [[probeSelectSql]] steps
-    * (q110). Ragged queries get an EMPTY probe list, like
-    * [[probeCells]]; rows sharing an id get the union-merged list
-    * (the documented probeCells contract).
+  /** SQL twin of one [[probeHop]] as a SELECT body over `qName` (must
+    * expose q_id, xq and `parentListExpr` — the probed parent cells,
+    * e.g. the rendered [[Similarity.probeCellsSql]] list): emits
+    * (q_id, probes). Sort keys stay BIGINT end-to-end — a DOUBLE-cast
+    * distance would tie-collapse past 2^53 on this side only — and
+    * NULL distances (ragged vectors) are excluded like the Spark side's
+    * filter (a fully-ragged query then has no row here ≡ an empty probe
+    * list there: both contribute zero search candidates).
     */
-  def probeCells3(queries: DataFrame, idCol: String, vec: String,
-      cb: Codebook3, nProbeTop: Int, nProbeMid: Int, nProbeFine: Int,
-      outCol: String = "probes"): DataFrame = {
-    Similarity.integralIdType(queries, idCol)
-    require(nProbeTop >= 1 && nProbeTop <= cb.coarse.length,
-      s"nProbeTop must be in [1, ${cb.coarse.length}], got $nProbeTop")
-    require(nProbeMid >= 1, s"nProbeMid must be >= 1, got $nProbeMid")
-    require(nProbeFine >= 1, s"nProbeFine must be >= 1, got $nProbeFine")
-    Seq("__ivf_q_xq", "__ivf_q_parent", "__ivf_q_cands", "__ivf_q_scored",
-      "__ivf_q_cb_parent", "__ivf_q_all", "__ivf_q_mids", outCol)
-      .foreach { c =>
-        require(!queries.columns.contains(c), s"input already carries $c")
-      }
-    val base = queries.select(col(idCol), col(vec))
-      .withColumn("__ivf_q_xq", KMeans.quantize(col(vec)))
-    val topProbed = base.withColumn("__ivf_q_parent",
-      explode(Similarity.probeCells(col(vec), cb.coarse, nProbeTop)))
-    val mids = probeHop(topProbed, idCol, cb.mid, nProbeMid, "__ivf_q_mids")
-    // explode drops queries whose mid list is empty (ragged vectors) —
-    // the final left join + coalesce restores their empty probe list
-    val midProbed = base.join(mids, Seq(idCol))
-      .withColumn("__ivf_q_parent", explode(col("__ivf_q_mids")))
-      .drop("__ivf_q_mids")
-    val probes = probeHop(midProbed, idCol, cb.fine, nProbeFine, outCol)
-    queries.join(probes, Seq(idCol), "left")
-      .withColumn(outCol,
-        coalesce(col(outCol), array().cast("array<int>")))
-  }
-
-  /** SQL twin of [[probeCells]] as a SELECT body over `qName` (must
-    * expose q_id, xq and `coarseListExpr` — the rendered
-    * [[Similarity.probeCellsSql]] list): emits (q_id, probes). Sort
-    * keys stay BIGINT end-to-end — a DOUBLE-cast distance would
-    * tie-collapse past 2^53 on this side only — and NULL distances
-    * (ragged vectors) are excluded like the Spark side's filter (a
-    * fully-ragged query then has no row here ≡ an empty probe list
-    * there: both contribute zero search candidates).
-    */
-  def probeSelectSql(qName: String, cbName: String, coarseListExpr: String,
-      nProbeFine: Int): String =
+  def probeSelectSql(qName: String, cbName: String, parentListExpr: String,
+      nProbe: Int): String =
     s"""SELECT q_id, list_transform(
-       |    list_slice(list_sort(list([d, cellb])), 1, $nProbeFine),
+       |    list_slice(list_sort(list([d, cellb])), 1, $nProbe),
        |    x -> CAST(x[2] AS INTEGER)) AS probes
        |  FROM (
        |    SELECT qq.q_id,
        |           ${sqDistSql("qq.xq", s"$cbName.c")} AS d,
        |           CAST($cbName.cell AS BIGINT) AS cellb
-       |    FROM (SELECT q_id, xq, unnest($coarseListExpr) AS probe_coarse
+       |    FROM (SELECT q_id, xq, unnest($parentListExpr) AS probe_coarse
        |          FROM $qName) qq
        |    JOIN $cbName ON $cbName.coarse = qq.probe_coarse) s
        |  WHERE d IS NOT NULL
@@ -642,10 +452,10 @@ object Ivf {
     * be scored against the codebook at all — a ragged vector length,
     * exactly what an upstream embedder regression produces — count as
     * FAR, like rows landing in a coarse cell the typical map has never
-    * seen (round-15 review: they previously nulled out of the
-    * numerator while staying in the denominator).
+    * seen (both would otherwise null out of the numerator while staying
+    * in the denominator).
     */
-  def driftFraction(delta: DataFrame, vec: String, cb: AnyCodebook,
+  def driftFraction(delta: DataFrame, vec: String, cb: Codebook,
       typicalD2: Map[Int, Double], tolerance: Double): Double = {
     require(tolerance > 0.0, s"tolerance must be positive: $tolerance")
     val spark = delta.sparkSession
@@ -673,13 +483,13 @@ object Ivf {
     * frozen baseline [[driftFraction]] compares against (compute it
     * once per retrain and carry it forward across incremental passes:
     * recomputing it over drifted data ratchets the baseline toward the
-    * drift and the trigger never fires — round-15 review). One
-    * bounded-sample scan, keyed by a row-unique id like every sampler
-    * here (hashing the vector VALUE lets one duplicated embedding flood
-    * the sample and starve most cells from the map).
+    * drift and the trigger never fires). One bounded-sample scan, keyed
+    * by a row-unique id like every sampler here (hashing the vector
+    * VALUE lets one duplicated embedding flood the sample and starve
+    * most cells from the map).
     */
   def typicalCoarseD2(corpus: DataFrame, vec: String, idCol: String,
-      cb: AnyCodebook, sampleMax: Int = 10000): Map[Int, Double] = {
+      cb: Codebook, sampleMax: Int = 10000): Map[Int, Double] = {
     val d = corpus
       .select(KMeans.quantize(col(vec)).as("__xq"),
         Similarity.cellAssign(col(vec), cb.coarse).as("__c"),
@@ -693,12 +503,15 @@ object Ivf {
 
   // --- durable index state (incremental maintenance across restarts) --------
 
+  /** On-disk level dirs by depth: `fine`, plus `mid` above it at depth 3. */
+  private def levelDirs(depth: Int): Seq[String] =
+    if (depth == 3) Seq("mid", "fine") else Seq("fine")
+
   /** Persists the codebook under `dir` (parquet: `coarse` as
-    * (i, c double[]), `fine` as-is, `meta` as one (fineK) row) — the
-    * index state a daily-ingest compaction reloads instead of
-    * retraining ([[graft.jobs.CorpusPrep.compactNearDups]]). The coarse
-    * half is √k rows and the fine half k rows: writing is O(k·d) DATA,
-    * never driver memory.
+    * (i, c double[]), each level as-is under [[levelDirs]]) — the index
+    * state a daily-ingest compaction reloads instead of retraining
+    * ([[graft.jobs.CorpusPrep.compactNearDups]]). Levels are ≤ k rows
+    * of narrow integers: writing is O(k·d) DATA, never driver memory.
     */
   def save(cb: Codebook, dir: String): Unit = {
     val spark = cb.fine.sparkSession
@@ -706,65 +519,44 @@ object Ivf {
     cb.coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("i", "c")
       .repartition(1).write.mode("overwrite").parquet(s"$dir/coarse")
-    cb.fine.write.mode("overwrite").parquet(s"$dir/fine")
-    Seq(Tuple1(cb.fineK)).toDF("fineK")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta")
+    // a stale `mid` from an earlier depth-3 save would make [[load]]
+    // read this depth-2 state one level too deep
+    val mid = new org.apache.hadoop.fs.Path(s"$dir/mid")
+    mid.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(mid, true)
+    levelDirs(cb.depth).zip(cb.levels).foreach { case (name, level) =>
+      level.write.mode("overwrite").parquet(s"$dir/$name")
+    }
   }
 
-  def load(spark: org.apache.spark.sql.SparkSession, dir: String): Codebook = {
-    val coarse = spark.read.parquet(s"$dir/coarse")
-      .collect().sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    require(coarse.nonEmpty, s"no coarse centroids under $dir/coarse")
-    val fineK = spark.read.parquet(s"$dir/meta").collect()(0).getInt(0)
-    Codebook(coarse, spark.read.parquet(s"$dir/fine").persist(), fineK)
-  }
-
-  /** [[save]]/[[load]] for the three-level codebook — same layout one
-    * level deeper (`coarse`, `mid`, `fine`, `meta` = one (midK, fineK)
-    * row). Both deep levels are ≤ k rows of narrow integers: writing
-    * is O(k·d) DATA, never driver memory.
+  /** Loads the state [[save]] wrote: the presence of `mid` tells the
+    * depth. States that also carry a `meta` dir (the id strides older
+    * saves recorded) load unchanged — the level frames already hold
+    * global cell ids, so nothing reads it.
     */
-  def save3(cb: Codebook3, dir: String): Unit = {
-    val spark = cb.fine.sparkSession
-    import spark.implicits._
-    cb.coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/coarse")
-    cb.mid.write.mode("overwrite").parquet(s"$dir/mid")
-    cb.fine.write.mode("overwrite").parquet(s"$dir/fine")
-    Seq((cb.midK, cb.fineK)).toDF("midK", "fineK")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  def load3(spark: org.apache.spark.sql.SparkSession, dir: String): Codebook3 = {
+  def load(spark: SparkSession, dir: String): Codebook = {
     val coarse = spark.read.parquet(s"$dir/coarse")
       .collect().sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray)
     require(coarse.nonEmpty, s"no coarse centroids under $dir/coarse")
-    val meta = spark.read.parquet(s"$dir/meta").collect()(0)
-    Codebook3(coarse,
-      spark.read.parquet(s"$dir/mid").persist(),
-      spark.read.parquet(s"$dir/fine").persist(),
-      meta.getInt(0), meta.getInt(1))
+    val mid = new org.apache.hadoop.fs.Path(s"$dir/mid")
+    val depth =
+      if (mid.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mid)) 3
+      else 2
+    Codebook(coarse,
+      levelDirs(depth).map(n => spark.read.parquet(s"$dir/$n").persist()))
   }
 
   // --- oracle-scale affordances ---------------------------------------------
 
-  /** Collects a distributed codebook level — ORACLE/TEST SCALE ONLY
+  /** Collects one distributed codebook level — ORACLE/TEST SCALE ONLY
     * (the operator itself never collects it; at production k this is
-    * the O(k·d) pull the design exists to avoid). Works for the
-    * two-level fine frame and either deep level of a [[Codebook3]]
-    * (same (coarse, cell, c) layout).
+    * the O(k·d) pull the design exists to avoid).
     */
   def collectLevel(level: DataFrame): Seq[(Int, Int, Seq[Long])] =
     level.select(col("coarse"), col("cell"), col("c"))
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
       .sortBy(r => (r._1, r._2))
-
-  def collectFine(cb: Codebook): Seq[(Int, Int, Seq[Long])] =
-    collectLevel(cb.fine)
 
   /** DuckDB CTE rendering the collected codebook as literal rows:
     * `name(coarse, cell, c)`.
@@ -778,11 +570,11 @@ object Ivf {
   }
 
   /** SQL twin of the per-row integer argmin [[nearestCandidate]]
-    * evaluates, as a CTE body: `eName` must expose (vec_id, coarse, xq);
-    * emits one (vec_id, cell) row per assignable input row — exact
-    * BIGINT squared distance, ties to the smaller cell id, rows whose
-    * coarse cell has no codebook entries dropped by the inner join
-    * (the Spark side filters its NULL cells identically).
+    * evaluates for one level, as a CTE body: `eName` must expose
+    * (vec_id, coarse, xq); emits one (vec_id, cell) row per assignable
+    * input row — exact BIGINT squared distance, ties to the smaller
+    * cell id, rows whose parent cell has no codebook entries dropped by
+    * the inner join (the Spark side filters its NULL cells identically).
     */
   def assignCteSql(eName: String, cbName: String): String =
     s"""SELECT vec_id, cell FROM (

@@ -23,7 +23,7 @@ import graft.operators.{Dedup, Ivf}
   * k follows the compaction's corpus-scaled shape n/kDiv (third arg,
   * default 250 — 7200 cells at the sf100 base, the two-level regime the
   * r18 soak recorded). kDiv=200 pushes the sf100 base past the
-  * [[graft.operators.Ivf.trainTiered]] deep switch (k = 9000 ≥ 8000),
+  * [[graft.operators.Dedup.cellDepth]] deep switch (k = 9000 ≥ 8000),
   * so the SAME soak proves the durable THREE-level path (round-19, r18
   * verdict task 1): incremental ≡ full over the deep codebook, and the
   * incremental pass still beats the full rebuild. Run exclusively:
@@ -82,7 +82,7 @@ object CompactionSoak {
     val v1Dropped = v1.ledger.filter(col("dropped")).count()
     println(s"""{"soak":"v1_full_build","sec":${fmt(tBuild)},""" +
       s""""version":${v1.version},"retrained":${v1.retrained},""" +
-      s""""depth":"${depthOf(v1.codebook)}","ledger_rows":$v1Rows,""" +
+      s""""depth":${v1.codebook.depth},"ledger_rows":$v1Rows,""" +
       s""""dropped":$v1Dropped}""")
     v1.release()
 
@@ -104,7 +104,7 @@ object CompactionSoak {
     // verdicts are only correct if this holds at scale too
     val ((diffs, tAssign), tFull) = timed {
       val (assigned, tA) = timed {
-        Ivf.assignAny(e, "embedding", v2.codebook, "cell")
+        Ivf.assign(e, "embedding", v2.codebook, "cell")
           .localCheckpoint(true)
       }
       val full = Dedup.semDedupAssigned(assigned, "vec_id", "embedding", tau)
@@ -125,16 +125,11 @@ object CompactionSoak {
       new org.apache.hadoop.fs.Path(idx)).getLength
     val pass = diffs == 0 && !v2.retrained && v2.version == 2
     println(s"""{"soak":"done","pass":$pass,"diff_rows":$diffs,""" +
-      s""""v2_retrained":${v2.retrained},"depth":"${depthOf(v2.codebook)}",""" +
+      s""""v2_retrained":${v2.retrained},"depth":${v2.codebook.depth},""" +
       s""""state_bytes":$stateBytes,""" +
       s""""build_sec":${fmt(tBuild)},"incremental_sec":${fmt(tInc)},""" +
       s""""check_sec":${fmt(tFull)}}""")
     spark.stop()
     if (!pass) sys.exit(1)
-  }
-
-  private def depthOf(cb: Ivf.AnyCodebook): String = cb match {
-    case _: Ivf.Codebook => "two-level"
-    case _: Ivf.Codebook3 => "three-level"
   }
 }

@@ -204,7 +204,7 @@ object Probe {
     val e = Tables.embeddings(spark, sfDir)
     val k = math.max(8L, (e.count() + 249) / 250).toInt
     val cb = Ivf.train(e, "embedding", "vec_id", k,
-      itersCoarse = 3, itersFine = 2)
+      itersCoarse = 3, itersLevel = 2)
     val tau = 0.4
     def rollup(sd: DataFrame): Long =
       sd.groupBy($"cell".cast("int").as("cell"))
@@ -268,16 +268,14 @@ object Probe {
             e, "embedding", k, idCol = Some("vec_id"))
           samp.withColumn("flat", Similarity.cellAssign($"embedding", flatCents))
         } else samp.withColumn("flat", lit(null).cast("int"))
-      val cb2 = if (tiers("two"))
-        Some(hold(Ivf.train(e, "embedding", "vec_id", k,
-          itersCoarse = 3, itersFine = 2))(_.release())) else None
-      val cb3 = if (tiers("three"))
-        Some(hold(Ivf.train3(e, "embedding", "vec_id", k,
-          itersCoarse = 3, itersLevel = 2))(_.release())) else None
-      val cells2 = cb2.fold(cells0.withColumn("two", lit(null).cast("int")))(
-        b => Ivf.assign(cells0, "embedding", b, "two"))
-      val cells3 = hold(cb3.fold(cells2.withColumn("three", lit(null).cast("int")))(
-          b => Ivf.assign3(cells2, "embedding", b, "three"))
+      val cells = Seq("two" -> 2, "three" -> 3).foldLeft(cells0) {
+        case (df, (tier, depth)) =>
+          if (tiers(tier)) Ivf.assign(df, "embedding",
+            hold(Ivf.train(e, "embedding", "vec_id", k, depth,
+              itersCoarse = 3, itersLevel = 2))(_.release()), tier)
+          else df.withColumn(tier, lit(null).cast("int"))
+      }
+      val cells3 = hold(cells
         .select($"vec_id", $"flat", $"two", $"three").persist())(_.unpersist())
       cells3.count()
 

@@ -426,7 +426,7 @@ class PlanShapeSpec extends SparkSpec {
     // ranking is the bounded aggregate (q89/q100/q103 discipline). The
     // blanket no-window form q89 uses would trip on the TRAINER lineage
     // rendered inside the persisted codebook's InMemoryRelation
-    // (train3's per-parent row_number sampling windows) — the search
+    // (the trainer's per-parent row_number sampling windows) — the search
     // path's own ranking is what must never become a per-QUERY window
     assert(!p.contains("WindowGroupLimit") &&
       !p.contains("windowspecdefinition(q_id"),

@@ -45,7 +45,7 @@ class SessionMemoSpec extends SparkSpec {
     }
     val memo = new GraftQuery.SessionMemo[Ivf.Codebook](
       (s, d) => Ivf.train(tinyCorpus(s, d.length), "embedding", "vec_id",
-        k = 4, itersCoarse = 1, itersFine = 1),
+        k = 4, itersCoarse = 1, itersLevel = 1),
       close = _.release())
     val cbA = memo(spark, "dirA")
     assert(cbA.fine.storageLevel != StorageLevel.NONE,

@@ -306,7 +306,7 @@ class CorpusPrepSpec extends SparkSpec {
     // oracle: one full pass over everything with the SAME (frozen)
     // codebook — cells are independent under the drop policy, so the
     // incremental result must be row-identical
-    val assigned = Ivf.assignAny(df, "embedding", c2.codebook)
+    val assigned = Ivf.assign(df, "embedding", c2.codebook)
     val dropped = Dedup.embeddingNearDupPairs(
         assigned.filter($"cell".isNotNull), "vec_id", "embedding",
         TAU, Some("cell"))
@@ -518,16 +518,16 @@ class CorpusPrepSpec extends SparkSpec {
     val c1 = CorpusPrep.compactNearDups(base, "vec_id", "embedding", idx,
       tau = TAU, k = _ => 9, deepMinK = 9)
     assert(c1.retrained && c1.version == 1)
-    assert(c1.codebook.isInstanceOf[Ivf.Codebook3],
-      s"k=9 >= deepMinK=9 must train three-level, got ${c1.codebook.getClass}")
+    assert(c1.codebook.depth == 3,
+      s"k=9 >= deepMinK=9 must train three-level, got ${c1.codebook.depth}")
     c1.release()
-    // incremental pass: loadAny sniffs the saved depth; no retrain
+    // incremental pass: load sniffs the saved depth; no retrain
     val c2 = CorpusPrep.compactNearDups(df, "vec_id", "embedding", idx,
       tau = TAU, k = _ => 9, deepMinK = 9)
     assert(!c2.retrained && c2.version == 2)
-    assert(c2.codebook.isInstanceOf[Ivf.Codebook3],
+    assert(c2.codebook.depth == 3,
       "incremental pass must keep the frozen deep codebook")
-    val assigned = Ivf.assignAny(df, "embedding", c2.codebook)
+    val assigned = Ivf.assign(df, "embedding", c2.codebook)
     val dropped = Dedup.embeddingNearDupPairs(
         assigned.filter($"cell".isNotNull), "vec_id", "embedding",
         TAU, Some("cell"))

@@ -193,7 +193,7 @@ class DedupSpec extends SparkSpec {
 
     // THIRD tier (round-18): forced deep branch (deepMinK at the
     // threshold) = semDedupAssigned over the 3-level assignment — the
-    // same drop-policy recompute, cells from assign3
+    // same drop-policy recompute, cells from the depth-3 assign
     val deep = Dedup.semDedupScaled(e, "vec_id", "embedding", K, TAU,
         flatMaxK = 0, deepMinK = K)
       .collect()

@@ -66,17 +66,17 @@ class IvfRecallSpec extends SparkSpec {
 
   test("deep (3-level) probe: recall grows with fine probes; exhaustive probing equals brute force (round-18)") {
     val e = Tables.embeddings(spark, d)
-    val cb = Ivf.train3(e, "embedding", "vec_id", k = 27,
+    val cb = Ivf.train(e, "embedding", "vec_id", k = 27, depth = 3,
       itersCoarse = 3, itersLevel = 2)
     try {
-      val corpus = Ivf.assign3(e, "embedding", cb).filter($"cell".isNotNull)
-      val nMids = Ivf.collectLevel(cb.mid).map(_._2).distinct.size
-      val nFines = Ivf.collectLevel(cb.fine).map(_._2).distinct.size
+      val corpus = Ivf.assign(e, "embedding", cb).filter($"cell".isNotNull)
+      val Seq(nMids, nFines) =
+        cb.levels.map(l => Ivf.collectLevel(l).map(_._2).distinct.size)
       def probed(npt: Int, npm: Int, npf: Int) = {
-        val queries = Ivf.probeCells3(
+        val queries = Ivf.probeCells(
           e.filter($"vec_id" < 20)
             .select($"vec_id".as("q_id"), $"embedding".as("q_vec")),
-          "q_id", "q_vec", cb, npt, npm, npf)
+          "q_id", "q_vec", cb, Seq(npt, npm, npf))
         topk(Similarity.ivfTopKProbed(queries, corpus,
           "q_id", "q_vec", "probes", "vec_id", "embedding", "cell", 5))
       }

@@ -4,10 +4,11 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Two-level IVF codebook (round-15): training determinism, assignment
-  * exactness against a driver-side recompute, the incremental-upsert
-  * identity q102's oracle relies on, corrupt-input NULL contracts, and
-  * the drift trigger.
+/** IVF codebook at depth 2 and 3: training determinism, assignment
+  * and probe exactness against a driver-side recompute, the
+  * incremental-upsert identity q102's oracle relies on, corrupt-input
+  * NULL contracts, durable save/load (including older state dirs), the
+  * tier switch, and the drift trigger.
   */
 class IvfSpec extends SparkSpec {
   import spark.implicits._
@@ -27,14 +28,32 @@ class IvfSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
   }
 
-  private def cb(df: DataFrame): Ivf.Codebook =
-    Ivf.train(df, "embedding", "vec_id", k = 9,
-      itersCoarse = 3, itersFine = 2, perCellSampleMax = 64)
+  /** k = 9 at depth 2 (3 × 3), k = 27 at depth 3 (3 × 3 × 3). */
+  private def cb(df: DataFrame, depth: Int = 2): Ivf.Codebook =
+    Ivf.train(df, "embedding", "vec_id", k = if (depth == 2) 9 else 27,
+      depth, itersCoarse = 3, itersLevel = 2, perCellSampleMax = 64)
+
+  /** Every codebook property below holds at both depths. */
+  private val depths = Seq(2, 3)
+
+  private def withCb[T](df: DataFrame, depth: Int)(f: Ivf.Codebook => T): T = {
+    val book = cb(df, depth)
+    try f(book) finally book.release()
+  }
+
+  private def sqd(c: Seq[Long], xq: Array[Long]): Long =
+    c.toArray.zip(xq).map { case (a, b) => val t = a - b; t * t }.sum
+
+  private def cells(a: DataFrame): Map[Long, Option[Int]] =
+    a.select($"vec_id", $"cell").collect()
+      .map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
 
   test("assignment equals a driver-side argmin over the coarse cell's candidates") {
     val df = corpus(240)
     val book = cb(df)
-    val byCoarse = Ivf.collectFine(book).groupBy(_._1)
+    val fine = Ivf.collectLevel(book.fine)
+    val byCoarse = fine.groupBy(_._1)
     val rows = Ivf.assign(
         df.withColumn("__coarse",
           Similarity.cellAssign($"embedding", book.coarse)),
@@ -48,47 +67,54 @@ class IvfSpec extends SparkSpec {
       val xq = r.getSeq[Long](3).toArray
       val cands = byCoarse(coarse)
       val best = cands.map { case (_, cell, c) =>
-        val d = c.toArray.zip(xq).map { case (a, b) =>
-          val t = a - b; t * t
-        }.sum
-        (d, cell)
+        (sqd(c, xq), cell)
       }.min // (distance, cell) lexicographic — the kernel's tie-break
       assert(!r.isNullAt(2) && r.getInt(2) == best._2,
         s"vec ${r.getLong(0)}: kernel ${r.get(2)} vs recompute ${best._2}")
     }
     // the codebook really is two-level: >1 coarse cell, fine ids spread
-    assert(byCoarse.size > 1)
-    assert(Ivf.collectFine(book).map(_._2).distinct.size > byCoarse.size)
+    assert(book.depth == 2 && byCoarse.size > 1)
+    assert(fine.map(_._2).distinct.size > byCoarse.size)
   }
 
   test("incremental upsert identity: assign(base) ∪ assign(delta) == assign(base ∪ delta)") {
     val df = corpus(210)
     val base = df.filter($"vec_id" % 7 =!= 0)
     val delta = df.filter($"vec_id" % 7 === 0)
-    val book = cb(base) // frozen pre-delta, the q102 posture
-    def m(d: DataFrame): Map[Long, Int] =
-      Ivf.assign(d, "embedding", book).select($"vec_id", $"cell")
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val incremental = m(base) ++ m(delta)
-    val full = m(df)
-    assert(incremental == full)
-    assert(incremental.size == 210)
+    // frozen pre-delta, the q102 posture; fixed-codebook assignment is
+    // a pure per-row function at every level
+    for (depth <- depths) withCb(base, depth) { book =>
+      def m(d: DataFrame): Map[Long, Int] =
+        Ivf.assign(d, "embedding", book).select($"vec_id", $"cell")
+          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val incremental = m(base) ++ m(delta)
+      assert(incremental == m(df), s"depth $depth")
+      assert(incremental.size == 210)
+    }
   }
 
   test("training is partitioning-independent (the determinism contract)") {
     val df = corpus(180)
-    val a = Ivf.collectFine(cb(df.repartition(1)))
-    val b = Ivf.collectFine(cb(df.repartition(13, $"vec_id")))
-    assert(a == b)
+    for (depth <- depths) {
+      val a = cb(df.repartition(1), depth)
+      val b = cb(df.repartition(13, $"vec_id"), depth)
+      try {
+        assert(a.levels.size == depth - 1 && b.levels.size == depth - 1)
+        a.levels.zip(b.levels).foreach { case (la, lb) =>
+          assert(Ivf.collectLevel(la) == Ivf.collectLevel(lb), s"depth $depth")
+        }
+      } finally { a.release(); b.release() }
+    }
   }
 
   test("corrupt inputs get NULL cells, never a plausible bin") {
     val df = corpus(60)
-    val book = cb(df)
     // a vector whose length differs from the codebook dims
     val ragged = Seq((999L, Array.fill(5)(1.0f))).toDF("vec_id", "embedding")
-    val r = Ivf.assign(ragged, "embedding", book).select($"cell").collect()
-    assert(r.length == 1 && r(0).isNullAt(0))
+    for (depth <- depths) withCb(df, depth) { book =>
+      val r = Ivf.assign(ragged, "embedding", book).select($"cell").collect()
+      assert(r.length == 1 && r(0).isNullAt(0), s"depth $depth")
+    }
     // kernel-level: a candidate list with a ragged centroid nulls the row
     val bad = Seq((Array(1L, 2L), Seq((0, Seq(1L, 2L)), (1, Seq(1L)))))
       .toDF("xq", "cands")
@@ -101,24 +127,16 @@ class IvfSpec extends SparkSpec {
       .collect()(0).isNullAt(0))
   }
 
-  // --- three-level codebook (round-18) --------------------------------------
-
-  private def cb3(df: DataFrame): Ivf.Codebook3 =
-    Ivf.train3(df, "embedding", "vec_id", k = 27,
-      itersCoarse = 3, itersLevel = 2, perCellSampleMax = 64)
-
   test("three-level assignment equals a driver-side two-step argmin (round-18)") {
     val df = corpus(240)
-    val book = cb3(df)
-    try {
-      val byTop = Ivf.collectLevel(book.mid).groupBy(_._1)
-      val byMid = Ivf.collectLevel(book.fine).groupBy(_._1)
+    withCb(df, 3) { book =>
+      val Seq(mid, fine) = book.levels.map(Ivf.collectLevel)
+      val byTop = mid.groupBy(_._1)
+      val byMid = fine.groupBy(_._1)
       def argmin(cands: Seq[(Int, Int, Seq[Long])], xq: Array[Long]): Int =
-        cands.map { case (_, cell, c) =>
-          (c.toArray.zip(xq).map { case (a, b) => val t = a - b; t * t }.sum,
-            cell)
-        }.min._2 // (distance, cell) lexicographic — the kernel's tie-break
-      val rows = Ivf.assign3(
+        cands.map { case (_, cell, c) => (sqd(c, xq), cell) }
+          .min._2 // (distance, cell) lexicographic — the kernel's tie-break
+      val rows = Ivf.assign(
           df.withColumn("__top",
             Similarity.cellAssign($"embedding", book.coarse)),
           "embedding", book)
@@ -128,170 +146,148 @@ class IvfSpec extends SparkSpec {
       assert(rows.length == 240)
       rows.foreach { r =>
         val xq = r.getSeq[Long](3).toArray
-        val mid = argmin(byTop(r.getInt(1)), xq)
-        val want = argmin(byMid(mid), xq)
+        val want = argmin(byMid(argmin(byTop(r.getInt(1)), xq)), xq)
         assert(!r.isNullAt(2) && r.getInt(2) == want,
           s"vec ${r.getLong(0)}: kernel ${r.get(2)} vs recompute $want")
       }
       // genuinely three levels: >1 top cell, mids spread, fines spread
       assert(byTop.size > 1)
-      assert(Ivf.collectLevel(book.mid).map(_._2).distinct.size > byTop.size)
-      assert(Ivf.collectLevel(book.fine).map(_._2).distinct.size >
-        Ivf.collectLevel(book.mid).map(_._2).distinct.size)
-    } finally book.release()
-  }
-
-  test("three-level training is partitioning-independent; corrupt rows get NULL (round-18)") {
-    val df = corpus(180)
-    val a = cb3(df.repartition(1))
-    val b = cb3(df.repartition(13, $"vec_id"))
-    try {
-      assert(Ivf.collectLevel(a.mid) == Ivf.collectLevel(b.mid))
-      assert(Ivf.collectLevel(a.fine) == Ivf.collectLevel(b.fine))
-      val ragged = Seq((999L, Array.fill(5)(1.0f))).toDF("vec_id", "embedding")
-      val r = Ivf.assign3(ragged, "embedding", a).select($"cell").collect()
-      assert(r.length == 1 && r(0).isNullAt(0))
-      // incremental identity carries over: fixed-codebook assignment is
-      // a pure per-row function at every level
-      val base = df.filter($"vec_id" % 7 =!= 0)
-      val delta = df.filter($"vec_id" % 7 === 0)
-      def m(d: DataFrame): Map[Long, Int] =
-        Ivf.assign3(d, "embedding", a).select($"vec_id", $"cell")
-          .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
-      assert(m(base) ++ m(delta) == m(df))
-    } finally { a.release(); b.release() }
+      assert(mid.map(_._2).distinct.size > byTop.size)
+      assert(fine.map(_._2).distinct.size > mid.map(_._2).distinct.size)
+    }
   }
 
   test("probeCells equals a driver-side recompute over the probed coarse cells' candidates") {
     val df = corpus(240)
-    val book = cb(df)
-    val npc = math.min(2, book.coarse.length)
     val queries = df.filter($"vec_id" < 20)
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    val got = Ivf.probeCells(queries, "q_id", "q_vec", book, npc, nProbeFine = 3)
-      .select($"q_id", $"probes",
-        Similarity.probeCells($"q_vec", book.coarse, npc).as("cps"),
-        KMeans.quantize($"q_vec").as("xq"))
-      .collect()
-    assert(got.length == 20)
-    val byCoarse = Ivf.collectFine(book).groupBy(_._1)
-    got.foreach { r =>
-      val cps = r.getSeq[Int](2)
-      val xq = r.getSeq[Long](3).toArray
-      val expected = cps.flatMap(c => byCoarse.getOrElse(c, Nil))
-        .map { case (_, cell, cvec) =>
-          (cvec.toArray.zip(xq).map { case (a, b) => val t = a - b; t * t }.sum,
-            cell)
-        }
-        .sorted.take(3).map(_._2)
-      assert(r.getSeq[Int](1) == expected,
-        s"q ${r.getLong(0)}: ${r.getSeq[Int](1)} vs $expected")
-    }
-    // a ragged query gets an empty probe list, not a crash or a bin
     val ragged = Seq((99L, Array.fill(5)(1.0f))).toDF("q_id", "q_vec")
-    val rp = Ivf.probeCells(ragged, "q_id", "q_vec", book, npc, nProbeFine = 3)
-      .select($"probes").collect()
-    assert(rp.length == 1 && rp(0).getSeq[Int](0).isEmpty)
+    for (depth <- depths) withCb(df, depth) { book =>
+      val npc = math.min(2, book.coarse.length)
+      // one count per level: 3 leaf cells, through 4 mids at depth 3
+      val nProbe = npc +: (if (depth == 3) Seq(4, 3) else Seq(3))
+      val got = Ivf.probeCells(queries, "q_id", "q_vec", book, nProbe)
+        .select($"q_id", $"probes",
+          Similarity.probeCells($"q_vec", book.coarse, npc).as("cps"),
+          KMeans.quantize($"q_vec").as("xq"))
+        .collect()
+      assert(got.length == 20)
+      val byParent = book.levels.map(l => Ivf.collectLevel(l).groupBy(_._1))
+      // each hop: the n nearest of the probed parents' entries
+      def hop(parents: Seq[Int], lvl: Map[Int, Seq[(Int, Int, Seq[Long])]],
+          xq: Array[Long], n: Int): Seq[Int] =
+        parents.flatMap(p => lvl.getOrElse(p, Nil))
+          .map { case (_, cell, cvec) => (sqd(cvec, xq), cell) }
+          .sorted.take(n).map(_._2)
+      got.foreach { r =>
+        val xq = r.getSeq[Long](3).toArray
+        val expected = byParent.zip(nProbe.tail)
+          .foldLeft(r.getSeq[Int](2)) { case (ps, (lvl, n)) => hop(ps, lvl, xq, n) }
+        assert(r.getSeq[Int](1) == expected,
+          s"depth $depth q ${r.getLong(0)}: ${r.getSeq[Int](1)} vs $expected")
+      }
+      // a ragged query gets an empty probe list, not a crash or a bin
+      val rp = Ivf.probeCells(ragged, "q_id", "q_vec", book, nProbe)
+        .select($"probes").collect()
+      assert(rp.length == 1 && rp(0).getSeq[Int](0).isEmpty, s"depth $depth")
+    }
   }
 
-  test("save3/load3 round-trip: reloaded codebook assigns identically (round-18)") {
+  test("save/load round-trip: reloaded codebook assigns identically at both depths") {
     val df = corpus(180)
-    val book = cb3(df)
-    val dir = java.nio.file.Files.createTempDirectory("ivf3state").toString
-    try {
-      Ivf.save3(book, dir)
-      val reloaded = Ivf.load3(spark, dir)
+    for (depth <- depths) withCb(df, depth) { book =>
+      val dir = java.nio.file.Files.createTempDirectory("ivfstate").toString
+      Ivf.save(book, dir)
+      val reloaded = Ivf.load(spark, dir)
       try {
-        assert(reloaded.midK == book.midK && reloaded.fineK == book.fineK)
+        assert(reloaded.levels.size == book.levels.size, s"depth $depth")
         assert(reloaded.coarse.map(_.toSeq).toSeq == book.coarse.map(_.toSeq).toSeq)
-        assert(Ivf.collectLevel(reloaded.mid) == Ivf.collectLevel(book.mid))
-        assert(Ivf.collectLevel(reloaded.fine) == Ivf.collectLevel(book.fine))
-        def m(b: Ivf.Codebook3): Map[Long, Int] =
-          Ivf.assign3(df, "embedding", b).select($"vec_id", $"cell")
-            .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-        assert(m(reloaded) == m(book))
+        reloaded.levels.zip(book.levels).foreach { case (r, b) =>
+          assert(Ivf.collectLevel(r) == Ivf.collectLevel(b), s"depth $depth")
+        }
+        assert(cells(Ivf.assign(df, "embedding", reloaded)) ==
+          cells(Ivf.assign(df, "embedding", book)))
       } finally reloaded.release()
-    } finally book.release()
+    }
   }
 
-  test("tier dispatch: trainTiered switches depth at deepMinK; saveAny/loadAny sniff it back (round-19)") {
+  test("durable states written with a meta/ stride dir reload identically at both depths") {
+    // compaction states saved before the depth-generic codebook carry a
+    // `meta` dir — one (fineK) row at depth 2, one (midK, fineK) row at
+    // depth 3 — next to the levels; a resumed compaction must read them
     val df = corpus(180)
-    // below the threshold: two-level; at/above: three-level
-    val shallow = Ivf.trainTiered(df, "embedding", "vec_id", k = 9,
-      deepMinK = 10)
-    val deep = Ivf.trainTiered(df, "embedding", "vec_id", k = 9,
-      deepMinK = 9)
+    for (depth <- depths) withCb(df, depth) { book =>
+      val dir = java.nio.file.Files.createTempDirectory("ivfmeta").toString
+      Ivf.save(book, dir)
+      val meta = if (depth == 2) Seq(Tuple1(3)).toDF("fineK")
+        else Seq((3, 3)).toDF("midK", "fineK")
+      meta.repartition(1).write.mode("overwrite").parquet(s"$dir/meta")
+      val reloaded = Ivf.load(spark, dir)
+      try {
+        assert(reloaded.depth == depth)
+        reloaded.levels.zip(book.levels).foreach { case (r, b) =>
+          assert(Ivf.collectLevel(r) == Ivf.collectLevel(b), s"depth $depth")
+        }
+        assert(cells(Ivf.assign(df, "embedding", reloaded)) ==
+          cells(Ivf.assign(df, "embedding", book)))
+      } finally reloaded.release()
+    }
+  }
+
+  test("tier switch: cellDepth picks flat/2/3 at the thresholds; load sniffs the saved depth") {
+    assert(Dedup.cellDepth(Dedup.FlatMaxK) == 1)
+    assert(Dedup.cellDepth(Dedup.FlatMaxK + 1) == 2)
+    assert(Dedup.cellDepth(Ivf.DeepMinK - 1) == 2)
+    assert(Dedup.cellDepth(Ivf.DeepMinK) == 3)
+    intercept[IllegalArgumentException](Dedup.cellDepth(9, 10, 10))
+    // below deepMinK: two levels; at it: three (the compaction's
+    // no-flat call shape)
+    val df = corpus(180)
+    val shallow = Ivf.train(df, "embedding", "vec_id", k = 9,
+      Dedup.cellDepth(9, flatMaxK = 0, deepMinK = 10))
+    val deep = Ivf.train(df, "embedding", "vec_id", k = 9,
+      Dedup.cellDepth(9, flatMaxK = 0, deepMinK = 9))
     try {
-      assert(shallow.isInstanceOf[Ivf.Codebook], shallow.getClass.toString)
-      assert(deep.isInstanceOf[Ivf.Codebook3], deep.getClass.toString)
-      // assignAny routes to the depth-specific kernel: same cells as
-      // the direct call, for both depths
-      def cells(a: DataFrame): Map[Long, Option[Int]] =
-        a.select($"vec_id", $"cell").collect()
-          .map(r => r.getLong(0) ->
-            (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
-      assert(cells(Ivf.assignAny(df, "embedding", shallow)) ==
-        cells(Ivf.assign(df, "embedding",
-          shallow.asInstanceOf[Ivf.Codebook])))
-      assert(cells(Ivf.assignAny(df, "embedding", deep)) ==
-        cells(Ivf.assign3(df, "embedding",
-          deep.asInstanceOf[Ivf.Codebook3])))
-      // loadAny discriminates by the on-disk layout (mid level present)
-      // — a pre-round-19 two-level state dir loads unchanged
+      assert(shallow.depth == 2 && deep.depth == 3)
+      // load discriminates by the on-disk layout (mid level present);
+      // a depth-2 save over a depth-3 state drops the stale mid level
       val d2 = java.nio.file.Files.createTempDirectory("ivfany2").toString
       val d3 = java.nio.file.Files.createTempDirectory("ivfany3").toString
-      Ivf.saveAny(shallow, d2)
-      Ivf.saveAny(deep, d3)
-      val r2 = Ivf.loadAny(spark, d2)
-      val r3 = Ivf.loadAny(spark, d3)
+      Ivf.save(deep, d2)
+      Ivf.save(shallow, d2)
+      Ivf.save(deep, d3)
+      val r2 = Ivf.load(spark, d2)
+      val r3 = Ivf.load(spark, d3)
       try {
-        assert(r2.isInstanceOf[Ivf.Codebook], r2.getClass.toString)
-        assert(r3.isInstanceOf[Ivf.Codebook3], r3.getClass.toString)
-        assert(cells(Ivf.assignAny(df, "embedding", r2)) ==
-          cells(Ivf.assignAny(df, "embedding", shallow)))
-        assert(cells(Ivf.assignAny(df, "embedding", r3)) ==
-          cells(Ivf.assignAny(df, "embedding", deep)))
+        assert(r2.depth == 2 && r3.depth == 3)
+        assert(cells(Ivf.assign(df, "embedding", r2)) ==
+          cells(Ivf.assign(df, "embedding", shallow)))
+        assert(cells(Ivf.assign(df, "embedding", r3)) ==
+          cells(Ivf.assign(df, "embedding", deep)))
       } finally { r2.release(); r3.release() }
     } finally { shallow.release(); deep.release() }
   }
 
-  test("probeCells3 equals a driver-side two-hop recompute (round-18)") {
-    val df = corpus(240)
-    val book = cb3(df)
-    try {
-      val npt = math.min(2, book.coarse.length)
-      val (npm, npf) = (4, 3)
-      val queries = df.filter($"vec_id" < 20)
-        .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-      val got = Ivf.probeCells3(queries, "q_id", "q_vec", book, npt, npm, npf)
-        .select($"q_id", $"probes",
-          Similarity.probeCells($"q_vec", book.coarse, npt).as("tps"),
-          KMeans.quantize($"q_vec").as("xq"))
-        .collect()
-      assert(got.length == 20)
-      val byTop = Ivf.collectLevel(book.mid).groupBy(_._1)
-      val byMid = Ivf.collectLevel(book.fine).groupBy(_._1)
-      def hop(parents: Seq[Int], lvl: Map[Int, Seq[(Int, Int, Seq[Long])]],
-          xq: Array[Long], n: Int): Seq[Int] =
-        parents.flatMap(p => lvl.getOrElse(p, Nil))
-          .map { case (_, cell, cvec) =>
-            (cvec.toArray.zip(xq).map { case (a, b) =>
-              val t = a - b; t * t
-            }.sum, cell)
-          }
-          .sorted.take(n).map(_._2)
-      got.foreach { r =>
-        val xq = r.getSeq[Long](3).toArray
-        val expected = hop(hop(r.getSeq[Int](2), byTop, xq, npm), byMid, xq, npf)
-        assert(r.getSeq[Int](1) == expected,
-          s"q ${r.getLong(0)}: ${r.getSeq[Int](1)} vs $expected")
+  test("depth and per-level nProbe contracts reject bad shapes loudly") {
+    val df = corpus(90)
+    for (depth <- Seq(1, 4)) {
+      val e = intercept[IllegalArgumentException](
+        Ivf.train(df, "embedding", "vec_id", k = 9, depth))
+      assert(e.getMessage.contains("depth"), e.getMessage)
+    }
+    intercept[IllegalArgumentException](
+      Ivf.Codebook(Array(Array(0.0)), Seq.empty))
+    val queries = df.filter($"vec_id" < 5)
+      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
+    for (depth <- depths) withCb(df, depth) { book =>
+      // one count per level, the coarse count within the coarse cells
+      for (bad <- Seq(Seq.fill(depth + 1)(1), Seq.fill(depth - 1)(1),
+          (book.coarse.length + 1) +: Seq.fill(depth - 1)(1),
+          1 +: Seq.fill(depth - 1)(0))) {
+        intercept[IllegalArgumentException](
+          Ivf.probeCells(queries, "q_id", "q_vec", book, bad))
       }
-      // a ragged query gets an empty probe list, not a crash or a bin
-      val ragged = Seq((99L, Array.fill(5)(1.0f))).toDF("q_id", "q_vec")
-      val rp = Ivf.probeCells3(ragged, "q_id", "q_vec", book, npt, npm, npf)
-        .select($"probes").collect()
-      assert(rp.length == 1 && rp(0).getSeq[Int](0).isEmpty)
-    } finally book.release()
+    }
   }
 
   test("train and probeCells reject non-integral ids loudly (round-16)") {
@@ -307,7 +303,7 @@ class IvfSpec extends SparkSpec {
     val strQ = df.filter($"vec_id" < 5)
       .select(concat(lit("q"), $"vec_id").as("q_id"), $"embedding")
     val e2 = intercept[IllegalArgumentException] {
-      Ivf.probeCells(strQ, "q_id", "embedding", book, 1, nProbeFine = 3)
+      Ivf.probeCells(strQ, "q_id", "embedding", book, Seq(1, 3))
     }
     assert(e2.getMessage.contains("integral"), e2.getMessage)
   }
@@ -326,14 +322,14 @@ class IvfSpec extends SparkSpec {
     val b = df.filter($"vec_id" === 1L).select(lit(7L).as("q_id"),
       $"embedding")
     val dup = a.unionByName(b)
-    val got = Ivf.probeCells(dup, "q_id", "embedding", book, npc,
-      nProbeFine = 3).select($"probes").collect()
+    val got = Ivf.probeCells(dup, "q_id", "embedding", book, Seq(npc, 3))
+      .select($"probes").collect()
     assert(got.length == 2, "each duplicate row rides back through the join")
     assert(got(0).getSeq[Int](0) == got(1).getSeq[Int](0),
       "duplicates share one merged probe list")
     // the merged list is the global top-3 over BOTH rows' scored
     // candidates — recompute it driver-side
-    val byCoarse = Ivf.collectFine(book).groupBy(_._1)
+    val byCoarse = Ivf.collectLevel(book.fine).groupBy(_._1)
     val merged = dup.select($"embedding",
         Similarity.probeCells($"embedding", book.coarse, npc).as("cps"),
         KMeans.quantize($"embedding").as("xq")).collect()

@@ -3,18 +3,18 @@ package graft.queries
 import graft.SparkSpec
 import graft.operators.Ivf
 
-/** Delete-on-close contract for the parquet-backed codebook snapshots
-  * (round-20, r19 verdict task 7 / ADVICE): durableCb re-materializes a
-  * trained codebook from a scratch parquet dir, and that dir must die
-  * with the memo slot — the r19 form leaked one graft-cb* dir per
-  * (session, dir) cycle for the machine's lifetime.
+/** Delete-on-close contract for the parquet-backed codebook snapshots:
+  * durableCb re-materializes a trained codebook from a scratch parquet
+  * dir, and that dir must die with the memo slot — otherwise one
+  * graft-cb* dir leaks per (session, dir) cycle for the machine's
+  * lifetime.
   */
 class SnapshotHygieneSpec extends SparkSpec {
 
   test("durableCb registers its snapshot dir; releaseCb deletes it") {
     val e = graft.Tables.embeddings(spark, testDataDir("sf0.001"))
     val cb = Ivf.train(e, "embedding", "vec_id", k = 8,
-      itersCoarse = 1, itersFine = 1)
+      itersCoarse = 1, itersLevel = 1)
     val loaded = TrainingData.durableCb(cb)
     val dir = TrainingData.snapshotDirOf(loaded)
     assert(dir.nonEmpty, "durableCb must register its snapshot dir")
@@ -26,11 +26,11 @@ class SnapshotHygieneSpec extends SparkSpec {
       "the registry entry must clear with the delete")
   }
 
-  test("durableCb3 snapshot follows the same lifecycle") {
+  test("durableCb snapshot of a three-level codebook follows the same lifecycle") {
     val e = graft.Tables.embeddings(spark, testDataDir("sf0.001"))
-    val cb = Ivf.train3(e, "embedding", "vec_id", k = 27,
+    val cb = Ivf.train(e, "embedding", "vec_id", k = 27, depth = 3,
       itersCoarse = 1, itersLevel = 1)
-    val loaded = TrainingData.durableCb3(cb)
+    val loaded = TrainingData.durableCb(cb)
     val dir = TrainingData.snapshotDirOf(loaded)
     assert(dir.nonEmpty)
     val fs = dir.get.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -45,7 +45,7 @@ class SnapshotHygieneSpec extends SparkSpec {
     try {
       val e = graft.Tables.embeddings(spark, testDataDir("sf0.001"))
       val cb = Ivf.train(e, "embedding", "vec_id", k = 8,
-        itersCoarse = 1, itersFine = 1)
+        itersCoarse = 1, itersLevel = 1)
       val loaded = TrainingData.durableCb(cb)
       val dir = TrainingData.snapshotDirOf(loaded).get
       assert(dir.toString.startsWith(base.toString),
