@@ -93,28 +93,39 @@ class IvfSpec extends SparkSpec {
     }
   }
 
+  /** Two trainings over differently partitioned inputs give identical
+    * levels.
+    */
+  private def assertPartitioningIndependent(df: DataFrame, depth: Int): Unit = {
+    val a = cb(df.repartition(1), depth)
+    val b = cb(df.repartition(13, $"vec_id"), depth)
+    try {
+      assert(a.levels.size == depth - 1 && b.levels.size == depth - 1)
+      a.levels.zip(b.levels).foreach { case (la, lb) =>
+        assert(Ivf.collectLevel(la) == Ivf.collectLevel(lb), s"depth $depth")
+      }
+    } finally { a.release(); b.release() }
+  }
+
+  /** A vector whose length differs from the codebook dims gets a NULL cell. */
+  private def assertRaggedNull(book: Ivf.Codebook): Unit = {
+    val ragged = Seq((999L, Array.fill(5)(1.0f))).toDF("vec_id", "embedding")
+    val r = Ivf.assign(ragged, "embedding", book).select($"cell").collect()
+    assert(r.length == 1 && r(0).isNullAt(0), s"depth ${book.depth}")
+  }
+
   test("training is partitioning-independent (the determinism contract)") {
+    assertPartitioningIndependent(corpus(180), depth = 2)
+  }
+
+  test("three-level training is partitioning-independent; corrupt rows get NULL (round-18)") {
     val df = corpus(180)
-    for (depth <- depths) {
-      val a = cb(df.repartition(1), depth)
-      val b = cb(df.repartition(13, $"vec_id"), depth)
-      try {
-        assert(a.levels.size == depth - 1 && b.levels.size == depth - 1)
-        a.levels.zip(b.levels).foreach { case (la, lb) =>
-          assert(Ivf.collectLevel(la) == Ivf.collectLevel(lb), s"depth $depth")
-        }
-      } finally { a.release(); b.release() }
-    }
+    assertPartitioningIndependent(df, depth = 3)
+    withCb(df, 3)(assertRaggedNull)
   }
 
   test("corrupt inputs get NULL cells, never a plausible bin") {
-    val df = corpus(60)
-    // a vector whose length differs from the codebook dims
-    val ragged = Seq((999L, Array.fill(5)(1.0f))).toDF("vec_id", "embedding")
-    for (depth <- depths) withCb(df, depth) { book =>
-      val r = Ivf.assign(ragged, "embedding", book).select($"cell").collect()
-      assert(r.length == 1 && r(0).isNullAt(0), s"depth $depth")
-    }
+    withCb(corpus(60), 2)(assertRaggedNull)
     // kernel-level: a candidate list with a ragged centroid nulls the row
     val bad = Seq((Array(1L, 2L), Seq((0, Seq(1L, 2L)), (1, Seq(1L)))))
       .toDF("xq", "cands")
@@ -157,12 +168,15 @@ class IvfSpec extends SparkSpec {
     }
   }
 
-  test("probeCells equals a driver-side recompute over the probed coarse cells' candidates") {
+  /** probeCells at `depth` equals a driver-side hop-by-hop recompute:
+    * each hop keeps the n nearest of the probed parents' entries.
+    */
+  private def assertProbeRecompute(depth: Int): Unit = {
     val df = corpus(240)
     val queries = df.filter($"vec_id" < 20)
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
     val ragged = Seq((99L, Array.fill(5)(1.0f))).toDF("q_id", "q_vec")
-    for (depth <- depths) withCb(df, depth) { book =>
+    withCb(df, depth) { book =>
       val npc = math.min(2, book.coarse.length)
       // one count per level: 3 leaf cells, through 4 mids at depth 3
       val nProbe = npc +: (if (depth == 3) Seq(4, 3) else Seq(3))
@@ -173,7 +187,6 @@ class IvfSpec extends SparkSpec {
         .collect()
       assert(got.length == 20)
       val byParent = book.levels.map(l => Ivf.collectLevel(l).groupBy(_._1))
-      // each hop: the n nearest of the probed parents' entries
       def hop(parents: Seq[Int], lvl: Map[Int, Seq[(Int, Int, Seq[Long])]],
           xq: Array[Long], n: Int): Seq[Int] =
         parents.flatMap(p => lvl.getOrElse(p, Nil))
@@ -191,6 +204,14 @@ class IvfSpec extends SparkSpec {
         .select($"probes").collect()
       assert(rp.length == 1 && rp(0).getSeq[Int](0).isEmpty, s"depth $depth")
     }
+  }
+
+  test("probeCells equals a driver-side recompute over the probed coarse cells' candidates") {
+    assertProbeRecompute(depth = 2)
+  }
+
+  test("probeCells3 equals a driver-side two-hop recompute (round-18)") {
+    assertProbeRecompute(depth = 3)
   }
 
   test("save/load round-trip: reloaded codebook assigns identically at both depths") {
