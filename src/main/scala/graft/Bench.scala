@@ -125,18 +125,15 @@ object Bench {
     def fmt(v: Double) = String.format(Locale.ROOT, "%.3f", v: java.lang.Double)
 
     /** Drop cross-query state so one query can't distort the next
-      * measurement (see class doc): SQL cache (sketch persists,
-      * broadcasts), persistent RDD blocks (localCheckpoint() blocks are
-      * NOT covered by clearCache() — the round-2 q53 "regression"), then
-      * a forced full GC so ContextCleaner reclaims dead broadcast/
-      * shuffle/codegen state instead of letting it pile onto the next
-      * query (the round-4 q55 artifact). A short pause lets the cleaner
+      * measurement (see class doc): cached frames and pinned blocks
+      * ([[Frames.sweep]]), then a forced full GC so ContextCleaner
+      * reclaims dead broadcast/shuffle/codegen state instead of letting
+      * it pile onto the next query (see class doc: q55 read 67.2 s in
+      * the harness, 2.16 s standalone). A short pause lets the cleaner
       * thread drain its reference queue.
       */
     def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Frames.sweep(spark)
       if (!noGc) {
         System.gc()
         Thread.sleep(150)
@@ -318,10 +315,12 @@ object Bench {
     // frozen per-query baseline (BASELINE.md table) — parsed up front:
     // both the vs_baseline_sec diff AND the self-adjudication below need
     // it. Only rows under the bench-baseline marker whose sf matches the
-    // run count (a second q-named table must not pollute the map).
+    // run count (a second q-named table must not pollute the map). The
+    // marker `bench-baseline:<sf>:cores<N>` also names the core count
+    // the table was measured at.
     val basePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BASELINE.md")
-    val baseline: Map[String, Double] =
-      if (basePath == "off" || basePath == "0") Map.empty
+    val (baseline, baseCores): (Map[String, Double], Option[Int]) =
+      if (basePath == "off" || basePath == "0") (Map.empty, None)
       else try {
         // explicit UTF-8 via bytes: the forked JVM's default decoder
         // throws on the doc's non-ASCII characters
@@ -330,21 +329,24 @@ object Bench {
           java.nio.charset.StandardCharsets.UTF_8).linesIterator.toVector
         val markerIdx = lines.indexWhere(
           _.trim.startsWith("<!-- bench-baseline:"))
-        if (markerIdx < 0) Map.empty
+        if (markerIdx < 0) (Map.empty, None)
         else {
-          val baseSf = lines(markerIdx).split("bench-baseline:")(1)
-            .takeWhile(c => c.isLetterOrDigit || c == '.')
-          if (baseSf != new java.io.File(sfDir).getName) Map.empty
-          else lines.drop(markerIdx + 1)
+          val tags = lines(markerIdx).split("bench-baseline:")(1)
+            .takeWhile(c => c.isLetterOrDigit || c == '.' || c == ':').split(':')
+          val cores = tags.collectFirst {
+            case t if t.startsWith("cores") => t.stripPrefix("cores").toInt
+          }
+          if (tags(0) != new java.io.File(sfDir).getName) (Map.empty, None)
+          else (lines.drop(markerIdx + 1)
             .takeWhile(_.trim.startsWith("|"))
             .flatMap { line =>
               val cells = line.split("\\|").map(_.trim)
               if (cells.length >= 3 && cells(1).startsWith("q"))
                 scala.util.Try(cells(1) -> cells(2).toDouble).toOption
               else None
-            }.toMap
+            }.toMap, cores)
         }
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
+      } catch { case scala.util.control.NonFatal(_) => (Map.empty, None) }
 
     // Self-adjudication (round-12, BASELINE.md rule 2 automated): three
     // consecutive rounds of judge cycles went to exclusively re-running
@@ -420,13 +422,18 @@ object Bench {
         }.mkString("{", ",", "}")
         s""""readjudicated":$m,"""
       }
+    // a table frozen at another core count is no yardstick for this run
+    val baseCoresStr = baseCores.fold("") { c =>
+      s""""baseline_cores":$c,""" +
+        (if (c.toString != cpus) "\"baseline_comparable\":false," else "")
+    }
     // the parsed table sum rides in the contract line (round-16 verdict
     // task 6: BASELINE.md's prose once drifted 4% from its rows — every
     // future total-vs-freeze ratio gets its denominator from the same
     // parse the per-query diffs use, unambiguous and self-updating)
     val baseSumStr =
       if (baseline.isEmpty) ""
-      else s""""baseline_table_sum":${fmt(baseline.values.sum)},"""
+      else s""""baseline_table_sum":${fmt(baseline.values.sum)},""" + baseCoresStr
     def contract(q: String) =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""calib_before_ms":${fmt(calibBefore)},""" +
@@ -493,7 +500,7 @@ object Bench {
       val newcomers = results.collect {
         case (k, v, _) if v >= 0 && !baseline.contains(k) => k
       }
-      println(s"""{"metric":"vs_baseline_sec","baseline":"$basePath",""" +
+      println(s"""{"metric":"vs_baseline_sec","baseline":"$basePath",""" + baseCoresStr +
         s""""unbaselined":${newcomers.size},""" +
         s""""queries":${deltas.mkString("{", ",", "}")}}""")
     }

@@ -69,9 +69,7 @@ object BenchIvf {
     spark.sparkContext.setLogLevel("WARN")
     def fmt(v: Double) = String.format(Locale.ROOT, "%.3f", v: java.lang.Double)
     def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Frames.sweep(spark)
       System.gc()
       Thread.sleep(300)
     }

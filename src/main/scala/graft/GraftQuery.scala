@@ -63,10 +63,10 @@ object GraftQuery {
     *
     * `close` runs on the value a (session, dir) switch REPLACES
     * (round-17, r16 verdict: memos holding an [[graft.operators.Ivf]]
-    * codebook — whose fine frame is a persisted DataFrame — leaked one
-    * cache entry per SF/dir switch within a JVM, exactly the
-    * multi-SF-session leak class `semDedupAssigned`'s
-    * `finally unpersist` exists to prevent; pass `_.release()`).
+    * codebook — whose fine frame is a cached DataFrame — leaked one
+    * cache entry per SF/dir switch within a JVM, the multi-SF-session
+    * leak class [[graft.Frames.scoped]] exists to prevent; pass
+    * `_.release()`).
     * Values for plain driver-side artifacts need no close — the GC
     * owns them — so it defaults to a no-op. Single-threaded use is the
     * contract (Verify/Bench run queries sequentially): under a

@@ -37,12 +37,8 @@ object Verify {
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // per-query persists (dedup sketches) must not accumulate across
-      // 100 runs; clearCache() does NOT release localCheckpoint blocks
-      // (Bpe.trainMerges leaves one per merge round — the Bench.hygiene
-      // gap, round-11 review), so drop persistent RDDs explicitly too
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // per-query cached frames and pins must not accumulate across runs
+      Frames.sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -102,14 +102,13 @@ object CopyFromIndex {
     import spark.implicits._
     // ONE materialization of the resolve window feeds both the
     // driver-side metadata pass below and the copy kernel — without
-    // the persist the row_number window over the full index runs twice
-    val slim = resolved
-      .select(col("filename").cast("string"),
-        col("dest_class").cast("string"),
-        col("source_owner").cast("string"),
-        col("source_path").cast("string"))
-      .persist()
-    try {
+    // the cache the row_number window over the full index runs twice
+    graft.Frames.scoped { s =>
+      val slim = s.cache(resolved
+        .select(col("filename").cast("string"),
+          col("dest_class").cast("string"),
+          col("source_owner").cast("string"),
+          col("source_path").cast("string")))
       // one bounded metadata pass: destination class dirs (created up
       // front, the reference's :68-71) AND the owner contract — an
       // unknown or NULL owner would otherwise fall silently into the
@@ -129,7 +128,10 @@ object CopyFromIndex {
           java.nio.file.Paths.get(destDir, dc))
         ()
       }
-      slim
+      // eager + pinned: the copy is a SIDE EFFECT — a lazily returned
+      // frame would re-run it on every action, flipping first-run
+      // `copied` statuses to `exists` under the caller's feet
+      graft.Frames.pin(slim
         .as[(String, String, String, String)]
         .mapPartitions { it =>
           it.map { case (fn, dc, owner, src) =>
@@ -173,14 +175,7 @@ object CopyFromIndex {
           }
         }
         .toDF("filename", "dest_class", "source_owner", "source_path",
-          "status")
-        // eager + pinned: the copy is a SIDE EFFECT — a lazily returned
-        // frame would re-run it on every action, flipping first-run
-        // `copied` statuses to `exists` under the caller's feet
-        .localCheckpoint(true)
-    } finally {
-      slim.unpersist()
-      ()
+          "status"))
     }
   }
 

@@ -3,8 +3,6 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import scala.util.control.NonFatal
 import graft.functions.{Hashing, TextAnalysis}
 import graft.operators.Dedup
 
@@ -53,11 +51,11 @@ object CorpusPrep {
 
   final case class Frames(
       annotated: DataFrame, // input + lang, quality, tokens
-      kept: DataFrame,      // canonical surviving docs (persisted by run)
+      kept: DataFrame,      // canonical surviving docs (cached by run)
       stats: DataFrame) {   // (stage, docs) attrition ledger
-    /** [[run]] returns `kept` persisted (the attrition counts already
+    /** [[run]] returns `kept` cached (the attrition counts already
       * paid for it); call this when done consuming — a forgotten
-      * unpersist pins storage memory for the JVM lifetime.
+      * release pins storage memory for the JVM lifetime.
       */
     def release(): Unit = kept.unpersist()
   }
@@ -579,10 +577,9 @@ object CorpusPrep {
         val rowsAtTraining = spark.read.parquet(s"$d/trainmeta")
           .collect()(0).getLong(0)
         val ledger = spark.read.parquet(s"$d/ledger")
-        val delta = accumulated
-          .join(ledger.select(col("id").as(id)), Seq(id), "left_anti")
-          .persist()
-        try {
+        graft.Frames.scoped { s =>
+          val delta = s.cache(accumulated
+            .join(ledger.select(col("id").as(id)), Seq(id), "left_anti"))
           val deltaN = delta.count()
           // no-op fast path FIRST: the growth check below pays a
           // corpus-sized ledger scan a quiet stream must not pay
@@ -598,9 +595,8 @@ object CorpusPrep {
             cb.release()
             fullBuild(prev + 1, observedRaw)
           } else {
-            val newRows = Ivf.assign(delta, vec, cb, "cell")
-              .select(col(id).cast("long").as("id"), col("cell"))
-              .persist()
+            val newRows = s.cache(Ivf.assign(delta, vec, cb, "cell")
+              .select(col(id).cast("long").as("id"), col("cell")))
             val affected = newRows.select("cell").filter(col("cell").isNotNull)
               .distinct()
             // affected cells re-evaluate over ALL their members (old +
@@ -621,17 +617,10 @@ object CorpusPrep {
                 .withColumn("dropped", lit(false)))
             // typical + rowsAtTraining carry forward UNCHANGED: the
             // drift baseline is frozen at training time
-            try write(prev + 1, cb,
+            write(prev + 1, cb,
               untouched.unionByName(recomputed), retrained = false,
               typical, rowsAtTraining, observedRaw)
-            finally {
-              newRows.unpersist()
-              ()
-            }
           }
-        } finally {
-          delta.unpersist()
-          ()
         }
     }
     } finally releaseLock()
@@ -687,8 +676,8 @@ object CorpusPrep {
     *    `kept` materialized for the caller. (nExact minus the
     *    non-canonical labels would be wrong when ids repeat.)
     *
-    * Each `persist()` re-optimizes its plan on the driver, so the job
-    * persists exactly three frames: the flagged frame, the sketch and
+    * Each cached frame re-optimizes its plan on the driver, so the job
+    * caches exactly three frames: the flagged frame, the sketch and
     * `kept`. The first two are released before returning; `kept` STAYS
     * cached for the caller — call [[Frames.release]] when done.
     *
@@ -711,15 +700,13 @@ object CorpusPrep {
     val spark = docs.sparkSession
     import spark.implicits._
     val ann = annotate(docs, text, cfg)
-    val flagged = ann
-      .withColumn("__gate", coalesce(gatePredicate(cfg), lit(false)))
-      .withColumn("__exact", col("__gate") &&
-        col(id) === exactKeeper(when(col("__gate"), col(id)), text, cfg))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val exact = flagged.filter(col("__exact")).drop("__gate", "__exact")
-    val sketch = Dedup.lshSketch(exact, id, text, cfg.shingleK)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Frames.scoped { s =>
+      val flagged = s.cache(ann
+        .withColumn("__gate", coalesce(gatePredicate(cfg), lit(false)))
+        .withColumn("__exact", col("__gate") &&
+          col(id) === exactKeeper(when(col("__gate"), col(id)), text, cfg)))
+      val exact = flagged.filter(col("__exact")).drop("__gate", "__exact")
+      val sketch = s.cache(Dedup.lshSketch(exact, id, text, cfg.shingleK))
       // the profile row and the count row, as a union: a cross join of
       // the two would cost one more job, for its broadcast
       val Array(profileRow, counts) = Dedup.lshProfileFrame(sketch)
@@ -730,12 +717,10 @@ object CorpusPrep {
       val profile = Dedup.lshProfile(profileRow)
       val nExact = counts.getAs[Long]("exact")
       capAdvice(profile, nExact, cfg).foreach(log.warn)
-      val pairs = Dedup.lshPairsFromSketch(sketch, cfg.minJaccard, cfg.maxLshBucket)
-        .localCheckpoint(true)
-      val kept = dropNonCanonical(exact, id, pairs).persist()
-      val nKept =
-        try kept.count()
-        catch { case NonFatal(e) => kept.unpersist(); throw e }
+      val pairs = graft.Frames.pin(
+        Dedup.lshPairsFromSketch(sketch, cfg.minJaccard, cfg.maxLshBucket))
+      val kept = s.keep(dropNonCanonical(exact, id, pairs))
+      val nKept = kept.count()
       val stats = Seq(
         ("input", counts.getAs[Long]("input")),
         ("quality_lang_gate", counts.getAs[Long]("gated")),
@@ -745,10 +730,6 @@ object CorpusPrep {
         ("lsh_candidate_pairs", profile.candidatePairs)
       ).toDF("stage", "docs")
       Frames(ann, kept, stats)
-    } finally {
-      sketch.unpersist()
-      flagged.unpersist()
-      ()
     }
   }
 }

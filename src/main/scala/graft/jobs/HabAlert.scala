@@ -254,8 +254,8 @@ object HabAlert {
       warningDetected: Boolean, subject: String, html: String,
       bawsWarningDetected: Boolean, bawsSubject: String, bawsHtml: String,
       bawsSendToday: Boolean) {
-    /** Unpersists the run's cached frames (the CorpusPrep.Frames
-      * pattern) — call once the result's frames are consumed.
+    /** Unpersists the run's cached frames — call once the result's
+      * frames are consumed.
       */
     def release(): Unit = Seq(maxCounts, biomass, cyano).foreach(_.unpersist())
   }
@@ -265,28 +265,16 @@ object HabAlert {
       habDim: DataFrame, dateString: String, cfg: Config = Config()): Result = {
     // the run drives several independent actions over these frames (two
     // alert-predicate probes, the render collects, whatever the caller
-    // does with Result) — without persistence each action re-runs the
-    // ROI rollup shuffle and the top-1 windows from the raw scan
-    // (round-11 review). biovol is the shared upstream; the three
-    // result frames are day-sized. Caller releases via Result.release.
-    val biovol = biovolumes(roi, sampleDim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // failure-path hygiene (round-13 review): if a probe or render
-    // throws after the result frames persisted, Result is never built
-    // and Result.release can never run — without this ledger each
-    // failed daily attempt (e.g. replayed through foreachBatch) pins
-    // another set of cached frames for the driver's life
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var ok = false
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persisted += p
-      p
-    }
-    try {
-      val mc = pin(maxCounts(biovol, classDim, habDim))
-      val bands = pin(biomassBands(biovol, cfg))
-      val cy = pin(cyanoCounts(biovol, classDim, habDim))
+    // does with Result) — without caching each action re-runs the ROI
+    // rollup shuffle and the top-1 windows from the raw scan. biovol is
+    // the shared upstream, released on return; the three result frames
+    // are day-sized and kept for the caller, who releases them via
+    // Result.release (a failed probe or render releases them too).
+    graft.Frames.scoped { s =>
+      val biovol = s.cache(biovolumes(roi, sampleDim))
+      val mc = s.keep(maxCounts(biovol, classDim, habDim))
+      val bands = s.keep(biomassBands(biovol, cfg))
+      val cy = s.keep(cyanoCounts(biovol, classDim, habDim))
       val warning = !mc.filter(alertCol).isEmpty
       val subject =
         if (warning) s"IFCB HAB ALERT - $dateString"
@@ -295,19 +283,10 @@ object HabAlert {
       val bawsSubject =
         if (cyWarning) s"IFCB BAWS ALERT - $dateString"
         else s"IFCB BAWS Summary - $dateString"
-      val result = Result(mc, bands, cy, warning, subject,
+      Result(mc, bands, cy, warning, subject,
         emailHtml(mc, bands, dateString, cfg),
         cyWarning, bawsSubject, bawsHtml(cy, dateString, cfg),
         bawsInSeason(dateString))
-      ok = true
-      result
-    } finally {
-      // the result frames are materialized by the probes/renders above;
-      // the upstream rollup is no longer needed. On FAILURE the result
-      // frames unpersist too — on success they stay pinned for the
-      // caller, released via Result.release
-      biovol.unpersist()
-      if (!ok) persisted.foreach(_.unpersist())
     }
   }
 

@@ -558,12 +558,12 @@ object IngestQc {
       existing("dead_letter").map(_.select(col("path"))),
       Seq("path"), s"$outDir/dead_letter")
     // the kernel output feeds FOUR independent actions below (its own
-    // append + the three PSD frames via allFeats); without a persist the
+    // append + the three PSD frames via allFeats); without a cache the
     // partition-local feature kernel — the job's one heavy stage —
     // re-executes for each of them
-    frames.features.persist()
-    frames.psdData.persist()
-    try {
+    graft.Frames.scoped { s =>
+      s.cache(frames.features)
+      s.cache(frames.psdData)
       Sinks.appendNew(frames.features, existing("features"),
         Seq("sample"), s"$outDir/features")
       Sinks.appendNew(frames.psdData, existing("psd_data"),
@@ -572,9 +572,6 @@ object IngestQc {
         Seq("sample"), s"$outDir/psd_fits")
       Sinks.appendNew(frames.psdFlags, existing("psd_flags"),
         Seq("sample"), s"$outDir/psd_flags")
-    } finally {
-      frames.features.unpersist()
-      frames.psdData.unpersist()
     }
   }
 

@@ -2,7 +2,6 @@ package graft.jobs
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.sources.Sinks
 
 /** Multi-config orchestration — the reference's actual entry point
@@ -54,8 +53,8 @@ object RunAll {
   /** Folds `configs` over the delivery pipeline.
     *
     * @param data resolves a classifier name to its input frames; called
-    *             once per DISTINCT classifier, results persisted across
-    *             that classifier's configs and unpersisted before return
+    *             once per DISTINCT classifier, results cached across
+    *             that classifier's configs and released before return
     * @param adjacencyPartition the W1 run-sequence grain passed through
     *             to [[SharkExport.delivery]] (e.g. instrument + year)
     * @param sink invoked once per produced delivery (side effects:
@@ -79,30 +78,26 @@ object RunAll {
     for ((classifier, cfgs) <- byClassifier.toSeq.sortBy(_._1)) {
       val base = data(classifier)
       // share the scans across this classifier's configs: every config
-      // re-filters the same persisted frames instead of re-scanning
-      val roi = base.roi.persist(StorageLevel.MEMORY_AND_DISK)
-      val dim = base.sampleDim.persist(StorageLevel.MEMORY_AND_DISK)
-      val flags = base.flags.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        for (cfg <- cfgs; yearSet <- scopes(cfg)) {
-          // persist the (post-rollup, delivery-sized) frame so the sink
+      // re-filters the same cached frames instead of re-scanning
+      graft.Frames.scoped { s =>
+        val roi = s.cache(base.roi)
+        val dim = s.cache(base.sampleDim)
+        val flags = s.cache(base.flags)
+        for (cfg <- cfgs; yearSet <- scopes(cfg)) graft.Frames.scoped { sd =>
+          // cache the (post-rollup, delivery-sized) frame so the sink
           // materialization and the summary aggregate below share ONE
           // execution of the delivery DAG instead of running it twice
-          val d = deliveryFor(roi, dim, flags, cfg, yearSet, adjacencyPartition)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            sink(Delivery(cfg, yearSet, d))
-            // two driver-sized aggregates per config — the accounting the
-            // reference's render loop logs; rows/samples in one pass
-            val (nRows, nSamples) = d
-              .agg(count(lit(1)), countDistinct(col("SMPNO")))
-              .as[(Long, Long)].head()
-            summaries += ((classifier, yearSet.mkString("_"),
-              cfg.removeFlagged.mkString(","), nRows, nSamples))
-          } finally d.unpersist()
+          val d = sd.cache(
+            deliveryFor(roi, dim, flags, cfg, yearSet, adjacencyPartition))
+          sink(Delivery(cfg, yearSet, d))
+          // two driver-sized aggregates per config — the accounting the
+          // reference's render loop logs; rows/samples in one pass
+          val (nRows, nSamples) = d
+            .agg(count(lit(1)), countDistinct(col("SMPNO")))
+            .as[(Long, Long)].head()
+          summaries += ((classifier, yearSet.mkString("_"),
+            cfg.removeFlagged.mkString(","), nRows, nSamples))
         }
-      } finally {
-        roi.unpersist(); dim.unpersist(); flags.unpersist()
       }
     }
     summaries.result()

@@ -14,8 +14,8 @@ import graft.functions.{Corpus, Hashing}
   * round iterates over |vocab| rows, not corpus rows. Per round: one
   * map-side pair explode + one count shuffle with map-side combine + a
   * top-1 TakeOrdered (a single row to the driver — O(1) driver state),
-  * then a map-side `replace` applies the merge. The vocab frame
-  * localCheckpoints each round (the [[Dedup.dupClusters]] loop
+  * then a map-side `replace` applies the merge. The vocab frame is
+  * pinned each round (the [[Dedup.dupClusters]] loop
   * discipline) so lineage never compounds across rounds.
   *
   * Words are encoded as delimiter-framed symbol strings
@@ -57,7 +57,8 @@ object Bpe {
     val d2 = delim + delim
     val symbols = split(trim(col("s"), delim),
       java.util.regex.Pattern.quote(d2))
-    var vocab = docs
+    // one corpus scan; every round reuses the vocab
+    var vocab = graft.Frames.pin(docs
       .select(explode(Hashing.words(col(textCol))).as("w"))
       .filter(!col("w").contains(delim))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
@@ -65,8 +66,7 @@ object Bpe {
         concat(lit(delim),
           array_join(filter(split(col("w"), ""), c => c =!= ""), d2),
           lit(delim)).as("s"),
-        col("freq"))
-      .localCheckpoint() // one corpus scan; every round reuses the vocab
+        col("freq")))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var r = 1
     var exhausted = false
@@ -83,10 +83,9 @@ object Bpe {
         val n = best(0).getLong(1)
         val Array(l, rt) = pair.split(" ", 2) // symbols never contain spaces
         merges += ((r, l, rt, n))
-        vocab = vocab
+        vocab = graft.Frames.pin(vocab
           .withColumn("s", replace(col("s"),
-            lit(delim + l + d2 + rt + delim), lit(delim + l + rt + delim)))
-          .localCheckpoint()
+            lit(delim + l + d2 + rt + delim), lit(delim + l + rt + delim))))
         r += 1
       }
     }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Frames
 import graft.functions.Hashing
 
 /** Document-deduplication operators for training-data pipelines: exact,
@@ -28,38 +28,29 @@ object Dedup {
       .agg(count(lit(1)).as("n"), min(col(id)).as("keeper"))
       .filter(col("n") > 1)
 
-  /** Adds `__sh` (k-shingle set) and `__th` (shingle hashes) to docs.
-    * When `cache` is set the sketch frame is persisted: every pair
-    * operator references it from 3-4 plan branches (both join sides +
-    * verify join-backs), and without materialization Spark recomputes the
-    * shingling per branch. At scale this is the standard
-    * write-sketches-once step.
+  /** Adds `__sh` (k-shingle set) and `__th` (shingle hashes) to docs:
+    * the sketch [[simhashPairsFromSketch]] and [[ngramPairsFromSketch]]
+    * read.
     */
-  private def withShingleHashes(
-      docs: DataFrame, text: String, k: Int, cache: Boolean): DataFrame = {
-    val sk = docs
+  private[graft] def shingleSketch(docs: DataFrame, text: String, k: Int): DataFrame =
+    docs
       .withColumn("__sh", Hashing.shingles(Hashing.words(col(text)), k))
       .filter(size(col("__sh")) > 0)
       .withColumn("__th", Hashing.tokHashes(col("__sh")))
-    if (cache) sk.persist(StorageLevel.MEMORY_AND_DISK) else sk
-  }
 
-  /** Pair-frame lifecycle: warm the sketch cache with ONE action (so the
-    * 3-4 plan branches that read it all hit warm cache instead of racing
-    * a cold one), pin the (tiny) pair result via eager `localCheckpoint`
-    * (lineage truncated — downstream count/collect/joins can never re-run
-    * the sketch+join work), then drop the sketch cache immediately. No
-    * cache entry outlives the call; checkpoint blocks are reclaimed by
-    * the ContextCleaner when the frame is garbage-collected.
+  /** Pair-frame lifecycle: every pair plan reads its sketch from 3-4
+    * branches (both join sides and the verify join-backs), so the sketch
+    * is cached for the call and warmed with ONE action before the pairs
+    * are pinned ([[Frames.pin]]: downstream actions never re-run the
+    * sketch and join work). No cache entry outlives the call, also when
+    * building the pair plan fails.
     */
-  private def materializePairs(sketch: DataFrame, pairs: DataFrame): DataFrame = {
-    sketch.count()
-    // finally, not sequential (round-13 review): a failed checkpoint
-    // job must not leak the MEMORY_AND_DISK sketch entry for the
-    // session's life — KMeans.lloyd's lifecycle shape
-    try pairs.localCheckpoint(true)
-    finally sketch.unpersist()
-  }
+  private def pinPairs(sketch: DataFrame)(pairs: DataFrame => DataFrame): DataFrame =
+    Frames.scoped { s =>
+      val p = pairs(s.cache(sketch))
+      sketch.count()
+      Frames.pin(p)
+    }
 
   /** Drops LSH buckets larger than `cap` from candidate generation.
     * Boilerplate-heavy corpora concentrate mass in a few (band, key)
@@ -88,7 +79,7 @@ object Dedup {
     * step scores) and `__bk` (one band key per band, indexed by band).
     * The SINGLE source of the band-key packing, shared by the candidate
     * join and the bucket-mass profile so the two can never measure
-    * different bandings. Callers that read it more than once persist
+    * different bandings. Callers that read it more than once cache
     * it: every LSH plan reads it from 3-4 branches (both join sides and
     * both verify join-backs).
     */
@@ -189,22 +180,13 @@ object Dedup {
     * At scale: the band join's fan-out is bounded by bucket size; cap
     * pathological hot buckets (boilerplate shingles) with `maxBucket`
     * (bounded recall loss, documented at [[capBuckets]]).
-    *
-    * `materialize = true` (default) computes the pairs eagerly with the
-    * [[materializePairs]] lifecycle; pass false only to inspect the lazy
-    * plan.
     */
   def minhashLshPairs(
       docs: DataFrame, id: String, text: String,
       shingleK: Int = 5, minJaccard: Double = 0.5,
-      maxBucket: Option[Int] = None, materialize: Boolean = true): DataFrame = {
-    val sketch = lshSketch(docs, id, text, shingleK)
-    if (!materialize) lshPairsFromSketch(sketch, minJaccard, maxBucket)
-    else {
-      val cached = sketch.persist(StorageLevel.MEMORY_AND_DISK)
-      materializePairs(cached, lshPairsFromSketch(cached, minJaccard, maxBucket))
-    }
-  }
+      maxBucket: Option[Int] = None): DataFrame =
+    pinPairs(lshSketch(docs, id, text, shingleK))(
+      lshPairsFromSketch(_, minJaccard, maxBucket))
 
   /** The lazy candidate join + verify over a sketch: (id_a, id_b,
     * jaccard) with id_a < id_b.
@@ -218,28 +200,6 @@ object Dedup {
       .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"))
       .distinct()
     verifyJaccard(cand, sketch, minJaccard)
-  }
-
-  /** [[minhashLshPairs]] that ALSO returns the uncapped bucket-mass
-    * profile of the SAME sketch, for one shingle/minhash pass in total
-    * (DedupSpec's counted-scan test): the sketch persists for the
-    * call, the profile is the action that fills it, and the checkpointed
-    * pairs read it warm. No cache entry outlives the call.
-    */
-  def minhashLshPairsProfiled(
-      docs: DataFrame, id: String, text: String,
-      shingleK: Int = 5, minJaccard: Double = 0.5,
-      maxBucket: Option[Int] = None): (DataFrame, LshBucketProfile) = {
-    val sketch = lshSketch(docs, id, text, shingleK)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val profile = lshProfile(lshProfileFrame(sketch).collect()(0))
-      (lshPairsFromSketch(sketch, minJaccard, maxBucket).localCheckpoint(true),
-        profile)
-    } finally {
-      sketch.unpersist()
-      ()
-    }
   }
 
   /** SimHash near-duplicate pairs: 64-bit signature, 4 bands of 16 bits as
@@ -262,8 +222,13 @@ object Dedup {
   def simhashPairs(
       docs: DataFrame, id: String, text: String,
       shingleK: Int = 5, maxHamming: Int = 3,
-      maxBucket: Option[Int] = None, materialize: Boolean = true): DataFrame = {
-    val sketch = withShingleHashes(docs, text, shingleK, cache = materialize)
+      maxBucket: Option[Int] = None): DataFrame =
+    pinPairs(shingleSketch(docs, text, shingleK))(
+      simhashPairsFromSketch(_, id, maxHamming, maxBucket))
+
+  /** The lazy SimHash candidate join + verify over a [[shingleSketch]]. */
+  private[graft] def simhashPairsFromSketch(sketch: DataFrame, id: String,
+      maxHamming: Int, maxBucket: Option[Int]): DataFrame = {
     val base = sketch.select(col(id).as("__id"), Hashing.simhash64(col("__th")).as("__sig"))
     val banded = capBuckets(
       base.select(
@@ -274,7 +239,7 @@ object Dedup {
         }: _*)).as("bk"))
         .select(col("__id"), col("__sig"), col("bk.band"), col("bk.key")),
       Seq("band", "key"), maxBucket)
-    val pairs = banded.as("x").join(banded.as("y"),
+    banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.__id") < col("y.__id"))
       .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"),
@@ -283,7 +248,6 @@ object Dedup {
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    if (materialize) materializePairs(sketch, pairs) else pairs
   }
 
   /** n-gram Jaccard pairs without sketching: candidates share ≥ 1 shingle
@@ -300,8 +264,15 @@ object Dedup {
   def ngramJaccardPairs(
       docs: DataFrame, id: String, text: String,
       shingleK: Int = 5, minJaccard: Double = 0.5,
-      maxBucket: Option[Int] = None, materialize: Boolean = true): DataFrame = {
-    val sketch = withShingleHashes(docs, text, shingleK, cache = materialize)
+      maxBucket: Option[Int] = None): DataFrame =
+    pinPairs(shingleSketch(docs, text, shingleK))(
+      ngramPairsFromSketch(_, id, minJaccard, maxBucket))
+
+  /** The lazy inverted-index candidate join + verify over a
+    * [[shingleSketch]].
+    */
+  private def ngramPairsFromSketch(sketch: DataFrame, id: String,
+      minJaccard: Double, maxBucket: Option[Int]): DataFrame = {
     val base = sketch.select(col(id).as("__id"), col("__sh"))
     val inv = capBuckets(
       base.select(col("__id"), explode(col("__sh")).as("shingle")),
@@ -310,8 +281,7 @@ object Dedup {
         col("x.shingle") === col("y.shingle") && col("x.__id") < col("y.__id"))
       .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"))
       .distinct()
-    val pairs = verifyJaccard(cand, base, minJaccard)
-    if (materialize) materializePairs(sketch, pairs) else pairs
+    verifyJaccard(cand, base, minJaccard)
   }
 
   /** Connected components over a near-dup pair list → cluster id per doc
@@ -336,13 +306,12 @@ object Dedup {
     * hitting it throws rather than silently under-merging. The default
     * `freeRounds = 2` fits near-dup graphs, whose components are mostly
     * a handful of re-uploads: fixpoint lands by round 2-3, and each
-    * blind round costs two joins, a shuffle and an eager
-    * localCheckpoint, against one small join for a check (`graft.tools.
+    * blind round costs two joins, a shuffle and a pin, against one small join for a check (`graft.tools.
     * Probe cc` at sf0.1: 1.44-1.84 s per invocation versus 2.88-6.16 s
     * with six blind rounds, identical labels).
     *
     * The distributed branch's wall time is high-variance even on an idle
-    * host (per-round eager localCheckpoints make it disk- and
+    * host (per-round pins make it disk- and
     * scheduler-sensitive). Its rounds are deliberately NOT bounded at
     * bench SF — q75 exercises the full convergence loop the 100 TB path
     * runs, so BASELINE.md annotates q75 as high-variance (±2.5 s).
@@ -390,17 +359,13 @@ object Dedup {
       val rows = parent.keys.toSeq.map(id => (id, find(id)))
       rows.toDF("id", "cluster")
     } else {
-      val edges = longEdges.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      // try/finally: a failed pointer-jumping round must not leak the
-      // edge/und cache entries for the session's life
-      try {
-        val und = edges
+      Frames.scoped { s =>
+        val edges = s.cache(longEdges.distinct())
+        val und = s.cache(edges
           .union(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-          .distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try pointerJump(und, freeRounds, maxRounds)
-        finally und.unpersist()
-      } finally edges.unpersist()
+          .distinct())
+        pointerJump(und, freeRounds, maxRounds)
+      }
     }
   }
 
@@ -408,13 +373,12 @@ object Dedup {
     * deduplicated edge frame `und`.
     */
   private def pointerJump(und: DataFrame, freeRounds: Int, maxRounds: Int): DataFrame = {
-    // localCheckpoint truncates lineage each round: a persist chain
-    // nests each round's plan inside the next (InMemoryRelation keeps
-    // its child plan) and Spark's per-action plan rendering then costs
-    // exponential time in round count
-    var labels = und.select(col("id_a").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .localCheckpoint(true)
+    // a pin truncates lineage each round: a persist chain nests each
+    // round's plan inside the next (InMemoryRelation keeps its child
+    // plan) and Spark's per-action plan rendering then costs exponential
+    // time in round count
+    var labels = Frames.pin(und.select(col("id_a").as("id")).distinct()
+      .withColumn("cluster", col("id")))
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -426,12 +390,11 @@ object Dedup {
       val stepped = labels.join(nb, Seq("id"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("__nbmin"), col("cluster"))).as("cluster"))
-      val jumped = stepped.as("a")
+      val jumped = Frames.pin(stepped.as("a")
         .join(stepped.select(col("id").as("__pid"), col("cluster").as("__pc")).as("b"),
           col("a.cluster") === col("__pid"), "left")
         .select(col("a.id").as("id"),
-          least(col("a.cluster"), coalesce(col("__pc"), col("a.cluster"))).as("cluster"))
-        .localCheckpoint(true)
+          least(col("a.cluster"), coalesce(col("__pc"), col("a.cluster"))).as("cluster")))
       round += 1
       if (round >= freeRounds) {
         // fixpoint ⟺ a full neighbor-min + pointer round changed nothing
@@ -514,14 +477,12 @@ object Dedup {
     * contract) are kept — visible, never silently binned. Returns one
     * (id, cell, dropped) row per input.
     *
-    * Lifecycle: persist the assigned frame while the PAIR stage
+    * Lifecycle: the assigned frame is cached while the PAIR stage
     * materializes — the self-join's x and y sides otherwise each
     * re-run the assignment kernel, the operator's dominant cost. The
-    * small dropped-id dim localCheckpoints (pair work never re-runs),
-    * and the narrow (id, cell) assignment is eagerly pinned FROM THE
-    * SAME CACHE before the cache releases in finally (a bare persist
-    * leaks one cached frame per invocation for the session's life).
-    * The returned frame joins those two checkpointed narrow frames and
+    * small dropped-id dim is pinned (pair work never re-runs), and the
+    * narrow (id, cell) assignment is pinned FROM THE SAME CACHE before
+    * the cache is released. The returned frame joins those two checkpointed narrow frames and
     * never re-touches the kernel or the codebook — returning the live
     * assigned plan instead re-runs the assignment (flat
     * [[Similarity.cellAssign]] projection or the [[Ivf.assign]]
@@ -530,28 +491,23 @@ object Dedup {
     * assert this shape.
     */
   def semDedupAssigned(assigned: DataFrame, id: String, vec: String,
-      tau: Double, cellCol: String = "cell"): DataFrame = {
-    val cached = assigned.persist()
-    try {
-      val dropped = embeddingNearDupPairs(
+      tau: Double, cellCol: String = "cell"): DataFrame =
+    Frames.scoped { s =>
+      val cached = s.cache(assigned)
+      val dropped = Frames.pin(embeddingNearDupPairs(
           cached.filter(col(cellCol).isNotNull), id, vec, tau, Some(cellCol))
-        .select(col("id_b").as("__did")).distinct()
-        .localCheckpoint()
-      val cells = cached.select(col(id), col(cellCol)).localCheckpoint()
+        .select(col("id_b").as("__did")).distinct())
+      val cells = Frames.pin(cached.select(col(id), col(cellCol)))
       cells.join(dropped, col(id) === col("__did"), "left")
         .select(col(id), col(cellCol).as("cell"),
           col("__did").isNotNull.as("dropped"))
-    } finally {
-      cached.unpersist()
-      ()
     }
-  }
 
   /** The SemDeDup flat→two-level threshold on k: the measured
-    * end-to-end crossover ([[graft.BenchSemDedup]] at sf1,
-    * BENCH_SCALING.md: flat wins 2.5× at k=80 and 1.5× at k=320;
-    * hierarchical wins 1.7× by k=1280 — 512 lies between, below the
-    * point where the flat plan literal even reaches a megabyte).
+    * end-to-end crossover (sf1, BENCH_SCALING.md: flat wins 2.5× at
+    * k=80 and 1.5× at k=320; hierarchical wins 1.7× by k=1280 — 512
+    * lies between, below the point where the flat plan literal even
+    * reaches a megabyte).
     */
   val FlatMaxK = 512
 
@@ -578,7 +534,7 @@ object Dedup {
     * centroids ([[Similarity.trainKmeansCentroids]]) or a two/three
     * level [[Ivf]] codebook. [[semDedupAssigned]] materializes
     * everything that touches the codebook (the dropped-id dim and the
-    * narrow (id, cell) assignment both localCheckpoint inside it), so
+    * narrow (id, cell) assignment are both pinned inside it), so
     * the trained codebook's cache releases safely right after it
     * returns. `id` must be integral and row-unique ([[Ivf.train]]'s
     * enforced contract). For a DURABLE repeatedly-maintained index at

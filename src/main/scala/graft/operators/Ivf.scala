@@ -83,7 +83,7 @@ object Ivf {
     def depth: Int = levels.size + 1
     /** The leaf level — the cells [[assign]] and [[probeCells]] emit. */
     def fine: DataFrame = levels.last
-    /** Releases the persisted levels — the owner calls this when the
+    /** Releases the cached levels — the owner calls this when the
       * index is retired (e.g. replaced after a drift retrain). Safe
       * even if blocks were already evicted: lineage is intact.
       */
@@ -181,46 +181,41 @@ object Ivf {
           .orderBy(xxhash64(col("__id")), col("__id"))))
         .filter(col("__rank") <= perCellSampleMax)
 
-    val samples = scala.collection.mutable.ArrayBuffer(ranked(
-      corpus
-        // a vector whose length differs from the coarse dims must not
-        // become a SEED: one ragged candidate in a cell's list nulls
-        // the kernel for every row of that cell (the corrupt-to-NULL
-        // contract), killing the whole cell's training
-        .filter(size(col(vec)) === coarse(0).length)
-        .select(col(idCol).as("__id"),
-          Similarity.cellAssign(col(vec), coarse).as("__parent"),
-          KMeans.quantize(col(vec)).as("__xq"))).persist())
-    try {
+    graft.Frames.scoped { s =>
+      var sampled = s.cache(ranked(
+        corpus
+          // a vector whose length differs from the coarse dims must not
+          // become a SEED: one ragged candidate in a cell's list nulls
+          // the kernel for every row of that cell (the corrupt-to-NULL
+          // contract), killing the whole cell's training
+          .filter(size(col(vec)) === coarse(0).length)
+          .select(col(idCol).as("__id"),
+            Similarity.cellAssign(col(vec), coarse).as("__parent"),
+            KMeans.quantize(col(vec)).as("__xq"))))
       val levels = (1 until depth).map { i =>
-        val sampled = samples.last
         // materialize each (≤ k-row) level ONCE while its sample cache
-        // is live, as a PERSIST with intact lineage — not
-        // localCheckpoint: a truncated-lineage block evicted between a
-        // build and a later oracle render dies with
-        // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, while a persisted frame
-        // recomputes (every stage here is deterministic, so the
-        // recompute is bit-identical)
-        val level = lloydPerParent(
+        // is live, as a cached frame with intact lineage — not a pin: a
+        // truncated-lineage block evicted between a build and a later
+        // oracle render dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
+        // while a cached frame recomputes (every stage here is
+        // deterministic, so the recompute is bit-identical)
+        val level = s.keep(lloydPerParent(
             sampled.select(col("__parent"), col("__rank"), col("__xq")),
             per, itersLevel)
           .select(col("__parent").cast("int").as("coarse"),
             (col("__parent") * per + col("__sub")).cast("int").as("cell"),
-            col("c"))
-          .persist()
+            col("c")))
         level.count()
-        if (i < depth - 1) samples += ranked(
+        if (i < depth - 1) sampled = s.cache(ranked(
           sampled.join(candsOf(level, "__cands", "__cb_parent"),
               col("__parent") === col("__cb_parent"))
             .select(col("__id"),
               nearestCandidate(col("__xq"), col("__cands")).as("__parent"),
               col("__xq"))
-            .filter(col("__parent").isNotNull)).persist()
+            .filter(col("__parent").isNotNull)))
         level
       }
       Codebook(coarse, levels)
-    } finally {
-      samples.foreach(_.unpersist())
     }
   }
 
@@ -543,7 +538,7 @@ object Ivf {
       if (mid.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mid)) 3
       else 2
     Codebook(coarse,
-      levelDirs(depth).map(n => spark.read.parquet(s"$dir/$n").persist()))
+      levelDirs(depth).map(n => graft.Frames.cache(spark.read.parquet(s"$dir/$n"))))
   }
 
   // --- oracle-scale affordances ---------------------------------------------

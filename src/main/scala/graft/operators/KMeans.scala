@@ -109,12 +109,11 @@ object KMeans {
     */
   def lloyd(quantized: DataFrame, xqCol: String, init: Seq[Seq[Long]],
       iters: Int): Seq[Seq[Long]] = {
-    // the quantized projection is the loop invariant — persist it so
+    // the quantized projection is the loop invariant — cache it so
     // each round costs one assignment + one shuffle, not a fresh source
-    // scan + quantize (at cluster scale, swap for a storage level with
-    // replication or a checkpoint if the input lineage is expensive)
-    val cached = quantized.persist()
-    try {
+    // scan + quantize
+    graft.Frames.scoped { s =>
+      val cached = s.cache(quantized)
       var cents = init
       for (_ <- 0 until iters) {
         // assignment MUST sit in its own projection below the explode:
@@ -149,8 +148,6 @@ object KMeans {
         }
       }
       cents
-    } finally {
-      quantized.unpersist()
     }
   }
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{GraftQuery, Tables}
+import graft.{Frames, GraftQuery, Tables}
 import graft.functions.{Corpus, Hashing, TextAnalysis}
 
 /** Corpus-curation battery over `documents`: the training-data pipeline
@@ -146,11 +146,10 @@ object CorpusBattery {
       // it, and without this the corpus scan + tokenization (the
       // dominant per-row cost) run twice. At any corpus size this frame
       // is tiny relative to the text it summarizes.
-      val docs = documents(s, d)
+      val docs = Frames.pin(documents(s, d)
         .select($"doc_id", $"lang",
           size(Hashing.words($"text")).cast("long").as("tokens"),
-          shiftright($"doc_id", 16).as("shard"))
-        .localCheckpoint()
+          shiftright($"doc_id", 16).as("shard")))
       val offsets = docs.groupBy($"lang", $"shard")
         .agg(sum($"tokens").as("shard_tokens"))
         .withColumn("shard_offset", coalesce(
@@ -336,10 +335,9 @@ object CorpusBattery {
       // the crossJoin against its own aggregate (the exact shape q85's
       // window idiom exists to avoid) — 3x the dominant per-row cost
       // (round-11 review)
-      val docs = documents(s, d)
+      val docs = Frames.pin(documents(s, d)
         .select($"doc_id", $"source",
-          size(Hashing.words($"text")).cast("long").as("tokens"))
-        .localCheckpoint()
+          size(Hashing.words($"text")).cast("long").as("tokens")))
       val dim = docs.groupBy($"source").agg(sum($"tokens").as("tok_s"))
         .withColumn("w", floor(sqrt($"tok_s")).cast("long"))
       // w * budget overflows BIGINT once the corpus reaches ~10^13 tokens
@@ -657,7 +655,7 @@ object CorpusBattery {
 
   /** Iterative BPE merge training (q71 closes round 1; this runs the
     * loop): the first 10 merges via [[graft.operators.Bpe.trainMerges]]
-    * — vocab-grain rounds, O(1) driver state per round, localCheckpoint
+    * — vocab-grain rounds, O(1) driver state per round, pinned-vocab
     * loop discipline. `left`/`right` are SQL keywords, so the output
     * uses `lft`/`rgt`.
     */
@@ -792,10 +790,9 @@ object CorpusBattery {
       // dim aggregate and the probe join both consume this frame, and
       // without the checkpoint the corpus scan + tokenization (the
       // dominant per-row cost) execute twice per action
-      val docs = documents(s, d)
+      val docs = Frames.pin(documents(s, d)
         .select($"doc_id", $"source",
-          size(Hashing.words($"text")).cast("long").as("tokens"))
-        .localCheckpoint()
+          size(Hashing.words($"text")).cast("long").as("tokens")))
       val dim = docs.groupBy($"source").agg(sum($"tokens").as("tok_s"))
       val wAll = Window.partitionBy()
       // GREATEST(tok_s, 1) in every divisor (round-12 review): an
@@ -1000,20 +997,19 @@ object CorpusBattery {
     */
   private val SubstrWindow = 8
 
+  // every consumer (q93/q94/q98) feeds this frame into BOTH a
+  // fingerprint aggregate and the probe side of the subsequent join;
+  // Spark does not share scans across self-join branches, so without
+  // materialization the dominant cost — scan + tokenize + shingle +
+  // fingerprint over O(total tokens) rows — runs twice per query. The
+  // pin holds the compact (doc_id, pos, fp) rows instead (the q62/q66
+  // discipline).
   private def windowFp(s: org.apache.spark.sql.SparkSession, d: String) = {
-    documents(s, d)
+    Frames.pin(documents(s, d)
       .select(col("doc_id"),
         posexplode(Corpus.ngrams(Hashing.words(col("text")), SubstrWindow)).as(Seq("pos", "gram")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        Hashing.fingerprint(col("gram")).as("fp"))
-      // every consumer (q93/q94/q98) feeds this frame into BOTH a
-      // fingerprint aggregate and the probe side of the subsequent join;
-      // Spark does not share scans across self-join branches, so without
-      // materialization the dominant cost — scan + tokenize + shingle +
-      // fingerprint over O(total tokens) rows — runs twice per query.
-      // localCheckpoint pins the compact (doc_id, pos, fp) rows instead
-      // (the q62/q66 discipline; round-12 review).
-      .localCheckpoint()
+        Hashing.fingerprint(col("gram")).as("fp")))
   }
 
   private def windowFpSql: String =

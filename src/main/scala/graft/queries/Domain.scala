@@ -444,7 +444,7 @@ object Domain {
     * 6-digit string, so a plain long cast carries it) and decode back
     * to the exact strings after the aggregate — every phase is now
     * whole-stage-codegen HashAggregate, zero Sorts before the display
-    * orderBy. Same-JVM A/B probe (graft.tools.Probe q90min) and the
+    * orderBy. A same-JVM A/B probe (OPTIMIZATION_r20.md) and the
     * oracle (hash-identical at sf0.01 AND sf0.1) carry the evidence;
     * the countDistinct stays keyed on the sample_id STRING — the r19
     * ProbeQ90 measurement showed key width is immaterial there.

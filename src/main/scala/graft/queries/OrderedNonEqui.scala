@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{GraftQuery, Tables}
+import graft.{Frames, GraftQuery, Tables}
 import graft.GraftQuery._
 import graft.functions.Geo
 import graft.operators.{AsOfJoin, IntervalJoin}
@@ -422,19 +422,17 @@ object OrderedNonEqui {
       import s.implicits._
       val ev = events(s, d)
         .select($"user_id", unix_timestamp($"ts").as("es"), $"event_type")
-      // localCheckpoint the USER-GRAIN stage frames (round-13 review,
-      // the q62/q81 shared-frame discipline): without it the final
+      // pin the USER-GRAIN stage frames (the q62/q81 shared-frame
+      // discipline): without it the final
       // 3-way join re-derives v inside c and c inside p, re-scanning
       // events ~6x per action; checkpointed, each stage scans events
       // once (with its event_type filter pushed down) and the tiny
       // per-user frames are reused by every consumer
-      val v = ev.filter($"event_type" === "view")
-        .groupBy($"user_id").agg(min($"es").as("ts_v"))
-        .localCheckpoint(true)
-      val c = ev.filter($"event_type" === "click")
+      val v = Frames.pin(ev.filter($"event_type" === "view")
+        .groupBy($"user_id").agg(min($"es").as("ts_v")))
+      val c = Frames.pin(ev.filter($"event_type" === "click")
         .join(v, Seq("user_id")).filter($"es" > $"ts_v")
-        .groupBy($"user_id").agg(min($"es").as("ts_c"), min($"ts_v").as("ts_v"))
-        .localCheckpoint(true)
+        .groupBy($"user_id").agg(min($"es").as("ts_c"), min($"ts_v").as("ts_v")))
       val p = ev.filter($"event_type" === "purchase")
         .join(c.select($"user_id", $"ts_c"), Seq("user_id"))
         .filter($"es" > $"ts_c")

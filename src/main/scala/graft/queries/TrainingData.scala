@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.{GraftQuery, Tables}
+import graft.{Frames, GraftQuery, Tables}
 import graft.GraftQuery._
 import graft.functions.{Corpus, Hashing, TextAnalysis}
 import graft.operators.{Dedup, Ivf, Similarity}
@@ -550,13 +550,11 @@ object TrainingData {
       // two distinct streams (word-grain uni, bigram-grain dg) and
       // deriving bi/vocab from them cuts that to 2; uni is vocab-sized
       // and dg is the windowFp-precedent O(total tokens) frame.
-      val uni = docs.select(explode(Hashing.words($"text")).as("w1"))
-        .groupBy($"w1").agg(count(lit(1)).as("c1"))
-        .localCheckpoint()
+      val uni = Frames.pin(docs.select(explode(Hashing.words($"text")).as("w1"))
+        .groupBy($"w1").agg(count(lit(1)).as("c1")))
       val vocab = uni.agg(count(lit(1)).as("v"))
-      val dg = docs.select($"doc_id",
-          explode(graft.functions.Corpus.ngrams(Hashing.words($"text"), 2)).as("g"))
-        .localCheckpoint()
+      val dg = Frames.pin(docs.select($"doc_id",
+          explode(graft.functions.Corpus.ngrams(Hashing.words($"text"), 2)).as("g")))
       val bi = dg.groupBy($"g").agg(count(lit(1)).as("c2"))
       dg.join(bi, Seq("g"))
         .join(uni, substring_index($"g", " ", 1) === $"w1")
@@ -714,13 +712,12 @@ object TrainingData {
     "q84_heavy_hitters",
     (s, d) => {
       import s.implicits._
-      // localCheckpoint: the sketch build and the exact top-20 are two
+      // pinned: the sketch build and the exact top-20 are two
       // separate ACTIONS over this frame, and without materialization
       // each re-pays the dominant scan + word-split + explode cost
       // (round-14 review; the q81 dg precedent at the same grain)
-      val words = documents(s, d)
-        .select(explode(Hashing.words($"text")).as("w"))
-        .localCheckpoint()
+      val words = Frames.pin(documents(s, d)
+        .select(explode(Hashing.words($"text")).as("w")))
       val cms = words.stat.countMinSketch(
         "w", eps = 1e-4, confidence = 0.99, seed = 42)
       val total = cms.totalCount()

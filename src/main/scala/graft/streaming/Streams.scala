@@ -210,11 +210,11 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // the batch feeds two actions; without a persist the feature
+        // the batch feeds two actions; without a cache the feature
         // kernel upstream re-executes for each (same discipline as
         // IngestQc.write)
-        val cached = batch.persist()
-        try {
+        graft.Frames.scoped { s =>
+          val cached = s.cache(batch)
           // newlines in a decoder message would split the audit row
           // under the default multiLine=false read-back (round-14
           // review) — flatten them before the CSV write
@@ -227,9 +227,6 @@ object Streams {
               .option("header", "true")
               .csv(s"$quarantineDir/batch_id=$id")
           onClean(cached.filter(col(errorCol).isNull).drop(errorCol), id)
-        } finally {
-          cached.unpersist()
-          ()
         }
       }
       .start()
@@ -306,64 +303,59 @@ object Streams {
     // disk at start cover exactly that, while a per-batch re-read of
     // the accumulated history made each batch's cost grow with stream
     // lifetime (quadratic total work on a long-lived deployment)
-    val existingAtStart = {
-      val p = new org.apache.hadoop.fs.Path(featuresDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // gate on NON-HIDDEN data files, not bare listStatus: a dir
-      // holding only _SUCCESS (an all-poison first run) or _temporary
-      // (a crashed first append) otherwise drives spark.read.csv into
-      // UNABLE_TO_INFER_SCHEMA at exactly the restart this recovery
-      // path exists for (round-14 review)
-      val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
+    graft.Frames.scoped { held =>
+      val existingAtStart = {
+        val p = new org.apache.hadoop.fs.Path(featuresDir)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // gate on NON-HIDDEN data files, not bare listStatus: a dir
+        // holding only _SUCCESS (an all-poison first run) or _temporary
+        // (a crashed first append) otherwise drives spark.read.csv into
+        // UNABLE_TO_INFER_SCHEMA at exactly the restart this recovery
+        // path exists for
+        val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
+          val n = s.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        }
+        if (hasData)
+          // pinned schema + FAILFAST, the IngestQc state-read discipline:
+          // a lenient inferred read turns a malformed state row into a
+          // null anti-join key that never matches, silently duplicating
+          // replayed rows
+          Some(held.keep(spark.read
+            .schema(featureCsvSchema)
+            .option("header", "true")
+            .option("mode", "FAILFAST")
+            .option("enforceSchema", "false")
+            .csv(featuresDir)
+            .select(col("path"))))
+        else None
       }
-      if (hasData)
-        // pinned schema + FAILFAST, the IngestQc state-read discipline:
-        // a lenient inferred read turns a malformed state row into a
-        // null anti-join key that never matches, silently duplicating
-        // replayed rows
-        Some(spark.read
-          .schema(featureCsvSchema)
-          .option("header", "true")
-          .option("mode", "FAILFAST")
-          .option("enforceSchema", "false")
-          .csv(featuresDir)
-          .select(col("path")).persist())
-      else None
-    }
-    // a FAILED start (bad checkpoint, source permissions) must release
-    // the cached path universe too — the termination listener below can
-    // only cover queries that actually started (round-15 review)
-    val q =
-      try quarantinedSink(featureStream(spark, path, maxFilesPerTrigger),
+      val q = quarantinedSink(featureStream(spark, path, maxFilesPerTrigger),
           quarantineDir, checkpoint) { (clean, _) =>
         // the all-poison batch must not run an empty write job (it would
         // also seed the _SUCCESS-only dir state guarded above)
         if (!clean.isEmpty)
           graft.sources.Sinks.appendNew(clean, existingAtStart, Seq("path"), featuresDir)
       }
-      catch {
-        case e: Throwable =>
-          existingAtStart.foreach(_.unpersist())
-          throw e
+      // the cached path universe is kept by a started query and released
+      // when THIS query terminates (a failed start releases it with the
+      // scope) — repeated deploys in one session otherwise accumulate
+      // cache entries
+      existingAtStart.foreach { df =>
+        val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+          import org.apache.spark.sql.streaming.StreamingQueryListener._
+          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+          override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+          override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+            if (e.id == q.id) {
+              df.unpersist()
+              spark.streams.removeListener(this)
+            }
+        }
+        spark.streams.addListener(listener)
       }
-    // release the cached path universe when THIS query terminates —
-    // repeated deploys in one session otherwise accumulate cache entries
-    existingAtStart.foreach { df =>
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-          if (e.id == q.id) {
-            df.unpersist()
-            spark.streams.removeListener(this)
-          }
-      }
-      spark.streams.addListener(listener)
+      q
     }
-    q
   }
 
   /** The quarantined feature sink's on-disk CSV schema: `path` plus the

@@ -5,7 +5,7 @@ import java.util.Locale
 
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, Tables}
+import graft.{Frames, GraftSession, Tables}
 import graft.jobs.CorpusPrep
 import graft.operators.{Dedup, Ivf}
 
@@ -104,8 +104,7 @@ object CompactionSoak {
     // verdicts are only correct if this holds at scale too
     val ((diffs, tAssign), tFull) = timed {
       val (assigned, tA) = timed {
-        Ivf.assign(e, "embedding", v2.codebook, "cell")
-          .localCheckpoint(true)
+        Frames.pin(Ivf.assign(e, "embedding", v2.codebook, "cell"))
       }
       val full = Dedup.semDedupAssigned(assigned, "vec_id", "embedding", tau)
         .select(col("vec_id").cast("long").as("id"), col("cell"),

@@ -57,18 +57,20 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q42: LSH candidate join is an equi join, no cross product") {
-    // materialize=false: the query-level plan is a checkpointed RDD scan
+    // the lazy builder: the query-level plan is a checkpointed RDD scan
     // (pairs are computed eagerly once); the shape that must hold at scale
     // is the *lazy* sketch+join plan
     val p = operators.Dedup
-      .minhashLshPairs(Tables.documents(spark, d), "doc_id", "text", materialize = false)
+      .lshPairsFromSketch(operators.Dedup.lshSketch(
+        Tables.documents(spark, d), "doc_id", "text", 5), 0.5, None)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
   }
 
   test("q43: SimHash candidate join is an equi join, no cross product") {
     val p = operators.Dedup
-      .simhashPairs(Tables.documents(spark, d), "doc_id", "text", materialize = false)
+      .simhashPairsFromSketch(operators.Dedup.shingleSketch(
+        Tables.documents(spark, d), "text", 5), "doc_id", 3, None)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
   }
@@ -321,9 +323,9 @@ class PlanShapeSpec extends SparkSpec {
     // the registered query materializes its pairs (localCheckpoint), so
     // the LSH stage is gone from ITS plan — inspect the lazy pair plan
     // the same way the operator builds it
-    val pairs = graft.operators.Dedup.minhashLshPairs(
-      Tables.documents(spark, d), "doc_id", "text",
-      maxBucket = Some(3), materialize = false)
+    val pairs = graft.operators.Dedup.lshPairsFromSketch(
+      graft.operators.Dedup.lshSketch(Tables.documents(spark, d), "doc_id", "text", 5),
+      0.5, maxBucket = Some(3))
     val p = pairs.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("LeftAnti"), "capBuckets must plan as a left-anti join")

@@ -264,6 +264,37 @@ class CorpusPrepSpec extends SparkSpec {
       "run must leave only kept cached, and release() must drop it")
   }
 
+  test("run: one text read per doc; capped pairs and an uncapped profile") {
+    import org.apache.spark.sql.functions.udf
+    // each text read is counted inside a NONDETERMINISTIC udf, which
+    // Catalyst can neither duplicate nor collapse into several
+    // projections: the run must pay one pass over the corpus
+    val acc = spark.sparkContext.longAccumulator("textReads")
+    val counted = udf { s: String => acc.add(1); s }.asNondeterministic()
+    val docs = ledgerFixture
+    def stats(f: CorpusPrep.Frames) =
+      f.stats.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val uncapped = CorpusPrep.run(docs.withColumn("text", counted($"text")), "doc_id", "text")
+    val u = try stats(uncapped) finally uncapped.release()
+    assert(acc.value == docs.count(), s"expected one text read per doc, got ${acc.value}")
+
+    val cfg = CorpusPrep.Config(maxLshBucket = Some(1))
+    val exact = CorpusPrep.exactCanonical(
+      CorpusPrep.gate(CorpusPrep.annotate(docs, "text", cfg), cfg), "doc_id", "text", cfg)
+    val capped = CorpusPrep.run(docs, "doc_id", "text", cfg)
+    try {
+      val kept = capped.kept.select($"doc_id").as[Long].collect().toSet
+      // the near-dup stage drops what the capped pair operator pairs
+      assert(kept == CorpusPrep.nearDupCanonical(exact, "doc_id", "text", cfg)
+        .select($"doc_id").as[Long].collect().toSet)
+      assert(kept(31L), "cap = 1 drops the near-dup pair's buckets")
+      // the profile describes the UNCAPPED banding: its consumer sizes
+      // the cap from it
+      val c = stats(capped)
+      assert(Seq("lsh_max_bucket", "lsh_candidate_pairs").forall(k => c(k) == u(k)), s"$c vs $u")
+    } finally capped.release()
+  }
+
   // --- incremental semantic compaction (round-15, verdict task 4) -----------
 
   /** 3 nonzero-centered clusters (within-cluster cosine ≈ 1, across ≈

@@ -319,6 +319,14 @@ class DedupSpec extends SparkSpec {
     Dedup.minhashLshPairs(docs, "doc_id", "text").count()
     Dedup.simhashPairs(docs, "doc_id", "text").count()
     Dedup.ngramJaccardPairs(docs, "doc_id", "text").count()
+    // a misspelled id column fails the pair plan's eager analysis after
+    // the sketch is cached: the failed call must release it too
+    Seq[String => Any](
+      Dedup.minhashLshPairs(docs, _, "text"),
+      Dedup.simhashPairs(docs, _, "text"),
+      Dedup.ngramJaccardPairs(docs, _, "text")).foreach { pairs =>
+      intercept[org.apache.spark.sql.AnalysisException](pairs("doc_idd"))
+    }
     assert(spark.sharedState.cacheManager.isEmpty,
       "dedup pair operators must unpersist their sketch frames")
   }
@@ -367,40 +375,6 @@ class DedupSpec extends SparkSpec {
     // the profile diagnostic sees the family as hot mass
     val p = Dedup.lshBucketProfile(all, "doc_id", "text")
     assert(p.maxBucket >= 4, p)
-  }
-
-  test("profiled pair run: one shingle/minhash pass, same pairs, same profile (round-18)") {
-    import org.apache.spark.sql.functions.udf
-    // counted-scan assert (r17 verdict task 3): the per-row text reads
-    // count via an accumulator inside a NONDETERMINISTIC udf (so
-    // Catalyst can neither duplicate nor collapse it into multiple
-    // projections); the profiled run must pay exactly one pass over the
-    // corpus — the standalone-diagnostic path paid two
-    val acc = spark.sparkContext.longAccumulator("textScans")
-    val counted = udf { s: String => acc.add(1); s }.asNondeterministic()
-    val instrumented = docs.withColumn("text", counted($"text"))
-    val (pairs, profile) =
-      Dedup.minhashLshPairsProfiled(instrumented, "doc_id", "text")
-    // pairs are already materialized (localCheckpoint inside); reading
-    // them must not rescan the source
-    val got = pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(acc.value == 4L,
-      s"expected ONE text scan per doc (4 docs), got ${acc.value}")
-    // identical semantics to the unprofiled operator + the standalone
-    // diagnostic over the same corpus
-    val want = Dedup.minhashLshPairs(docs, "doc_id", "text")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(got == want)
-    assert(profile == Dedup.lshBucketProfile(docs, "doc_id", "text"))
-    // capped variant: pairs match the capped operator while the profile
-    // stays UNCAPPED (its consumer sizes the cap from it)
-    val (cp, cprof) = Dedup.minhashLshPairsProfiled(
-      docs, "doc_id", "text", maxBucket = Some(1))
-    val cwant = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        maxBucket = Some(1))
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(cp.select("id_a", "id_b").as[(Long, Long)].collect().toSet == cwant)
-    assert(cprof == profile, "the profile must describe the UNCAPPED banding")
   }
 
   test("hot-bucket cap bounds candidate fan-out (with documented recall loss)") {
