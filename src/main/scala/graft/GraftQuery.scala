@@ -53,20 +53,19 @@ object GraftQuery {
     s"CAST(SUM(CAST($expr AS DECIMAL(${dt.precision},${dt.scale}))) AS DOUBLE)"
 
   /** Size-1 (session, dir)-keyed memo for deterministic data-derived
-    * training artifacts (k-means centroids, BPE merges) shared between
-    * a query's plan lambda and its oracle renderer — and across queries.
-    * Training is deterministic in the data, so memoization is
-    * observationally pure; a single last-result slot (not a map) so a
-    * stopped session's object graph isn't pinned for the JVM's life in
-    * a bench/test loop (round-12 review; the three hand-rolled copies
-    * unified round-13).
+    * training artifacts (k-means centroids, BPE merges, IVF codebooks)
+    * shared between a query's plan lambda and its oracle renderer — and
+    * across queries. Training is deterministic in the data, so
+    * memoization is observationally pure; a single last-result slot
+    * (not a map) so a stopped session's object graph isn't pinned for
+    * the JVM's life in a bench/test loop.
     *
-    * `close` runs on the value a (session, dir) switch REPLACES
-    * (round-17, r16 verdict: memos holding an [[graft.operators.Ivf]]
-    * codebook — whose fine frame is a cached DataFrame — leaked one
-    * cache entry per SF/dir switch within a JVM, the multi-SF-session
-    * leak class [[graft.Frames.scoped]] exists to prevent; pass
-    * `_.release()`).
+    * `close` runs on the value a (session, dir) switch REPLACES. A memo
+    * whose values own cached frames or scratch dirs (an
+    * [[graft.operators.Ivf.Codebook]]) passes `close = _.release()`, or
+    * every SF/dir switch within a JVM leaks them. The last value is
+    * never closed: its frames go with the session, its scratch dirs
+    * with the JVM ([[graft.Frames.scratchDir]]).
     * Values for plain driver-side artifacts need no close — the GC
     * owns them — so it defaults to a no-op. Single-threaded use is the
     * contract (Verify/Bench run queries sequentially): under a

@@ -57,7 +57,7 @@ object CorpusPrep {
       * paid for it); call this when done consuming — a forgotten
       * release pins storage memory for the JVM lifetime.
       */
-    def release(): Unit = kept.unpersist()
+    def release(): Unit = graft.Frames.release(kept)
   }
 
   /** Map-side annotation: language, quality score, token count, and —
@@ -186,10 +186,10 @@ object CorpusPrep {
       ledger: DataFrame, // (id: long, cell: int|null, dropped: boolean)
       retrained: Boolean,
       version: Int) {
-    /** The codebook frame is persisted ([[graft.operators.Ivf.train]]/
-      * [[graft.operators.Ivf.load]]) — call this when done consuming,
-      * like [[Frames.release]]: a forgotten release pins one cache
-      * entry per compaction pass for the JVM lifetime.
+    /** Releases the codebook's cached levels; the index dir it was
+      * loaded from stays. Call this when done consuming: a forgotten
+      * release pins one cache entry per compaction pass for the JVM
+      * lifetime.
       */
     def release(): Unit = codebook.release()
   }

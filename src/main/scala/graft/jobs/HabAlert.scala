@@ -257,7 +257,7 @@ object HabAlert {
     /** Unpersists the run's cached frames — call once the result's
       * frames are consumed.
       */
-    def release(): Unit = Seq(maxCounts, biomass, cyano).foreach(_.unpersist())
+    def release(): Unit = graft.Frames.release(maxCounts, biomass, cyano)
   }
 
   def runDaily(

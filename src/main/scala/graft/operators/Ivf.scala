@@ -74,20 +74,28 @@ object Ivf {
     *               quantized domain) frame whose `coarse` is a cell id of
     *               the level above and whose `cell` is a global id
     *               `parent · per + rank` — sparse but bounded
+    * @param snapshot the scratch dir a [[durable]] codebook was loaded
+    *               from; [[release]] deletes it. None for a trained
+    *               codebook and for one [[load]]ed from an index dir,
+    *               which the codebook does not own.
     */
   final case class Codebook(coarse: Array[Array[Double]],
-      levels: Seq[DataFrame]) {
+      levels: Seq[DataFrame], snapshot: Option[String] = None) {
     require(levels.size == 1 || levels.size == 2,
       s"an IVF codebook has 2 or 3 levels, got ${levels.size + 1}")
     def dims: Int = coarse(0).length
     def depth: Int = levels.size + 1
     /** The leaf level — the cells [[assign]] and [[probeCells]] emit. */
     def fine: DataFrame = levels.last
-    /** Releases the cached levels — the owner calls this when the
-      * index is retired (e.g. replaced after a drift retrain). Safe
-      * even if blocks were already evicted: lineage is intact.
+    /** Releases the cached levels and deletes the [[snapshot]] dir — the
+      * owner calls this when the index is retired (e.g. replaced after
+      * a drift retrain). Safe even if blocks were already evicted:
+      * lineage is intact.
       */
-    def release(): Unit = levels.foreach(_.unpersist())
+    def release(): Unit = {
+      graft.Frames.release(levels: _*)
+      snapshot.foreach(graft.Frames.dropScratch(fine.sparkSession, _))
+    }
   }
 
   /** The codegen'd argmin over a joined candidate column (exact
@@ -539,6 +547,39 @@ object Ivf {
       else 2
     Codebook(coarse,
       levelDirs(depth).map(n => graft.Frames.cache(spark.read.parquet(s"$dir/$n"))))
+  }
+
+  /** Re-materializes a freshly trained codebook from a parquet snapshot
+    * in a [[graft.Frames.scratchDir]] ([[save]]/[[load]] — a lossless
+    * integer-domain round trip; [[collectLevel]] sorts, so row order is
+    * immaterial to every consumer), releases the trained frames, and
+    * returns the loaded codebook, which owns the snapshot.
+    *
+    * Why: a sweep between queries clears the SQL cache, and a trained
+    * level is a cached frame with lineage — evicted, it silently
+    * re-runs the sampled-Lloyd chain (window ranks, collect_list
+    * rounds, posexplode rollups) inside every query that joins it. An
+    * evicted snapshot level re-reads k rows of integers in the scan
+    * that read its cache, with no extra stage. Model state only, never
+    * a result cache: every query still computes assignment, search and
+    * dedup from its inputs.
+    *
+    * On failure the dir is deleted and `cb` released before the error
+    * propagates.
+    */
+  def durable(cb: Codebook): Codebook = {
+    val spark = cb.fine.sparkSession
+    val dir = graft.Frames.scratchDir(spark, "graft-cb")
+    try {
+      save(cb, dir)
+      cb.release()
+      load(spark, dir).copy(snapshot = Some(dir))
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        cb.release()
+        graft.Frames.dropScratch(spark, dir)
+        throw e
+    }
   }
 
   // --- oracle-scale affordances ---------------------------------------------

@@ -348,7 +348,7 @@ object Streams {
           override def onQueryProgress(e: QueryProgressEvent): Unit = ()
           override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
             if (e.id == q.id) {
-              df.unpersist()
+              graft.Frames.release(df)
               spark.streams.removeListener(this)
             }
         }

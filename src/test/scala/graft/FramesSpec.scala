@@ -1,7 +1,8 @@
 package graft
 
 /** The frame lifecycle: what a scope releases and when, what a sweep
-  * drops, and that no other file in `src/main` caches or pins on its own.
+  * drops, and that no other file in `src/main` caches, pins, releases or
+  * schedules a delete at exit on its own.
   */
 class FramesSpec extends SparkSpec {
   import spark.implicits._
@@ -42,7 +43,7 @@ class FramesSpec extends SparkSpec {
     assert(isCached(kept))
     assert(!isCached(tmp), "the scope's own frame is gone")
     assert(kept.as[Int].collect().sorted.toSeq == Seq(2, 4, 6))
-    kept.unpersist()
+    Frames.release(kept)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
@@ -60,7 +61,7 @@ class FramesSpec extends SparkSpec {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
     val raw = Seq(".persist(", ".cache()", "localCheckpoint(", "getPersistentRDDs",
-      "StorageLevel")
+      "StorageLevel", ".unpersist(", "addShutdownHook", "deleteOnExit")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
     val sources = files(root).filter(_.getName.endsWith(".scala"))

@@ -229,6 +229,8 @@ class IvfSpec extends SparkSpec {
         assert(cells(Ivf.assign(df, "embedding", reloaded)) ==
           cells(Ivf.assign(df, "embedding", book)))
       } finally reloaded.release()
+      assert(new java.io.File(s"$dir/coarse").exists,
+        s"releasing a codebook loaded from an index dir must keep the dir (depth $depth)")
     }
   }
 
