@@ -49,15 +49,18 @@ object CorpusPrep {
       // other bands, the documented bounded-recall trade
       maxLshBucket: Option[Int] = None)
 
+  /** What [[run]] returns. `kept` is a lazy anti-join over `flagged`,
+    * the one frame `run` leaves cached: annotate → gate → exact flags
+    * over the input, read once. Call [[release]] when done consuming
+    * `kept` — a forgotten release pins storage memory for the JVM
+    * lifetime.
+    */
   final case class Frames(
       annotated: DataFrame, // input + lang, quality, tokens
-      kept: DataFrame,      // canonical surviving docs (cached by run)
-      stats: DataFrame) {   // (stage, docs) attrition ledger
-    /** [[run]] returns `kept` cached (the attrition counts already
-      * paid for it); call this when done consuming — a forgotten
-      * release pins storage memory for the JVM lifetime.
-      */
-    def release(): Unit = graft.Frames.release(kept)
+      kept: DataFrame,      // canonical surviving docs (lazy, over flagged)
+      stats: DataFrame)(    // (stage, docs) attrition ledger, driver-side
+      flagged: DataFrame) {
+    def release(): Unit = graft.Frames.release(flagged)
   }
 
   /** Map-side annotation: language, quality score, token count, and —
@@ -130,19 +133,20 @@ object CorpusPrep {
     val pairs = Dedup.minhashLshPairs(
       df, id, text, shingleK = cfg.shingleK, minJaccard = cfg.minJaccard,
       maxBucket = cfg.maxLshBucket)
-    dropNonCanonical(df, id, pairs)
+    dropNonCanonical(df, id, Dedup.dupClusters(pairs))
   }
 
+  /** `df` without the rows whose id is not its cluster's minimum in
+    * [[Dedup.dupClusters]]' `labels`.
+    */
   private def dropNonCanonical(
-      df: DataFrame, id: String, pairs: DataFrame): DataFrame = {
-    val labels = Dedup.dupClusters(pairs)
+      df: DataFrame, id: String, labels: DataFrame): DataFrame =
     // no broadcast hint: the non-canonical set is bounded by the dup
     // count, which can be a large corpus fraction — AQE picks the
     // strategy from the actual size
     df.join(
       labels.filter(col("id") =!= col("cluster")).select(col("id").as(id)),
       Seq(id), "left_anti")
-  }
 
   /** Streaming deployment of the front half of [[run]] (annotate → gate
     * → exact dedup) for a continuously-arriving corpus: annotation and
@@ -657,29 +661,39 @@ object CorpusPrep {
     else None
 
   /** Runs the whole pipeline and its attrition ledger with the driver
-    * work kept to one cached frame per stage and one action per
+    * work kept to one cached frame, one pin per stage and one action per
     * question:
     *
-    *  - ONE flagged frame carries annotate → gate → exact: `__gate` is
-    *    [[gatePredicate]], and `__exact` marks the row that is its
-    *    content key's minimum id among the GATED rows (`min(when(gate,
-    *    id))` over the [[exactKeeper]] window — a key whose smallest id
-    *    is gated out keeps its smallest gated id, as [[exactCanonical]]
-    *    over [[gate]] does). `exact` is a filter over it.
-    *  - ONE cached LSH sketch of `exact` ([[Dedup.lshSketch]]) feeds
-    *    both the hot-bucket profile and the candidate join.
-    *  - ONE action answers the input, gate and exact counts and the
-    *    profile: it collects the flagged frame's one-row count
-    *    aggregate together with the profile frame, and fills both
-    *    caches on the way.
-    *  - `kept.count()` is the near-dup count; it is also what leaves
-    *    `kept` materialized for the caller. (nExact minus the
-    *    non-canonical labels would be wrong when ids repeat.)
+    *  - ONE cached flagged frame carries annotate → gate → exact:
+    *    `__gate` is [[gatePredicate]], and `__exact` marks the row that
+    *    is its content key's minimum id among the GATED rows
+    *    (`min(when(gate, id))` over the [[exactKeeper]] window — a key
+    *    whose smallest id is gated out keeps its smallest gated id, as
+    *    [[exactCanonical]] over [[gate]] does). `exact` is a filter over
+    *    it.
+    *  - ONE pinned LSH sketch of `exact` ([[Dedup.lshSketch]]) feeds
+    *    both the hot-bucket profile and the candidate join; its pin is
+    *    the action that fills the flagged frame's cache. The near-dup
+    *    pairs are pinned in turn.
+    *  - ONE action answers the input, gate and exact counts, the
+    *    profile, and whether the exact rows' ids are unique (an id-only
+    *    distinct count; the text is never shuffled for it): it collects
+    *    the flagged frame's one-row count aggregate together with the
+    *    profile frame.
+    *  - `near_dup` is counted on the driver when [[Dedup.clusterLabels]]
+    *    took [[Dedup.dupClusters]]' bounded driver branch and the exact
+    *    ids are unique: every non-canonical label then removes exactly
+    *    one exact row, so `near_dup = exact − |labels with id ≠
+    *    cluster|` and no Spark job runs for it. A repeated id removes
+    *    every row that carries it, so then, and on the distributed
+    *    branch (whose labels never come to the driver), `kept.count()`
+    *    is the count.
     *
-    * Each cached frame re-optimizes its plan on the driver, so the job
-    * caches exactly three frames: the flagged frame, the sketch and
-    * `kept`. The first two are released before returning; `kept` STAYS
-    * cached for the caller — call [[Frames.release]] when done.
+    * `kept` is returned lazy — an anti-join of the cached flagged frame
+    * against the non-canonical labels — so `run` fills no cache for it.
+    * The flagged frame STAYS cached for `kept`'s consumers: call
+    * [[Frames.release]] when done. The sketch and pair pins go with the
+    * ContextCleaner once unreferenced.
     *
     * The ledger also records the near-dup stage's hot-bucket mass over
     * the exact-deduped set the LSH stage actually processes —
@@ -701,35 +715,42 @@ object CorpusPrep {
     import spark.implicits._
     val ann = annotate(docs, text, cfg)
     graft.Frames.scoped { s =>
-      val flagged = s.cache(ann
+      val flagged = s.keep(ann
         .withColumn("__gate", coalesce(gatePredicate(cfg), lit(false)))
         .withColumn("__exact", col("__gate") &&
           col(id) === exactKeeper(when(col("__gate"), col(id)), text, cfg)))
       val exact = flagged.filter(col("__exact")).drop("__gate", "__exact")
-      val sketch = s.cache(Dedup.lshSketch(exact, id, text, cfg.shingleK))
+      val sketch = graft.Frames.pin(Dedup.lshSketch(exact, id, text, cfg.shingleK))
       // the profile row and the count row, as a union: a cross join of
       // the two would cost one more job, for its broadcast
       val Array(profileRow, counts) = Dedup.lshProfileFrame(sketch)
         .unionByName(flagged.agg(count(lit(1)).as("input"),
           count_if(col("__gate")).as("gated"),
-          count_if(col("__exact")).as("exact")), allowMissingColumns = true)
+          count_if(col("__exact")).as("exact"),
+          count_distinct(when(col("__exact"), col(id))).as("exact_ids")),
+          allowMissingColumns = true)
         .collect().sortBy(_.isNullAt(0))
       val profile = Dedup.lshProfile(profileRow)
       val nExact = counts.getAs[Long]("exact")
       capAdvice(profile, nExact, cfg).foreach(log.warn)
       val pairs = graft.Frames.pin(
         Dedup.lshPairsFromSketch(sketch, cfg.minJaccard, cfg.maxLshBucket))
-      val kept = s.keep(dropNonCanonical(exact, id, pairs))
-      val nKept = kept.count()
+      val (labels, onDriver) = Dedup.clusterLabels(pairs)
+      val kept = dropNonCanonical(exact, id, labels)
+      val nNear = onDriver match {
+        case Some(rows) if counts.getAs[Long]("exact_ids") == nExact =>
+          nExact - rows.count { case (i, c) => i != c }
+        case _ => kept.count()
+      }
       val stats = Seq(
         ("input", counts.getAs[Long]("input")),
         ("quality_lang_gate", counts.getAs[Long]("gated")),
         ("exact_dedup", nExact),
-        ("near_dup", nKept),
+        ("near_dup", nNear),
         ("lsh_max_bucket", profile.maxBucket),
         ("lsh_candidate_pairs", profile.candidatePairs)
       ).toDF("stage", "docs")
-      Frames(ann, kept, stats)
+      Frames(ann, kept, stats)(flagged)
     }
   }
 }

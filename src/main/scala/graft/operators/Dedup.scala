@@ -40,17 +40,16 @@ object Dedup {
 
   /** Pair-frame lifecycle: every pair plan reads its sketch from 3-4
     * branches (both join sides and the verify join-backs), so the sketch
-    * is cached for the call and warmed with ONE action before the pairs
-    * are pinned ([[Frames.pin]]: downstream actions never re-run the
-    * sketch and join work). No cache entry outlives the call, also when
-    * building the pair plan fails.
+    * is pinned ([[Frames.pin]], one action) and the pair plan is built
+    * over the pin, then pinned in turn: downstream actions never re-run
+    * the sketch or join work, and no cache entry is made. The pinned
+    * sketch is a short RDD-scan leaf, so under AQE the verify's
+    * join-back broadcast is reused; over a cached sketch (a
+    * `TableCacheQueryStage` child) it is not. Callers check the columns
+    * the pair plan reads before calling, so a bad column starts no job.
     */
   private def pinPairs(sketch: DataFrame)(pairs: DataFrame => DataFrame): DataFrame =
-    Frames.scoped { s =>
-      val p = pairs(s.cache(sketch))
-      sketch.count()
-      Frames.pin(p)
-    }
+    Frames.pin(pairs(Frames.pin(sketch)))
 
   /** Drops LSH buckets larger than `cap` from candidate generation.
     * Boilerplate-heavy corpora concentrate mass in a few (band, key)
@@ -79,9 +78,9 @@ object Dedup {
     * step scores) and `__bk` (one band key per band, indexed by band).
     * The SINGLE source of the band-key packing, shared by the candidate
     * join and the bucket-mass profile so the two can never measure
-    * different bandings. Callers that read it more than once cache
-    * it: every LSH plan reads it from 3-4 branches (both join sides and
-    * both verify join-backs).
+    * different bandings. Callers that read it more than once pin it
+    * ([[Frames.pin]]): every LSH plan reads it from 3-4 branches (both
+    * join sides and both verify join-backs).
     */
   private[graft] def lshSketch(
       docs: DataFrame, id: String, text: String, k: Int): DataFrame = {
@@ -222,9 +221,11 @@ object Dedup {
   def simhashPairs(
       docs: DataFrame, id: String, text: String,
       shingleK: Int = 5, maxHamming: Int = 3,
-      maxBucket: Option[Int] = None): DataFrame =
+      maxBucket: Option[Int] = None): DataFrame = {
+    docs.col(id) // the sketch does not read the id: fail before it is pinned
     pinPairs(shingleSketch(docs, text, shingleK))(
       simhashPairsFromSketch(_, id, maxHamming, maxBucket))
+  }
 
   /** The lazy SimHash candidate join + verify over a [[shingleSketch]]. */
   private[graft] def simhashPairsFromSketch(sketch: DataFrame, id: String,
@@ -264,9 +265,11 @@ object Dedup {
   def ngramJaccardPairs(
       docs: DataFrame, id: String, text: String,
       shingleK: Int = 5, minJaccard: Double = 0.5,
-      maxBucket: Option[Int] = None): DataFrame =
+      maxBucket: Option[Int] = None): DataFrame = {
+    docs.col(id) // the sketch does not read the id: fail before it is pinned
     pinPairs(shingleSketch(docs, text, shingleK))(
       ngramPairsFromSketch(_, id, minJaccard, maxBucket))
+  }
 
   /** The lazy inverted-index candidate join + verify over a
     * [[shingleSketch]].
@@ -321,7 +324,17 @@ object Dedup {
     */
   def dupClusters(
       pairs: DataFrame, driverMaxEdges: Long = 1L << 20,
-      freeRounds: Int = 2, maxRounds: Int = 24): DataFrame = {
+      freeRounds: Int = 2, maxRounds: Int = 24): DataFrame =
+    clusterLabels(pairs, driverMaxEdges, freeRounds, maxRounds)._1
+
+  /** [[dupClusters]]' labels, with the driver branch's (id, cluster)
+    * rows when that branch ran, so a caller can count them without a
+    * Spark job. The distributed branch's labels stay off the driver
+    * (`None`).
+    */
+  private[graft] def clusterLabels(
+      pairs: DataFrame, driverMaxEdges: Long = 1L << 20, freeRounds: Int = 2,
+      maxRounds: Int = 24): (DataFrame, Option[Seq[(Long, Long)]]) = {
     // a freeRounds past maxRounds would skip EVERY convergence check
     // and throw "not converged" on a graph that reached fixpoint in
     // round 1
@@ -357,15 +370,16 @@ object Dedup {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val rows = parent.keys.toSeq.map(id => (id, find(id)))
-      rows.toDF("id", "cluster")
+      (rows.toDF("id", "cluster"), Some(rows))
     } else {
-      Frames.scoped { s =>
+      val labels = Frames.scoped { s =>
         val edges = s.cache(longEdges.distinct())
         val und = s.cache(edges
           .union(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
           .distinct())
         pointerJump(und, freeRounds, maxRounds)
       }
+      (labels, None)
     }
   }
 

@@ -186,9 +186,16 @@ class CorpusPrepSpec extends SparkSpec {
     spark.sparkContext.parallelize(planted ++ filler, 3).toDF("doc_id", "text")
   }
 
+  /** [[ledgerFixture]] plus a second exact row with id 31, the near-dup
+    * pair's non-canonical member: the near-dup stage drops both rows of
+    * that id, so `exact − |non-canonical labels|` misses one.
+    */
+  private lazy val repeatedIdFixture = ledgerFixture.unionByName(
+    Seq((31L, prose(new scala.util.Random(23), 70))).toDF("doc_id", "text"))
+
   test("run's ledger equals the stage-by-stage reference (null text, und, quality, low entropy, gated key minimum)") {
-    val docs = ledgerFixture
-    for (cfg <- Seq(CorpusPrep.Config(minCompressionRatio = 0.1), CorpusPrep.Config())) {
+    for (docs <- Seq(ledgerFixture, repeatedIdFixture);
+        cfg <- Seq(CorpusPrep.Config(minCompressionRatio = 0.1), CorpusPrep.Config())) {
       val ann = CorpusPrep.annotate(docs, "text", cfg)
       val gated = CorpusPrep.gate(ann, cfg)
       val exact = CorpusPrep.exactCanonical(gated, "doc_id", "text", cfg)
@@ -205,9 +212,21 @@ class CorpusPrepSpec extends SparkSpec {
       try {
         val got = out.stats.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         assert(got == want, s"$cfg")
+        assert(out.kept.count() == got("near_dup"), s"$cfg")
         assert(out.kept.select($"doc_id").as[Long].collect().toSet ==
           near.select($"doc_id").as[Long].collect().toSet, s"$cfg")
       } finally out.release()
+
+      // negative control: with a repeated non-canonical id the
+      // driver-side count is wrong, so run's ledger came from Spark
+      if (docs eq repeatedIdFixture) {
+        assert(exact.filter($"doc_id" === 31L).count() == 2, s"$cfg")
+        val nonCanonical = graft.operators.Dedup.dupClusters(
+            graft.operators.Dedup.minhashLshPairs(exact, "doc_id", "text",
+              cfg.shingleK, cfg.minJaccard, cfg.maxLshBucket))
+          .filter($"id" =!= $"cluster").count()
+        assert(want("exact_dedup") - nonCanonical != want("near_dup"), s"$cfg")
+      }
 
       // the fixture really covers each case under this config
       val a = ann.select($"doc_id", $"lang", $"quality").as[(Long, String, Option[Double])]
@@ -226,42 +245,18 @@ class CorpusPrepSpec extends SparkSpec {
     }
   }
 
-  test("run: at most 18 Spark jobs, and release() leaves no cache entry") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  test("run: at most 13 Spark jobs, and release() leaves no cache entry") {
     val docs = ledgerFixture
     CorpusPrep.run(docs, "doc_id", "text").release() // warm the code paths
     spark.catalog.clearCache()
-    // the listener bus delivers events in posting order: the jobs of the
-    // run are exactly those between the two marker jobs
-    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        started.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def marker(tag: String): Unit = {
-      spark.sparkContext.setJobDescription(tag)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val events = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      marker("jobs-begin")
+    val (_, jobs, _) = sparkWork {
       val out = CorpusPrep.run(docs, "doc_id", "text")
       out.stats.collect()
       out.release()
-      marker("jobs-end")
-      while (!events.lastOption.contains("jobs-end")) {
-        val ev = started.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(ev != null, s"listener saw no end marker; got $events")
-        events += ev
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val jobs = events.dropWhile(_ != "jobs-begin").size - 2
-    assert(jobs <= 18, s"CorpusPrep.run started $jobs Spark jobs")
+    }
+    assert(jobs <= 13, s"CorpusPrep.run started $jobs Spark jobs")
     assert(spark.sharedState.cacheManager.isEmpty,
-      "run must leave only kept cached, and release() must drop it")
+      "run must leave only its flagged frame cached, and release() must drop it")
   }
 
   test("run: one text read per doc; capped pairs and an uncapped profile") {

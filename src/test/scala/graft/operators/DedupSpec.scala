@@ -319,14 +319,15 @@ class DedupSpec extends SparkSpec {
     Dedup.minhashLshPairs(docs, "doc_id", "text").count()
     Dedup.simhashPairs(docs, "doc_id", "text").count()
     Dedup.ngramJaccardPairs(docs, "doc_id", "text").count()
-    // a misspelled id column fails the pair plan's eager analysis after
-    // the sketch is cached: the failed call must release it too
-    Seq[String => Any](
+    // a misspelled id column fails before the sketch is pinned: the
+    // failed calls start no Spark job and leave no cache entry
+    val (_, jobs, _) = sparkWork(Seq[String => Any](
       Dedup.minhashLshPairs(docs, _, "text"),
       Dedup.simhashPairs(docs, _, "text"),
       Dedup.ngramJaccardPairs(docs, _, "text")).foreach { pairs =>
       intercept[org.apache.spark.sql.AnalysisException](pairs("doc_idd"))
-    }
+    })
+    assert(jobs == 0, s"the failing pair calls started $jobs Spark jobs")
     assert(spark.sharedState.cacheManager.isEmpty,
       "dedup pair operators must unpersist their sketch frames")
   }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 import graft.{Frames, SparkSpec}
 import graft.operators.Ivf
@@ -88,39 +87,6 @@ class SnapshotHygieneSpec extends SparkSpec {
     }
   }
 
-  /** The stages `body` submits: those between two marker jobs, less the
-    * first marker's own stage (the listener bus delivers events in
-    * posting order).
-    */
-  private def stagesOf[A](body: => A): (A, Int) = {
-    val events = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        events.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        events.add("stage")
-    }
-    def marker(tag: String): Unit = {
-      spark.sparkContext.setJobDescription(tag)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("stages-begin")
-      val a = body
-      marker("stages-end")
-      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (!seen.lastOption.contains("stages-end")) {
-        val ev = events.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(ev != null, s"listener saw no end marker; got $seen")
-        seen += ev
-      }
-      (a, seen.dropWhile(_ != "stages-begin").count(_ == "stage") - 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("an evicted durable codebook re-reads its snapshot; a trained one retrains") {
     val d = testDataDir("sf0.001")
     // an evicted snapshot level is a k-row parquet scan in the stage that
@@ -132,9 +98,9 @@ class SnapshotHygieneSpec extends SparkSpec {
     val session = spark.newSession()
     def q101Rows() = q101.build(session, d).collect().toSeq
     q101Rows() // builds the memoized durable codebook
-    val (warm, warmStages) = stagesOf(q101Rows())
+    val (warm, _, warmStages) = sparkWork(q101Rows())
     Frames.sweep(spark)
-    val (swept, sweptStages) = stagesOf(q101Rows())
+    val (swept, _, sweptStages) = sparkWork(q101Rows())
     assert(swept == warm, "a re-read snapshot must give the warm result")
     assert(sweptStages <= warmStages + slack,
       s"post-sweep q101 ran $sweptStages stages, warm $warmStages: it retrained")
@@ -149,9 +115,9 @@ class SnapshotHygieneSpec extends SparkSpec {
           "embedding", cb)
         .groupBy("cell").count().join(cb.fine.select("cell"), "cell")
         .orderBy("cell").collect().toSeq
-      val (trained, trainedStages) = stagesOf(cells())
+      val (trained, _, trainedStages) = sparkWork(cells())
       Frames.sweep(spark)
-      val (retrained, retrainedStages) = stagesOf(cells())
+      val (retrained, _, retrainedStages) = sparkWork(cells())
       assert(retrained == trained)
       info(s"stages: q101 warm $warmStages, swept $sweptStages; trained " +
         s"codebook warm $trainedStages, swept $retrainedStages")
