@@ -22,7 +22,8 @@ import org.apache.spark.storage.StorageLevel
   *  - [[scratchDir]] / [[dropScratch]]: a fresh dir for state a session
   *    writes and reads back (a codebook snapshot); the owner drops it,
   *    and whatever is still live at JVM exit goes with Hadoop's
-  *    `FileSystem` delete-on-exit list.
+  *    `FileSystem` delete-on-exit list. [[settling]] wraps the write, so
+  *    a failed one is dropped only after its tasks have ended.
   *
   * Every cached frame uses MEMORY_AND_DISK: a block that does not fit
   * in memory goes to disk instead of being recomputed.
@@ -90,12 +91,76 @@ object Frames {
     dir.toString
   }
 
-  /** Deletes a [[scratchDir]] and takes it off the delete-on-exit list. */
+  /** Deletes a [[scratchDir]]; only a delete that left nothing behind
+    * takes it off the delete-on-exit list.
+    */
   def dropScratch(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.cancelDeleteOnExit(p)
     fs.delete(p, true)
+    if (!fs.exists(p)) fs.cancelDeleteOnExit(p)
     ()
+  }
+
+  /** Runs `body`, a write into a [[scratchDir]]. When it throws, waits
+    * first, at most 10 s, until every task of the Spark jobs it started
+    * has ended: a failed job returns to its caller while killed tasks of
+    * its stages can still run and write into the dir, so the owner must
+    * not drop the dir before they are gone.
+    */
+  def settling[A](spark: SparkSession)(body: => A): A = {
+    val sc = spark.sparkContext
+    val watch = new TaskWatch(java.util.UUID.randomUUID.toString)
+    val prev = sc.getLocalProperty(SettleKey)
+    sc.addSparkListener(watch)
+    sc.setLocalProperty(SettleKey, watch.tag)
+    try body
+    catch {
+      case scala.util.control.NonFatal(e) if !sc.isStopped =>
+        // a marker job's start reaches the listener after every event
+        // posted before it, the failed job's task starts included
+        sc.setLocalProperty(SettleKey, watch.flush)
+        scala.util.Try(sc.parallelize(Seq(1), 1).count())
+        watch.awaitIdle(System.nanoTime + 10L * 1000 * 1000 * 1000)
+        throw e
+    } finally {
+      sc.setLocalProperty(SettleKey, prev)
+      sc.removeSparkListener(watch)
+    }
+  }
+
+  private val SettleKey = "graft.frames.settle"
+
+  /** Counts the running tasks of the jobs started under `tag`. */
+  private final class TaskWatch(val tag: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler._
+    val flush = tag + ":flush"
+    private val stages = scala.collection.mutable.Set.empty[Int]
+    private var running = 0
+    private var flushed = false
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      Option(j.properties).map(_.getProperty(SettleKey)) match {
+        case Some(`tag`) => stages ++= j.stageIds
+        case Some(`flush`) => flushed = true; notifyAll()
+        case _ =>
+      }
+    }
+    override def onTaskStart(t: SparkListenerTaskStart): Unit = synchronized {
+      if (stages(t.stageId)) running += 1
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
+      if (stages(t.stageId)) { running -= 1; notifyAll() }
+    }
+
+    /** Waits until the flush marker has arrived and no task runs. */
+    def awaitIdle(deadlineNs: Long): Unit = synchronized {
+      var left = deadlineNs - System.nanoTime
+      while ((!flushed || running > 0) && left > 0) {
+        wait(math.max(1L, left / 1000000L))
+        left = deadlineNs - System.nanoTime
+      }
+    }
   }
 }

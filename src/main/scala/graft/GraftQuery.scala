@@ -41,13 +41,11 @@ object GraftQuery {
   /** Order-independent sum of a double column, returned as double. */
   def dsum(c: Column, dt: DecimalType = D2): Column = sum(c.cast(dt)).cast("double")
 
-  /** SQL mirror of [[dsum]] for the DuckDB oracle. Takes the SAME
-    * DecimalType constant as [[dsum]] (round-12 review): the old
-    * scale-only signature hardcoded precision 18, so pairing
-    * dsum(c, D12) with dsumSql(e, 12) silently rendered DECIMAL(18,12)
-    * — 6 integer digits, overflowing the oracle side on any per-group
-    * sum ≥ 10^6 while Spark computed fine at (28,12). One constant now
-    * drives both engines' precision AND scale.
+  /** SQL mirror of [[dsum]] for the DuckDB oracle. Takes the same
+    * DecimalType constant as [[dsum]], so one constant drives both
+    * engines' precision and scale: a narrower oracle precision (say
+    * DECIMAL(18,12), 6 integer digits) overflows on a per-group sum
+    * that Spark computes fine at (28,12).
     */
   def dsumSql(expr: String, dt: DecimalType = D2): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(${dt.precision},${dt.scale}))) AS DOUBLE)"
@@ -55,8 +53,9 @@ object GraftQuery {
   /** Size-1 (session, dir)-keyed memo for deterministic data-derived
     * training artifacts (k-means centroids, BPE merges, IVF codebooks)
     * shared between a query's plan lambda and its oracle renderer — and
-    * across queries. Training is deterministic in the data, so
-    * memoization is observationally pure; a single last-result slot
+    * across queries — and for [[graft.Tables]]' inferred schemas.
+    * Training is deterministic in the data, so memoization is
+    * observationally pure; a single last-result slot
     * (not a map) so a stopped session's object graph isn't pinned for
     * the JVM's life in a bench/test loop.
     *

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md).
   *
@@ -8,14 +11,51 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * same logical plan runs at sf0.001 (smoke), sf0.01 (correctness) and
   * sf0.1 (bench) — and, unchanged, against a 100 TB partitioned layout:
   * nothing here assumes single-file inputs.
+  *
+  * Schema memo: a schemaless parquet read infers its schema in a Spark
+  * job that reads a footer. [[table]] remembers each table's inferred
+  * schema per (session, dir) together with the table's leaf files —
+  * path, length and modification time of each — and later reads of
+  * that table pass the schema instead, so they start no job. A
+  * remembered schema is used only while the leaf files the new read
+  * lists are exactly the remembered ones: a table whose files were
+  * added, removed or rewritten is inferred again, as is every table in
+  * a new session or after a switch to another dir.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table's inferred schema and its leaf files at inference. */
+  private final case class Inferred(schema: StructType, files: Set[(String, Long, Long)])
+
+  private val inferred = new GraftQuery.SessionMemo[
+    java.util.concurrent.ConcurrentHashMap[String, Inferred]](
+    (_, _) => new java.util.concurrent.ConcurrentHashMap)
+
+  /** The (path, length, modification time) of each file `df` scans, from
+    * the file index its read already listed.
+    */
+  private def leafFiles(df: DataFrame): Set[(String, Long, Long)] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation } match {
+      case Some(HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _)) =>
+        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+      case other => throw new IllegalStateException(s"not a parquet file scan: $other")
+    }
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val known = inferred(spark, dir)
+    Option(known.get(name))
+      .map(m => (m, spark.read.schema(m.schema).parquet(path)))
+      .collect { case (m, df) if leafFiles(df) == m.files => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        known.put(name, Inferred(df.schema, leafFiles(df)))
+        df
+      }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
@@ -39,15 +79,15 @@ object Tables {
     // Flip the legacy nanos conf ONLY when this directory actually holds
     // the nanos layout (Spark refuses its footer at schema inference) —
     // setting it unconditionally would permanently change how any other
-    // nanos-timestamp parquet in the shared session is read (r7 ADVICE).
-    // It stays set in the nanos case: the scan consults it again at
-    // execution, so a set-read-restore dance would break the very read
-    // it enabled.
-    // walk the CAUSE CHAIN, not just the top message (round-14 review):
-    // when footer reading runs as a distributed job the executor-side
-    // error arrives wrapped in a SparkException whose own message may
-    // carry only stage-failure text, and a top-message-only guard would
-    // rethrow instead of enabling the nanos fallback
+    // nanos-timestamp parquet in the shared session is read. It stays
+    // set in the nanos case: the scan consults it again at execution,
+    // so a set-read-restore dance would break the very read it enabled.
+    // A remembered schema skips inference, but only in the session and
+    // on the files that already took this path.
+    // Walk the cause chain, not just the top message: when footer
+    // reading runs as a distributed job the executor-side error arrives
+    // wrapped in a SparkException whose own message may carry only
+    // stage-failure text.
     def mentionsNanos(t: Throwable): Boolean =
       t != null && (String.valueOf(t.getMessage).contains("PARQUET_TYPE_ILLEGAL") ||
         mentionsNanos(t.getCause))

@@ -223,8 +223,8 @@ object SharkExport {
     */
   def runOnSynthetic(spark: SparkSession, dir: String, out: String): DataFrame = {
     import spark.implicits._
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    val or = spark.read.parquet(s"$dir/orders.parquet")
+    val li = graft.Tables.lineitem(spark, dir)
+    val or = graft.Tables.orders(spark, dir)
     val roi = li.select(
       concat(lit("S"), $"l_orderkey").as("sample"),
       $"l_returnflag".as("class_name"),

@@ -564,14 +564,14 @@ object Ivf {
     * a result cache: every query still computes assignment, search and
     * dedup from its inputs.
     *
-    * On failure the dir is deleted and `cb` released before the error
-    * propagates.
+    * On failure the dir is deleted, once the failed write's tasks have
+    * ended, and `cb` released before the error propagates.
     */
   def durable(cb: Codebook): Codebook = {
     val spark = cb.fine.sparkSession
     val dir = graft.Frames.scratchDir(spark, "graft-cb")
     try {
-      save(cb, dir)
+      graft.Frames.settling(spark)(save(cb, dir))
       cb.release()
       load(spark, dir).copy(snapshot = Some(dir))
     } catch {
