@@ -44,13 +44,21 @@ object Tables {
       case other => throw new IllegalStateException(s"not a parquet file scan: $other")
     }
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, dir, name, _ => ())
+
+  /** [[table]], running `beforeInference` on the table's path first
+    * whenever the schema must be inferred.
+    */
+  private def read(spark: SparkSession, dir: String, name: String,
+      beforeInference: String => Unit): DataFrame = {
     val path = s"$dir/$name.parquet"
     val known = inferred(spark, dir)
     Option(known.get(name))
       .map(m => (m, spark.read.schema(m.schema).parquet(path)))
       .collect { case (m, df) if leafFiles(df) == m.files => df }
       .getOrElse {
+        beforeInference(path)
         val df = spark.read.parquet(path)
         known.put(name, Inferred(df.schema, leafFiles(df)))
         df
@@ -77,27 +85,15 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     // Flip the legacy nanos conf ONLY when this directory actually holds
-    // the nanos layout (Spark refuses its footer at schema inference) —
-    // setting it unconditionally would permanently change how any other
+    // the nanos layout (Spark refuses it at schema inference) — setting
+    // it unconditionally would permanently change how any other
     // nanos-timestamp parquet in the shared session is read. It stays
     // set in the nanos case: the scan consults it again at execution,
     // so a set-read-restore dance would break the very read it enabled.
     // A remembered schema skips inference, but only in the session and
     // on the files that already took this path.
-    // Walk the cause chain, not just the top message: when footer
-    // reading runs as a distributed job the executor-side error arrives
-    // wrapped in a SparkException whose own message may carry only
-    // stage-failure text.
-    def mentionsNanos(t: Throwable): Boolean =
-      t != null && (String.valueOf(t.getMessage).contains("PARQUET_TYPE_ILLEGAL") ||
-        mentionsNanos(t.getCause))
-    val raw =
-      try table(s, d, "events")
-      catch {
-        case e: Throwable if mentionsNanos(e) =>
-          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          table(s, d, "events")
-      }
+    val raw = read(s, d, "events", path =>
+      if (tsIsNanos(s, path)) s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case TimestampType => raw
@@ -115,6 +111,35 @@ object Tables {
           "(expected nanos-as-long, TIMESTAMP, or TIMESTAMP_NTZ)")
     }
   }
+
+  /** Whether the parquet footer of `path`'s first data file (by name)
+    * declares `ts` as TIMESTAMP(NANOS) — read on the driver, so finding
+    * the layout starts no Spark job.
+    */
+  private def tsIsNanos(s: SparkSession, path: String): Boolean = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val conf = s.sessionState.newHadoopConf()
+    val root = new HPath(path)
+    val fs = root.getFileSystem(conf)
+    val leaves = fs.listFiles(root, true)
+    val data = Iterator.continually(leaves).takeWhile(_.hasNext).map(_.next().getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+    data.minByOption(_.toString).exists { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val ts = Option.when(schema.containsField("ts"))(schema.getType(schema.getFieldIndex("ts")))
+        ts.map(_.getLogicalTypeAnnotation).exists {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        }
+      } finally reader.close()
+    }
+  }
+
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
-import graft.plans.{MinHashesExpr, SimHash32Expr, SimHash64Expr, StringPolyHash, StringPolyHashArray, WordShinglesExpr}
+import graft.plans.{MinHashesExpr, SimHash32Expr, SimHash64Expr, StringPolyHash, StringPolyHashArray,
+  WordShinglesExpr, WordsExpr}
 
 /** Deterministic text/sketch hashing used by the dedup operators —
   * engine-portable by construction: every hash is integer arithmetic over
@@ -21,7 +22,7 @@ object Hashing {
   /** Content-fingerprint polynomial constants (multiplier, modulus,
     * seed) — named here so the SQL-function registry
     * ([[graft.plans.GraftExtensions]]) binds the SAME values instead of
-    * re-hardcoding them (round-11 review).
+    * re-hardcoding them.
     */
   val FpMult = 131L
   val FpMod = 1000000007L
@@ -42,20 +43,23 @@ object Hashing {
   val Mix2 = 2246822519L
   val SimBits64 = 64
 
-  /** Whitespace word split, lowercased, empties dropped. The split class
-    * is EXPLICIT on both sides (round-12 review): Java's `\s` is
-    * `[ \t\n\x0B\f\r]` while RE2's (DuckDB's) lacks `\x0B`, so a doc
-    * containing a vertical tab would tokenize differently and every
-    * downstream sketch/score would hash-diverge.
-    */
   /** The characters of Java's `\s`, for embedding in other character
-    * classes (e.g. TextAnalysis.BpePattern's negated class).
+    * classes (e.g. TextAnalysis.BpePattern's negated class). The split
+    * class is EXPLICIT on both sides: Java's `\s` is `[ \t\n\x0B\f\r]`
+    * while RE2's (DuckDB's) lacks `\x0B`, so a doc containing a vertical
+    * tab would tokenize differently and every downstream sketch/score
+    * would hash-diverge.
     */
   val WsChars = " \\t\\n\\x0B\\f\\r"
   val WsClass = s"[$WsChars]+"
 
+  /** Whitespace word split, lowercased, empties dropped: Spark's
+    * `lower`, then the native byte scan [[graft.plans.HashExpr.words]]
+    * cutting on exactly the [[WsChars]] — the same words as
+    * `filter(split(lower(text), WsClass), _ =!= "")` and as [[wordsSql]].
+    */
   def words(text: Column): Column =
-    filter(split(lower(text), WsClass), w => w =!= "")
+    GraftBridge.column(WordsExpr(GraftBridge.expression(lower(text))))
 
   def wordsSql(text: String): String =
     s"list_filter(regexp_split_to_array(lower($text), '$WsClass'), x -> x <> '')"
@@ -67,7 +71,7 @@ object Hashing {
     GraftBridge.column(WordShinglesExpr(GraftBridge.expression(ws), k))
 
   /** SQL mirror: the gram construction is [[Corpus.ngramsSql]] (one copy
-    * of the subtle slice arithmetic, round-12), and the distinct is an
+    * of the subtle slice arithmetic), and the distinct is an
     * ORDER-PRESERVING first-occurrence filter — `list_distinct` makes no
     * order guarantee, so an order-sensitive consumer of this "exact
     * mirror" could silently diverge from WordShinglesExpr.
@@ -78,8 +82,7 @@ object Hashing {
   }
 
   /** Token-hash polynomial constants (multiplier, seed) — named so the
-    * Column builders and every SQL mirror bind ONE copy (the round-11
-    * registry-drift class, closed for the remaining literals in r12).
+    * Column builders and every SQL mirror bind ONE copy.
     */
   val TokMult = 31L
   val TokSeed = 7L
@@ -89,8 +92,8 @@ object Hashing {
     GraftBridge.column(StringPolyHash(GraftBridge.expression(tok), TokMult, TokP, TokSeed))
 
   def tokHashSql(tok: String): String =
-    // same empty-string guard as fingerprintSql (round-14 review): the
-    // kernel returns the seed for '' while DuckDB's string_split('','')
+    // same empty-string guard as fingerprintSql: the kernel returns
+    // the seed for '' while DuckDB's string_split('','')
     // folds [''] as ord -1 — unreachable from the 5-word shingle
     // callers, but this is a GENERAL mirror and the first oracle over
     // raw possibly-empty tokens would silently hash-diverge
@@ -122,7 +125,7 @@ object Hashing {
     // (Long.MaxValue per seed): list_min of an empty list is NULL in
     // DuckDB, and a NULL band key silently drops out of equality joins
     // while the sentinel groups — a latent pair-set divergence for any
-    // caller that forgets the both-sides size>0 filter (round-12 review)
+    // caller that forgets the both-sides size>0 filter
     s"COALESCE(list_min(list_transform($th, h -> (h * $a + $b) % $MinP)), " +
       s"${Long.MaxValue})"
   }
@@ -168,9 +171,9 @@ object Hashing {
     GraftBridge.column(StringPolyHash(GraftBridge.expression(text), FpMult, FpMod, FpSeed))
 
   def fingerprintSql(text: String): String =
-    // empty-string guard (round-14 review, the minhashSql COALESCE
-    // class): DuckDB's string_split('','') is [''] and ord('') folds as
-    // -1, yielding 916, while the kernel folds ZERO code points and
+    // empty-string guard (the minhashSql COALESCE class): DuckDB's
+    // string_split('','') is [''] and ord('') folds as -1, yielding
+    // 916, while the kernel folds ZERO code points and
     // returns the seed — q50's dup_key can be empty (whitespace-only
     // text), so the mirror must return the seed there too
     s"CASE WHEN $text = '' THEN $FpSeed " +

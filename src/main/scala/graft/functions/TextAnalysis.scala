@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
+import graft.plans.WordStatsExpr
 
 /** Text-analysis column functions for training-data pipelines: language
   * ID, quality scoring, token counting — the text slice of the brief's
@@ -22,9 +23,15 @@ object TextAnalysis {
     "fr" -> Seq("le", "les", "des", "est", "une"),
     "zh" -> Seq("的", "了", "是", "在", "我"))
 
-  /** Occurrences of lexicon words in a word array. */
-  private def score(ws: Column, lex: Seq[String]): Column =
-    size(filter(ws, w => lex.map(l => w === l).reduce(_ || _)))
+  /** One pass over a word array ([[graft.plans.HashExpr.wordStats]]):
+    * the occurrences of each lexicon's words, in [[Lexicons]] order, then
+    * the total character count (null when an element is null).
+    */
+  private def wordStats(ws: Column): Column =
+    GraftBridge.column(WordStatsExpr(GraftBridge.expression(ws), Lexicons.map(_._2)))
+
+  /** Occurrences of the `i`-th lexicon's words, from [[wordStats]]. */
+  private def score(stats: Column, i: Int): Column = element_at(stats, i + 1).cast("int")
 
   private def scoreSql(ws: String, lex: Seq[String]): String =
     s"len(list_filter($ws, w -> w IN (${lex.map(l => s"'$l'").mkString(", ")})))"
@@ -32,18 +39,18 @@ object TextAnalysis {
   /** Predicted language: argmax lexicon hit count, ties to the earlier
     * lexicon in [[Lexicons]] order, all-zero → 'und'.
     *
-    * Conditional-free shape (round-14 review — the when()-defeats-CSE
-    * class): the old when-chain re-evaluated `greatest(all scores)`
-    * inside every lazily-reached branch (~6× the array-filter work per
-    * non-first-lexicon row). One `array_max` over (score, -index, lang)
-    * structs evaluates each lexicon filter exactly once: lexicographic
-    * max = highest score, ties to the larger -index = the EARLIER
-    * lexicon, and an (0, +1, 'und') sentinel wins exactly the all-zero
-    * case — the identical semantics, zero conditionals.
+    * Conditional-free shape: one `array_max` over (score, -index, lang)
+    * structs — lexicographic max = highest score, ties to the larger
+    * -index = the EARLIER lexicon, and an (0, +1, 'und') sentinel wins
+    * exactly the all-zero case. Whole-stage codegen's common-subexpression
+    * elimination shares only unconditionally evaluated subtrees, so with
+    * no branch the word split and the [[wordStats]] pass run once per row,
+    * also when [[qualityScore]] reads the same stats in one projection.
     */
   def langId(ws: Column): Column = {
-    val packed = Lexicons.zipWithIndex.map { case ((lang, lex), i) =>
-      struct(score(ws, lex).as("s"), lit(-i).as("ni"), lit(lang).as("lang"))
+    val stats = wordStats(ws)
+    val packed = Lexicons.zipWithIndex.map { case ((lang, _), i) =>
+      struct(score(stats, i).as("s"), lit(-i).as("ni"), lit(lang).as("lang"))
     } :+ struct(lit(0).as("s"), lit(1).as("ni"), lit("und").as("lang"))
     array_max(array(packed: _*)).getField("lang")
   }
@@ -61,22 +68,21 @@ object TextAnalysis {
     * battery (deterministic double arithmetic, no aggregation).
     */
   def qualityScore(ws: Column): Column = {
+    val stats = wordStats(ws)
     val nWords = size(ws).cast("double")
     // empty/whitespace-only doc: every ratio divides by zero — Spark's
     // non-ANSI division returns null (doc lands in NO quality band,
     // silently) while DuckDB's IEEE division makes the mirror NaN, so
-    // the engines would also disagree (round-11 review). Round 11
-    // guarded with when(size==0, 0.0), but a conditional branch defeats
-    // whole-stage codegen's common-subexpression elimination of the
-    // word-split tree (only unconditionally-evaluated subtrees are
-    // CSE'd), re-tokenizing per component: q48 measured 2× slower and
-    // q95's annotate stage drifted +0.6 s (round-12 adjudication). The
-    // GREATEST(n, 1) denominator keeps ONE unconditional path: for
-    // n ≥ 1 it IS n (bit-identical quotients), for n = 0 every
-    // component is exactly +0.0 — the same 0.0 the branch produced.
+    // the engines would also disagree. A when(size==0, 0.0) guard would
+    // put the ratios in a conditional branch, which whole-stage codegen's
+    // common-subexpression elimination does not share, so the word split
+    // and stats would run once per component. The GREATEST(n, 1)
+    // denominator keeps ONE unconditional path: for n ≥ 1 it IS n
+    // (bit-identical quotients), for n = 0 every component is exactly
+    // +0.0 — the same 0.0 the branch produced.
     val denom = greatest(nWords, lit(1.0))
-    val stopRatio = score(ws, Lexicons.head._2).cast("double") / denom
-    val meanLen = aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("double") / denom
+    val stopRatio = score(stats, 0).cast("double") / denom
+    val meanLen = element_at(stats, Lexicons.size + 1).cast("double") / denom
     lit(0.4) * least(lit(1.0), nWords / 50.0) +
       lit(0.3) * stopRatio +
       lit(0.3) * least(lit(1.0), meanLen / 8.0)
@@ -113,7 +119,7 @@ object TextAnalysis {
   /** BPE-ish token count: letter runs, digit runs, single other glyphs
     * (the tokenizer-free token-count estimate).
     */
-  // explicit whitespace chars, not `\s` (round-12 review): this literal
+  // explicit whitespace chars, not `\s`: this literal
   // runs under Java regex on the Spark side and RE2 on the DuckDB side,
   // and RE2's `\s` lacks `\x0B` — a vertical tab would count as an
   // "other glyph" token in the oracle only. Single-sourced into the SQL

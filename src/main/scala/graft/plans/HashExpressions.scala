@@ -1,22 +1,29 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen hashing for the dedup sketches (SURVEY.md §2 +
-  * the brief's dedup/fingerprint extensions).
+/** Native codegen word and hashing kernels for the text features and the
+  * dedup sketches (SURVEY.md §2 + the brief's dedup/fingerprint
+  * extensions).
   *
   * Why native: the portable Column compositions in
-  * [[graft.functions.Hashing]] are higher-order functions
-  * (transform/aggregate), which Catalyst evaluates interpreted — per char
-  * per row. These expressions compute the identical integer functions
-  * (same constants, same math, same DuckDB-oracle compatibility) in one
-  * tight JVM loop with `doGenCode`, keeping the sketch pipeline inside
-  * whole-stage codegen. Measured ≳5× on the MinHash/SimHash queries.
+  * [[graft.functions.Hashing]] and [[graft.functions.TextAnalysis]] are
+  * higher-order functions (filter/transform/aggregate), which Catalyst
+  * evaluates interpreted — per element per row. These expressions
+  * compute the identical functions (same constants, same math, same
+  * DuckDB-oracle compatibility) in one tight JVM loop with `doGenCode`,
+  * keeping the text and sketch pipeline inside whole-stage codegen:
+  * [[words]] (the word split under every text feature), [[wordStats]]
+  * (lexicon hits and character count for language ID and quality
+  * scoring), then the shingle, hash, MinHash and SimHash kernels.
+  * Measured ≳5× on the MinHash/SimHash queries; the two word kernels
+  * halved the executor CPU of `CorpusPrep.run`.
   */
 object HashExpr {
 
@@ -24,8 +31,7 @@ object HashExpr {
     * kernels only via the SQL-registry surface (the Column builders feed
     * containsNull=false arrays), where `getLong` silently reads 0 and
     * `getUTF8String` NPEs mid-stage — silently-wrong sketches or a raw
-    * crash from user SQL (round-12 review). One cheap bitset pre-pass,
-    * loud reject.
+    * crash from user SQL. One cheap bitset pre-pass, loud reject.
     */
   private def noNulls(a: ArrayData, what: String): Unit = {
     val n = a.numElements()
@@ -39,6 +45,69 @@ object HashExpr {
     }
   }
 
+  /** One of the six bytes of [[graft.functions.Hashing.WsChars]]:
+    * space, or `\t \n \x0B \f \r` (9-13).
+    */
+  private def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
+
+  /** The words of an already lowercased string: its maximal runs of
+    * non-whitespace bytes, in order — exactly `split(s, WsClass)` with
+    * the empty pieces dropped. A byte scan finds the same cuts as the
+    * regex: every byte of a UTF-8 multibyte sequence is ≥ 0x80, so no
+    * such sequence contains a whitespace byte, and non-ASCII spaces
+    * (U+00A0, U+2003, …) are outside the class on both paths. The words
+    * are views over one private copy of the bytes, so no caller can see
+    * a reused input buffer change under them.
+    */
+  def words(s: UTF8String): ArrayData = {
+    val n = s.numBytes
+    val b = new Array[Byte](n)
+    s.writeToMemory(b, Platform.BYTE_ARRAY_OFFSET)
+    var count = 0
+    var i = 0
+    while (i < n) {
+      if (!isWs(b(i)) && (i == 0 || isWs(b(i - 1)))) count += 1
+      i += 1
+    }
+    val out = new Array[Any](count)
+    var k = 0
+    i = 0
+    while (k < count) {
+      while (isWs(b(i))) i += 1
+      val start = i
+      while (i < n && !isWs(b(i))) i += 1
+      out(k) = UTF8String.fromBytes(b, start, i - start)
+      k += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** One pass over a word array: the hit count of each lexicon of
+    * `lex`, in order, then the total character count. A null element
+    * is no lexicon hit and makes the character count null, as in the
+    * `filter`/`aggregate` compositions this replaces.
+    */
+  def wordStats(ws: ArrayData, lex: LexiconTable): ArrayData = {
+    val out = new Array[Long](lex.size + 1)
+    var sawNull = false
+    val n = ws.numElements()
+    var i = 0
+    while (i < n) {
+      if (ws.isNullAt(i)) sawNull = true
+      else {
+        val w = ws.getUTF8String(i)
+        out(lex.size) += w.numChars
+        val hits = lex.hits(w)
+        var j = 0
+        while (j < hits.length) { out(hits(j)) += 1; j += 1 }
+      }
+      i += 1
+    }
+    val res = UnsafeArrayData.fromPrimitiveArray(out)
+    if (sawNull) res.setNullAt(lex.size)
+    res
+  }
+
   /** [[stringPoly]] over each element of an array<string>. */
   def stringPolyArray(arr: ArrayData, mult: Long, mod: Long, seed: Long): ArrayData = {
     noNulls(arr, "string_poly_hash_array")
@@ -48,7 +117,7 @@ object HashExpr {
       out(i) = stringPoly(arr.getUTF8String(i), mult, mod, seed)
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** Rolling polynomial hash over code points:
@@ -134,7 +203,7 @@ object HashExpr {
     counts(3).values.forEach { v => if (v > 1) dup3 += v }
     val tot2 = if (n >= 2) (n - 1).toLong else 0L
     val tot3 = if (n >= 3) (n - 2).toLong else 0L
-    new GenericArrayData(Array[Any](top2, tot2, dup3, tot3))
+    UnsafeArrayData.fromPrimitiveArray(Array(top2, tot2, dup3, tot3))
   }
 
   /** One-pass MinHash family over a long array. */
@@ -153,7 +222,7 @@ object HashExpr {
       }
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** One-pass SimHash-64: two 32-bit mixes supply the 64 bits of material
@@ -210,6 +279,58 @@ object HashExpr {
     }
     sig
   }
+}
+
+/** Lexicon lookup for [[HashExpr.wordStats]]: each distinct entry
+  * maps to the indices of the lexicons that list it, so a word scores
+  * once per lexicon however often that lexicon repeats it.
+  */
+final class LexiconTable(lexicons: Seq[Seq[String]]) extends Serializable {
+  val size: Int = lexicons.length
+  private val index = new java.util.HashMap[UTF8String, Array[Int]]()
+  for ((lex, i) <- lexicons.zipWithIndex; w <- lex.distinct)
+    index.merge(UTF8String.fromString(w), Array(i), _ ++ _)
+  private val maxBytes =
+    lexicons.flatten.map(_.getBytes("UTF-8").length).maxOption.getOrElse(-1)
+  private val none = Array.empty[Int]
+
+  /** The lexicons that list `w`, in order. */
+  def hits(w: UTF8String): Array[Int] =
+    if (w.numBytes > maxBytes) none else index.getOrDefault(w, none)
+}
+
+/** The words of a lowercased string ([[HashExpr.words]]); the child is
+  * Spark's `lower(text)`, so case mapping stays Spark's own.
+  */
+case class WordsExpr(child: Expression) extends UnaryExpression with Serializable {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override protected def nullSafeEval(input: Any): Any =
+    HashExpr.words(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.HashExpr.words($c)")
+  override protected def withNewChildInternal(newChild: Expression): WordsExpr =
+    copy(child = newChild)
+  override def prettyName: String = "words"
+}
+
+/** Per-lexicon hit counts plus the character count of an array<string>
+  * ([[HashExpr.wordStats]]): `lexicons.length + 1` longs, the last one
+  * null when the array holds a null element.
+  */
+case class WordStatsExpr(child: Expression, lexicons: Seq[Seq[String]])
+  extends UnaryExpression with Serializable {
+  override def dataType: DataType = ArrayType(LongType,
+    containsNull = child.dataType.asInstanceOf[ArrayType].containsNull)
+  @transient private lazy val table = new LexiconTable(lexicons)
+  override protected def nullSafeEval(input: Any): Any =
+    HashExpr.wordStats(input.asInstanceOf[ArrayData], table)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("lexicons", table, classOf[LexiconTable].getName)
+    defineCodeGen(ctx, ev, c => s"graft.plans.HashExpr.wordStats($c, $t)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): WordStatsExpr =
+    copy(child = newChild)
+  override def prettyName: String = "word_stats"
 }
 
 /** `stringPoly` over a string column. */

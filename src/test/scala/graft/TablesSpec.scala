@@ -126,6 +126,27 @@ class TablesSpec extends SparkSpec {
       "the shared session keeps its conf")
   }
 
+  test("events: a session's first nanos read fails no task") {
+    import org.apache.spark.Success
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val nanosDir = Path.of(getClass.getResource("/events_nanos/events.parquet").toURI).getParent
+    val failed = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason != Success) { failed.incrementAndGet(); () }
+    }
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // sparkWork's end marker arrives after every event of the read
+      val (n, jobs, _) = sparkWork(Tables.events(s, nanosDir.toString).count())
+      assert(n == 3 && jobs > 0)
+      assert(failed.get == 0, s"$failed failed tasks in the first nanos read")
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("no file in src/main reads a fixture table outside Tables.scala") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.SparkSpec
@@ -216,14 +218,124 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("qualityScore: empty/whitespace docs score exactly 0.0, never null/NaN") {
-    // the round-11 div-by-zero guard became a GREATEST(n,1) denominator in
-    // round 12 (the when() branch defeated codegen CSE of the word split —
-    // q48 measured 2× slower); this pins the contract the guard exists for
+    // the contract the GREATEST(n, 1) denominator exists for
     val got = Seq("", "   ", "\t\n", "the fast value").toDF("t")
       .select(TextAnalysis.qualityScore(Hashing.words($"t")).as("q"))
       .as[Double].collect()
     assert(got.take(3).forall(_ == 0.0), got.toSeq.toString)
     assert(got(3) > 0.0 && !got(3).isNaN)
+  }
+
+  /** The higher-order-function compositions the native word kernels
+    * replace, kept as the reference they must equal.
+    */
+  private object Ref {
+    def words(t: Column): Column = filter(split(lower(t), Hashing.WsClass), w => w =!= "")
+    def hits(ws: Column, lex: Seq[String]): Column =
+      size(filter(ws, w => lex.map(l => w === l).reduce(_ || _)))
+    def chars(ws: Column): Column = aggregate(ws, lit(0L), (acc, w) => acc + length(w))
+    def langId(ws: Column): Column = {
+      val packed = TextAnalysis.Lexicons.zipWithIndex.map { case ((lang, lex), i) =>
+        struct(hits(ws, lex).as("s"), lit(-i).as("ni"), lit(lang).as("lang"))
+      } :+ struct(lit(0).as("s"), lit(1).as("ni"), lit("und").as("lang"))
+      array_max(array(packed: _*)).getField("lang")
+    }
+    def qualityScore(ws: Column): Column = {
+      val nWords = size(ws).cast("double")
+      val denom = greatest(nWords, lit(1.0))
+      val stopRatio = hits(ws, TextAnalysis.Lexicons.head._2).cast("double") / denom
+      val meanLen = chars(ws).cast("double") / denom
+      lit(0.4) * least(lit(1.0), nWords / 50.0) +
+        lit(0.3) * stopRatio +
+        lit(0.3) * least(lit(1.0), meanLen / 8.0)
+    }
+  }
+
+  private def wordStats(ws: Column): Column =
+    GraftBridge.column(graft.plans.WordStatsExpr(
+      GraftBridge.expression(ws), TextAnalysis.Lexicons.map(_._2)))
+
+  /** Native columns paired with their references over `in`, each pair
+    * equal on every row — doubles by raw bits. Checked twice: over a
+    * local relation, which the optimizer folds with the interpreted
+    * `eval`, and over an RDD scan, which runs the generated code.
+    */
+  private def assertSame(in: DataFrame, pairs: (String, Column, Column)*): Unit = {
+    val rdd = spark.createDataFrame(
+      spark.sparkContext.parallelize(in.collect().toSeq, 2), in.schema)
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) =>
+        java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+      case _ => a == b
+    }
+    def show(v: Any): String =
+      String.valueOf(v).flatMap(c => if (c < ' ' || c > '~') f"\\u${c.toInt}%04X" else c.toString)
+    for ((df, path) <- Seq(in -> "interpreted", rdd -> "codegen")) {
+      val cols = pairs.flatMap { case (_, n, r) => Seq(n, r) }
+      df.select(in.columns.toSeq.map(col) ++ cols: _*).collect().foreach { row =>
+        pairs.zipWithIndex.foreach { case ((what, _, _), i) =>
+          val (a, b) = (row.get(in.columns.length + 2 * i), row.get(in.columns.length + 2 * i + 1))
+          assert(same(a, b),
+            s"$path $what on '${show(row.get(0))}': native ${show(a)}, reference ${show(b)}")
+        }
+      }
+    }
+  }
+
+  /** Text that exercises every cut the word split can make. */
+  private val wordTexts: Seq[String] = {
+    val words = Seq("the", "The", "THE", "der", "Die", "de", "la", "les", "value", "fast",
+      "的", "了", "是", "å", "Å", "µ", "ÅSA", "naïve", "\uD835\uDD38x", "a", "x")
+    val ws = Seq(" ", "\t", "\n", "\u000B", "\f", "\r", "  ", "\u000B\u000B", " \t\r\n\f")
+    val glue = Seq("\u00A0", "\u2003")
+    val text = Gen.chooseNum(0, 14).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(5 -> Gen.oneOf(words), 3 -> Gen.oneOf(ws), 1 -> Gen.oneOf(glue))))
+    Seq("", " ", "\u000B", " \t\n\u000B\f\r", "  lead", "trail  ", "a  b\t\tc",
+      "a\u000Bb", "a\u00A0b", "x\u2003y", "的了 是", "\uD835\uDD38", "THE the The") ++
+      samples(text, 200).map(_.mkString)
+  }
+
+  test("native words equals the split/filter composition, text by text") {
+    val df = (wordTexts.map(Option(_)) :+ None).toDF("t")
+    assertSame(df, ("words", Hashing.words($"t"), Ref.words($"t")))
+    val got = Seq("a\u000Bb c\u00A0d x\u2003y\r\n").toDF("t")
+      .select(Hashing.words($"t")).as[Seq[String]].head()
+    assert(got == Seq("a", "b", "c\u00A0d", "x\u2003y"), "only the six WsChars cut")
+  }
+
+  test("word stats, langId and qualityScore equal their higher-order references") {
+    val df = (wordTexts.map(Option(_)) :+ None).toDF("t")
+    val lexPairs = TextAnalysis.Lexicons.zipWithIndex.map { case ((lang, lex), i) =>
+      (s"$lang hits", element_at(wordStats(Hashing.words($"t")), i + 1),
+        Ref.hits(Ref.words($"t"), lex).cast("long"))
+    }
+    assertSame(df, lexPairs ++ Seq(
+      ("chars", element_at(wordStats(Hashing.words($"t")), TextAnalysis.Lexicons.size + 1),
+        Ref.chars(Ref.words($"t"))),
+      ("langId", TextAnalysis.langId(Hashing.words($"t")), Ref.langId(Ref.words($"t"))),
+      ("qualityScore", TextAnalysis.qualityScore(Hashing.words($"t")),
+        Ref.qualityScore(Ref.words($"t")))): _*)
+  }
+
+  test("word stats on arrays with null elements: no hit and a null length sum") {
+    val arrays: Seq[Seq[String]] = Seq(Seq("the", null, "a"), Seq(null), Seq(), null,
+      Seq("der", "der", null, "的"), Seq("de", "la", "de"), Seq("", "the"), Seq("\uD835\uDD38", "µ"))
+    val df = spark.createDataFrame(java.util.Arrays.asList(arrays.map(Row(_)): _*),
+      StructType(Seq(StructField("ws", ArrayType(StringType, containsNull = true)))))
+    val lexPairs = TextAnalysis.Lexicons.zipWithIndex.map { case ((lang, lex), i) =>
+      (s"$lang hits", element_at(wordStats($"ws"), i + 1), Ref.hits($"ws", lex).cast("long"))
+    }
+    assertSame(df, lexPairs ++ Seq(
+      ("chars", element_at(wordStats($"ws"), TextAnalysis.Lexicons.size + 1), Ref.chars($"ws")),
+      ("langId", TextAnalysis.langId($"ws"), Ref.langId($"ws")),
+      ("qualityScore", TextAnalysis.qualityScore($"ws"), Ref.qualityScore($"ws"))): _*)
+    // a null length sum leaves qualityScore non-null: `least` skips a
+    // null argument, so the mean-length term saturates on both paths
+    val got = df.select(
+      element_at(wordStats($"ws"), TextAnalysis.Lexicons.size + 1),
+      TextAnalysis.qualityScore($"ws")).collect().toSeq
+    assert(got.map(r => Option(r.get(0))).take(3) == Seq(None, None, Some(0L)), got.toString)
+    assert(got(0).getDouble(1) == 0.4 * (3 / 50.0) + 0.3 * (2 / 3.0) + 0.3, got.toString)
   }
 
   test("haversine: zero distance, known city pair, symmetry") {

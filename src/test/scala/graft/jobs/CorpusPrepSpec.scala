@@ -290,6 +290,42 @@ class CorpusPrepSpec extends SparkSpec {
     } finally capped.release()
   }
 
+  test("annotate, the exact key and the LSH sketch run native word kernels, once per row") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, StringSplit}
+    import org.apache.spark.sql.execution.debug._
+    // a range scan, not a local relation: the optimizer would fold the
+    // projection over a local relation, and no code would be generated
+    val docs = spark.range(8).select($"id".as("doc_id"),
+      concat(lit("The fast\u000Bvalue der "), $"id".cast("string")).as("text"))
+    val cfg = CorpusPrep.Config()
+    def nodes(df: DataFrame): Seq[String] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: ArrayFilter | _: ArrayAggregate | _: StringSplit) => e.nodeName
+        case e @ (_: graft.plans.WordsExpr | _: graft.plans.WordStatsExpr) => e.nodeName
+      }))
+    val annotated = CorpusPrep.annotate(docs, "text")
+    val plans = Seq(
+      "annotate" -> annotated,
+      "exact key" -> CorpusPrep.exactCanonical(docs, "doc_id", "text", cfg),
+      "lsh sketch" -> graft.operators.Dedup.lshSketch(docs, "doc_id", "text", cfg.shingleK))
+    plans.foreach { case (what, df) =>
+      val found = nodes(df)
+      assert(found.contains("WordsExpr"), s"$what: $found")
+      assert(found.forall(_.endsWith("Expr")), s"$what runs interpreted word HOFs: $found")
+    }
+    assert(nodes(annotated).count(_ == "WordStatsExpr") > 1,
+      "langId and qualityScore each read the word stats")
+    // ...yet the generated code calls each kernel once per row: the
+    // shared subexpressions are evaluated once
+    val code = annotated.queryExecution.debug.codegenToSeq().map(_._2).mkString
+    def calls(kernel: String) = java.util.regex.Pattern.quote(s"graft.plans.HashExpr.$kernel(")
+      .r.findAllMatchIn(code).size
+    assert(calls("words") == 1 && calls("wordStats") == 1,
+      s"words ${calls("words")}, wordStats ${calls("wordStats")} calls in:\n$code")
+    assert(annotated.select("lang").as[String].collect().toSet == Set("en"))
+  }
+
   // --- incremental semantic compaction (round-15, verdict task 4) -----------
 
   /** 3 nonzero-centered clusters (within-cluster cosine ≈ 1, across ≈
