@@ -13,103 +13,56 @@ import org.apache.spark.sql.SparkSession
   *    exists to produce);
   *  - one un-timed warmup query first: the first job in a fresh JVM pays
   *    10-20 s of classloading/JIT that has nothing to do with any query;
-  *  - shuffle partitions = cores (32-way local), AQE coalesces further.
+  *  - shuffle partitions = cores, AQE coalesces further;
+  *  - hygiene between timed regions: a suite of codegen-heavy queries in
+  *    one JVM accumulates state that ContextCleaner reclaims only after
+  *    the owning references are garbage-collected (broadcast blocks in
+  *    the memory store, shuffle files, codegen classloaders). With an
+  *    8 GiB heap the old generation may never be collected, and late
+  *    queries then run 10-30x slow (q55 measured 67.2 s in the suite,
+  *    2.16 s standalone). So between queries graft's frames are swept
+  *    and a full GC lets the cleaner drain; that cost is never timed.
   *
-  * Per-query attribution (the round-4 judge finding): a suite of 64
-  * codegen-heavy queries in one JVM accumulates driver/executor state
-  * that ContextCleaner only reclaims AFTER the owning references are
-  * garbage-collected — broadcast torrent blocks in the unified memory
-  * store, shuffle files, and Janino codegen classloaders (metaspace).
-  * With an 8 GiB heap the JVM can run all 3 passes without ever
-  * collecting the old generation, so late-running queries execute with
-  * the memory store full of dead broadcasts and report 10-30x their
-  * true cost (judge-measured: q55 67.2 s in-harness vs 2.16 s
-  * standalone). The fix is hygiene BETWEEN timed regions: clear the SQL
-  * cache, unpersist leftover RDDs, then force a full GC so the
-  * cleaner's weak references enqueue and its thread drains the dead
-  * blocks before the next query starts. The GC cost is paid between
-  * queries, never inside a timed region.
-  *
-  * Knobs (all env vars, driver uses none of them):
-  *  - SPARK_GRAFT_BENCH_ONLY=q55_...,q57_...  run a subset
-  *  - SPARK_GRAFT_BENCH_NOGC=1                disable the between-query
-  *    GC (reproduces the round-4 attribution artifact for A/B runs)
-  *  - SPARK_GRAFT_BENCH_DIAG=1                print per-query heap/
-  *    storage diagnostics after each hygiene step
-  *  - SPARK_GRAFT_BENCH_BASELINE=<path|off>   frozen per-query baseline
+  * Knobs (env vars, the driver sets none):
+  *  - SPARK_GRAFT_BENCH_ONLY=q55,q76_...     run a subset (full names or
+  *    bare qNN prefixes)
+  *  - SPARK_GRAFT_BENCH_PASSES=N             passes per query (default 3)
+  *  - SPARK_GRAFT_BENCH_BASELINE=<path|off>  frozen per-query baseline
   *    to diff against (default BASELINE.md's `bench-baseline` table);
   *    when the file parses AND its sf marker matches the run, an extra
   *    `vs_baseline_sec` line carries measured−baseline per query
   *
-  * Host-contention attribution (the round-6 judge finding): the r6
-  * driver bench measured the 72 r5-baselined queries at a uniform 1.21x
-  * of their frozen minima with zero plan changes (PlanShapeSpec green).
-  * An exclusive re-run under round 7 reproduced the frozen numbers
-  * within the ±0.5 s/query noise floor (72-query total 54.6 s vs the
-  * frozen 57.4 s) — the drift was competing load on the host during the
-  * driver's run, not JVM state (the GC hygiene below already handles
-  * that) and not the plans. Uniform scaling across unrelated pinned
-  * plans is the contention signature; per-query artifacts can't show it,
-  * so the harness times a fixed single-threaded CPU loop before and
-  * after the suite and embeds both readings as `calib_before_ms`/
-  * `calib_after_ms` fields INSIDE the final contract JSON line (a
-  * standalone line was truncated out of the driver's ~2000-char tail in
-  * round 7, exactly when it was needed): if calib inflates versus the
-  * ~220 ms reference recorded in BASELINE.md, the run was contended and
-  * `vs_baseline_sec` deltas are not plan regressions.
+  * Host-contention sentinels, all inside the final contract line:
+  *  - `calib_before_ms`/`calib_after_ms`: a fixed single-threaded CPU
+  *    loop timed before and after the suite (~220 ms exclusive, see
+  *    BASELINE.md). Uniform slowdown across unrelated, unchanged plans
+  *    is the contention signature no per-query number can show.
+  *  - `calib_par_*_ms`: the same loop on every hardware thread with
+  *    strided stores, wall-clocked to the slowest worker. One free core
+  *    keeps the single-threaded loop fast while load steals the rest
+  *    (q76 once read 6.58 s against a 1.82 s exclusive re-run with clean
+  *    single-thread readings), so this one sees multi-core and
+  *    memory-bandwidth contention.
+  *  - `steal_pct`: hypervisor CPU steal from /proc/stat over the whole
+  *    suite window, the one signal that integrates over the run instead
+  *    of sampling its endpoints.
   *
-  * Round-10 addendum: the single-threaded sentinel is necessary but NOT
-  * sufficient — BENCH_r09 read calib 221/213 ms (clean) while q76
-  * measured 6.58 s against a 1.82 s exclusive re-run with the same calib
-  * readings. One free core keeps a 1-thread loop fast while competing
-  * load steals the other 31 (or the memory bus). The harness therefore
-  * also runs an ALL-CORES sentinel (`calib_par_*_ms` fields: one
-  * xorshift+strided-store worker per hardware thread, wall-clocked to
-  * the slowest) whose exclusive reference rides in BASELINE.md next to
-  * the single-thread one, plus a `steal_pct` field — hypervisor CPU
-  * steal from /proc/stat deltas across the whole suite window, the one
-  * signal that integrates over the run instead of sampling endpoints
-  * (this host is a VM; steal is invisible to ps/top inside the guest).
-  * BASELINE.md now carries a second decision rule: any per-query delta
-  * > 2x its frozen baseline is adjudicated from a
-  * SPARK_GRAFT_BENCH_ONLY exclusive re-run regardless of what any
-  * sentinel says.
-  *
-  * Round-12 addendum — the harness now runs that adjudication ITSELF:
-  * after the 3-pass suite (and after the suite's own sentinels are
-  * sampled, so they keep describing the suite window), every query
-  * whose suite minimum exceeds 2x its frozen baseline is re-timed — 3
-  * more hygiene-separated runs with an ALL-CORES calib probe per
-  * flagged query (calibParMs, healthy ~225-330 ms: the single-thread
-  * probe reads clean during exactly the multi-core steal the re-run
-  * exists to detect — the r9 lesson) — and the evidence rides in the
-  * contract line as a `readjudicated` map of
-  * [re-run min sec, that query's par-probe ms]. Bursty steal is
-  * gone by the re-run window in the contended-run case (r9 q76, r10
-  * q55, r11 q76/q30 all adjudicated clean this way, manually); a query
-  * whose RE-RUN minimum also exceeds 2x freeze — with a clean probe —
-  * is a genuine regression. Capped at the 10 worst ratios so a
-  * uniformly-contended run can't triple its own wall clock.
+  * Self-adjudication (BASELINE.md's 2x rule): after the suite, and after
+  * its sentinels are sampled, every query whose suite minimum exceeds 2x
+  * its frozen baseline is re-timed 3 more times with an all-cores probe
+  * before it, and the evidence rides in the contract line as a
+  * `readjudicated` map of [re-run min sec, probe ms]. Bursty steal is
+  * usually gone by the re-run; a query whose re-run minimum also exceeds
+  * 2x with a clean probe is a genuine regression. Capped at the 10 worst
+  * ratios so a uniformly contended run cannot triple its own wall clock.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val noGc = sys.env.contains("SPARK_GRAFT_BENCH_NOGC")
-    val diag = sys.env.contains("SPARK_GRAFT_BENCH_DIAG")
-    // SPARK_GRAFT_SHUFFLE (round-17): shuffle width, default = cores.
-    // At the sf100 canary decade a fixed 32-way shuffle puts ~19M rows
-    // in every sort/join partition — past executor memory, so sorts
-    // and hash joins fall off the spill cliff and a plan whose WORK is
-    // measured linear reads super-linear in wall clock. A real cluster
-    // removes this by scaling partition count with data (AQE coalesces
-    // the small stages back down); the deep-scale canary legs do the
-    // same through this knob, so the canary measures the PLAN, not a
-    // fixed-width harness artifact.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -127,28 +80,19 @@ object Bench {
     /** Drop cross-query state so one query can't distort the next
       * measurement (see class doc): cached frames and pinned blocks
       * ([[Frames.sweep]]), then a forced full GC so ContextCleaner
-      * reclaims dead broadcast/shuffle/codegen state instead of letting
-      * it pile onto the next query (see class doc: q55 read 67.2 s in
-      * the harness, 2.16 s standalone). A short pause lets the cleaner
-      * thread drain its reference queue.
+      * reclaims dead broadcast/shuffle/codegen state. A short pause lets
+      * the cleaner thread drain its reference queue.
       */
     def hygiene(): Unit = {
       Frames.sweep(spark)
-      if (!noGc) {
-        System.gc()
-        Thread.sleep(150)
-      }
-    }
-
-    def heapMb: Long = {
-      val r = Runtime.getRuntime
-      (r.totalMemory - r.freeMemory) / (1024 * 1024)
+      System.gc()
+      Thread.sleep(150)
     }
 
     /** Fixed single-threaded xorshift loop, timed — a pure-CPU sentinel
       * whose wall time depends only on host contention/frequency, never
       * on Spark or the queries. Run twice, keep the second (first pays
-      * JIT). See class doc "Host-contention attribution".
+      * JIT). See the class doc's sentinels.
       */
     def calibMs(): Double = {
       def once(): Double = {
@@ -166,29 +110,22 @@ object Bench {
       once(); once()
     }
 
-    /** All-cores contention sentinel (round-10 verdict task 1): BENCH_r09
-      * read calib 221/213 ms — clean — while q76 measured 6.58 s against
-      * a 1.82 s exclusive re-run, i.e. a single-threaded loop CANNOT see
-      * multi-core or memory-bandwidth contention on a 32-core host (one
-      * free core keeps it fast while the other 31 are stolen). This
-      * variant runs one xorshift worker per hardware thread, each also
-      * issuing strided stores into a private 8 MiB buffer (larger than
-      * L2, so the stores reach L3/DRAM and the reading co-varies with
-      * bandwidth pressure), and times the WALL clock until every worker
-      * finishes. Exclusive: wall ≈ the single-thread time (perfect
-      * scaling, modest bandwidth). Contended: descheduled workers and
-      * bandwidth competition inflate it roughly in proportion to the
-      * stolen capacity — exactly the signal the r9 spikes needed. Run
-      * twice, keep the second (first pays JIT + page faults).
+    /** All-cores contention sentinel: one xorshift worker per hardware
+      * thread, each also issuing strided stores into a private 8 MiB
+      * buffer (larger than L2, so the stores reach L3/DRAM and the
+      * reading co-varies with bandwidth pressure), timed by the wall
+      * clock until every worker finishes. Exclusive: wall ≈ the
+      * single-thread time. Contended: descheduled workers and bandwidth
+      * competition inflate it roughly in proportion to the stolen
+      * capacity. Run twice, keep the second (first pays JIT + page
+      * faults).
       */
     val calibParCpus = math.max(2, Runtime.getRuntime.availableProcessors())
     val calibParMask = (1 << 20) - 1 // Array[Long](1<<20) = 8 MiB per worker
-    // worker buffers are allocated ONCE, before any timed region: the
-    // first prototype allocated them inside the sentinel, and the
-    // post-suite reading then paid an old-gen GC for 256 MiB of fresh
-    // allocation on a garbage-heavy heap — a JVM artifact masquerading
-    // as host contention (observed: par_after 383 ms vs par_before 231
-    // on the same otherwise-idle host)
+    // worker buffers are allocated once, before any timed region:
+    // allocated inside the sentinel, the post-suite reading pays an
+    // old-gen GC for the fresh buffers on a garbage-heavy heap and reads
+    // as host contention (par_after 383 ms vs par_before 231 ms, idle host)
     val calibParBufs: Array[Array[Long]] =
       Array.fill(calibParCpus)(new Array[Long](calibParMask + 1))
 
@@ -207,9 +144,8 @@ object Bench {
         // cpu user nice system idle iowait irq softirq steal guest gnice
         // — total sums the first 8 fields only (through steal): the
         // kernel already folds guest/gnice into user/nice, so summing
-        // them again double-counts guest time and UNDERSTATES steal_pct
-        // on a metal host running VMs (round-12 review; nil on this
-        // guest, where the guest columns are 0)
+        // them again double-counts guest time and understates steal_pct
+        // on a host running VMs
         val f = line.trim.split("\\s+").drop(1).map(_.toLong)
         Some((f.lift(7).getOrElse(0L), f.take(8).sum))
       } catch { case _: Throwable => None }
@@ -267,25 +203,16 @@ object Bench {
       catch { case scala.util.control.NonFatal(_) => false }
       val t = (System.nanoTime() - t0) / 1e9
       hygiene()
-      if (diag)
-        println(s"diag $name time=${fmt(t)} heap_after_mb=$heapMb")
       if (ok) t else -1.0
     }
-    // three full passes: report the per-query MINIMUM (the host shows
-    // roaming multi-second stalls unrelated to any query, and first
+    // N full passes (default 3): report the per-query minimum (the host
+    // shows roaming multi-second stalls unrelated to any query, and first
     // executions pay residual JIT — min measures the query, not the
     // noise). Raw per-pass times and the max-min spread go on their own
-    // earlier lines (full logs only) so a future regression is
-    // attributable without a judge re-measurement.
-    // SPARK_GRAFT_BENCH_PASSES (round-17): the deep-scale canary legs
-    // run multi-minute queries where 3 passes would triple an hour-long
-    // exclusive window for little signal — bursty steal matters for
-    // sub-5 s queries, while a 10-minute query integrates over it. The
-    // default stays 3; the contract line is unchanged (minima over
-    // however many passes ran).
-    // named parse failure (r17 ADVICE): a typo'd value must fail with
-    // the env var's name BEFORE the exclusive bench window is spent,
-    // not as a context-free NumberFormatException
+    // earlier lines (full logs only) so a regression is attributable
+    // without a re-measurement. Fewer passes suit multi-minute queries,
+    // which integrate over bursty steal anyway. A bad value fails with
+    // the variable's name before the bench window is spent.
     val nPasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .map { v =>
         scala.util.Try(v.trim.toInt).getOrElse(throw new IllegalArgumentException(
@@ -297,12 +224,10 @@ object Bench {
       val ts = passes.map(_(i)).filter(_ >= 0)
       if (ts.isEmpty) (n, -1.0, -1.0) else (n, ts.min, ts.max - ts.min)
     }
-    // post-suite sentinels BEFORE the re-adjudication window (round-12
-    // review): the contract's calib_after/steal_pct must describe the
-    // SUITE — sampling them after the extra re-runs would dilute the
-    // steal integral and displace the endpoint probe exactly when
-    // queries were flagged (the one case the evidence matters). The
-    // re-adjudication window carries its own per-query probes.
+    // post-suite sentinels before the re-adjudication window: the
+    // contract's calib_after/steal_pct must describe the suite — sampled
+    // after the re-runs they would dilute the steal integral exactly
+    // when queries were flagged. The re-runs carry their own probes.
     val calibAfter = calibMs()
     val calibParAfter = calibParMs()
     // hypervisor steal over the suite window (−1 = unreadable): the
@@ -312,9 +237,8 @@ object Bench {
       (s1, t1v) <- cpuTicks()
       if t1v > t0v
     } yield 100.0 * (s1 - s0) / (t1v - t0v)).getOrElse(-1.0)
-    // frozen per-query baseline (BASELINE.md table) — parsed up front:
-    // both the vs_baseline_sec diff AND the self-adjudication below need
-    // it. Only rows under the bench-baseline marker whose sf matches the
+    // frozen per-query baseline (BASELINE.md table), parsed once: the
+    // vs_baseline_sec diff and the self-adjudication below both need it. Only rows under the bench-baseline marker whose sf matches the
     // run count (a second q-named table must not pollute the map). The
     // marker `bench-baseline:<sf>:cores<N>` also names the core count
     // the table was measured at.
@@ -348,48 +272,27 @@ object Bench {
         }
       } catch { case scala.util.control.NonFatal(_) => (Map.empty, None) }
 
-    // Self-adjudication (round-12, BASELINE.md rule 2 automated): three
-    // consecutive rounds of judge cycles went to exclusively re-running
-    // queries whose driver-run time exceeded 2× freeze and finding host
-    // noise every time (r9 q76, r10 q55, r11 q76/q30 — all clean). The
-    // bursty-steal signature means a spike can land on any query in any
-    // pass with every sentinel clean, so the harness now does what the
-    // adjudication protocol would: after the suite, re-time each >2×
-    // query (3 hygiene-separated runs, a calib probe before each query
-    // so the re-run window's contention state is on record) and ship
-    // the minima as a `readjudicated` map inside the contract line.
-    // Suite numbers stay the honest suite numbers; the re-run minima are
-    // the adjudication evidence — a query whose re-run min ALSO exceeds
-    // 2× freeze is a genuine regression, no judge cycle needed. Capped
-    // at the 10 worst ratios: a uniformly-contended run would otherwise
-    // triple its own wall clock re-proving the same contention.
+    // self-adjudication (class doc): suite numbers stay the suite's own;
+    // the re-run minima are the evidence
     val flaggedAll = results.collect {
       case (k, v, _) if v >= 0 && baseline.get(k).exists(b => b > 0 && v > 2 * b) =>
         (k, v / baseline(k))
     }.sortBy(-_._2)
     val flagged = flaggedAll.take(10).map(_._1)
-    // per-query probe, not one pooled minimum (round-12 review): a
-    // burst that lands on ONE flagged query's re-run window must be
-    // visible next to that query's minimum, or a contaminated re-run
-    // reads as a genuine regression under rule 5
-    // the probe is the ALL-CORES calibration, not the single-threaded
-    // one (round-12 review): the class doc's own r9 post-mortem shows
-    // one free core keeps a 1-thread loop fast while competing load
-    // steals the other 31 — a single-thread probe would read clean
-    // during exactly the contention the re-run exists to detect, and
-    // rule 5 would then self-certify host noise as a plan regression
+    // one probe per query, not one pooled reading: a burst on one
+    // flagged query's re-run must show next to that query's minimum.
+    // The all-cores probe, since a single-thread one reads clean during
+    // exactly the contention the re-run exists to detect
     val readj: Seq[(String, Double, Double)] = flagged.map { n =>
       val probe = calibParMs()
       val ts = (1 to 3).map(_ => timed(n)).filter(_ >= 0)
       (n, if (ts.isEmpty) -1.0 else ts.min, probe)
     }
-    // The driver keeps only the LAST ~2000 chars of output, so the
+    // The driver keeps only the last ~2000 chars of output, so the
     // contract line must be compact and must be the final thing printed;
     // the per-pass raw times and max-min spread diagnostics go on their
-    // own earlier lines (full logs only, 3-decimal). At 67 queries the
-    // full-name 3-decimal line measured 1,842 chars — uncomfortably close
-    // to the window — so the contract line uses centisecond values and
-    // the sf basename (~1,760 chars, room for ~8 more queries).
+    // own earlier lines (full logs only, 3-decimal). The contract line
+    // uses centisecond values and the sf basename.
     def fmt2(v: Double) = String.format(Locale.ROOT, "%.2f", v: java.lang.Double)
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt2(v) }
       .mkString("{", ",", "}")
@@ -400,19 +303,12 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val sfName = new java.io.File(sfDir).getName
-    // the sentinels ride INSIDE the final JSON line — the driver keeps
-    // only the last ~2000 chars, and a standalone calib_ms line printed
-    // earlier is exactly what got truncated out of BENCH_r07 when it
-    // was needed most (round-7 verdict finding #1). Decision rule
-    // (BASELINE.md): calib ≫ ~1.5× the ~220 ms exclusive reference ⇒
-    // the run was contended; deltas indict the host. Sampled up by the
-    // suite's end, before the re-adjudication window (round-12).
-    // re-adjudication evidence rides INSIDE the contract line like the
-    // sentinels (anything printed earlier risks the driver's ~2000-char
-    // tail); omitted entirely when nothing tripped the 2× rule, so the
-    // common case pays zero characters. Each entry = [re-run minimum
-    // sec, that query's own calib probe ms] so a contaminated re-run
-    // window is visible per query.
+    // the sentinels and the re-adjudication evidence ride inside the
+    // final JSON line: anything printed earlier can fall out of the
+    // driver's ~2000-char tail. Decision rule (BASELINE.md): calib well
+    // over ~1.5x the ~220 ms exclusive reference means the run was
+    // contended. `readjudicated` is omitted when nothing tripped the 2x
+    // rule; each entry is [re-run minimum sec, that query's probe ms].
     val readjStr =
       if (readj.isEmpty) ""
       else {
@@ -427,10 +323,9 @@ object Bench {
       s""""baseline_cores":$c,""" +
         (if (c.toString != cpus) "\"baseline_comparable\":false," else "")
     }
-    // the parsed table sum rides in the contract line (round-16 verdict
-    // task 6: BASELINE.md's prose once drifted 4% from its rows — every
-    // future total-vs-freeze ratio gets its denominator from the same
-    // parse the per-query diffs use, unambiguous and self-updating)
+    // the parsed table sum rides in the contract line, so a
+    // total-vs-freeze ratio takes its denominator from the same parse
+    // as the per-query diffs, not from prose
     val baseSumStr =
       if (baseline.isEmpty) ""
       else s""""baseline_table_sum":${fmt(baseline.values.sum)},""" + baseCoresStr
@@ -449,9 +344,9 @@ object Bench {
     // the driver's tail cut the front of the JSON off
     val line = {
       val full = contract(qs)
-      // qNN prefixes must be UNIQUE or the fallback would emit duplicate
-      // JSON keys that json.loads silently last-wins (round-14 review;
-      // the registry dup-check covers full names only)
+      // qNN prefixes must be unique or the fallback would emit duplicate
+      // JSON keys that json.loads silently last-wins (the registry
+      // dup-check covers full names only)
       val prefixes = results.map(_._1.takeWhile(_ != '_'))
       require(prefixes.distinct.size == prefixes.size,
         s"duplicate qNN prefixes: ${prefixes.diff(prefixes.distinct).distinct.mkString(",")}")
@@ -460,19 +355,17 @@ object Bench {
         val short = contract(results.map { case (k, v, _) =>
           "\"" + k.takeWhile(_ != '_') + "\":" + fmt2(v)
         }.mkString("{", ",", "}"))
-        // the fallback must be length-checked too (round-14 review: at
-        // 100 queries it is the ALWAYS-taken path, and a contended run's
-        // readjudicated entries could push it past the driver tail) —
-        // as the last resort drop the readjudicated detail, whose full
-        // data already rode the pass_times/spread lines
+        // the fallback is length-checked too (at 100+ queries it is the
+        // path always taken, and readjudicated entries can push it past
+        // the driver tail): drop the readjudicated detail, whose data
+        // already rode the pass_times/spread lines
         if (short.length <= 1950) short
         else {
           val dropped = short.replaceFirst("\"readjudicated\":\\{[^}]*\\},",
             "\"readjudicated_dropped_for_length\":true,")
-          // the regex can miss (nothing to drop, or an unexpected shape)
-          // and the dropped line is itself unchecked: re-verify once and
-          // fall back to a minimal ALWAYS-valid line rather than let the
-          // driver tail truncate mid-JSON (round-14 ADVICE)
+          // the regex can miss (nothing to drop, or an unexpected shape):
+          // re-verify once and fall back to a minimal always-valid line
+          // rather than let the driver tail truncate mid-JSON
           if (dropped.length <= 1950) dropped
           else s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
             s""""queries":{},"truncated":true,"sf":"$sfName"}"""
@@ -481,17 +374,14 @@ object Bench {
     }
     println(s"""{"metric":"pass_times","queries":$raw}""")
     println(s"""{"metric":"spread_max_minus_min","queries":$spreads}""")
-    // kept for grep-compat with earlier rounds' logs; the same values
-    // now also ride inside the final contract line (see above)
+    // the same values also ride inside the final contract line
     println(s"""{"metric":"calib_ms","before":${fmt(calibBefore)},""" +
       s""""after":${fmt(calibAfter)},""" +
       s""""par_before":${fmt(calibParBefore)},""" +
       s""""par_after":${fmt(calibParAfter)}}""")
-    // regression attribution: diff against the frozen per-query baseline
-    // (BASELINE.md table, round-6 verdict task 6; parsed once, up front —
-    // the self-adjudication pass uses the same map). Only at the
-    // baseline's own SF — the hoisted parse already returns empty on a
-    // scale mismatch.
+    // regression attribution: diff against the frozen per-query baseline,
+    // only at the baseline's own SF (the parse returns empty on a scale
+    // mismatch)
     if (baseline.nonEmpty) {
       val deltas = results.collect {
         case (k, v, _) if v >= 0 && baseline.contains(k) =>

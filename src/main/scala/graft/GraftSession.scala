@@ -21,12 +21,13 @@ object GraftSession {
 
   /** Fully-qualified class of Spark's RocksDB state store provider.
     * The default (HDFSBackedStateStoreProvider) keeps every state row on
-    * the executor HEAP — fine for tests, a memory wall for production
-    * streams whose live state (sessions, dedup fingerprints inside the
-    * watermark horizon) exceeds executor memory. RocksDB spills state to
-    * local disk with an off-heap block cache, which is the 100 TB
-    * posture; StreamsSpec pins that graft's streaming operators behave
-    * identically (results AND watermark eviction) on both providers.
+    * the executor heap; RocksDB spills state to local disk with an
+    * off-heap block cache, for streams whose live state (sessions, dedup
+    * fingerprints inside the watermark horizon) exceeds executor memory.
+    * Select it with
+    * `builder().config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)`.
+    * StreamsSpec pins that graft's streaming operators behave identically
+    * (results and watermark eviction) on both providers.
     */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -34,9 +35,8 @@ object GraftSession {
   def builder(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
-      appName: String = "graft",
-      rocksdbStateStore: Boolean = false): SparkSession.Builder = {
-    val b = SparkSession.builder()
+      appName: String = "graft"): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -46,10 +46,6 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", 128L * 1024 * 1024)
       .config("spark.sql.session.timeZone", "UTC")
       .withExtensions(new graft.plans.GraftExtensions)
-    if (rocksdbStateStore)
-      b.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    else b
-  }
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

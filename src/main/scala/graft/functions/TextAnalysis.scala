@@ -25,7 +25,7 @@ object TextAnalysis {
 
   /** One pass over a word array ([[graft.plans.HashExpr.wordStats]]):
     * the occurrences of each lexicon's words, in [[Lexicons]] order, then
-    * the total character count (null when an element is null).
+    * the total character count, a null element counted as an empty word.
     */
   private def wordStats(ws: Column): Column =
     GraftBridge.column(WordStatsExpr(GraftBridge.expression(ws), Lexicons.map(_._2)))
@@ -93,7 +93,7 @@ object TextAnalysis {
     val denom = s"GREATEST($n, 1.0)"
     val stop = scoreSql(ws, Lexicons.head._2)
     val meanLen = s"CAST(list_reduce(list_prepend(0::BIGINT, " +
-      s"list_transform($ws, w -> length(w)::BIGINT)), (a, b) -> a + b) AS DOUBLE) / $denom"
+      s"list_transform($ws, w -> coalesce(length(w), 0)::BIGINT)), (a, b) -> a + b) AS DOUBLE) / $denom"
     // parens mirror the Column tree exactly: Spark computes
     // 0.3 * (stop / denom); the unparenthesized SQL would left-associate
     // to (0.3 * stop) / denom — 1 ULP apart, which flips floor(q * 1e6)

@@ -389,52 +389,42 @@ object IngestQc {
     */
   def sampleMetrics(spark: SparkSession, cfg: Config,
       restrictTo: Option[DataFrame] = None): DataFrame = {
-    // incremental scan discipline, the extractFeatures precedent
-    // (round-12 review): without the restriction every scheduled run
-    // re-parsed the whole archive's .adc AND .hdr once more here on
-    // top of the extractFeatures/hdrPositions scans. `restrictTo`
-    // (binsToPsd in run()) prunes the FILE LIST — O(new bins) — via
-    // the same cheap driver-side listing binIndex already does; note
-    // hdrPositions' full scan stays by design (positions cover the
-    // whole metadata spine).
-    def paths(ext: String): Option[Seq[String]] = restrictTo.map { samples =>
+    // `restrictTo` (binsToPsd in run()) prunes the file list to the new
+    // bins, so a scheduled run reads O(new bins) of .adc and .hdr: one
+    // key collect, one listing of the raw dir, split by extension.
+    // hdrPositions' full scan stays by design (positions cover the whole
+    // metadata spine).
+    val restricted: Option[Map[String, Seq[String]]] = restrictTo.map { samples =>
       val keep = samples.select(col("sample").cast("string"))
         .distinct().collect().map(_.getString(0)).toSet
       val re = HdrSource.SampleIdPattern.r
-      graft.sources.FileIndex.list(spark, cfg.rawDir, s"*.$ext")
+      graft.sources.FileIndex.list(spark, cfg.rawDir, "*.{adc,hdr}")
         .select("path").collect().map(_.getString(0))
         .filter(p => re.findFirstMatchIn(p).exists(m => keep(m.group(1))))
-        .sorted.toSeq
+        .sorted.toSeq.groupBy(p => p.substring(p.lastIndexOf('.') + 1))
     }
-    val adcPaths = paths("adc")
-    val hdrPaths = paths("hdr")
-    val triggers =
-      if (adcPaths.exists(_.isEmpty))
-        spark.createDataFrame(
+    /** `read` over the restricted `ext` files, or over the whole archive
+      * glob; an empty frame of `ddl` when the restriction holds none.
+      */
+    def readExt(ext: String, ddl: String)(read: Seq[String] => DataFrame): DataFrame =
+      restricted match {
+        case None => read(Seq(s"${cfg.rawDir}/*.$ext"))
+        case Some(byExt) => byExt.get(ext).map(read).getOrElse(spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "sample STRING, trigger_count BIGINT"))
-      else
-        adcPaths.fold(RoiSource.readAdc(spark, s"${cfg.rawDir}/*.adc"))(
-            ps => RoiSource.readAdc(spark, ps))
-          .groupBy(col("sample")).agg(count(lit(1)).as("trigger_count"))
-    val hdr =
-      if (hdrPaths.exists(_.isEmpty))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "sample STRING, ml_analyzed DOUBLE, humidity DOUBLE"))
-      else
-        hdrPaths.fold(HdrSource.read(spark, s"${cfg.rawDir}/*.hdr",
-            stringKeys = Nil,
-            numericKeys = Seq("runTime", "inhibitTime", "humidity")))(
-            ps => HdrSource.read(spark, ps,
-              stringKeys = Nil,
-              numericKeys = Seq("runTime", "inhibitTime", "humidity")))
-          .select(col("sample"),
-            (lit(0.25) * (col("runTime") - coalesce(col("inhibitTime"), lit(0.0)))
-              / 60.0).as("ml_analyzed"),
-            col("humidity"))
+          org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+      }
+    val triggers = readExt("adc", "sample STRING, trigger_count BIGINT") { ps =>
+      RoiSource.readAdc(spark, ps)
+        .groupBy(col("sample")).agg(count(lit(1)).as("trigger_count"))
+    }
+    val hdr = readExt("hdr", "sample STRING, ml_analyzed DOUBLE, humidity DOUBLE") { ps =>
+      HdrSource.read(spark, ps, stringKeys = Nil,
+          numericKeys = Seq("runTime", "inhibitTime", "humidity"))
+        .select(col("sample"),
+          (lit(0.25) * (col("runTime") - coalesce(col("inhibitTime"), lit(0.0)))
+            / 60.0).as("ml_analyzed"),
+          col("humidity"))
+    }
     triggers.join(hdr, Seq("sample"), "full_outer")
   }
 

@@ -309,9 +309,12 @@ object Dedup {
     * hitting it throws rather than silently under-merging. The default
     * `freeRounds = 2` fits near-dup graphs, whose components are mostly
     * a handful of re-uploads: fixpoint lands by round 2-3, and each
-    * blind round costs two joins, a shuffle and a pin, against one small join for a check (`graft.tools.
-    * Probe cc` at sf0.1: 1.44-1.84 s per invocation versus 2.88-6.16 s
-    * with six blind rounds, identical labels).
+    * blind round costs two joins, a shuffle and a pin, against one
+    * small join for a check (at sf0.1: 1.44-1.84 s per invocation
+    * versus 2.88-6.16 s with six blind rounds, identical labels; the
+    * measurement is in OPTIMIZATION_r19.md §2, taken with the `cc`
+    * probe main last held at commit bf19849, and DupClusterSpec pins
+    * equal labels across schedules).
     *
     * The distributed branch's wall time is high-variance even on an idle
     * host (per-round pins make it disk- and

@@ -84,17 +84,15 @@ object HashExpr {
 
   /** One pass over a word array: the hit count of each lexicon of
     * `lex`, in order, then the total character count. A null element
-    * is no lexicon hit and makes the character count null, as in the
-    * `filter`/`aggregate` compositions this replaces.
+    * counts as an empty word: no lexicon hit and no characters, as
+    * `size` already counts it as a word.
     */
   def wordStats(ws: ArrayData, lex: LexiconTable): ArrayData = {
     val out = new Array[Long](lex.size + 1)
-    var sawNull = false
     val n = ws.numElements()
     var i = 0
     while (i < n) {
-      if (ws.isNullAt(i)) sawNull = true
-      else {
+      if (!ws.isNullAt(i)) {
         val w = ws.getUTF8String(i)
         out(lex.size) += w.numChars
         val hits = lex.hits(w)
@@ -103,9 +101,7 @@ object HashExpr {
       }
       i += 1
     }
-    val res = UnsafeArrayData.fromPrimitiveArray(out)
-    if (sawNull) res.setNullAt(lex.size)
-    res
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** [[stringPoly]] over each element of an array<string>. */
@@ -314,13 +310,12 @@ case class WordsExpr(child: Expression) extends UnaryExpression with Serializabl
 }
 
 /** Per-lexicon hit counts plus the character count of an array<string>
-  * ([[HashExpr.wordStats]]): `lexicons.length + 1` longs, the last one
-  * null when the array holds a null element.
+  * ([[HashExpr.wordStats]]): `lexicons.length + 1` longs, a null
+  * element counted as an empty word.
   */
 case class WordStatsExpr(child: Expression, lexicons: Seq[Seq[String]])
   extends UnaryExpression with Serializable {
-  override def dataType: DataType = ArrayType(LongType,
-    containsNull = child.dataType.asInstanceOf[ArrayType].containsNull)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   @transient private lazy val table = new LexiconTable(lexicons)
   override protected def nullSafeEval(input: Any): Any =
     HashExpr.wordStats(input.asInstanceOf[ArrayData], table)

@@ -1659,8 +1659,9 @@ object TrainingData {
   /** The deep tier's measured co-location CAPACITY floor vs the
     * two-level tier it replaces at [[Ivf.DeepMinK]]: the ratio of true
     * tau-close pairs each partition co-locates (the pairs its SemDeDup
-    * can drop). Measured 112/113 = 0.9912 at sf1 (`graft.tools.Probe
-    * recall112`) — the extra approximation level costs ~1% of the
+    * can drop). Measured 112/113 = 0.9912 at sf1 (BENCH_SCALING.md,
+    * "The deep tier's semantic price"; the `recall112` probe main last
+    * held at commit bf19849) — the extra approximation level costs ~1% of the
     * shallower tier's reachable drop mass. NOT a pair-wise
     * intersection: at a loose tau the co-located pairs are borderline
     * pairs near cell boundaries, and two equally-good partitions

@@ -233,7 +233,8 @@ class FunctionsSpec extends SparkSpec {
     def words(t: Column): Column = filter(split(lower(t), Hashing.WsClass), w => w =!= "")
     def hits(ws: Column, lex: Seq[String]): Column =
       size(filter(ws, w => lex.map(l => w === l).reduce(_ || _)))
-    def chars(ws: Column): Column = aggregate(ws, lit(0L), (acc, w) => acc + length(w))
+    def chars(ws: Column): Column =
+      aggregate(ws, lit(0L), (acc, w) => acc + coalesce(length(w), lit(0)))
     def langId(ws: Column): Column = {
       val packed = TextAnalysis.Lexicons.zipWithIndex.map { case ((lang, lex), i) =>
         struct(hits(ws, lex).as("s"), lit(-i).as("ni"), lit(lang).as("lang"))
@@ -317,7 +318,7 @@ class FunctionsSpec extends SparkSpec {
         Ref.qualityScore(Ref.words($"t")))): _*)
   }
 
-  test("word stats on arrays with null elements: no hit and a null length sum") {
+  test("word stats on arrays with null elements: no hit, an empty word") {
     val arrays: Seq[Seq[String]] = Seq(Seq("the", null, "a"), Seq(null), Seq(), null,
       Seq("der", "der", null, "的"), Seq("de", "la", "de"), Seq("", "the"), Seq("\uD835\uDD38", "µ"))
     val df = spark.createDataFrame(java.util.Arrays.asList(arrays.map(Row(_)): _*),
@@ -329,13 +330,17 @@ class FunctionsSpec extends SparkSpec {
       ("chars", element_at(wordStats($"ws"), TextAnalysis.Lexicons.size + 1), Ref.chars($"ws")),
       ("langId", TextAnalysis.langId($"ws"), Ref.langId($"ws")),
       ("qualityScore", TextAnalysis.qualityScore($"ws"), Ref.qualityScore($"ws"))): _*)
-    // a null length sum leaves qualityScore non-null: `least` skips a
-    // null argument, so the mean-length term saturates on both paths
+    // a null element is an empty word: it adds no characters, so the
+    // mean-length term of ["the", null, "a"] is (3 + 0 + 1) / 3, not a
+    // null that `least` would skip and saturate at its full 0.3
     val got = df.select(
       element_at(wordStats($"ws"), TextAnalysis.Lexicons.size + 1),
       TextAnalysis.qualityScore($"ws")).collect().toSeq
-    assert(got.map(r => Option(r.get(0))).take(3) == Seq(None, None, Some(0L)), got.toString)
-    assert(got(0).getDouble(1) == 0.4 * (3 / 50.0) + 0.3 * (2 / 3.0) + 0.3, got.toString)
+    assert(got.map(r => Option(r.get(0))).take(4) == Seq(Some(4L), Some(0L), Some(0L), None),
+      got.toString)
+    val q = got(0).getDouble(1)
+    assert(q == 0.4 * (3 / 50.0) + 0.3 * (2 / 3.0) + 0.3 * (4 / 3.0 / 8.0), got.toString)
+    assert(math.abs(q - 0.274) < 1e-12, got.toString)
   }
 
   test("haversine: zero distance, known city pair, symmetry") {

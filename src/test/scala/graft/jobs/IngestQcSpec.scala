@@ -192,6 +192,23 @@ class IngestQcSpec extends SparkSpec {
     assert(viaJob == expected && viaJob.nonEmpty)
   }
 
+  test("restricted sampleMetrics: one key collect, same rows as the full read") {
+    val keys = Seq(BinA, BinNoHdr, PhantomBL).toDF("sample")
+    val (_, oneCollect, _) = sparkWork(
+      keys.select(col("sample").cast("string")).distinct().collect())
+    assert(oneCollect >= 1)
+    val (restricted, jobs, _) = sparkWork(
+      IngestQc.sampleMetrics(spark, cfg, restrictTo = Some(keys)))
+    assert(jobs == oneCollect,
+      s"building the restricted metrics ran $jobs jobs; one key collect runs $oneCollect")
+    // BinA has .adc and .hdr, BinNoHdr only .adc, PhantomBL no file
+    val full = IngestQc.sampleMetrics(spark, cfg)
+      .filter(col("sample").isin(BinA, BinNoHdr, PhantomBL))
+    assert(restricted.collect().toSet == full.collect().toSet)
+    assert(restricted.select("sample", "trigger_count").as[(String, Long)].collect().toMap ==
+      Map(BinA -> 2L, BinNoHdr -> 1L))
+  }
+
   test("runIncremental is idempotent: second run appends nothing") {
     val out = Files.createTempDirectory("ingestout").toString
     IngestQc.runIncremental(spark, cfg, blacklist, cruises, ferrybox, baltic, out)

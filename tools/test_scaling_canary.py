@@ -1,14 +1,15 @@
 #!/usr/bin/env python3
-"""Self-test for the scaling-canary adjudication tools (round-17).
+"""Self-test for scaling_canary.py's flags.
 
-Synthetic three-decade fixtures drive scaling_trend.py / scaling_report.py
-through every adjudication path: super-linear fail, bounded MITIGATED
-demotion (within / beyond the measured envelope), missing-control
-robustness, at-the-line annotation, and the round-17 RISING trajectory
-rule (flags unannotated doubling, passes adjudicated doubling, ignores
-small-ratio amortization noise under RISING_FLOOR).
+Synthetic fixtures drive the one-decade (`report`) and many-decade
+(`trend`) tables through every flag: super-linear fail, the bounded
+mitigated flag (within / beyond the measured envelope), a missing
+control, the at-the-line annotation, the rising rule (flags unannotated
+doubling, passes adjudicated doubling, ignores small-ratio amortization
+noise under RISING_FLOOR), the asymptotic envelope, failed or missing
+queries, the solo-JVM merge, and the recorded negative control.
 
-Run: python3 tools/test_scaling_tools.py   (prints OK, exit 0)
+Run: python3 tools/test_scaling_canary.py   (prints OK, exit 0)
 """
 import contextlib
 import io
@@ -18,9 +19,7 @@ import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-import scaling_notes  # noqa: E402
-import scaling_trend  # noqa: E402
-import scaling_report  # noqa: E402
+import scaling_canary  # noqa: E402
 
 Q52 = "q52_dedup_clusters"
 Q105 = "q105_dedup_clusters_capped"
@@ -36,25 +35,23 @@ def mk(d, name, times):
     return p
 
 
+def run(argv):
+    """(exit_code, stdout) of the scaling_canary command line."""
+    out = io.StringIO()
+    try:
+        with contextlib.redirect_stdout(out):
+            scaling_canary.main(argv)
+        return 0, out.getvalue()
+    except SystemExit as e:
+        return 1 if e.code else 0, out.getvalue() + str(e.code)
+
+
 def run_trend(paths):
-    """(exit_code, stdout) of scaling_trend.main on the fixture files."""
-    out = io.StringIO()
-    try:
-        with contextlib.redirect_stdout(out):
-            scaling_trend.main(paths)
-        return 0, out.getvalue()
-    except SystemExit as e:
-        return 1 if e.code else 0, out.getvalue() + str(e.code)
+    return run(["trend"] + paths)
 
 
-def run_report(a, b):
-    out = io.StringIO()
-    try:
-        with contextlib.redirect_stdout(out):
-            scaling_report.main(a, b)
-        return 0, out.getvalue()
-    except SystemExit as e:
-        return 1 if e.code else 0, out.getvalue() + str(e.code)
+def run_report(a, b, *labels):
+    return run(["report", a, b, *labels])
 
 
 def main():
@@ -79,7 +76,7 @@ def main():
         rc, out = run_trend(chain("a", {
             Q52: [1.0, 9.0, 108.0], Q105: [1.0, 7.0, 49.0],
             "q00_filler": filler}))
-        check("mitigated within envelope passes", rc == 0 and "MITIGATED" in out, out)
+        check("mitigated within envelope passes", rc == 0 and "mitigated" in out, out)
 
         # 2. Beyond envelope (30x) fails even with a linear control.
         rc, out = run_trend(chain("b", {
@@ -108,8 +105,8 @@ def main():
             "q00_riser": [1.0, 2.5, 17.5],  # ratios 2.5 -> 7.0 (2.8x growth)
             "q01_filler": filler}))
         check("unannotated rising flags", rc == 1 and "RISING" in out, out)
-        # ...an adjudicated riser passes (q73 carries the r17 annotation)...
-        assert "q73_shark_delivery" in scaling_notes.RISING_EXPECTED
+        # ...an adjudicated riser passes (q73 carries an annotation)...
+        assert "q73_shark_delivery" in scaling_canary.RISING_EXPECTED
         rc, out = run_trend(chain("g", {
             "q73_shark_delivery": [1.0, 2.5, 17.5], "q01_filler": filler}))
         check("adjudicated rising passes", rc == 0 and "adjudicated" in out, out)
@@ -120,10 +117,10 @@ def main():
             "q01_filler": filler}))
         check("sub-floor rising stays silent", rc == 0 and "RISING" not in out, out)
 
-        # 5b. Bounded asymptotic envelope (round-17): a >10 reading
-        # inside SUPERLINEAR_EXPECTED's bound passes with the
+        # 5b. Bounded asymptotic envelope: a >10 reading inside
+        # SUPERLINEAR_EXPECTED's bound passes with the
         # "expected (asymptotic)" tag; beyond the bound it fails.
-        assert "q73_shark_delivery" in scaling_notes.SUPERLINEAR_EXPECTED
+        assert "q73_shark_delivery" in scaling_canary.SUPERLINEAR_EXPECTED
         rc, out = run_trend(chain("i", {
             "q73_shark_delivery": [1.0, 8.0, 144.0],  # last decade 18 <= 20
             "q01_filler": filler}))
@@ -135,7 +132,7 @@ def main():
         check("asymptotic beyond bound fails",
               rc == 1 and "SUPER-LINEAR" in out, out)
 
-        # 6. scaling_report single-decade: bounded demotion both ways.
+        # 6. one-decade table: bounded demotion both ways.
         a = mk(d, "r0.json", {Q52: 9.0, Q105: 7.0})
         b_in = mk(d, "r1.json", {Q52: 108.0, Q105: 49.0})
         b_out = mk(d, "r2.json", {Q52: 270.0, Q105: 49.0})
@@ -150,10 +147,7 @@ def main():
               rc == 0 and "asymptotic" in out, out)
 
         # 7. A query that FAILS at the deeper SF must surface as a
-        # scaling failure, not silently drop from the adjudication
-        # (r17 ADVICE: the canary's exit-code contract was bypassed by
-        # the worst-case failure mode — a query that cannot complete at
-        # sf100 at all vanished from report and trend).
+        # scaling failure, not silently drop from the tables.
         a3 = mk(d, "m0.json", {"q00_dies": 5.0, "q01_filler": 8.0})
         b3 = mk(d, "m1.json", {"q01_filler": 40.0})  # q00_dies absent
         rc, out = run_report(a3, b3)
@@ -178,8 +172,7 @@ def main():
 
         # 7b. No shared names at all (every query failed/missing on one
         # side): the SUPER-LINEAR rows are the verdict — no misleading
-        # "no query names shared" abort — and absent cells print '-'
-        # (r18 ADVICE).
+        # "no query names shared" abort — and absent cells print '-'.
         a4 = mk(d, "n0.json", {"q00_dies": 5.0})
         b4 = mk(d, "n1.json", {"q01_other": 40.0})
         rc, out = run_report(a4, b4)
@@ -190,7 +183,6 @@ def main():
         # 8. run_bench_solo records a dying per-query JVM in `failed`
         # (monkeypatched run_bench: one query succeeds, one dies before
         # writing any contract line).
-        import scaling_canary
 
         def fake_run_bench(sf_dir, only, out_path, passes=None,
                            extra_env=None):
@@ -199,9 +191,8 @@ def main():
                     pass  # bench opened its file, JVM died before output
                 raise SystemExit("bench failed (fake)")
             # full-style key (prefix + suffix), like the real Bench's
-            # pass_times — r18 ADVICE: a short-name fake masked the
-            # prefix-vs-full-name mismatch in run_bench_solo's
-            # failed-list membership test
+            # pass_times: a short-name fake would mask a prefix-vs-full-
+            # name mismatch in run_bench_solo's failed-list test
             with open(out_path, "w") as f:
                 f.write(json.dumps({"metric": "pass_times",
                                     "queries": {only + "_full": [1.5]}}) + "\n")
@@ -220,6 +211,20 @@ def main():
         check("run_bench_solo records the dead query",
               solo.get("failed") == ["q00_dies"]
               and "q01_filler_full" in solo["queries"], str(solo))
+
+        # 9. The recorded negative control (BENCH_SCALING.md, "Negative
+        # control"): with scaledK broken to a constant, one decade read
+        # q45 0.68 -> 4.86 s and q91 1.18 -> 17.52 s. q91 must flag and
+        # the command must fail.
+        rc, out = run_report(
+            mk(d, "neg0.json", {"q45_embedding_neardup": 0.68,
+                                "q91_semdedup": 1.18}),
+            mk(d, "neg1.json", {"q45_embedding_neardup": 4.86,
+                                "q91_semdedup": 17.52}),
+            "sf0.1", "sf1")
+        check("negative control: q91 flags SUPER-LINEAR and the tool fails",
+              rc == 1 and "| q91_semdedup | 1.180 | 17.520 | 14.85 | SUPER-LINEAR |" in out
+              and "super-linear queries: ['q91_semdedup']" in out, out)
 
     bad = [n for n, c in checks if not c]
     if bad:
