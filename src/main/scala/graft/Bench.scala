@@ -1,8 +1,12 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main (driver contract): times every registered query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -13,15 +17,18 @@ import org.apache.spark.sql.SparkSession
   *    exists to produce);
   *  - one un-timed warmup query first: the first job in a fresh JVM pays
   *    10-20 s of classloading/JIT that has nothing to do with any query;
-  *  - shuffle partitions = cores, AQE coalesces further;
-  *  - hygiene between timed regions: a suite of codegen-heavy queries in
-  *    one JVM accumulates state that ContextCleaner reclaims only after
-  *    the owning references are garbage-collected (broadcast blocks in
-  *    the memory store, shuffle files, codegen classloaders). With an
-  *    8 GiB heap the old generation may never be collected, and late
-  *    queries then run 10-30x slow (q55 measured 67.2 s in the suite,
-  *    2.16 s standalone). So between queries graft's frames are swept
-  *    and a full GC lets the cleaner drain; that cost is never timed.
+  *  - the session is [[GraftSession.builder]]'s, as in perfbench:
+  *    shuffle partitions = cores, AQE coalesces further;
+  *  - hygiene between timed regions: a suite of queries in one JVM
+  *    accumulates state that ContextCleaner reclaims only after the
+  *    owning references are garbage-collected (broadcast blocks in the
+  *    memory store, shuffle files). With an 8 GiB heap the old
+  *    generation may never be collected, and late queries then run
+  *    10-30x slow (q55 measured 67.2 s in the suite, 2.16 s standalone).
+  *    So between queries graft's frames are swept and a full GC lets the
+  *    cleaner drain; that cost is never timed. Generated classes stay
+  *    cached: the codegen cache holds the whole suite, so a second pass
+  *    compiles about nothing (the `codegen` line counts each pass).
   *
   * Knobs (env vars, the driver sets none):
   *  - SPARK_GRAFT_BENCH_ONLY=q55,q76_...     run a subset (full names or
@@ -60,10 +67,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -77,11 +81,8 @@ object Bench {
     // the driver's strict json.loads rejects.
     def fmt(v: Double) = String.format(Locale.ROOT, "%.3f", v: java.lang.Double)
 
-    /** Drop cross-query state so one query can't distort the next
-      * measurement (see class doc): cached frames and pinned blocks
-      * ([[Frames.sweep]]), then a forced full GC so ContextCleaner
-      * reclaims dead broadcast/shuffle/codegen state. A short pause lets
-      * the cleaner thread drain its reference queue.
+    /** The class doc's hygiene: [[Frames.sweep]], a full GC, and a
+      * short pause for the cleaner thread to drain its reference queue.
       */
     def hygiene(): Unit = {
       Frames.sweep(spark)
@@ -130,10 +131,8 @@ object Bench {
       Array.fill(calibParCpus)(new Array[Long](calibParMask + 1))
 
     /** (steal_ticks, total_ticks) from the aggregate cpu line of
-      * /proc/stat — on a VM, steal is hypervisor CPU theft, the one
-      * contention source no in-guest process listing can show. Sampled
-      * before and after the suite; the delta ratio goes in the contract
-      * line as steal_pct. None on non-Linux / unreadable proc.
+      * /proc/stat, for the class doc's steal_pct. None on non-Linux /
+      * unreadable proc.
       */
     def cpuTicks(): Option[(Long, Long)] =
       try {
@@ -189,11 +188,9 @@ object Bench {
     val calibBefore = calibMs()
     val calibParBefore = calibParMs()
     val ticksBefore = cpuTicks()
-    // warmup, untimed — tolerated on failure like timed() tolerates it
-    // (-1.0): an unguarded throw here would abort the whole bench with
-    // no contract JSON line for the driver's tail window to keep.
-    // NonFatal only: an OOM/LinkageError here means a corrupted JVM
-    // whose timed numbers would be plausible-looking fiction.
+    // warmup, untimed, tolerated on failure like timed(): a throw here
+    // would abort the bench with no contract line. NonFatal only: after
+    // an OOM/LinkageError the timed numbers would be plausible fiction.
     try run(names.head) catch { case scala.util.control.NonFatal(_) => () }
     hygiene()
 
@@ -205,21 +202,27 @@ object Bench {
       hygiene()
       if (ok) t else -1.0
     }
-    // N full passes (default 3): report the per-query minimum (the host
-    // shows roaming multi-second stalls unrelated to any query, and first
-    // executions pay residual JIT — min measures the query, not the
-    // noise). Raw per-pass times and the max-min spread go on their own
-    // earlier lines (full logs only) so a regression is attributable
-    // without a re-measurement. Fewer passes suit multi-minute queries,
-    // which integrate over bursty steal anyway. A bad value fails with
-    // the variable's name before the bench window is spent.
+    // N full passes: the per-query minimum measures the query, not the
+    // host's roaming stalls or residual JIT; raw per-pass times and the
+    // max-min spread go on earlier lines. A bad value fails with the
+    // variable's name before the bench window is spent.
     val nPasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .map { v =>
         scala.util.Try(v.trim.toInt).getOrElse(throw new IllegalArgumentException(
           s"SPARK_GRAFT_BENCH_PASSES must be an integer, got '$v'"))
       }.getOrElse(3)
     require(nPasses >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1: $nPasses")
-    val passes = Seq.fill(nPasses)(names.map(n => timed(n)))
+    // Janino compiles and their ns: a thrashing codegen cache compiles
+    // in every pass, not only the first
+    def compiles() = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val (passes, passCompiles) = Seq.fill(nPasses) {
+      val (n0, ns0) = compiles()
+      val times = names.map(n => timed(n))
+      val (n1, ns1) = compiles()
+      (times, (n1 - n0, (ns1 - ns0) / 1e6))
+    }.unzip
+    val metaspaceMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").fold(-1.0)(_.getUsage.getUsed / 1048576.0)
     val results = names.zipWithIndex.map { case (n, i) =>
       val ts = passes.map(_(i)).filter(_ >= 0)
       if (ts.isEmpty) (n, -1.0, -1.0) else (n, ts.min, ts.max - ts.min)
@@ -237,11 +240,9 @@ object Bench {
       (s1, t1v) <- cpuTicks()
       if t1v > t0v
     } yield 100.0 * (s1 - s0) / (t1v - t0v)).getOrElse(-1.0)
-    // frozen per-query baseline (BASELINE.md table), parsed once: the
-    // vs_baseline_sec diff and the self-adjudication below both need it. Only rows under the bench-baseline marker whose sf matches the
-    // run count (a second q-named table must not pollute the map). The
-    // marker `bench-baseline:<sf>:cores<N>` also names the core count
-    // the table was measured at.
+    // frozen per-query baseline: only the rows under the
+    // `bench-baseline:<sf>:cores<N>` marker, and only when its sf matches
+    // the run; the marker also names the table's core count
     val basePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BASELINE.md")
     val (baseline, baseCores): (Map[String, Double], Option[Int]) =
       if (basePath == "off" || basePath == "0") (Map.empty, None)
@@ -272,27 +273,22 @@ object Bench {
         }
       } catch { case scala.util.control.NonFatal(_) => (Map.empty, None) }
 
-    // self-adjudication (class doc): suite numbers stay the suite's own;
-    // the re-run minima are the evidence
+    // self-adjudication (class doc)
     val flaggedAll = results.collect {
       case (k, v, _) if v >= 0 && baseline.get(k).exists(b => b > 0 && v > 2 * b) =>
         (k, v / baseline(k))
     }.sortBy(-_._2)
     val flagged = flaggedAll.take(10).map(_._1)
-    // one probe per query, not one pooled reading: a burst on one
-    // flagged query's re-run must show next to that query's minimum.
-    // The all-cores probe, since a single-thread one reads clean during
-    // exactly the contention the re-run exists to detect
+    // one all-cores probe per query: a burst must show next to the
+    // query it hit, and a single-thread probe reads clean under it
     val readj: Seq[(String, Double, Double)] = flagged.map { n =>
       val probe = calibParMs()
       val ts = (1 to 3).map(_ => timed(n)).filter(_ >= 0)
       (n, if (ts.isEmpty) -1.0 else ts.min, probe)
     }
     // The driver keeps only the last ~2000 chars of output, so the
-    // contract line must be compact and must be the final thing printed;
-    // the per-pass raw times and max-min spread diagnostics go on their
-    // own earlier lines (full logs only, 3-decimal). The contract line
-    // uses centisecond values and the sf basename.
+    // contract line is printed last, with centisecond values and the sf
+    // basename; diagnostics go on earlier lines.
     def fmt2(v: Double) = String.format(Locale.ROOT, "%.2f", v: java.lang.Double)
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt2(v) }
       .mkString("{", ",", "}")
@@ -304,11 +300,9 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val sfName = new java.io.File(sfDir).getName
     // the sentinels and the re-adjudication evidence ride inside the
-    // final JSON line: anything printed earlier can fall out of the
-    // driver's ~2000-char tail. Decision rule (BASELINE.md): calib well
-    // over ~1.5x the ~220 ms exclusive reference means the run was
-    // contended. `readjudicated` is omitted when nothing tripped the 2x
-    // rule; each entry is [re-run minimum sec, that query's probe ms].
+    // contract line (BASELINE.md: calib over ~1.5x the ~220 ms exclusive
+    // reference means the run was contended); each `readjudicated` entry
+    // is [re-run minimum sec, that query's probe ms].
     val readjStr =
       if (readj.isEmpty) ""
       else {
@@ -374,6 +368,10 @@ object Bench {
     }
     println(s"""{"metric":"pass_times","queries":$raw}""")
     println(s"""{"metric":"spread_max_minus_min","queries":$spreads}""")
+    println(s"""{"metric":"codegen",""" +
+      s""""compiles":${passCompiles.map(_._1).mkString("[", ",", "]")},""" +
+      s""""compile_ms":${passCompiles.map(c => fmt(c._2)).mkString("[", ",", "]")},""" +
+      s""""metaspace_mb":${fmt(metaspaceMb)}}""")
     // the same values also ride inside the final contract line
     println(s"""{"metric":"calib_ms","before":${fmt(calibBefore)},""" +
       s""""after":${fmt(calibAfter)},""" +

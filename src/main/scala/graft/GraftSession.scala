@@ -15,7 +15,15 @@ import org.apache.spark.sql.SparkSession
   *  - 128 MB file split targets keep scan tasks uniform over 100 TB
   *    (the parquet default, stated explicitly as a contract);
   *  - graft's native SQL functions (haversine_km) registered via
-  *    [[graft.plans.GraftExtensions]].
+  *    [[graft.plans.GraftExtensions]];
+  *  - a codegen cache of 2048 generated classes, not Spark's 100: the
+  *    cache is an LRU over 4 segments, and one smaller than a session's
+  *    working set recompiles and cold-loads classes on every query.
+  *    perfbench's 11-query `query_mix` needs 157 classes (at 100
+  *    entries, 13 recompiles and ~140 ms of Janino per query), its
+  *    `ifcb_feed` about 270, and all 112 queries about 1356. The size is a static conf, read once per JVM at the
+  *    first generated class: [[getOrCreate]] on an existing context
+  *    cannot change it, and a caller's `.config` still overrides it.
   */
 object GraftSession {
 
@@ -45,6 +53,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", 128L * 1024 * 1024)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", 2048L)
       .withExtensions(new graft.plans.GraftExtensions)
 
   def getOrCreate(): SparkSession = {

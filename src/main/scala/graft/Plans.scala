@@ -3,14 +3,13 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Plan dumper (optimization-round instrumentation, guide §1/§7.2):
-  * writes `explain("formatted")` for every registered query to
-  * `<outDir>/<query>_<suffix>.txt` so plan shapes (Exchange count, join
-  * strategy, PushedFilters/ReadSchema, WholeStageCodegen spans) can be
-  * diffed before/after a change without re-running the bench.
+/** Plan dumper: writes `explain("formatted")` for every registered
+  * query to `<outDir>/<query>_<suffix>.txt` so plan shapes (Exchange
+  * count, join strategy, PushedFilters/ReadSchema, WholeStageCodegen
+  * spans) can be diffed before/after a change without re-running the
+  * bench.
   *
   * Usage: sbt "runMain graft.Plans <outDir> <suffix>"
   * Env:  SPARK_GRAFT_SF_DIR (default sf0.01 — plans are shape-stable
@@ -18,9 +17,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *       what is being pinned), SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ONLY
   *       (same prefix filter as Bench).
   *
-  * Note: with AQE on this is the initial plan (isFinalPlan=false); the
-  * judge-checkable artifacts are Exchange placement, join strategy and
-  * scan pushdown, all of which are decided here.
+  * Note: with AQE on this is the initial plan (isFinalPlan=false); what
+  * it pins is Exchange placement, join strategy and scan pushdown, all
+  * of which are decided here.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -28,10 +27,7 @@ object Plans {
     val suffix = args.lift(1).getOrElse("before")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

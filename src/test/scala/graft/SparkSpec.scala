@@ -54,11 +54,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
+  /** Built by [[GraftSession.builder]], so the specs run with the
+    * settings Bench and perfbench run with.
+    */
+  lazy val session: SparkSession = GraftSession.builder("local[4]", 4, "graft-test")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
