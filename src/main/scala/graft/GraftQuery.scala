@@ -59,12 +59,14 @@ object GraftQuery {
     * (not a map) so a stopped session's object graph isn't pinned for
     * the JVM's life in a bench/test loop.
     *
-    * `close` runs on the value a (session, dir) switch REPLACES. A memo
-    * whose values own cached frames or scratch dirs (an
+    * `close` runs on the value a (session, dir) switch REPLACES, before
+    * its successor trains. A memo whose values own cached frames (an
     * [[graft.operators.Ivf.Codebook]]) passes `close = _.release()`, or
-    * every SF/dir switch within a JVM leaks them. The last value is
-    * never closed: its frames go with the session, its scratch dirs
-    * with the JVM ([[graft.Frames.scratchDir]]).
+    * every SF/dir switch within a JVM leaks them. Closing first matters:
+    * two codebooks trained on the same data are the same k local rows,
+    * which Spark caches as ONE entry, so releasing the replaced one
+    * after its twin was cached would uncache the twin. The last value
+    * is never closed: its frames go with the session.
     * Values for plain driver-side artifacts need no close — the GC
     * owns them — so it defaults to a no-op. Single-threaded use is the
     * contract (Verify/Bench run queries sequentially): under a
@@ -82,9 +84,9 @@ object GraftQuery {
       val cur = slot.get()
       if (cur != null && cur._1 == key) cur._2
       else {
+        if (cur != null && slot.compareAndSet(cur, null)) close(cur._2)
         val v = train(s, d)
-        val prev = slot.getAndSet((key, v))
-        if (prev != null && prev._1 != key) close(prev._2)
+        slot.set((key, v))
         v
       }
     }

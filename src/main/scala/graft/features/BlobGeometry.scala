@@ -67,16 +67,6 @@ object BlobGeometry {
     (perimeter, area + perimeter / 2)
   }
 
-  /** Max pairwise distance between hull vertices (blob_geometry.py:181). */
-  def feretDiameter(hull: Array[(Double, Double)]): Double = {
-    var m = 0.0
-    for (i <- hull.indices; j <- (i + 1) until hull.length) {
-      val dy = hull(i)._1 - hull(j)._1; val dx = hull(i)._2 - hull(j)._2
-      m = math.max(m, math.sqrt(dy * dy + dx * dx))
-    }
-    m
-  }
-
   /** Min/max rotating-projection Feret diameters over 360 one-degree
     * angles with the |cos|+|sin| pixel-width adjustment
     * (blob_geometry.py:197-208).

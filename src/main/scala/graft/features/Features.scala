@@ -1,6 +1,6 @@
 package graft.features
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** The slim per-ROI feature contract of the reference pipeline
   * (`ifcb-features/extract_slim_features.py:16-47`,
@@ -287,14 +287,5 @@ object Features {
       (base.schema("slim").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
         .fieldNames.map(f => col(s"slim.$f").as(f)) ++
         ExtendedFeatures.keys.map(k => element_at(col("ext"), k).as(k))): _*)
-  }
-
-  /** Convenience: run [[extract]] over RoiSource-shaped frames. */
-  def extractFrom(spark: SparkSession, df: DataFrame,
-                  idCol: String, imgCol: String, hCol: String, wCol: String): DataFrame = {
-    import spark.implicits._
-    extract(df.select(
-      df(idCol).cast("long"), df(imgCol), df(hCol).cast("int"), df(wCol).cast("int"))
-      .as[(Long, Array[Byte], Int, Int)])
   }
 }

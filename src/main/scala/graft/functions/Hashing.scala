@@ -35,7 +35,6 @@ object Hashing {
     (11L, 67L), (13L, 79L), (17L, 97L), (19L, 113L))
   /** Knuth multiplicative mixer for SimHash bit material. */
   val Mix = 2654435761L
-  val SimBits = 32
   /** Second 32-bit mixer (xxhash prime 2) — supplies the high 32 bits of
     * the 64-bit SimHash; two 32-bit products keep every intermediate
     * below 2⁶³ so DuckDB can mirror the math without BIGINT overflow.
@@ -135,13 +134,6 @@ object Hashing {
     */
   def simhash(th: Column): Column =
     GraftBridge.column(SimHash32Expr(GraftBridge.expression(th), Mix))
-
-  def simhashSql(th: String): String =
-    (0 until SimBits).map { j =>
-      s"(CASE WHEN CAST(list_sum(list_transform($th, h -> " +
-        s"CASE WHEN ((h * $Mix) % 4294967296 >> $j) & 1 = 1 THEN 1 ELSE -1 END)) AS BIGINT) > 0 " +
-        s"THEN ${1L << j} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
 
   /** SimHash-64 of a token-hash array: bits 0-31 from the [[Mix]]ed hash,
     * bits 32-63 from the [[Mix2]]ed hash. 64 bits make 16-bit LSH bands

@@ -218,10 +218,11 @@ object SharkExport {
     auto.unionByName(manual.select(auto.columns.map(col): _*))
   }
 
-  /** Synthetic-table instantiation (driver smoke): lineitem as ROI grain,
-    * orders as the sample dim, a deterministic flag table.
+  /** Synthetic-table instantiation of [[delivery]], shared by q73 and
+    * [[runOnSynthetic]]: lineitem as ROI grain, orders as the sample dim,
+    * a deterministic flag table.
     */
-  def runOnSynthetic(spark: SparkSession, dir: String, out: String): DataFrame = {
+  def synthetic(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val li = graft.Tables.lineitem(spark, dir)
     val or = graft.Tables.orders(spark, dir)
@@ -240,10 +241,15 @@ object SharkExport {
     // stand-in for the (instrument, year) run grain: synthetic sample ids
     // have no instrument, so partition on the id prefix — distributed
     // window, never a global single-task sort
-    val out0 = delivery(roi, dim, flags, removeFlagged = Seq("beads"),
+    delivery(roi, dim, flags, removeFlagged = Seq("beads"),
         adjacencyPartition = substring($"sample", 1, 3))
       .drop("MYEAR") // synthetic sample ids carry no timestamp
-    Sinks.deliveryTsv(out0, out)
-    out0
+  }
+
+  /** [[synthetic]] written as a TSV delivery (driver smoke). */
+  def runOnSynthetic(spark: SparkSession, dir: String, out: String): DataFrame = {
+    val df = synthetic(spark, dir)
+    Sinks.deliveryTsv(df, out)
+    df
   }
 }

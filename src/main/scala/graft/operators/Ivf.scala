@@ -5,25 +5,28 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Hierarchical IVF codebook, two or three levels deep — the scale fix
-  * for the flat trainers' two O(k·d) driver/plan terms: at SemDeDup's
-  * corpus-scaled k = n/250, a FLAT codebook costs O(pool·k·d) driver
-  * work to seed ([[Similarity.trainKmeansCentroidsFull]]) and ships
-  * every centroid into the plan (a multi-GB literal at ~1e9 docs).
+  * for the flat trainers' O(k·d) seeding and per-row terms: at
+  * SemDeDup's corpus-scaled k = n/250, a FLAT codebook costs
+  * O(pool·k·d) driver work to seed
+  * ([[Similarity.trainKmeansCentroidsFull]]) and O(k·d) distance work
+  * per row, with every centroid a literal of the assign kernel.
   *
   * Structure: ⌈k^(1/depth)⌉ coarse centroids trained DISTRIBUTED
   * ([[KMeans.lloyd]] via [[Similarity.trainKmeansCentroidsFull]] —
   * driver seeding cost O(pool·k^(1/depth)·d)), then one or two deeper
-  * levels, each trained distributed over per-parent bounded samples.
-  * Every deeper level lives as a (coarse, cell, c) DataFrame keyed by
-  * its parent cell — it never reaches the driver and never enters a
-  * plan literal:
+  * levels, each trained by the same [[KMeans.lloyd]] loop over
+  * per-parent bounded samples, one parent per cell of the level above.
+  * Every deeper level is plain data: a cached (coarse, cell, c) frame
+  * of at most k local rows keyed by its parent cell, joined at
+  * assignment time and never a plan literal of the assign kernel:
   *
   *   - TRAIN: one corpus pass assigns coarse cells (the coarse plan
   *     literals, the [[graft.plans.NearestCentroid]] kernel), one
   *     window pass takes a deterministic hash-ordered sample per
   *     parent cell, and each Lloyd round of a level is a bounded-sample
-  *     join + ONE (parent, cell, dim) partial-aggregated shuffle. Driver
-  *     state per round: zero rows (the codebook stays distributed).
+  *     broadcast join + ONE (parent, cell, dim) partial-aggregated
+  *     shuffle whose k·d sums the driver folds into the next centroids.
+  *     An evicted level re-reads its k local rows; it never retrains.
   *   - ASSIGN: corpus rows get their coarse cell map-side, then join
   *     each level's (parent → candidates) frame in turn — AQE
   *     broadcasts it while it fits, and falls back to an equi-shuffle
@@ -44,8 +47,7 @@ import org.apache.spark.sql.functions._
   * integer domain, so cells are bit-reproducible across
   * engines/partitionings/retries and a DuckDB oracle can hash-match the
   * assignment exactly (the codebook renders as literal BIGINT rows at
-  * oracle time — collecting it is an oracle-/test-scale affordance,
-  * [[collectLevel]], never part of the operator's own data path).
+  * oracle time, through [[collectLevel]]).
   *
   * Incremental maintenance: because assignment is a pure per-row
   * function of (vector, codebook), a frozen codebook assigns a NEW
@@ -69,33 +71,28 @@ object Ivf {
     *
     * @param coarse coarse centroids (float domain — the
     *               [[Similarity.cellAssign]] literals)
-    * @param levels the DISTRIBUTED deeper levels, coarse-most first:
-    *               each a (coarse: int, cell: int, c: array<long> in the
-    *               quantized domain) frame whose `coarse` is a cell id of
-    *               the level above and whose `cell` is a global id
-    *               `parent · per + rank` — sparse but bounded
-    * @param snapshot the scratch dir a [[durable]] codebook was loaded
-    *               from; [[release]] deletes it. None for a trained
-    *               codebook and for one [[load]]ed from an index dir,
-    *               which the codebook does not own.
+    * @param levels the deeper levels, coarse-most first: each a cached
+    *               frame of at most k (coarse: int, cell: int, c:
+    *               array<long> in the quantized domain) rows whose
+    *               `coarse` is a cell id of the level above and whose
+    *               `cell` is a global id `parent · per + rank` — sparse
+    *               but bounded. A trained level holds local rows and a
+    *               [[load]]ed one a parquet scan, so an evicted level is
+    *               re-read, never retrained.
     */
   final case class Codebook(coarse: Array[Array[Double]],
-      levels: Seq[DataFrame], snapshot: Option[String] = None) {
+      levels: Seq[DataFrame]) {
     require(levels.size == 1 || levels.size == 2,
       s"an IVF codebook has 2 or 3 levels, got ${levels.size + 1}")
     def dims: Int = coarse(0).length
     def depth: Int = levels.size + 1
     /** The leaf level — the cells [[assign]] and [[probeCells]] emit. */
     def fine: DataFrame = levels.last
-    /** Releases the cached levels and deletes the [[snapshot]] dir — the
-      * owner calls this when the index is retired (e.g. replaced after
-      * a drift retrain). Safe even if blocks were already evicted:
-      * lineage is intact.
+    /** Releases the cached levels — the owner calls this when the
+      * index is retired (e.g. replaced after a drift retrain). Safe
+      * even if blocks were already evicted.
       */
-    def release(): Unit = {
-      graft.Frames.release(levels: _*)
-      snapshot.foreach(graft.Frames.dropScratch(fine.sparkSession, _))
-    }
+    def release(): Unit = graft.Frames.release(levels: _*)
   }
 
   /** The codegen'd argmin over a joined candidate column (exact
@@ -156,9 +153,9 @@ object Ivf {
     * Deterministic end-to-end: the coarse level inherits
     * [[Similarity.trainKmeansCentroidsFull]]'s seeded determinism; the
     * deeper levels sample by (xxhash64(id), id) rank — a data-only
-    * total order — and run integer-exact Lloyd ([[lloydPerParent]]).
-    * Rows whose vector length differs from the coarse dims influence
-    * no deeper level.
+    * total order — and run integer-exact [[KMeans.lloyd]] seeded with
+    * each parent's first `per` sample rows. Rows whose vector length
+    * differs from the coarse dims influence no deeper level.
     *
     * @param idCol row-unique integral id (sampling diversity under
     *              duplicate-heavy corpora — the flat trainers' rule).
@@ -173,10 +170,7 @@ object Ivf {
     Similarity.integralIdType(corpus, idCol)
     require(k >= 1, s"ivf train requires k >= 1, got $k")
     require(depth == 2 || depth == 3, s"ivf depth must be 2 or 3, got $depth")
-    // perCellSampleMax bounds per-(parent,cell) Long sums well inside
-    // double-exact floored division (s <= m·2^24 < 2^53)
-    require(perCellSampleMax >= 1 && perCellSampleMax <= (1 << 26),
-      s"perCellSampleMax out of range: $perCellSampleMax")
+    require(perCellSampleMax >= 1, s"perCellSampleMax out of range: $perCellSampleMax")
     val kc = math.max(1, math.ceil(root(k.toDouble, depth)).toInt)
     val coarse = Similarity.trainKmeansCentroidsFull(
       corpus, vec, kc, itersCoarse, idCol = Some(idCol))
@@ -189,31 +183,26 @@ object Ivf {
           .orderBy(xxhash64(col("__id")), col("__id"))))
         .filter(col("__rank") <= perCellSampleMax)
 
+    val spark = corpus.sparkSession
+    import spark.implicits._
     graft.Frames.scoped { s =>
       var sampled = s.cache(ranked(
         corpus
-          // a vector whose length differs from the coarse dims must not
-          // become a SEED: one ragged candidate in a cell's list nulls
-          // the kernel for every row of that cell (the corrupt-to-NULL
-          // contract), killing the whole cell's training
+          // a ragged vector would take a sample slot of its cell, and
+          // as a seed it would fail the level's Lloyd loop
           .filter(size(col(vec)) === coarse(0).length)
           .select(col(idCol).as("__id"),
             Similarity.cellAssign(col(vec), coarse).as("__parent"),
             KMeans.quantize(col(vec)).as("__xq"))))
       val levels = (1 until depth).map { i =>
-        // materialize each (≤ k-row) level ONCE while its sample cache
-        // is live, as a cached frame with intact lineage — not a pin: a
-        // truncated-lineage block evicted between a build and a later
-        // oracle render dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
-        // while a cached frame recomputes (every stage here is
-        // deterministic, so the recompute is bit-identical)
-        val level = s.keep(lloydPerParent(
-            sampled.select(col("__parent"), col("__rank"), col("__xq")),
-            per, itersLevel)
-          .select(col("__parent").cast("int").as("coarse"),
-            (col("__parent") * per + col("__sub")).cast("int").as("cell"),
-            col("c")))
-        level.count()
+        val seeds = sampled.filter(col("__rank") <= per)
+          .select(col("__parent"), col("__rank"), col("__xq"))
+          .as[(Int, Int, Seq[Long])].collect()
+          .groupBy(_._1).map { case (p, rows) => p -> rows.sortBy(_._2).map(_._3).toSeq }
+        val cents = KMeans.lloyd(sampled, col("__parent"), col("__xq"), seeds, itersLevel)
+        val level = s.keep(cents.toSeq.flatMap { case (p, cs) =>
+            cs.zipWithIndex.map { case (c, sub) => (p, p * per + sub, c) }
+          }.toDF("coarse", "cell", "c"))
         if (i < depth - 1) sampled = s.cache(ranked(
           sampled.join(candsOf(level, "__cands", "__cb_parent"),
               col("__parent") === col("__cb_parent"))
@@ -225,57 +214,6 @@ object Ivf {
       }
       Codebook(coarse, levels)
     }
-  }
-
-  /** The bounded-sample integer Lloyd loop every distributed level
-    * trains with. Input: (__parent, __rank, __xq) rows, `__rank` the
-    * per-parent deterministic hash order. Output: (__parent, __sub:
-    * int, c) — up to `kPer` centroids per parent, densely re-ranked;
-    * empty cells absent. Deterministic end-to-end (seeds = each
-    * parent's first `kPer` sample rows, integer-exact Lloyd with
-    * (distance, cell) tie-breaks, floored-division updates).
-    */
-  private def lloydPerParent(
-      sampled: DataFrame, kPer: Int, iters: Int): DataFrame = {
-    var cents = sampled.filter(col("__rank") <= kPer)
-      .select(col("__parent"),
-        (col("__rank") - 1).cast("int").as("__sub"), col("__xq").as("c"))
-    for (_ <- 0 until iters) {
-      val cands = cents.groupBy("__parent")
-        .agg(sort_array(collect_list(struct(col("__sub"), col("c"))))
-          .as("__cands"))
-      // assignment in its OWN projection below the explode — fused,
-      // ExtractGenerator hoists the kernel above the Generate and it
-      // re-runs once per exploded dimension (the q99/KMeans.lloyd
-      // 64× trap)
-      val assigned = sampled.join(cands, Seq("__parent"))
-        .select(col("__parent"),
-          nearestCandidate(col("__xq"), col("__cands")).as("__sub"),
-          col("__xq"))
-        .filter(col("__sub").isNotNull)
-      val upd = assigned
-        .select(col("__parent"), col("__sub"),
-          posexplode(col("__xq")).as(Seq("dim", "v")))
-        .groupBy("__parent", "__sub", "dim")
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
-      // exact floored division (the KMeans.lloyd update in Column
-      // form): s − pmod(s, n) is an exact multiple of n and both fit
-      // double exactly under the sample bound, so `/` is exact
-      cents = upd
-        .groupBy("__parent", "__sub")
-        .agg(sort_array(collect_list(struct(col("dim"), col("s"), col("n"))))
-          .as("__dims"))
-        .select(col("__parent"), col("__sub"),
-          transform(col("__dims"), x =>
-            ((x.getField("s") - pmod(x.getField("s"), x.getField("n")))
-              / x.getField("n")).cast("long")).as("c"))
-        // empty cells are absent; survivors re-rank densely per
-        // parent cell in old-id order (the lloyd/lloydSql dense_rank)
-        .withColumn("__sub",
-          (row_number().over(
-            Window.partitionBy("__parent").orderBy("__sub")) - 1).cast("int"))
-    }
-    cents
   }
 
   /** Assigns every row its global leaf cell: map-side coarse assignment
@@ -549,44 +487,10 @@ object Ivf {
       levelDirs(depth).map(n => graft.Frames.cache(spark.read.parquet(s"$dir/$n"))))
   }
 
-  /** Re-materializes a freshly trained codebook from a parquet snapshot
-    * in a [[graft.Frames.scratchDir]] ([[save]]/[[load]] — a lossless
-    * integer-domain round trip; [[collectLevel]] sorts, so row order is
-    * immaterial to every consumer), releases the trained frames, and
-    * returns the loaded codebook, which owns the snapshot.
-    *
-    * Why: a sweep between queries clears the SQL cache, and a trained
-    * level is a cached frame with lineage — evicted, it silently
-    * re-runs the sampled-Lloyd chain (window ranks, collect_list
-    * rounds, posexplode rollups) inside every query that joins it. An
-    * evicted snapshot level re-reads k rows of integers in the scan
-    * that read its cache, with no extra stage. Model state only, never
-    * a result cache: every query still computes assignment, search and
-    * dedup from its inputs.
-    *
-    * On failure the dir is deleted, once the failed write's tasks have
-    * ended, and `cb` released before the error propagates.
-    */
-  def durable(cb: Codebook): Codebook = {
-    val spark = cb.fine.sparkSession
-    val dir = graft.Frames.scratchDir(spark, "graft-cb")
-    try {
-      graft.Frames.settling(spark)(save(cb, dir))
-      cb.release()
-      load(spark, dir).copy(snapshot = Some(dir))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        cb.release()
-        graft.Frames.dropScratch(spark, dir)
-        throw e
-    }
-  }
-
   // --- oracle-scale affordances ---------------------------------------------
 
-  /** Collects one distributed codebook level — ORACLE/TEST SCALE ONLY
-    * (the operator itself never collects it; at production k this is
-    * the O(k·d) pull the design exists to avoid).
+  /** One codebook level's rows, sorted by (coarse, cell) — what the
+    * oracles render and the tests compare.
     */
   def collectLevel(level: DataFrame): Seq[(Int, Int, Seq[Long])] =
     level.select(col("coarse"), col("cell"), col("c"))

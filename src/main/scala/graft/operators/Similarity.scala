@@ -43,12 +43,12 @@ object Similarity {
     * NaN): oracles must apply this on both query and candidate sides
     * or a zero vector's 0/0 = NaN cosine — which DuckDB sorts GREATEST
     * — would rank it the #1 neighbor of everything while Spark
-    * excludes it. The NOT isnan half (round-12 review): BOTH engines
+    * excludes it. The NOT isnan half: BOTH engines
     * evaluate `NaN > 0.0` as TRUE (NaN-greatest comparison), so a
     * vector with one NaN COMPONENT sailed through the zero-norm gate
     * on both sides and its NaN cosine satisfied every threshold —
     * silently agreeing wrong, which the hash gate cannot catch. The
-    * NOT isinf half (round-13 review): an Inf COMPONENT gives an Inf
+    * NOT isinf half: an Inf COMPONENT gives an Inf
     * norm that passes both earlier halves, and its cosine is NaN
     * (Inf/Inf) — ranked LAST by the Spark aggregator but FIRST by the
     * oracle's NaN-greatest ORDER BY, a latent engine divergence; the
@@ -77,8 +77,8 @@ object Similarity {
     // component) routes to the zero branch like a zero vector: the
     // engines otherwise DIVERGE on floor(NaN) — Spark converts NaN→0
     // inside floor while DuckDB keeps NaN and its CAST AS INTEGER aborts
-    // the query (the KMeans.quantize clamp-before-floor class,
-    // round-12 ADVICE). Callers' norm gates already exclude such
+    // the query (the KMeans.quantize clamp-before-floor class).
+    // Callers' norm gates already exclude such
     // vectors from ranking; this keeps the quantizer itself total and
     // engine-identical.
     when(maxabs === 0.0 || isnan(maxabs) || maxabs === lit(Double.PositiveInfinity),
@@ -109,7 +109,7 @@ object Similarity {
       lit(0L), (acc, v) => acc + v)
 
   /** SQL twin of [[intDot]] (sum order irrelevant — integers are
-    * exact). NULL-propagating reduce, not list_sum (round-12 review):
+    * exact). NULL-propagating reduce, not list_sum:
     * list_sum SKIPS null elements, so unequal-length arrays — which
     * zip_with NULL-pads and the Spark side therefore nulls — would
     * yield a plausible finite truncated dot in the oracle only.
@@ -135,9 +135,9 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int): DataFrame = {
-    require(k >= 1, s"top-k requires k >= 1, got $k") // round-12 review:
     // k = 0 would crash executors inside TopKNeighbors.insert
     // (`b.last` on an empty buffer) instead of failing loudly here
+    require(k >= 1, s"top-k requires k >= 1, got $k")
     val idType = integralIdType(corpus, cId)
     val c = corpus
       .select(col(cId), quantizeInt8(col(cVec)).as("__cq"))
@@ -181,7 +181,7 @@ object Similarity {
     // key sortBy used previously, so results are bit-identical
     private val ord: Ordering[Neighbor] = Ordering.by(n => (-n.cosine, n.id))
     private def insert(b: List[Neighbor], a: Neighbor): List[Neighbor] =
-      // hot-path early reject (round-11 review): a candidate no better
+      // hot-path early reject: a candidate no better
       // than the current k-th costs one comparison, not a full O(k log k)
       // re-sort + allocation — the common case once the buffer fills
       if (b.lengthCompare(k) >= 0 && ord.gteq(a, b.last)) b
@@ -204,9 +204,8 @@ object Similarity {
 
   /** The id-keyed operators work in long; require an integral id up
     * front so a string/decimal id fails loudly instead of silently
-    * nulling through `cast("long")`. Shared with [[Dedup.dupClusters]]
-    * (round-12: the whitelist was duplicated there and the two copies
-    * could drift).
+    * nulling through `cast("long")`. Shared with [[Dedup.dupClusters]],
+    * so the whitelist has one copy that cannot drift.
     */
   private[graft] def integralIdType(
       df: DataFrame, idCol: String): org.apache.spark.sql.types.DataType = {
@@ -220,9 +219,8 @@ object Similarity {
   }
 
   /** The degenerate-norm exclusion gate, single-sourced (the Column twin
-    * of [[nonZeroNormSql]]; round-14 review: three hand-copies had
-    * already drifted twice historically — round-12 added the NaN
-    * clause, round-13 the Inf clause).
+    * of [[nonZeroNormSql]]): hand-copies drifted twice, once each time
+    * a clause (NaN, then Inf) was added.
     */
   private[operators] def finiteNorm(n: Column): Column =
     n > 0.0 && !isnan(n) && n =!= Double.PositiveInfinity
@@ -252,8 +250,7 @@ object Similarity {
     * zero-norm vectors are excluded from BOTH sides — their cosine is
     * 0/0 = NaN, which would otherwise surface as ranked NaN "neighbors"
     * whenever a query has fewer than k finite candidates (the
-    * [[quantizedTopK]] rule, now applied to the exact paths too —
-    * round-11 review). The `qId =!= cId` self-pair exclusion assumes
+    * [[quantizedTopK]] rule, applied to the exact paths too). The `qId =!= cId` self-pair exclusion assumes
     * queries and corpus share ONE id space (the queries frame is a
     * subset of the corpus, as every in-repo caller does); with
     * unrelated id sequences a corpus row numerically colliding with a
@@ -264,9 +261,7 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int): DataFrame = {
-    require(k >= 1, s"top-k requires k >= 1, got $k") // round-12 review:
-    // k = 0 would crash executors inside TopKNeighbors.insert
-    // (`b.last` on an empty buffer) instead of failing loudly here
+    require(k >= 1, s"top-k requires k >= 1, got $k") // see quantizedTopK
     val idType = integralIdType(corpus, cId)
     val q = queries.withColumn("__qn", sqrt(dot(col(qVec), col(qVec))))
       .filter(finiteNorm(col("__qn")))
@@ -277,7 +272,7 @@ object Similarity {
       // a cross-pair dim mismatch makes the dot (hence cosine) NULL even
       // when both norms pass their own gates; the ranking aggregate's
       // non-nullable Double input would kill the job on it — exclude the
-      // pair like every other degenerate (round-14 review)
+      // pair like every other degenerate
       .filter(col("cosine").isNotNull)
       .withColumn("__cid", col(cId).cast("long"))
     rankTopK(joined, qId, k, idType)
@@ -294,9 +289,7 @@ object Similarity {
       qId: String, qVec: String, qCell: String,
       cId: String, cVec: String, cCell: String,
       k: Int): DataFrame = {
-    require(k >= 1, s"top-k requires k >= 1, got $k") // round-12 review:
-    // k = 0 would crash executors inside TopKNeighbors.insert
-    // (`b.last` on an empty buffer) instead of failing loudly here
+    require(k >= 1, s"top-k requires k >= 1, got $k") // see quantizedTopK
     val idType = integralIdType(corpus, cId)
     // zero-norm exclusion + shared-id-space contract: see bruteForceTopK
     val q = queries.withColumn("__qn", sqrt(dot(col(qVec), col(qVec))))
@@ -332,37 +325,26 @@ object Similarity {
   }
 
   /** Driver-trained k-means centroids for IVF cells: Lloyd iterations on
-    * a bounded sample collected to the driver (deterministic — fixed seed,
-    * fixed iteration count), centroids broadcast back as literals. At
-    * 100 TB the sample bound keeps driver memory flat; executors only
-    * evaluate argmin-distance over k centroid literals (native dot).
-    *
-    * @return column assigning each vector its nearest-centroid cell id
-    */
-  def kmeansCellAssign(
-      corpus: DataFrame, vec: String, k: Int,
-      iters: Int = 10, sampleMax: Int = 10000,
-      idCol: Option[String] = None): Column =
-    cellAssign(col(vec),
-      trainKmeansCentroids(corpus, vec, k, iters, sampleMax, idCol))
-
-  /** The trained centroids themselves — callers that need BOTH the
-    * corpus assignment and query probe lists must train once and share
-    * (two trainings are deterministic-identical here, but double work).
+    * a bounded sample collected to the driver (deterministic — fixed
+    * sample, fixed iteration count), returned for [[cellAssign]] /
+    * [[probeCells]] literals. At 100 TB the sample bound keeps driver
+    * memory flat; executors only evaluate argmin-distance over k
+    * centroid literals (native dot). Callers that need both the corpus
+    * assignment and query probe lists train once and share.
     */
   def trainKmeansCentroids(
       corpus: DataFrame, vec: String, k: Int,
       iters: Int = 10, sampleMax: Int = 10000,
       idCol: Option[String] = None): Array[Array[Double]] = {
-    require(k >= 1, s"k-means requires k >= 1, got $k") // round-13 review:
-    // k = 0 otherwise dies deep in the Lloyd loop with a raw AIOOBE
+    // k = 0 would otherwise die deep in the Lloyd loop with a raw AIOOBE
+    require(k >= 1, s"k-means requires k >= 1, got $k")
     // Hash-ordered top-k, NOT a bare limit() and NOT a seeded sample():
     // limit pulls from the first partitions (a partition-ordered corpus
     // would train on a biased slice), and Dataset.sample seeds its
     // Bernoulli sampler PER PARTITION — the same corpus under a
     // different file split yielded a different sample, different
     // centroids, different neighbors, contradicting the determinism
-    // contract (round-12 review). sort(hash).limit compiles to
+    // contract. sort(hash).limit compiles to
     // TakeOrderedAndProject: one scan with an O(sampleMax) heap per
     // partition, no shuffle, and the selected set depends only on the
     // data — hash order is uncorrelated with layout, so the cut is
@@ -380,10 +362,9 @@ object Similarity {
       .collect()
       .map(_.getSeq[Float](0).toArray.map(_.toDouble))
       // non-finite vectors are excluded like every ranking path's norm
-      // gate (round-14 review: one NaN component assigned to cell 0,
-      // made centroid 0 all-NaN after one iteration and silently left
-      // k-1 effective clusters; the distributed twin clamps via
-      // KMeans.quantize)
+      // gate: one NaN component assigned to cell 0 would make centroid 0
+      // all-NaN after one iteration and silently leave k-1 effective
+      // clusters (the distributed twin clamps via KMeans.quantize)
       .filter(_.forall(java.lang.Double.isFinite))
     require(sample.nonEmpty, "empty corpus (or all vectors non-finite)")
     val dims = sample.head.length
@@ -408,8 +389,8 @@ object Similarity {
     centroids
   }
 
-  /** Full-corpus alternative to [[trainKmeansCentroids]] (round-10
-    * verdict task 5): distributed Lloyd via [[KMeans.lloyd]] — every
+  /** Full-corpus alternative to [[trainKmeansCentroids]]: distributed
+    * Lloyd via [[KMeans.lloyd]] with one parent — every
     * round is one full assignment pass (native codegen kernel) plus one
     * k·dims-sized shuffle; driver state is O(k·dims) per round, never
     * data-scale. Returns centroids in the same dequantized
@@ -422,6 +403,8 @@ object Similarity {
     * re-packs the survivors densely (the behavior its SQL oracle twin
     * `dense_rank`s to), and the seed pool is capped at the corpus size —
     * so this trainer can return FEWER than `k` centroids (always ≥ 1).
+    * Vectors whose length differs from the first seed's take no part
+    * (the [[KMeans.lloyd]] rule); a ragged seed fails the call.
     * The sampled [[trainKmeansCentroids]] always returns exactly `k`
     * (retaining empty-cell seeds). Callers sizing probe lists or cell
     * ids must use `centroids.length`, not the requested `k`; every
@@ -450,7 +433,7 @@ object Similarity {
     // covers well-separated clusters present in the pool. Driver work
     // is O(pool·k·dims) on a bounded pool — flat in corpus size.
     // Pass `idCol` (a row-unique key) where available, for the same
-    // reason as [[trainKmeansCentroids]] (round-12 review): hashing the
+    // reason as [[trainKmeansCentroids]]: hashing the
     // VECTOR value alone means every copy in a duplicate-heavy corpus
     // shares one hash, so the poolN-row pool can hold fewer than k
     // DISTINCT vectors and max-min seeding then emits duplicate seeds —
@@ -496,7 +479,7 @@ object Similarity {
       chosen += lastChosen
     }
     val init = chosen.map(_.toSeq).toSeq
-    val cents = KMeans.lloyd(quantized, "xq", init, iters)
+    val cents = KMeans.lloyd(quantized, lit(0), col("xq"), Map(0 -> init), iters)(0)
     // dequantize: q = floor(x·Scale) ⇒ x ≈ (q + 0.5)/Scale (midpoint)
     cents.map(_.map(q => (q.toDouble + 0.5) / KMeans.Scale).toArray).toArray
   }
@@ -514,36 +497,18 @@ object Similarity {
   }
 
   /** Nearest-centroid cell id for a vector column (the IVF corpus-side
-    * assignment). Since round 14 this is the native coarse-pruned kernel
-    * ([[graft.plans.NearestCentroid]]): a √k triangle-inequality index
+    * assignment): the native coarse-pruned kernel
+    * ([[graft.plans.NearestCentroid]]). A √k triangle-inequality index
     * over the centroids evaluates ~2√k dots per row instead of k, while
     * returning EXACTLY the lexicographic (distance, cell) struct minimum
-    * of the flat composition it replaced (equivalence pinned by
-    * NearestCentroidSpec; the DuckDB twin [[cellAssignSql]] is
-    * unchanged). At SemDeDup's corpus-scaled k = n/250 this turns the
-    * corpus assignment stage from O(n·k·d) — the round-13 verdict's
-    * named super-linear follow-up — into O(n·√k·d).
+    * of the flat `array_min` composition [[cellAssignSql]] mirrors
+    * (equivalence pinned by NearestCentroidSpec). At SemDeDup's
+    * corpus-scaled k = n/250 this turns the corpus assignment stage
+    * from O(n·k·d), a super-linear term, into O(n·√k·d).
     */
   def cellAssign(vec: Column, centroids: Array[Array[Double]]): Column =
     GraftBridge.column(graft.plans.NearestCentroid(
       GraftBridge.expression(vec), centroids.map(_.toSeq).toSeq))
-
-  /** The pre-round-14 flat composition — argmin via `array_min` over
-    * (distance, cell) structs, lexicographic so ties keep the smallest
-    * cell id, the same total order the SQL twin renders. NOT a
-    * when/otherwise fold: a fold referencing the running best twice per
-    * step doubles the Catalyst tree per centroid (~2^k nodes), which
-    * stalls analysis/codegen at real k (round-11 review). Kept as the
-    * independently-derived reference [[cellAssign]]'s kernel is
-    * equivalence-tested against (and the shape [[cellAssignSql]] still
-    * mirrors literally).
-    */
-  private[graft] def cellAssignComposed(vec: Column, centroids: Array[Array[Double]]): Column = {
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      struct(centroidScore(vec, c).as("d"), lit(i).as("cell"))
-    }
-    array_min(array(scored.toIndexedSeq: _*)).getField("cell")
-  }
 
   /** The `nProbe` nearest cell ids for a vector column (query-side
     * multi-probe list for [[ivfTopKProbed]]): score structs sorted
@@ -599,9 +564,8 @@ object Similarity {
 
   /** `[[score, cellId], …]` literal-list for the argmin twins below:
     * lexicographic (distance, cell) — the same total order
-    * [[cellAssign]]'s `array_min` over (distance, cell) structs (the
-    * round-11 rewrite of the old strict-`<` fold) and [[probeCells]]'s
-    * struct sort realize on the Spark side.
+    * [[cellAssign]]'s kernel and [[probeCells]]'s struct sort realize
+    * on the Spark side.
     */
   private def scoredCellsSql(vec: String, centroids: Array[Array[Double]]): String =
     centroids.zipWithIndex
@@ -609,8 +573,8 @@ object Similarity {
       .mkString("[", ", ", "]")
 
   /** SQL twin of [[cellAssign]]: nearest-centroid id, ties to the lower
-    * cell id (`array_min`'s lexicographic struct minimum on the Spark
-    * side ≡ `list_sort(…)[1]` here).
+    * cell id (the kernel's lexicographic (distance, cell) minimum ≡
+    * `list_sort(…)[1]` here).
     */
   def cellAssignSql(vec: String, centroids: Array[Array[Double]]): String =
     s"CAST(list_sort(${scoredCellsSql(vec, centroids)})[1][2] AS INTEGER)"
@@ -646,8 +610,7 @@ object Similarity {
     * approximately.
     */
   def hyperplaneBucketSql(vec: String, planes: Int, dims: Int): String = {
-    // both lists slice to min(len(vec), dims) BEFORE zipping (round-12
-    // review): the native kernel clamps its loop to the input's length,
+    // both lists slice to min(len(vec), dims) BEFORE zipping: the native kernel clamps its loop to the input's length,
     // while an unclamped list_zip NULL-pads a short/long vector — the
     // projection nulls, every CASE falls to 0, and a corrupt row lands
     // in bucket 0 in the oracle but a real partial-projection bucket on

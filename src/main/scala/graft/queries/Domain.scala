@@ -234,7 +234,8 @@ object Domain {
 
   /** The flagship SHARK delivery DAG end-to-end (§3.1,
     * ifcb-data-pipeline.Rmd:1094-1297): [[graft.jobs.SharkExport.delivery]]
-    * on the synthetic instantiation — A18 rollup × J1 broadcast star ×
+    * on the synthetic instantiation [[graft.jobs.SharkExport.synthetic]],
+    * the one the job's driver smoke path writes — A18 rollup × J1 broadcast star ×
     * P4 flag filter × W1 sample-grain adjacency drop × the fixed
     * delivery projection. Every piece is SQL-expressible, so the whole
     * composed job gets a DuckDB mirror: the one surface where previously
@@ -242,28 +243,8 @@ object Domain {
     */
   private val q73 = GraftQuery(
     "q73_shark_delivery",
-    (s, d) => {
-      import s.implicits._
-      val li = lineitem(s, d)
-      val or = orders(s, d)
-      val roi = li.select(
-        concat(lit("S"), $"l_orderkey").as("sample"),
-        $"l_returnflag".as("class_name"),
-        ($"l_extendedprice" / 10.0).as("vol_um3"),
-        ($"l_returnflag" === "A").as("is_diatom"))
-      val dim = or.select(
-        concat(lit("S"), $"o_orderkey").as("sample"),
-        ($"o_totalprice" / 10000.0).as("ml_analyzed"),
-        lit(57.5).as("lat"), lit(11.8).as("lon"))
-      val flags = or.filter($"o_orderkey" % 97 === 0).select(
-        concat(lit("S"), $"o_orderkey").as("sample"),
-        when($"o_orderkey" % 2 === 0, "bubbles").otherwise("beads").as("flag"))
-      graft.jobs.SharkExport.delivery(roi, dim, flags,
-          removeFlagged = Seq("beads"),
-          adjacencyPartition = substring($"sample", 1, 3))
-        .drop("MYEAR") // synthetic sample ids carry no timestamp
-        .orderBy($"SMPNO", $"LATNM")
-    },
+    (s, d) => graft.jobs.SharkExport.synthetic(s, d)
+      .orderBy(col("SMPNO"), col("LATNM")),
     Some("""
       WITH roi AS (
         SELECT 'S' || CAST(l_orderkey AS VARCHAR) AS sample,

@@ -194,11 +194,10 @@ object TrainingData {
     * centroids at bench-SF k (8 everywhere up to sf0.1, 80 at sf1 —
     * q45's [[dedupCents]] memo, the measured-faster branch there), a
     * two-level codebook past [[Dedup.FlatMaxK]] (sf10's k = 800 on),
-    * three levels from [[Ivf.DeepMinK]] (sf100's k = 8000). Codebooks
-    * are parquet-backed ([[Ivf.durable]]), so a cache eviction mid-session
-    * re-reads a k-row snapshot instead of re-training. Every branch is
-    * deterministic, so oracleDyn re-derives the identical model at
-    * render time.
+    * three levels from [[Ivf.DeepMinK]] (sf100's k = 8000). A codebook's
+    * levels are k local rows, so a cache eviction mid-session re-reads
+    * them instead of re-training. Every branch is deterministic, so
+    * oracleDyn re-derives the identical model at render time.
     */
   private val dedupModel = new GraftQuery.SessionMemo[
       Either[Array[Array[Double]], Ivf.Codebook]](
@@ -208,7 +207,7 @@ object TrainingData {
       Dedup.cellDepth(k) match {
         case 1 => Left(dedupCents(s, d))
         case depth =>
-          Right(Ivf.durable(Ivf.train(e, "embedding", "vec_id", k, depth)))
+          Right(Ivf.train(e, "embedding", "vec_id", k, depth))
       }
     },
     close = _.foreach(_.release()))
@@ -823,28 +822,25 @@ object TrainingData {
         FROM b c JOIN probes p ON c.bucket = p.probe AND c.vec_id <> p.q_id),
       $annTailSql"""))
 
-  /** True multi-probe IVF, oracle-checked end-to-end (q72 covers the
-    * LSH-bucketed variant; this one runs the *trained* index path —
-    * [[Similarity.trainKmeansCentroids]] → corpus [[Similarity.cellAssign]]
-    * → query [[Similarity.probeCells]] with nProbe=2 →
-    * [[Similarity.ivfTopKProbed]]). Training is deterministic (seeded
-    * whole-population sample, fixed Lloyd iterations), so the oracle can
-    * hash-match the full approximate path: the centroids are re-trained at
-    * oracle-render time (identical by determinism — the price of the
-    * split build/oracle closures) and rendered into the SQL as exact
-    * float-cast literals; DuckDB then recomputes the same cell
-    * assignments, the same probe lists, and the same cosines. At 100 TB
-    * the corpus is scanned once for assignment and never shuffles; the
+  /** True multi-probe IVF over flat trained centroids, oracle-checked
+    * end-to-end (q72 covers the LSH-bucketed variant): `train`'s
+    * centroids → corpus [[Similarity.cellAssign]] → query
+    * [[Similarity.probeCells]] with nProbe = 2 →
+    * [[Similarity.ivfTopKProbed]]. Training is deterministic, so the
+    * centroids are memoized per (session, dir) and shared by the plan
+    * and the oracle, which renders them as exact float-cast literals;
+    * DuckDB then recomputes the same cell assignments, the same probe
+    * lists, and the same cosines. nProbe is clamped to the centroid
+    * count, which the full trainer may leave below k. At 100 TB the
+    * corpus is scanned once for assignment and never shuffles; the
     * probe-exploded query side stays queries × nProbe rows, broadcast.
     */
-  private val q89 = {
-    val K = 8
-    val NPROBE = 2
-    def cents(s: SparkSession, d: String): Array[Array[Double]] =
-      Similarity.trainKmeansCentroids(embeddings(s, d), "embedding", K,
-        idCol = Some("vec_id"))
+  private def flatAnnQuery(name: String,
+      train: (SparkSession, String) => Array[Array[Double]]): GraftQuery = {
+    val cents = new GraftQuery.SessionMemo[Array[Array[Double]]](train)
+    def nProbe(cs: Array[Array[Double]]): Int = math.min(2, cs.length)
     GraftQuery(
-      "q89_ivf_ann_trained",
+      name,
       (s, d) => {
         import s.implicits._
         val cs = cents(s, d)
@@ -852,7 +848,7 @@ object TrainingData {
           .withColumn("cell", Similarity.cellAssign($"embedding", cs))
         val queries = embeddings(s, d).filter($"vec_id" < 5)
           .select($"vec_id".as("q_id"), $"embedding".as("q_vec"),
-            Similarity.probeCells($"embedding", cs, NPROBE).as("probes"))
+            Similarity.probeCells($"embedding", cs, nProbe(cs)).as("probes"))
         Similarity.ivfTopKProbed(queries, corpus,
             "q_id", "q_vec", "probes", "vec_id", "embedding", "cell", k = 5)
           .select($"query_id", $"neighbor_id", $"rank",
@@ -869,7 +865,7 @@ object TrainingData {
         WHERE ${Similarity.nonZeroNormSql("embedding")}),
       q AS (
         SELECT vec_id AS q_id, embedding AS q_vec,
-               ${Similarity.probeCellsSql("embedding", cs, NPROBE)} AS probes
+               ${Similarity.probeCellsSql("embedding", cs, nProbe(cs))} AS probes
         FROM embeddings
         WHERE vec_id < 5 AND ${Similarity.nonZeroNormSql("embedding")}),
       p AS (
@@ -881,6 +877,14 @@ object TrainingData {
       $annTailSql"""
       })
   }
+
+  /** [[flatAnnQuery]] over the driver-side sampled trainer
+    * ([[Similarity.trainKmeansCentroids]], seeded hash-ordered sample,
+    * fixed Lloyd iterations), which returns exactly k = 8 centroids.
+    */
+  private val q89 = flatAnnQuery("q89_ivf_ann_trained", (s, d) =>
+    Similarity.trainKmeansCentroids(embeddings(s, d), "embedding", 8,
+      idCol = Some("vec_id")))
 
   /** SemDeDup ([[Dedup.semDedup]], Abbas et al. 2023): the semantic
     * counterpart of q45's block-keyed near-dup — k-means cells play the
@@ -1066,89 +1070,29 @@ object TrainingData {
           .select($"vec_id", graft.operators.KMeans.quantize($"embedding").as("xq"))
         val init = quant.orderBy($"vec_id").limit(K).collect()
           .map(_.getSeq[Long](1).toSeq).toSeq
-        val cents = graft.operators.KMeans.lloyd(quant, "xq", init, ITERS)
+        val cents = graft.operators.KMeans.lloyd(
+          quant, lit(0), $"xq", Map(0 -> init), ITERS)(0)
         graft.operators.KMeans.cellSummary(quant, "vec_id", "xq", cents)
       },
       Some(graft.operators.KMeans.lloydSql(
         "embeddings", "vec_id", "embedding", K, ITERS)))
   }
 
-  /** q89's multi-probe IVF search path driven by the FULL-corpus
-    * distributed trainer ([[Similarity.trainKmeansCentroidsFull]] →
-    * [[graft.operators.KMeans.lloyd]]) instead of the driver-side
-    * sample: every Lloyd round is one map-side assignment pass plus one
-    * (cell, dim) partial-aggregated shuffle, O(k·dims) driver state —
-    * the trainer you switch to when k approaches the affordable sample
-    * size or sampled cells skew (scaladoc guidance at
-    * `Similarity.trainKmeansCentroidsFull`). Deterministic end-to-end
-    * (hash-ordered bounded seed pool, greedy max-min seeding,
-    * integer-exact Lloyd), so the oracle re-trains at render time and
-    * embeds the centroids as float-cast literals exactly like q89 —
-    * DuckDB then recomputes identical cells, probes, and cosines. The
-    * search-side scale shape is q89's: corpus scanned once for
-    * assignment, probe-exploded queries broadcast.
+  /** [[flatAnnQuery]] over the FULL-corpus distributed trainer
+    * ([[Similarity.trainKmeansCentroidsFull]] →
+    * [[graft.operators.KMeans.lloyd]], 4 rounds): every Lloyd round is
+    * one map-side assignment pass plus one (cell, dim) partial-aggregated
+    * shuffle, O(k·dims) driver state — the trainer you switch to when k
+    * approaches the affordable sample size or sampled cells skew.
+    * idCol = vec_id keeps the seed pool's distinct-vector diversity
+    * under value-duplicated corpora (the replicated sf1 fixtures).
     */
-  private val q100 = {
-    val K = 8
-    val NPROBE = 2
-    val ITERS = 4
-    // One training per (session, dir), shared by the plan lambda and
-    // oracleDyn — without the memo every Verify pass trains the full
-    // corpus TWICE (2 × (ITERS+1) scans + shuffles just for identical
-    // centroids; lifecycle rationale at [[GraftQuery.SessionMemo]]).
-    // idCol=vec_id keeps the seed pool's distinct-vector diversity
-    // under value-duplicated corpora (the replicated sf1 fixtures).
-    val cents = new GraftQuery.SessionMemo[Array[Array[Double]]]({ (s, d) =>
-      Similarity.trainKmeansCentroidsFull(
-        embeddings(s, d), "embedding", K, ITERS, idCol = Some("vec_id"))
-    })
-    // the full trainer can return FEWER than K centroids (its documented
-    // contract: Lloyd drops empty cells); probeCells requires
-    // nProbe <= centroids.length, so clamp — both the plan and the
-    // oracle, which re-derive identical centroids, clamp identically
-    def nProbe(cs: Array[Array[Double]]): Int = math.min(NPROBE, cs.length)
-    GraftQuery(
-      "q100_ivf_ann_full_trained",
-      (s, d) => {
-        import s.implicits._
-        val cs = cents(s, d)
-        val corpus = embeddings(s, d)
-          .withColumn("cell", Similarity.cellAssign($"embedding", cs))
-        val queries = embeddings(s, d).filter($"vec_id" < 5)
-          .select($"vec_id".as("q_id"), $"embedding".as("q_vec"),
-            Similarity.probeCells($"embedding", cs, nProbe(cs)).as("probes"))
-        Similarity.ivfTopKProbed(queries, corpus,
-            "q_id", "q_vec", "probes", "vec_id", "embedding", "cell", k = 5)
-          .select($"query_id", $"neighbor_id", $"rank",
-            round($"cosine", 6).as("cosine"))
-          .orderBy($"query_id", $"rank")
-      },
-      oracleDyn = Some { (s, d) =>
-        val cs = cents(s, d)
-        s"""
-      WITH c AS (
-        SELECT vec_id, embedding,
-               ${Similarity.cellAssignSql("embedding", cs)} AS cell
-        FROM embeddings
-        WHERE ${Similarity.nonZeroNormSql("embedding")}),
-      q AS (
-        SELECT vec_id AS q_id, embedding AS q_vec,
-               ${Similarity.probeCellsSql("embedding", cs, nProbe(cs))} AS probes
-        FROM embeddings
-        WHERE vec_id < 5 AND ${Similarity.nonZeroNormSql("embedding")}),
-      p AS (
-        SELECT q_id, q_vec, unnest(probes) AS probe FROM q),
-      scored AS (
-        SELECT p.q_id, c.vec_id AS nid,
-               ${Similarity.cosineSql("p.q_vec", "c.embedding")} AS cos
-        FROM c JOIN p ON c.cell = p.probe AND c.vec_id <> p.q_id),
-      $annTailSql"""
-      })
-  }
+  private val q100 = flatAnnQuery("q100_ivf_ann_full_trained", (s, d) =>
+    Similarity.trainKmeansCentroidsFull(embeddings(s, d), "embedding", 8, 4,
+      idCol = Some("vec_id")))
 
   private def codebookMemo(train: (SparkSession, String) => Ivf.Codebook) =
-    new GraftQuery.SessionMemo[Ivf.Codebook](
-      (s, d) => Ivf.durable(train(s, d)), close = _.release())
+    new GraftQuery.SessionMemo[Ivf.Codebook](train, close = _.release())
 
   /** The fixed-k index codebooks: q101/q103 at depth 2 (k = 12) and
     * q109/q110 at depth 3 (k = 27, so all three levels are populated at
@@ -1244,9 +1188,9 @@ object TrainingData {
 
   /** IVF index build — [[Ivf.train]] → [[Ivf.assign]] at the memo's
     * depth: coarse centroids trained DISTRIBUTED and shipped as the
-    * only plan literals; the deeper levels stay DataFrames joined at
-    * assignment time, so trainer driver work and plan bytes are
-    * O(k^(1/depth)·d) instead of O(k·d). Assignment runs in
+    * only kernel literals; the deeper levels are k-row frames joined at
+    * assignment time, so a row costs O(k^(1/depth)·d) distance work
+    * instead of O(k·d). Assignment runs in
     * [[graft.operators.KMeans]]'s integer-exact quantized domain
     * (codegen kernel [[graft.plans.NearestCandidate]]), so the oracle
     * re-renders every trained level as BIGINT literals and hash-matches

@@ -35,6 +35,18 @@ class SessionMemoSpec extends SparkSpec {
     assert(closedVals.toSeq == Seq("artifact-a", "artifact-b"))
   }
 
+  test("the replaced value closes before its successor trains") {
+    // two codebooks trained on the same data share one cache entry, so
+    // a release after the successor trained would uncache it
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    val memo = new GraftQuery.SessionMemo[String](
+      (_, d) => { events += s"train $d"; d },
+      close = v => events += s"close $v")
+    memo(spark, "a")
+    memo(spark, "b")
+    assert(events.toSeq == Seq("train a", "close a", "train b"))
+  }
+
   test("a replaced codebook's persisted fine frame is unpersisted") {
     def tinyCorpus(s: SparkSession, seed: Int) = {
       import s.implicits._

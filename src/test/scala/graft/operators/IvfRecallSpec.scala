@@ -23,9 +23,17 @@ class IvfRecallSpec extends SparkSpec {
     df.select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
 
+  /** The corpus-side cell column of driver-trained sampled centroids. */
+  private def kmeansCellAssign(
+      corpus: org.apache.spark.sql.DataFrame, vec: String, k: Int,
+      iters: Int = 10, sampleMax: Int = 10000,
+      idCol: Option[String] = None): org.apache.spark.sql.Column =
+    Similarity.cellAssign(col(vec),
+      Similarity.trainKmeansCentroids(corpus, vec, k, iters, sampleMax, idCol))
+
   test("kmeans-IVF top-k reaches usable recall; cells partition the corpus") {
     val e = Tables.embeddings(spark, d)
-    val cell = Similarity.kmeansCellAssign(e, "embedding", k = 8, idCol = Some("vec_id"))
+    val cell = kmeansCellAssign(e, "embedding", k = 8, idCol = Some("vec_id"))
     val ec = e.withColumn("cell", cell)
     val sizes = ec.groupBy("cell").count().as[(Int, Long)].collect().toMap
     assert(sizes.size > 1 && sizes.values.sum == 500)
@@ -163,7 +171,7 @@ class IvfRecallSpec extends SparkSpec {
     val b = (0 until 400).map(i => (400L + i, Array(0.0f, 10.0f + i % 3 * 0.1f)))
     val corpus = (a ++ b).toDF("vec_id", "embedding")
       .repartitionByRange(8, $"vec_id") // physically ordered: A first
-    val cell = Similarity.kmeansCellAssign(corpus, "embedding", k = 2,
+    val cell = kmeansCellAssign(corpus, "embedding", k = 2,
       iters = 5, sampleMax = 100, idCol = Some("vec_id"))
     val cells = corpus.withColumn("cell", cell)
       .select($"vec_id", $"cell").as[(Long, Int)].collect()

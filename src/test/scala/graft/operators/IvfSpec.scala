@@ -386,4 +386,39 @@ class IvfSpec extends SparkSpec {
     assert(Ivf.driftFraction(ragged, "embedding", book, typical,
       tolerance = 4.0) == 1.0)
   }
+
+  /** Short SHA-256 of a rendering of trained centroids. */
+  private def digest(parts: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(parts.mkString("\n").getBytes("UTF-8"))
+      .take(8).map(b => f"$b%02x").mkString
+
+  private def centroidRows(cs: Seq[Seq[Any]]): Seq[String] = cs.map(_.mkString(","))
+
+  private def codebookDigest(e: DataFrame, k: Int, depth: Int): String = {
+    val book = Ivf.train(e, "embedding", "vec_id", k, depth,
+      itersCoarse = 3, itersLevel = 2)
+    try digest(centroidRows(book.coarse.map(_.toSeq).toSeq) ++
+      book.levels.flatMap(l => Ivf.collectLevel(l).map { case (p, c, v) =>
+        s"$p:$c:${v.mkString(",")}"
+      }))
+    finally book.release()
+  }
+
+  test("golden centroids: codebooks at depth 2 and 3, q99's lloyd and the full trainer on sf0.001") {
+    // digests of the centroids each trainer returns on the sf0.001
+    // fixture; a refactor of the Lloyd loop must leave them bit-identical
+    val e = graft.Tables.embeddings(spark, testDataDir("sf0.001"))
+    assert(codebookDigest(e, 12, 2) == "0ff454faf2026a02", "depth-2 codebook (q101's shape)")
+    assert(codebookDigest(e, 27, 3) == "4e95307113e11572", "depth-3 codebook (q109's shape)")
+    // q99: the 8 smallest ids' vectors seed 3 rounds
+    val quant = e.select($"vec_id", KMeans.quantize($"embedding").as("xq"))
+    val init = quant.orderBy($"vec_id").limit(8).collect()
+      .map(_.getSeq[Long](1).toSeq).toSeq
+    assert(digest(centroidRows(KMeans.lloyd(quant, lit(0), $"xq", Map(0 -> init), 3)(0))) == "fb68adc311fc4f63", "q99")
+    // q100's trainer
+    val full = Similarity.trainKmeansCentroidsFull(e, "embedding", 8, 4,
+      idCol = Some("vec_id"))
+    assert(digest(centroidRows(full.map(_.toSeq).toSeq)) == "76d78143f5e976d5", "full trainer")
+  }
 }

@@ -18,6 +18,23 @@ class NearestCentroidSpec extends SparkSpec {
     GraftBridge.column(NearestCentroid(
       GraftBridge.expression(vec), cs.map(_.toSeq).toSeq))
 
+  /** The flat composition the kernel replaced, kept as its
+    * independently derived reference: argmin via `array_min` over
+    * (cc − 2·v·c, cell) structs, lexicographic so ties keep the
+    * smallest cell id — the total order [[Similarity.cellAssignSql]]
+    * renders. Not a when/otherwise fold: a fold referencing the running
+    * best twice per step doubles the Catalyst tree per centroid.
+    */
+  private def composed(vec: org.apache.spark.sql.Column, cs: Array[Array[Double]]) = {
+    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      GraftBridge.column(FloatArrayDot(GraftBridge.expression(a), GraftBridge.expression(b)))
+    val scored = cs.zipWithIndex.map { case (c, i) =>
+      val cl = typedLit(c.toSeq).cast("array<float>")
+      struct((dot(cl, cl) - dot(vec, cl) * 2.0).as("d"), lit(i).as("cell"))
+    }
+    array_min(array(scored.toIndexedSeq: _*)).getField("cell")
+  }
+
   private def rnd(seed: Long): Iterator[Double] = {
     var s = seed
     Iterator.continually {
@@ -41,7 +58,7 @@ class NearestCentroidSpec extends SparkSpec {
       }
       val df = vecs.map(Tuple1(_)).toDF("v")
         .select(nat($"v", cs).as("fast"),
-          Similarity.cellAssignComposed($"v", cs).as("flat"))
+          composed($"v", cs).as("flat"))
       val rows = df.collect()
       rows.zipWithIndex.foreach { case (r, i) =>
         assert(r.getInt(0) == r.getInt(1),
@@ -67,7 +84,7 @@ class NearestCentroidSpec extends SparkSpec {
       Tuple1(Array[Option[Float]](Some(Float.NaN), Some(0.5f)))
     ).toDF("v")
       .select(nat($"v", cs).as("fast"),
-        Similarity.cellAssignComposed($"v", cs).as("flat"))
+        composed($"v", cs).as("flat"))
     val rows = df.collect()
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(!r.isNullAt(0) && !r.isNullAt(1) && r.getInt(0) == r.getInt(1),
